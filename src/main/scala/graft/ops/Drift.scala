@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.{Merge, MergeableState, StateCompactor}
 
 /** Corpus distribution-drift audit — the data-quality monitor a
   * training pipeline runs between a reference snapshot and a fresh
@@ -35,8 +36,10 @@ object Drift {
     * (feature, tvd_permille, top_value, top_delta_permille).
     */
   def audit(docs: DataFrame, isRef: Column,
-      features: Seq[(String, Column)], weight: Column = lit(1L)): DataFrame =
-    auditFromCounts(featureCounts(docs, isRef, features, weight))
+      features: Seq[(String, Column)], weight: Column = lit(1L)): DataFrame = {
+    val s = countState(isRef, features, weight)
+    auditFromCounts(s.merge(s.partial(docs)))
+  }
 
   /** The additive (feature, value, ca, cb) count table — ca =
     * reference-corpus mass, cb = fresh mass carrying that feature
@@ -44,8 +47,7 @@ object Drift {
     * count makes proportions token-mass shares — the drift a mixture
     * planner cares about). Counts built per batch MERGE additively
     * (union + re-sum) to exactly the full-corpus counts, the
-    * property the streaming ingest twin
-    * ([[graft.streaming.DriftIngest]]) rests on.
+    * property [[countState]] rests on.
     */
   def featureCounts(docs: DataFrame, isRef: Column,
       features: Seq[(String, Column)], weight: Column = lit(1L)): DataFrame = {
@@ -62,17 +64,42 @@ object Drift {
         sum(when(col("_ref"), 0L).otherwise(col("_w"))).as("cb"))
   }
 
-  /** The TVD audit derived from a (feature, value, ca, cb) count
-    * table (possibly a re-summed union of batch deltas).
+  /** The drift counts as MERGEABLE ingest state — the monitor a
+    * pipeline runs CONTINUOUSLY while a fresh crawl lands next to the
+    * frozen reference: each micro-batch appends its bounded
+    * per-(feature, value) count delta (map-side partial aggregation,
+    * nothing row-sized persists), and the audit re-derives from the
+    * re-summed deltas. Weighted sums are as additive as counts, so the
+    * token-mass monitor streams identically.
     */
-  def auditFromCounts(counts0: DataFrame): DataFrame = {
+  def countState(isRef: Column, features: Seq[(String, Column)],
+      weight: Column = lit(1L)): MergeableState =
+    MergeableState(featureCounts(_, isRef, features, weight),
+      Seq("feature", "value"), Seq(Merge.Sum("ca"), Merge.Sum("cb")))
+
+  /** Right-to-be-forgotten over [[countState]]: the (feature, value)
+    * deltas carry no doc dimension, so the erased doc's mass can only
+    * leave by rebuilding the counts from the retained corpus —
+    * [[StateCompactor.rewriteState]]'s manifest-committed fold, the
+    * [[graft.serving.ImportanceProfile]] contract: `docs`/`isRef`/
+    * `features`/`weight` must be the same frame and definitions the
+    * ingest used. Idempotently re-runnable (same retained corpus →
+    * same generation content); replayed folded batches stay invisible.
+    */
+  def eraseDoc(spark: SparkSession, countsPath: String, docs: DataFrame,
+      docId: Long, isRef: Column, features: Seq[(String, Column)],
+      weight: Column = lit(1L)): Unit =
+    StateCompactor.rewriteState(spark, countsPath, featureCounts(
+      docs.filter(col("doc_id") =!= docId), isRef, features, weight))
+
+  /** The TVD audit derived from a merged (feature, value, ca, cb)
+    * count table.
+    */
+  def auditFromCounts(counts: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftShim.{column, expression}
     import org.apache.spark.sql.catalyst.expressions.IntegralDivide
     def idiv(a: Column, b: Column) =
       column(IntegralDivide(expression(a), expression(b))).cast("long")
-    val counts = counts0
-      .groupBy(col("feature"), col("value"))
-      .agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
     val totals = counts.groupBy(col("feature"))
       .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
     // a zero-mass corpus (possible after erasure cancels a side's

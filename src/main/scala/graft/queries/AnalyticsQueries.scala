@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.{Merge, MergeableState}
 
 /** Behavioral-analytics queries over the events stream — the funnel /
   * cohort surface a user of the reference's OLAP store (raw events in
@@ -140,12 +141,20 @@ object AnalyticsQueries {
     * deduped — so the ×7 blowup applies to user-days, not raw events.
     */
   def wauDaily(spark: SparkSession, dir: String): DataFrame =
-    wauOf(Tables.events(spark, dir)
-      .select(col("user_id"), expr("unix_micros(ts) DIV 86400000000").as("day"))
-      .distinct())
+    wauOf(wauState.merge(wauState.partial(Tables.events(spark, dir))))
+
+  /** The WAU input as MERGEABLE state: the DISTINCT (user, day) set
+    * only ever grows, and set union is associative, commutative and
+    * idempotent — so batch partials from any split merge to the same
+    * set, bounded by users × active days.
+    */
+  val wauState: MergeableState = MergeableState(
+    _.select(col("user_id"), expr("unix_micros(ts) DIV 86400000000").as("day"))
+      .distinct(),
+    Seq("user_id", "day"), Nil)
 
   /** The WAU derivation over a DISTINCT (user_id, day) table —
-    * shared by the batch op and the ingest twin's read path.
+    * shared by the batch op, the stream gate and the served curve.
     */
   def wauOf(userDays: DataFrame): DataFrame =
     userDays
@@ -155,18 +164,12 @@ object AnalyticsQueries {
       .agg(countDistinct(col("user_id")).as("n_active_7d"))
 
   /** The STREAMED WAU curve, gated against the batch gate's oracle:
-    * drive [[graft.streaming.WauIngest]] over three event-id-range
-    * micro-batches and read the derive-at-read result. Set-union
-    * state is order-independent, so the shared oracle carries no
-    * arrival-order caveat.
+    * replay [[wauState]] over three event-id-range micro-batches and
+    * derive at read. Set-union state is order-independent, so the
+    * shared oracle carries no arrival-order caveat.
     */
-  def wauDailyStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_wau_gate").toString
-    OlapQueries.idOrderedBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.WauIngest.processBatch(b, i.toLong, s"$tmp/ud")
-    }
-    graft.streaming.WauIngest.readWau(spark, s"$tmp/ud")
-  }
+  def wauDailyStream(spark: SparkSession, dir: String): DataFrame =
+    wauOf(wauState.replay(spark, OlapQueries.idOrderedBatches(spark, dir)))
 
   /** Daily cohort retention: cohort = the UTC day index of a user's
     * first event; for each (cohort_day, day_offset) count the distinct
@@ -343,12 +346,19 @@ object AnalyticsQueries {
     * |alphabet|², independent of row count.
     */
   def covisitLift(spark: SparkSession, dir: String): DataFrame =
-    liftOf(Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type")).distinct())
+    liftOf(covisitState.merge(covisitState.partial(Tables.events(spark, dir))))
+
+  /** The association input as MERGEABLE state: the DISTINCT
+    * (user, type) set only ever grows (set union — associative,
+    * commutative, idempotent), bounded by users × type alphabet.
+    */
+  val covisitState: MergeableState = MergeableState(
+    _.select(col("user_id"), col("event_type")).distinct(),
+    Seq("user_id", "event_type"), Nil)
 
   /** The pair/reach/lift derivation over an already-distinct
     * (user_id, event_type) frame — shared by the batch gate and the
-    * ingest-state read path ([[graft.streaming.CovisitIngest]]).
+    * stream gate's merged state.
     */
   def liftOf(us: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftShim.{column, expression}
@@ -380,20 +390,11 @@ object AnalyticsQueries {
   }
 
   /** The STREAMED co-visitation association table, gated against the
-    * batch gate's own oracle: drive
-    * [[graft.streaming.CovisitIngest]] over three event-id-range
-    * micro-batches (direct `processBatch` calls — the foreachBatch
-    * body) and read the derive-at-read result. Set-union state is
-    * order-independent, so the shared oracle carries no
-    * arrival-order caveat.
+    * batch gate's own oracle: replay [[covisitState]] over three
+    * event-id-range micro-batches and derive at read.
     */
-  def covisitLiftStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_covisit_gate").toString
-    OlapQueries.idOrderedBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.CovisitIngest.processBatch(b, i.toLong, s"$tmp/us")
-    }
-    graft.streaming.CovisitIngest.readLift(spark, s"$tmp/us")
-  }
+  def covisitLiftStream(spark: SparkSession, dir: String): DataFrame =
+    liftOf(covisitState.replay(spark, OlapQueries.idOrderedBatches(spark, dir)))
 
   /** Markov transition matrix over the event stream — for each
     * ordered event-type pair (from → to), how many times a user's
@@ -648,23 +649,26 @@ object AnalyticsQueries {
     * value_cents).
     */
   def rfmSegmentsOf(ev: DataFrame): DataFrame =
-    rfmOfPerUser(rfmPerUser(ev))
+    rfmOfPerUser(rfmState.merge(rfmState.partial(ev)))
 
   /** The MERGEABLE per-user RFM state: (last-purchase micros via max,
     * purchase count, cents sum) — partials from any split of the
-    * input merge by (max, sum, sum) to the same per-user row, which
-    * is what the streaming twin's additive batches and the
-    * compactor's merge rely on.
+    * input merge by (max, sum, sum) to the same per-user row. The
+    * quartiles stay a derive-at-read over the merged table: tiles are
+    * GLOBAL ranks, never additive, so no per-batch tile state could
+    * be correct.
     */
-  def rfmPerUser(ev: DataFrame): DataFrame = ev
-    .filter(col("event_type") === "purchase")
-    .groupBy(col("user_id"))
-    .agg(max(unix_micros(col("ts"))).as("last_us"),
-      count(lit(1)).as("freq"),
-      sum(col("value_cents")).as("monetary_cents"))
+  val rfmState: MergeableState = MergeableState(
+    _.filter(col("event_type") === "purchase")
+      .groupBy(col("user_id"))
+      .agg(max(unix_micros(col("ts"))).as("last_us"),
+        count(lit(1)).as("freq"),
+        sum(col("value_cents")).as("monetary_cents")),
+    Seq("user_id"),
+    Seq(Merge.Max("last_us"), Merge.Sum("freq"), Merge.Sum("monetary_cents")))
 
-  /** Merge per-user partials (max/sum/sum re-agg), then the three
-    * global quartile rankings + segment rollup.
+  /** The three global quartile rankings + segment rollup over the
+    * merged per-user state.
     *
     * The three rankings are INDEPENDENT functions of the per-user
     * table (each reads one metric + the id tie-break), but each
@@ -679,12 +683,7 @@ object AnalyticsQueries {
     * order — verified by the shared oracle.
     */
   def rfmOfPerUser(perState: DataFrame): DataFrame = {
-    val per = perState
-      .groupBy(col("user_id"))
-      .agg(max(col("last_us")).as("last_us"),
-        sum(col("freq")).cast("long").as("freq"),
-        sum(col("monetary_cents")).cast("long").as("monetary_cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val per = perState.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     per.count() // eager fill: the three concurrent legs share ONE materialization
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -710,22 +709,13 @@ object AnalyticsQueries {
     out
   }
 
-  /** The STREAMING RFM composition, gated: drive
-    * [[graft.streaming.RfmIngest]] over three id-ordered
-    * micro-batches (direct `processBatch` calls — the foreachBatch
-    * body; the `q_doc_curate_stream` harness pattern), then derive
-    * the quartile segments from the merged (max, sum, sum) per-user
-    * state. The merges are order-independent, so the oracle is the
-    * plain batch SQL.
+  /** The STREAMING RFM composition, gated: replay [[rfmState]] over
+    * three id-ordered micro-batches, then derive the quartile segments
+    * from the merged (max, sum, sum) per-user state. The merges are
+    * order-independent, so the oracle is the plain batch SQL.
     */
-  def rfmSegmentsStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rfm_gate").toString
-    OlapQueries.idOrderedBatches(spark, dir).zipWithIndex.foreach {
-      case (b, i) =>
-        graft.streaming.RfmIngest.processBatch(b, i.toLong, s"$tmp/per_user")
-    }
-    graft.streaming.RfmIngest.readSegments(spark, s"$tmp/per_user")
-  }
+  def rfmSegmentsStream(spark: SparkSession, dir: String): DataFrame =
+    rfmOfPerUser(rfmState.replay(spark, OlapQueries.idOrderedBatches(spark, dir)))
 
   /** Trending top-K: the top-3 event types of every SLIDING 1-hour
     * window (15-minute slide) by event count — the "what's hot right

@@ -188,58 +188,28 @@ object DocQueries {
   }
 
   /** The drift audit rebuilt from STREAMED additive count state
-    * ([[graft.streaming.DriftIngest]]) — documents ingested in
+    * ([[graft.ops.Drift.countState]]) — documents ingested in
     * id-ordered thirds, per-batch (feature, value) count deltas
     * re-summed at read. Additivity makes stream-final ≡ batch under
     * any split, so the gate shares `q_doc_drift`'s oracle verbatim.
     */
-  /** Three id-ranged micro-batches of the documents corpus — the
-    * shared split every doc-driven stream gate ingests. Cut points
-    * are cached per corpus fingerprint (two longs of driver
-    * metadata), so repeated gate calls skip the 1-row max aggregate
-    * (the OlapQueries.idOrderedBatches discipline).
-    */
-  private val docCutsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-
-  private def docIdBatches(spark: SparkSession, dir: String): Seq[DataFrame] = {
-    val d = Tables.documents(spark, dir)
-    val cuts = docCutsCache.getOrElseUpdate(
-      Tables.fingerprint(spark, s"$dir/documents.parquet"), {
-        val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
-        Seq(maxId / 3, 2 * maxId / 3)
-      })
-    Seq(
-      d.filter(col("doc_id") <= cuts(0)),
-      d.filter(col("doc_id") > cuts(0) && col("doc_id") <= cuts(1)),
-      d.filter(col("doc_id") > cuts(1)))
-  }
-
-  def docDriftStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_drift_gate").toString
-    docIdBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.DriftIngest.processBatch(
-        b.withColumn("ntok", Text.tokenCount(col("text"))),
-        i.toLong, s"$tmp/counts", col("doc_id") % 2 === 0, driftFeatures)
-    }
-    graft.streaming.DriftIngest.readAudit(spark, s"$tmp/counts")
-  }
+  def docDriftStream(spark: SparkSession, dir: String): DataFrame =
+    driftReplay(spark, dir, lit(1L))
 
   /** [[docDriftTokens]] rebuilt from streamed additive count state —
     * token-mass sums are as additive as doc counts, so the weighted
-    * monitor streams through the same [[graft.streaming.DriftIngest]]
-    * leg and the gate shares `q_doc_drift_tokens`' oracle verbatim.
+    * monitor streams through the same state and the gate shares
+    * `q_doc_drift_tokens`' oracle verbatim.
     */
-  def docDriftTokensStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_driftw_gate").toString
-    docIdBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.DriftIngest.processBatch(
-        b.withColumn("ntok", Text.tokenCount(col("text"))),
-        i.toLong, s"$tmp/counts", col("doc_id") % 2 === 0, driftFeatures,
-        weight = col("ntok"))
-    }
-    graft.streaming.DriftIngest.readAudit(spark, s"$tmp/counts")
-  }
+  def docDriftTokensStream(spark: SparkSession, dir: String): DataFrame =
+    driftReplay(spark, dir, col("ntok"))
+
+  private def driftReplay(spark: SparkSession, dir: String,
+      weight: org.apache.spark.sql.Column): DataFrame =
+    graft.ops.Drift.auditFromCounts(
+      graft.ops.Drift.countState(col("doc_id") % 2 === 0, driftFeatures, weight)
+        .replay(spark, OlapQueries.docIdBatches(spark, dir)
+          .map(_.withColumn("ntok", Text.tokenCount(col("text"))))))
 
   private def driftFeatures: Seq[(String, org.apache.spark.sql.Column)] = Seq(
     "lang" -> col("lang"),
@@ -563,12 +533,11 @@ object DocQueries {
     */
   def docCurateStream(spark: SparkSession, dir: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_curation_gate").toString
-    docIdBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
+    OlapQueries.docIdBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
       // release each batch's pinned localCheckpoint blocks — the gate
       // reads the parquet result, not the returned frame
-      graft.streaming.CurationIngest.release(
-        graft.streaming.CurationIngest.processBatch(
-          b, i.toLong, s"$tmp/kept", s"$tmp/index"))
+      NearDup.releaseCheckpoint(graft.streaming.CurationIngest.processBatch(
+        b, i.toLong, s"$tmp/kept", s"$tmp/index"))
     }
     spark.read.parquet(s"$tmp/kept").select(col("doc_id"), col("n_tokens"))
   }
@@ -627,11 +596,9 @@ object DocQueries {
     */
   def docBoilerplateStream(spark: SparkSession, dir: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_boil_gate").toString
-    docIdBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
-      // release the pinned segment stream per batch (see curate gate)
-      graft.streaming.BoilerplateIngest.release(
-        graft.streaming.BoilerplateIngest.processBatch(
-          b, i.toLong, s"$tmp/segs", s"$tmp/counts", segWords = 10))
+    OlapQueries.docIdBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
+      graft.streaming.BoilerplateIngest.processBatch(
+        b, i.toLong, s"$tmp/segs", s"$tmp/counts", segWords = 10)
     }
     graft.streaming.BoilerplateIngest.readScrubbed(
       spark, s"$tmp/segs", s"$tmp/counts")
@@ -1217,21 +1184,13 @@ object DocQueries {
 
   private def docFeedRoot(spark: SparkSession, dir: String): String =
     docFeedCache.root(spark, dir) { tmp =>
-      val d = Tables.documents(spark, dir)
-      // 1-row aggregate: bounded driver metadata (batch cut points)
-      val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
-      val cuts = Seq(maxId / 3, 2 * maxId / 3)
-      Seq(
-        d.filter(col("doc_id") <= cuts(0)),
-        d.filter(col("doc_id") > cuts(0) && col("doc_id") <= cuts(1)),
-        d.filter(col("doc_id") > cuts(1))
-      ).zipWithIndex.foreach { case (slice, i) =>
+      OlapQueries.docIdBatches(spark, dir).zipWithIndex.foreach { case (slice, i) =>
         val b = slice.localCheckpoint(true)
         graft.streaming.LmIngest.processBatch(
           b, i.toLong, s"$tmp/grams", s"$tmp/census")
         graft.streaming.VocabIngest.processBatch(
           b, i.toLong, s"$tmp/docwords", s"$tmp/wordfreq")
-        b.unpersist()
+        NearDup.releaseCheckpoint(b)
       }
     }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.multimodal.Media
+import graft.streaming.{Merge, MergeableState, StateCompactor}
 
 /** Multimodal plumbing queries: binary payload columns + stubbed
   * decode (see [[graft.multimodal.Media]]). The stub's arithmetic is
@@ -44,12 +45,67 @@ object MediaQueries {
     * to one canonical media id — the image/audio dedup step of a
     * multimodal ingest (hash computed executor-side on the binary
     * column; payload bytes never shuffle, only the 128-bit hash does).
+    * Over one whole input the partial IS the merged state, so the
+    * batch op is one aggregate.
     */
   def mediaDedup(spark: SparkSession, dir: String): DataFrame =
-    Media.mediaFromEvents(Tables.events(spark, dir))
-      .groupBy(md5(col("bytes")).as("content_hash"))
+    mediaDedupState.partial(Media.mediaFromEvents(Tables.events(spark, dir)))
+
+  /** Media dedup as MERGEABLE ingest state: each batch of `media`-
+    * schema rows collapses to per-content-hash (canonical id = min
+    * media_id, copy count) rows, and min of mins / sum of counts
+    * merge associatively and commutatively — dedup over content
+    * hashes is mergeable state, not first-claim admission state.
+    * Payload bytes never persist and never shuffle: only (hash,
+    * min-id, count) rows, bounded by distinct content per batch.
+    */
+  val mediaDedupState: MergeableState = MergeableState(
+    _.select(md5(col("bytes")).as("content_hash"), col("media_id"))
+      .groupBy(col("content_hash"))
       .agg(min(col("media_id")).as("canonical_id"),
-        count(lit(1)).as("n_copies"))
+        count(lit(1)).as("n_copies")),
+    Seq("content_hash"), Seq(Merge.Min("canonical_id"), Merge.Sum("n_copies")))
+
+  /** Right-to-be-forgotten over [[mediaDedupState]]: additive counts
+    * can't subtract and a min-merged canonical id can't un-min (the
+    * state never kept the second-smallest owner), so the whole
+    * visible state folds into a new generation computed from the
+    * retained corpus ([[StateCompactor.rewriteState]]'s
+    * manifest-committed rebuild). `media` is the full media corpus the
+    * ingest has seen (caller-owned); a BIDIRECTIONAL stale-frame guard
+    * refuses a frame carrying content hashes the state never admitted
+    * AND a frame from which non-victim hashes would leave the state
+    * (missing assets — which would silently erase other assets' dedup
+    * state). Quiesced-slot + replay invisibility + crash
+    * re-runnability inherited from rewriteState.
+    */
+  def eraseMedia(spark: SparkSession, media: DataFrame, mediaId: Long,
+      path: String): Unit = {
+    val newState = mediaDedupState.partial(media.filter(col("media_id") =!= mediaId))
+      .localCheckpoint(true) // pinned: guard probe + generation write
+    try {
+      val state = StateCompactor.readState(spark, path).select(col("content_hash"))
+      val unseen = newState.select(col("content_hash"))
+        .join(state, Seq("content_hash"), "left_anti")
+      if (!unseen.isEmpty)
+        throw new IllegalArgumentException(
+          s"eraseMedia: media frame contains content the state at $path " +
+            "never ingested — wrong corpus for this state root")
+      // reverse direction: hashes LEAVING the state must be the
+      // victim's own content — a frame missing unrelated assets would
+      // silently drop their dedup state
+      val victim = media.filter(col("media_id") === mediaId)
+        .select(md5(col("bytes")).as("content_hash"))
+      val leaving = state
+        .join(newState.select(col("content_hash")), Seq("content_hash"), "left_anti")
+        .join(victim, Seq("content_hash"), "left_anti")
+      if (!leaving.isEmpty)
+        throw new IllegalArgumentException(
+          s"eraseMedia: media frame is missing assets the state at $path " +
+            "ingested — erasing would drop other assets' dedup state")
+      StateCompactor.rewriteState(spark, path, newState)
+    } finally graft.ops.NearDup.releaseCheckpoint(newState)
+  }
 
   /** Cross-video FRAME overlap — duplicated-clip detection: sampled
     * frames whose exact bytes appear in ≥2 distinct videos, with
@@ -88,17 +144,44 @@ object MediaQueries {
     * distribution (nearest pair sims 0.66 / 0.99), so the gate's
     * boundary decisions are rounding-safe in both engines.
     */
-  def mediaNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val sig = Media.extractSignatures(spark,
-      Media.mediaFromEvents(Tables.events(spark, dir))).toDF()
-    val canon = sig.groupBy(col("content_hash"))
-      .agg(min(col("media_id")).as("media_id"),
-        // identical bytes → identical embedding; first() is stable
-        first(col("embedding")).as("embedding"))
-      .select(col("media_id"), col("embedding"))
-    graft.ops.Ann.rhpNearDupPairs(canon, threshold = 0.8,
-      idCol = "media_id", vecCol = "embedding")
-  }
+  def mediaNearDup(spark: SparkSession, dir: String): DataFrame =
+    nearDupOf(mediaSignatureState.partial(
+      Media.mediaFromEvents(Tables.events(spark, dir))))
+
+  /** The similarity tier's signatures as MERGEABLE ingest state: each
+    * batch's payloads collapse to per-content-hash (canonical id, stub
+    * embedding) rows — both computed row-local in the scan stage
+    * (codegen'd md5 + [[graft.functions.MediaExprs.embed_stub]]).
+    * Identical bytes have identical embeddings, so min is a
+    * deterministic pick, and (min, min) merges reproduce the batch
+    * canonical set for ANY split and arrival order. 40 B of hash +
+    * 128 B of vector per DISTINCT content is the state's whole
+    * exchange and footprint: one pass over payload bytes, ever.
+    */
+  val mediaSignatureState: MergeableState = MergeableState(
+    _.select(md5(col("bytes")).as("content_hash"), col("media_id"),
+        graft.functions.MediaExprs.embed_stub(col("bytes")).as("embedding"))
+      .groupBy(col("content_hash"))
+      .agg(min(col("media_id")).as("canonical_id"),
+        min(col("embedding")).as("embedding")),
+    Seq("content_hash"), Seq(Merge.Min("canonical_id"), Merge.Min("embedding")))
+
+  /** Near-duplicate pairs over merged signature state: the canonical
+    * asset set, then RHP-LSH banding + exact-cosine verify
+    * ([[graft.ops.Ann.rhpNearDupPairs]]).
+    *
+    * The BAND index is derived at read, not persisted per batch, and
+    * deliberately: the hyperplanes are data-derived (the 64
+    * lowest-id canonicals, so the oracle can replay them), and that
+    * set is only stable once ingestion order no longer matters —
+    * banding incrementally against an early snapshot would key later
+    * batches to drifted planes. A deployment with FIXED random planes
+    * can band each batch at ingest from this same signature state.
+    */
+  def nearDupOf(signatures: DataFrame, threshold: Double = 0.8): DataFrame =
+    graft.ops.Ann.rhpNearDupPairs(
+      signatures.select(col("canonical_id").as("media_id"), col("embedding")),
+      threshold, idCol = "media_id", vecCol = "embedding")
 
   /** FRAME-grain media near-dup — the duplicated-CLIP detector both
     * exact tiers are blind to (r15 verdict): [[frameOverlap]] needs
@@ -156,43 +239,25 @@ object MediaQueries {
   }
 
   /** Content-hash media dedup built through the STREAMING ingest leg
-    * ([[graft.streaming.MediaIngest]]): id-ordered event thirds land
-    * as per-batch (hash, min-id, count) deltas, the read is the
-    * (min, sum) re-merge — order-independent mergeable state, so the
-    * gate shares `q_media_dedup`'s oracle verbatim. The family's
-    * first streaming leg; payload bytes never persist or shuffle.
+    * ([[mediaDedupState]]): id-ordered event thirds land as per-batch
+    * (hash, min-id, count) deltas, the read is the (min, sum) re-merge
+    * — order-independent, so the gate shares `q_media_dedup`'s oracle
+    * verbatim.
     */
-  def mediaDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.MediaIngest
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_media_ingest").toString
-    OlapQueries.idOrderedBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
-      MediaIngest.processBatch(Media.mediaFromEvents(b), i.toLong,
-        s"$tmp/state")
-    }
-    MediaIngest.readDedup(spark, s"$tmp/state")
-  }
+  def mediaDedupStream(spark: SparkSession, dir: String): DataFrame =
+    mediaDedupState.replay(spark, mediaThirds(spark, dir))
 
   /** The similarity tier built through the STREAMING ingest leg
-    * ([[graft.streaming.MediaIngest.processSignatureBatch]]): id-
-    * ordered event thirds land as per-batch (hash, min-id, embedding)
-    * signature deltas — payloads never persist — and the read
-    * collapses the state to the canonical asset set and runs the
-    * SAME RHP-LSH + exact-cosine verify as the batch gate. Min-merge
-    * state is order-independent, so this shares `q_media_neardup`'s
-    * oracle verbatim: the streaming split must be invisible in the
-    * pair set.
+    * ([[mediaSignatureState]]): id-ordered event thirds land as
+    * per-batch signature deltas, and the read runs the SAME RHP-LSH +
+    * exact-cosine verify as the batch gate — the streaming split must
+    * be invisible in the pair set (shares `q_media_neardup`'s oracle).
     */
-  def mediaNearDupStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.MediaIngest
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_media_sig_ingest").toString
-    OlapQueries.idOrderedBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
-      MediaIngest.processSignatureBatch(Media.mediaFromEvents(b), i.toLong,
-        s"$tmp/state")
-    }
-    MediaIngest.readNearDup(spark, s"$tmp/state")
-  }
+  def mediaNearDupStream(spark: SparkSession, dir: String): DataFrame =
+    nearDupOf(mediaSignatureState.replay(spark, mediaThirds(spark, dir)))
+
+  private def mediaThirds(spark: SparkSession, dir: String): Seq[DataFrame] =
+    OlapQueries.idOrderedBatches(spark, dir).map(Media.mediaFromEvents)
 
   // payload = props' UTF-8 bytes, so DuckDB's md5 over the VARCHAR
   // hashes the identical byte string.

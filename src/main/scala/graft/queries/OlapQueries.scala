@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.{Rank, Rollup}
+import graft.streaming.{Merge, MergeableState}
 
 /** Classic OLAP query surface over `events` — the Pinot-style
   * capabilities a reference user reaches for beyond top-K: sketch
@@ -379,15 +380,14 @@ object OlapQueries {
 
   /** [[corrComponents]] over any events-schema frame. */
   def corrComponentsOf(events: DataFrame): DataFrame =
-    corrWire(corrMomentState(events))
+    corrWire(corrState.merge(corrState.partial(events)))
 
   /** The MERGEABLE moment state: per event_type partial
     * (n, Σx, Σy, Σxy, Σx², Σy²) in DECIMAL(38,0) — plain sums, so
     * partials from any split of the input re-aggregate to the same
-    * state (what makes the streaming twin's additive batches and the
-    * compactor's sum-merge exact).
+    * state, and the stored state is bounded by the type alphabet.
     */
-  def corrMomentState(events: DataFrame): DataFrame = {
+  val corrState: MergeableState = MergeableState({ events =>
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     events
       .select(col("event_type"), col("value_cents").as("x"),
@@ -398,10 +398,10 @@ object OlapQueries {
         sum(dec(col("x")) * dec(col("y"))).as("sxy"),
         sum(dec(col("x")) * dec(col("x"))).as("sxx"),
         sum(dec(col("y")) * dec(col("y"))).as("syy"))
-  }
+  }, Seq("event_type"), Seq("n", "sx", "sy", "sxy", "sxx", "syy").map(Merge.Sum))
 
-  /** Re-aggregate moment-state partials and cross the BIGINT wire
-    * with the guarded casts (see [[corrComponents]]'s doc).
+  /** Cross the BIGINT wire from the merged moment state with the
+    * guarded casts (see [[corrComponents]]'s doc).
     */
   def corrWire(state: DataFrame): DataFrame = {
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
@@ -412,13 +412,6 @@ object OlapQueries {
           c.cast("string"))))
         .otherwise(c.cast("long")).as(name)
     state
-      .groupBy(col("event_type"))
-      .agg(sum(col("n")).cast("long").as("n"),
-        sum(col("sx")).cast("decimal(38,0)").as("sx"),
-        sum(col("sy")).cast("decimal(38,0)").as("sy"),
-        sum(col("sxy")).cast("decimal(38,0)").as("sxy"),
-        sum(col("sxx")).cast("decimal(38,0)").as("sxx"),
-        sum(col("syy")).cast("decimal(38,0)").as("syy"))
       .select(col("event_type"), col("n"),
         toLong(col("sx"), "sum_x"),
         toLong(col("sy"), "sum_y"),
@@ -454,18 +447,17 @@ object OlapQueries {
     * value_cents).
     */
   def ohlcOf(events: DataFrame): DataFrame =
-    ohlcMerge(ohlcPartials(events))
+    ohlcMerge(ohlcState.merge(ohlcState.partial(events)))
 
   /** The MERGEABLE OHLC state: per (hour, type) partial — open/close
     * carried as the full min/max (tu, event_id, value_cents) structs
     * (not just the value: the struct is what stays mergeable — min of
-    * mins IS the global min under the same lexicographic order),
-    * plus high/low/count. Partials from any split of the input merge
-    * to the same bar, which is what the streaming twin's additive
-    * batches and the compactor's min/max/sum merge rely on.
+    * mins IS the global min under the same lexicographic order), so
+    * an hour's TRUE opening trade can arrive in the last batch and
+    * still win — plus high/low/count. Partials from any split of the
+    * input merge to the same bar.
     */
-  def ohlcPartials(events: DataFrame): DataFrame =
-    events.select(
+  val ohlcState: MergeableState = MergeableState(_.select(
         unix_millis(date_trunc("HOUR", col("ts"))).as("hour_start_ms"),
         col("event_type"),
         unix_micros(col("ts")).as("tu"),
@@ -477,19 +469,19 @@ object OlapQueries {
         max(struct(col("tu"), col("event_id"), col("value_cents"))).as("c"),
         max(col("value_cents")).as("high_cents"),
         min(col("value_cents")).as("low_cents"),
-        count(lit(1)).as("n_events"))
+        count(lit(1)).as("n_events")),
+    Seq("hour_start_ms", "event_type"),
+    Seq(Merge.Min("o"), Merge.Max("c"), Merge.Max("high_cents"),
+      Merge.Min("low_cents"), Merge.Sum("n_events")))
 
-  /** Merge OHLC partials into final bars (min/max/sum re-agg + the
-    * open/close struct projection).
+  /** Final bars from the merged OHLC state (the open/close struct
+    * projection).
     */
   def ohlcMerge(state: DataFrame): DataFrame =
-    state.groupBy(col("hour_start_ms"), col("event_type"))
-      .agg(
-        min(col("o")).getField("value_cents").as("open_cents"),
-        max(col("c")).getField("value_cents").as("close_cents"),
-        max(col("high_cents")).as("high_cents"),
-        min(col("low_cents")).as("low_cents"),
-        sum(col("n_events")).cast("long").as("n_events"))
+    state.select(col("hour_start_ms"), col("event_type"),
+      col("o").getField("value_cents").as("open_cents"),
+      col("c").getField("value_cents").as("close_cents"),
+      col("high_cents"), col("low_cents"), col("n_events"))
 
   /** Per-type z-score outlier flags in EXACT integer arithmetic:
     * z² > k² rewrites to `(n·x − S)² · 4 > k²·4 · (n·SS − S²)` over
@@ -543,57 +535,50 @@ object OlapQueries {
         sum(col("value_cents")).as("total_cents"))
   }
 
-  /** The STREAMING moment-state composition, gated: drive
-    * [[graft.streaming.CorrIngest]] over three id-ordered
-    * micro-batches (direct `processBatch` calls — the foreachBatch
-    * body; the `q_doc_curate_stream` harness pattern), then read the
-    * merged moments back through the same guarded wire. Sums are
-    * order-independent, so the oracle is the plain batch SQL.
+  /** The STREAMING moment-state composition, gated: replay
+    * [[corrState]] over three id-ordered micro-batches, then the same
+    * guarded wire. Sums are order-independent, so the oracle is the
+    * plain batch SQL.
     */
-  def corrComponentsStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_corr_gate").toString
-    idOrderedBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.CorrIngest.processBatch(b, i.toLong, s"$tmp/moments")
-    }
-    graft.streaming.CorrIngest.readMoments(spark, s"$tmp/moments")
-  }
+  def corrComponentsStream(spark: SparkSession, dir: String): DataFrame =
+    corrWire(corrState.replay(spark, idOrderedBatches(spark, dir)))
 
   /** The STREAMING OHLC composition, gated: partial bars per
     * micro-batch, struct-min/max merged at read — an hour's true
     * opening trade can land in any batch and still win the merge.
     */
-  def ohlcStream(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ohlc_gate").toString
-    idOrderedBatches(spark, dir).zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.OhlcIngest.processBatch(b, i.toLong, s"$tmp/bars")
-    }
-    graft.streaming.OhlcIngest.readBars(spark, s"$tmp/bars")
-  }
+  def ohlcStream(spark: SparkSession, dir: String): DataFrame =
+    ohlcMerge(ohlcState.replay(spark, idOrderedBatches(spark, dir)))
 
-  /** Three id-ranged micro-batches of the events table (the shared
-    * stream-gate split; 1-row aggregate = bounded driver metadata).
-    * The cut points are a pure function of the events table, so they
-    * are computed once per corpus fingerprint (two longs of driver
-    * metadata) instead of re-running the max() aggregate on every
-    * stream-gate call — ~10 gates split the same table the same way
-    * (guide §1.2: don't recompute what you already know).
+  /** Three id-ranged micro-batches of `frame` (the shared stream-gate
+    * split: ids up to max/3, up to 2·max/3, the rest). The cut points
+    * are a pure function of the table, so they are computed once per
+    * fingerprint of `file` (two longs of driver metadata) instead of
+    * re-running the max() aggregate on every stream-gate call — many
+    * gates split the same table the same way.
     */
   private val idCutsCache =
     scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
 
-  private[queries] def idOrderedBatches(spark: SparkSession,
-      dir: String): Seq[DataFrame] = {
-    val ev = Tables.events(spark, dir)
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    val cuts = idCutsCache.getOrElseUpdate(fp, {
-      val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
+  private[queries] def idThirds(spark: SparkSession, frame: DataFrame,
+      idCol: String, file: String): Seq[DataFrame] = {
+    val cuts = idCutsCache.getOrElseUpdate(Tables.fingerprint(spark, file), {
+      val maxId = frame.agg(max(col(idCol))).head().getLong(0)
       Seq(maxId / 3, 2 * maxId / 3)
     })
     Seq(
-      ev.filter(col("event_id") <= cuts(0)),
-      ev.filter(col("event_id") > cuts(0) && col("event_id") <= cuts(1)),
-      ev.filter(col("event_id") > cuts(1)))
+      frame.filter(col(idCol) <= cuts(0)),
+      frame.filter(col(idCol) > cuts(0) && col(idCol) <= cuts(1)),
+      frame.filter(col(idCol) > cuts(1)))
   }
+
+  private[queries] def idOrderedBatches(spark: SparkSession,
+      dir: String): Seq[DataFrame] =
+    idThirds(spark, Tables.events(spark, dir), "event_id", s"$dir/events.parquet")
+
+  private[queries] def docIdBatches(spark: SparkSession,
+      dir: String): Seq[DataFrame] =
+    idThirds(spark, Tables.documents(spark, dir), "doc_id", s"$dir/documents.parquet")
 
   /** The id-ordered-thirds EVENTS feed as an on-disk file-source
     * stream, landed ONCE per corpus fingerprint and shared by every

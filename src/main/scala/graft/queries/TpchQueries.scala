@@ -702,7 +702,7 @@ object TpchQueries {
     * streaming plan (every micro-batch enriches against the pinned
     * dim — the Kafka-joins-a-dim-table shape every ingest pipeline
     * has). Per-batch (region, nation) partial sums land as idempotent
-    * `batch_id` deltas (sums are additive, the DriftIngest pattern)
+    * `batch_id` deltas (sums are additive, the [[graft.streaming.MergeableState]] pattern)
     * and the report re-sums at read — stream-final ≡ batch under any
     * split, so the gate shares `q_tpch_revenue_by_nation`'s oracle.
     */

@@ -310,7 +310,7 @@ object AnnIndex {
   }
 
   /** Small-file maintenance for an always-appending IVF ingest
-    * ([[graft.streaming.EmbedIngest]]'s 10 s triggers leave one
+    * ([[append]] on 10 s [[graft.streaming.StreamRunner]] triggers leaves one
     * parquet file per cell per batch): every cell directory holding
     * at least `minFiles` files rewrites as one file, via
     * [[EraseStage]]'s staged commit — kept vectors are durable before

@@ -107,10 +107,16 @@ object Maintenance {
     replicateHot: Option[Int] = None,
     replicateLanding: Option[Int] = None) extends Task
 
-  /** A streaming ingest's own `compact()` surface (SegmentIngest,
-    * SpanIngest, CurationIngest, MediaIngest, LmIngest, ... — each
-    * folds batch-id partitions at its state's own grain). The body
-    * runs under this scheduler tick and is logged by `label`.
+  /** A streaming ingest's own compaction: a
+    * [[graft.streaming.MergeableState.compact]] (WAU, co-visitation,
+    * RFM, OHLC, correlation, drift and the two media states), an
+    * admission or census twin's `compact` (SegmentIngest, SpanIngest,
+    * CurationIngest, IncrementalDedup, LmIngest, VocabIngest,
+    * BoilerplateIngest) or the pipeline's
+    * [[graft.streaming.StreamingPipeline.compactRollupState]] — each
+    * folds batch-id partitions at its state's own grain through
+    * [[graft.streaming.StateCompactor]]. The body runs under this
+    * scheduler tick and is logged by `label`.
     */
   final case class IngestCompact(label: String,
     body: SparkSession => Unit) extends Task

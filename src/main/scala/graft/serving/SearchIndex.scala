@@ -124,7 +124,7 @@ object SearchIndex {
 
   /** Segment-merge maintenance — the Pinot minion merge/rollup-task
     * analog for this index: a long-running 10 s-trigger ingest
-    * ([[graft.streaming.SearchIngest]]) fragments every postings
+    * ([[append]] per batch via [[graft.streaming.StreamRunner]]) fragments every postings
     * bucket into one parquet file per batch and stats/meta into one
     * delta row per batch, so queries pay directory listings and the
     * per-delta_id collapse forever. Compaction consolidates all of
@@ -253,7 +253,7 @@ object SearchIndex {
   // Corpus size per index root, cached on the driver like
   // [[Serving.anchorMs]]: one tiny meta aggregate on first query,
   // invalidated by this JVM's own [[writeDelta]] calls (streaming
-  // appends run in-process via SearchIngest). An index appended to by
+  // appends run in-process via StreamRunner). An index appended to by
   // ANOTHER process needs the meta re-read — same single-writer scope
   // as the fingerprint-keyed index caches upstream. `writeGen` closes
   // the check-then-act race with a concurrent in-process append: a

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.NearDup
 
 /** Ingestion-time boilerplate scrub — the streaming twin of
@@ -33,23 +32,19 @@ import graft.ops.NearDup
   */
 object BoilerplateIngest {
 
+  /** The (doc_id, seg_idx, seg, h) segment stream and its per-hash
+    * `cnt` census — the [[CensusState]] pair this state is.
+    */
+  def state(segWords: Int = 10): CensusState = CensusState(
+    b => NearDup.segmentsOf(b, segWords).withColumn("h", md5(col("seg"))),
+    _.groupBy(col("h")).agg(count(lit(1)).as("cnt")))
+
   /** Process one micro-batch: append the batch's segment stream and
-    * its per-hash count delta under `batchId` partitions. Returns the
-    * batch's segment frame for tests/inspection.
+    * its per-hash count delta under `batchId` partitions.
     */
   def processBatch(batch: DataFrame, batchId: Long, segsPath: String,
-      countsPath: String, segWords: Int = 10): DataFrame = {
-    val b = batch.persist()
-    try {
-      val segs = NearDup.segmentsOf(b, segWords)
-        .withColumn("h", md5(col("seg")))
-        .localCheckpoint(true)
-      val counts = segs.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-      StreamingPipeline.writeBatchIdempotent(segs, batchId, segsPath)
-      StreamingPipeline.writeBatchIdempotent(counts, batchId, countsPath)
-      segs
-    } finally { b.unpersist(); () }
-  }
+      countsPath: String, segWords: Int = 10): Unit =
+    state(segWords).append(batch, batchId, segsPath, countsPath)
 
   /** The scrubbed corpus AS OF the ingested state: global per-hash
     * counts (SUM over batch deltas), over-threshold hash set
@@ -80,46 +75,20 @@ object BoilerplateIngest {
     */
   def compact(spark: SparkSession, segsPath: String,
       countsPath: String): Unit = {
-    StateCompactor.compactAdditive(spark, countsPath, Seq("h"), Seq("cnt"))
-    StateCompactor.compactDistinct(spark, segsPath,
-      Seq("doc_id", "seg_idx", "seg", "h"))
+    StateCompactor.compactWith(spark, countsPath, Seq("h"), Seq(Merge.Sum("cnt")))
+    StateCompactor.compactWith(spark, segsPath, Seq("doc_id", "seg_idx", "seg", "h"), Nil)
   }
 
   /** Right-to-be-forgotten over the boilerplate state: the global
-    * frequency counts include the erased doc's segment occurrences,
-    * and additive state can't subtract — but the counts are BY
-    * CONSTRUCTION `segs.groupBy(h).count()` of the retained segment
-    * stream, so they rebuild exactly from the doc-keyed segs state
-    * minus the victim ([[LmIngest.eraseDoc]]'s ordering: counts
-    * first, recomputed from the not-yet-erased segs, so a crashed
-    * erase re-runs idempotently; then the victim's segment rows fold
-    * out). Erasing a doc can pull a segment's count back UNDER
-    * `maxFreq` — its other copies legitimately resurface at read,
-    * exactly as a rebuild-without-doc would conclude.
+    * frequency counts are BY CONSTRUCTION `segs.groupBy(h).count()`
+    * of the retained segment stream, so they rebuild exactly from the
+    * doc-keyed segs state minus the victim
+    * ([[CensusState.eraseDoc]]'s crash-safe order). Erasing a doc can
+    * pull a segment's count back UNDER `maxFreq` — its other copies
+    * legitimately resurface at read, exactly as a
+    * rebuild-without-doc would conclude.
     */
   def eraseDoc(spark: SparkSession, segsPath: String,
-      countsPath: String, docId: Long): Unit = {
-    val countsWithout = StateCompactor.readState(spark, segsPath)
-      .filter(col("doc_id") =!= docId)
-      .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-    StateCompactor.rewriteState(spark, countsPath, countsWithout)
-    StateCompactor.eraseWhere(spark, segsPath, col("doc_id") === docId)
-  }
-
-  /** Start the ingest stream over a `documents`-schema source. */
-  def start(spark: SparkSession, source: DataFrame, segsPath: String,
-      countsPath: String, checkpoint: String, segWords: Int = 10,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        release(processBatch(batch, batchId, segsPath, countsPath, segWords))
-      }
-      .start()
-
-  private[graft] def release(pinned: DataFrame): Unit =
-    pinned.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+      countsPath: String, docId: Long): Unit =
+    state().eraseDoc(spark, segsPath, countsPath, docId)
 }

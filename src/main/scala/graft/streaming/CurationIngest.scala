@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.ops.NearDup
 
 /** DETERMINISTIC ingest-time curation — the gated composition of
   * [[DocPipeline]]'s continuous curation (normalize → quality filter
@@ -75,9 +75,9 @@ object CurationIngest {
     * ([[SegmentIngest.compact]]'s twin at the fingerprint grain). */
   def compact(spark: SparkSession, keptPath: String,
       indexPath: String): Unit = {
-    StateCompactor.compactDistinct(spark, indexPath, Seq("fp"))
-    StateCompactor.compactDistinct(spark, keptPath,
-      Seq("fp", "doc_id", "lang", "source", "n_tokens"))
+    StateCompactor.compactWith(spark, indexPath, Seq("fp"), Nil)
+    StateCompactor.compactWith(spark, keptPath,
+      Seq("fp", "doc_id", "lang", "source", "n_tokens"), Nil)
   }
 
   /** Right-to-be-forgotten over the ingest-time curation state — the
@@ -120,23 +120,6 @@ object CurationIngest {
             s"$indexPath admitted — erasing would drop other documents' state")
       StateCompactor.rewriteState(spark, indexPath, newKept.select(col("fp")))
       StateCompactor.rewriteState(spark, keptPath, newKept)
-    } finally release(newKept)
+    } finally NearDup.releaseCheckpoint(newKept)
   }
-
-  /** Start the curation ingest over a `documents`-schema source. */
-  def start(spark: SparkSession, source: DataFrame, keptPath: String,
-      indexPath: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        release(processBatch(batch, batchId, keptPath, indexPath))
-      }
-      .start()
-
-  private[graft] def release(pinned: DataFrame): Unit =
-    pinned.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
 }

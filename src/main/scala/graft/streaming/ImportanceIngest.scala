@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.Sample
 import graft.serving.ImportanceProfile
 
@@ -21,16 +20,4 @@ object ImportanceIngest {
     ImportanceProfile.writeDelta(
       Sample.bucketProfile(batch, targetPred, ImportanceProfile.Buckets),
       batchId, root)
-
-  /** Start the profile-ingest stream over a `documents`-schema source. */
-  def start(spark: SparkSession, source: DataFrame, root: String,
-      checkpoint: String, targetPred: Column,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, targetPred)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.NearDup
 
 /** Ingestion-time incremental near-dup dedup: every micro-batch of
@@ -63,11 +62,15 @@ object IncrementalDedup {
       try {
         // tier 2: exact within-batch dedup — keep min-id survivors
         val pairs = NearDup.minhashPairs(fresh)
-        val dropped = NearDup.canonicalize(pairs)
-          .filter(col("doc_id") =!= col("canonical_id"))
-          .select(col("doc_id"))
-        val admitted = fresh.join(dropped, Seq("doc_id"), "left_anti")
+        val canon = NearDup.canonicalize(pairs)
+        val admitted = fresh
+          .join(canon.filter(col("doc_id") =!= col("canonical_id")).select(col("doc_id")),
+            Seq("doc_id"), "left_anti")
           .localCheckpoint(true)
+        // both near-dup results come back pinned; admitted is already
+        // materialized, so their blocks are dead weight from here on
+        NearDup.releaseCheckpoint(canon)
+        NearDup.releaseCheckpoint(pairs)
         StreamingPipeline.writeBatchIdempotent(admitted, batchId, admittedPath)
         StreamingPipeline.writeBatchIdempotent(
           bandBuckets(admitted), batchId, indexPath)
@@ -104,10 +107,10 @@ object IncrementalDedup {
     */
   def compact(spark: SparkSession, admittedPath: String,
       indexPath: String): Unit = {
-    StateCompactor.compactDistinct(spark, indexPath,
-      Seq("doc_id", "band_idx", "band_hash"))
-    StateCompactor.compactDistinct(spark, admittedPath,
-      Seq("doc_id", "text", "lang", "source", "n_chars"))
+    StateCompactor.compactWith(spark, indexPath,
+      Seq("doc_id", "band_idx", "band_hash"), Nil)
+    StateCompactor.compactWith(spark, admittedPath,
+      Seq("doc_id", "text", "lang", "source", "n_chars"), Nil)
   }
 
   /** Right-to-be-forgotten over the incremental-dedup state: fold the
@@ -137,16 +140,4 @@ object IncrementalDedup {
     StateCompactor.eraseWhere(spark, indexPath, col("doc_id") === docId)
     StateCompactor.eraseWhere(spark, admittedPath, col("doc_id") === docId)
   }
-
-  /** Start the ingest stream over a `documents`-schema source. */
-  def start(spark: SparkSession, source: DataFrame, admittedPath: String,
-      indexPath: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, admittedPath, indexPath); ()
-      }
-      .start()
 }

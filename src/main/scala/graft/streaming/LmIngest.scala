@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.{KmvSketch, Text}
 
 /** Ingestion-time corpus-LM state — the streaming twin of
   * [[graft.queries.DocQueries.lmScore]], on the additive-count-state
-  * pattern ([[BoilerplateIngest]]): familiarity depends on the
+  * pattern ([[CensusState]]): familiarity depends on the
   * CORPUS-GLOBAL bigram census, so a document's score can shift
   * retroactively as later batches thicken the census — the state
   * therefore stores per-batch additive census deltas plus each
@@ -24,27 +23,25 @@ import graft.functions.{KmvSketch, Text}
   */
 object LmIngest {
 
-  /** Process one micro-batch: append (doc_id, h, k) gram profiles
-    * and the batch's per-hash census delta under `batchId`
-    * partitions.
+  /** (doc_id, h, k) gram profiles and the per-hash census
+    * `c = sum(k)` — the [[CensusState]] pair this state is.
     */
-  def processBatch(batch: DataFrame, batchId: Long, gramsPath: String,
-      censusPath: String): Unit = {
-    val grams = batch
-      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
+  val state: CensusState = CensusState(
+    _.select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         explode(Text.bigramsFromTokens(col("toks"))).as("bg"))
       .select(col("doc_id"), KmvSketch.keyHash(
         concat(col("bg.w1"), lit(" "), col("bg.w2"))).as("h"))
       .groupBy(col("doc_id"), col("h"))
-      .agg(count(lit(1)).as("k"))
-      .persist()
-    try {
-      val census = grams.groupBy(col("h")).agg(sum(col("k")).as("c"))
-      StreamingPipeline.writeBatchIdempotent(grams, batchId, gramsPath)
-      StreamingPipeline.writeBatchIdempotent(census, batchId, censusPath)
-    } finally { grams.unpersist(); () }
-  }
+      .agg(count(lit(1)).as("k")),
+    _.groupBy(col("h")).agg(sum(col("k")).as("c")))
+
+  /** Process one micro-batch: append its gram profiles and census
+    * delta under `batchId` partitions.
+    */
+  def processBatch(batch: DataFrame, batchId: Long, gramsPath: String,
+      censusPath: String): Unit =
+    state.append(batch, batchId, gramsPath, censusPath)
 
   /** Least-familiar documents AS OF the ingested state: global census
     * (SUM over batch deltas), bit-length scoring, same topN/tie
@@ -74,45 +71,18 @@ object LmIngest {
     */
   def compact(spark: SparkSession, gramsPath: String,
       censusPath: String): Unit = {
-    StateCompactor.compactAdditive(spark, gramsPath,
-      Seq("doc_id", "h"), Seq("k"))
-    StateCompactor.compactAdditive(spark, censusPath, Seq("h"), Seq("c"))
+    StateCompactor.compactWith(spark, gramsPath, Seq("doc_id", "h"), Seq(Merge.Sum("k")))
+    StateCompactor.compactWith(spark, censusPath, Seq("h"), Seq(Merge.Sum("c")))
   }
 
   /** Right-to-be-forgotten over the LM census state: the erased doc's
     * tokens contributed additive mass to the corpus-global bigram
-    * census, so erasure must subtract it — additive state can't, so
-    * the census is REBUILT from the per-doc gram profiles minus the
-    * victim (census ≡ `grams.groupBy(h).sum(k)` by construction —
-    * every batch's census delta is that aggregate of its own grams),
-    * then the victim's profile rows are folded out of the grams
-    * state. Both folds are manifest-committed generations
-    * ([[StateCompactor.rewriteState]]/[[StateCompactor.eraseWhere]]),
-    * and the ORDER makes a crash between them re-run-recoverable:
-    * census first, recomputed from the not-yet-erased grams — a
-    * re-run recomputes the identical census (grams unchanged) and
-    * recommits it, never double-subtracting. After both,
+    * census, so it is rebuilt from the gram profiles minus the victim
+    * ([[CensusState.eraseDoc]]'s crash-safe order). After it,
     * [[readScores]] equals a rebuild over the corpus without the doc,
     * bit for bit (row-disjoint profiles + additive census).
     */
   def eraseDoc(spark: SparkSession, gramsPath: String,
-      censusPath: String, docId: Long): Unit = {
-    val censusWithout = StateCompactor.readState(spark, gramsPath)
-      .filter(col("doc_id") =!= docId)
-      .groupBy(col("h")).agg(sum(col("k")).as("c"))
-    StateCompactor.rewriteState(spark, censusPath, censusWithout)
-    StateCompactor.eraseWhere(spark, gramsPath, col("doc_id") === docId)
-  }
-
-  /** Start the ingest stream over a `documents`-schema source. */
-  def start(spark: SparkSession, source: DataFrame, gramsPath: String,
-      censusPath: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, gramsPath, censusPath)
-      }
-      .start()
+      censusPath: String, docId: Long): Unit =
+    state.eraseDoc(spark, gramsPath, censusPath, docId)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.NearDup
 
 /** Ingestion-time segment dedup — the streaming twin of
@@ -63,15 +62,10 @@ object SegmentIngest {
       StreamingPipeline.writeBatchIdempotent(kept, batchId, keptPath)
       StreamingPipeline.writeBatchIdempotent(
         fresh.select(col("h")), batchId, indexPath)
-      release(fresh)
+      NearDup.releaseCheckpoint(fresh)
       kept
     } finally { b.unpersist(); () }
   }
-
-  private def release(pinned: DataFrame): Unit =
-    pinned.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** The accumulated segment-hash index (empty before the first
     * admit). Reads through [[StateCompactor.readStateIfAny]] so a
@@ -99,9 +93,9 @@ object SegmentIngest {
     */
   def compact(spark: SparkSession, keptPath: String,
       indexPath: String): Unit = {
-    StateCompactor.compactDistinct(spark, indexPath, Seq("h"))
-    StateCompactor.compactDistinct(spark, keptPath,
-      Seq("doc_id", "text_deduped", "segs_kept"))
+    StateCompactor.compactWith(spark, indexPath, Seq("h"), Nil)
+    StateCompactor.compactWith(spark, keptPath,
+      Seq("doc_id", "text_deduped", "segs_kept"), Nil)
   }
 
   /** Right-to-be-forgotten over the ingest-time segment state: fold
@@ -158,20 +152,6 @@ object SegmentIngest {
       StateCompactor.rewriteState(spark, indexPath, newIdx)
       StateCompactor.rewriteState(spark, keptPath,
         NearDup.segmentDedup(retained, segWords))
-    } finally release(newIdx)
+    } finally NearDup.releaseCheckpoint(newIdx)
   }
-
-  /** Start the ingest stream over a `documents`-schema source. */
-  def start(spark: SparkSession, source: DataFrame, keptPath: String,
-      indexPath: String, checkpoint: String, segWords: Int = 10,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the stream discards the returned frame — release its pinned
-        // blocks so a long-running ingest doesn't accumulate them
-        release(processBatch(batch, batchId, keptPath, indexPath, segWords))
-      }
-      .start()
 }

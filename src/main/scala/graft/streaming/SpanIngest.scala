@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.NearDup
 
 /** Ingestion-time duplicated-span scrub — the streaming twin of
@@ -68,15 +67,10 @@ object SpanIngest {
       StreamingPipeline.writeBatchIdempotent(kept, batchId, keptPath)
       StreamingPipeline.writeBatchIdempotent(
         fresh.select(col("h")), batchId, indexPath)
-      release(fresh)
+      NearDup.releaseCheckpoint(fresh)
       kept
     } finally { b.unpersist(); () }
   }
-
-  private def release(pinned: DataFrame): Unit =
-    pinned.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** The accumulated gram-hash index (empty before the first claim).
     * `excludeBatchId` drops that batch's own LIVE partition (a pruned
@@ -110,9 +104,9 @@ object SpanIngest {
     */
   def compact(spark: SparkSession, keptPath: String,
       indexPath: String): Unit = {
-    StateCompactor.compactDistinct(spark, indexPath, Seq("h"))
-    StateCompactor.compactDistinct(spark, keptPath,
-      Seq("doc_id", "text_scrubbed", "kept_tokens"))
+    StateCompactor.compactWith(spark, indexPath, Seq("h"), Nil)
+    StateCompactor.compactWith(spark, keptPath,
+      Seq("doc_id", "text_scrubbed", "kept_tokens"), Nil)
   }
 
   /** Right-to-be-forgotten over the ingest-time span state — the
@@ -156,20 +150,6 @@ object SpanIngest {
       StateCompactor.rewriteState(spark, indexPath, newIdx)
       StateCompactor.rewriteState(spark, keptPath,
         NearDup.spanScrub(retained, k))
-    } finally release(newIdx)
+    } finally NearDup.releaseCheckpoint(newIdx)
   }
-
-  /** Start the ingest stream over a `documents`-schema source. */
-  def start(spark: SparkSession, source: DataFrame, keptPath: String,
-      indexPath: String, checkpoint: String, k: Int = 5,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the stream discards the returned frame — release its pinned
-        // blocks so a long-running ingest doesn't accumulate them
-        release(processBatch(batch, batchId, keptPath, indexPath, k))
-      }
-      .start()
 }

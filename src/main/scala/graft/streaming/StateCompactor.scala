@@ -5,10 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Segment compaction for batch-id-partitioned ingest STATE — the
-  * Pinot merge/rollup-task analog for the additive-delta state
-  * tables the foreachBatch twins append to
-  * ([[LmIngest]] census deltas, [[CovisitIngest]] user-type rows,
-  * [[BoilerplateIngest]] counts): without it, state fragments into
+  * Pinot merge/rollup-task analog for the state tables the
+  * foreachBatch legs append to (every [[MergeableState]], the
+  * [[CensusState]] profile/census pairs, the admission indexes and
+  * the pipeline's rollup segments): without it, state fragments into
   * one partition per micro-batch forever (10 s triggers ≈ 8,640
   * directories/day — a listing and small-file liability long before
   * data volume matters).
@@ -42,11 +42,11 @@ import org.apache.spark.sql.functions._
   *    see a fold twice or not at all.
   *
   * Readers go through [[readState]], which resolves the committed
-  * generation + batch partitions not yet folded into it. Every
-  * ingest twin's read path composes its own re-aggregation on top
-  * (sum for additive counts, distinct for set state), so compaction
-  * commutes with reads by the same associativity that makes the
-  * state mergeable in the first place.
+  * generation + batch partitions not yet folded into it. A
+  * [[MergeableState]] re-aggregates that view with the same typed
+  * [[Merge]]s the fold uses ([[Merge.frame]]), so compaction commutes
+  * with reads by the same associativity that makes the state
+  * mergeable in the first place.
   */
 object StateCompactor {
 
@@ -135,25 +135,14 @@ object StateCompactor {
 
   /** Fold every committed batch partition (strictly below the max
     * present id — the only replayable batch keeps its own) into the
-    * next consolidated generation, re-aggregated as
-    * `groupBy(keys).agg(sum(measure)…)` — or `distinct` over the
-    * keys when `measures` is empty (set-valued state). Call between
-    * batches (the maintenance slot Pinot's minion tasks use). No-op
-    * when nothing is foldable.
-    */
-  def compactAdditive(spark: SparkSession, path: String, keys: Seq[String],
-      measures: Seq[String]): Unit =
-    compactWith(spark, path, keys, measures.map(c => (c, "sum")))
-
-  /** [[compactAdditive]] with a per-measure MERGE function — for
-    * state whose re-aggregation is mergeable but not a plain sum
-    * (e.g. RFM recency = `max` of last-purchase micros, OHLC
-    * open/close = `min`/`max` over (tu, id, value) structs). Only
-    * associative+commutative merges are valid here — the same
-    * algebra that makes the state batchable at all.
+    * next consolidated generation, re-aggregated by [[Merge.frame]]:
+    * `groupBy(keys)` with each column's typed merge, or `distinct`
+    * over the keys when `merges` is empty (set-valued state). Call
+    * between batches (the maintenance slot Pinot's minion tasks use).
+    * No-op when nothing is foldable.
     */
   def compactWith(spark: SparkSession, path: String, keys: Seq[String],
-      aggs: Seq[(String, String)]): Unit = {
+      merges: Seq[Merge]): Unit = {
     val f = fs(spark, path)
     val cur = currentGen(spark, path)
     val folded = cur.fold(Set.empty[Long])(_.folded)
@@ -168,21 +157,7 @@ object StateCompactor {
       parts.unionByName(spark.read.parquet(genDir(path, g.gen))
         .select(parts.columns.toIndexedSeq.map(col): _*))
     }
-    val merged =
-      if (aggs.isEmpty) withOld.select(keys.map(col): _*).distinct()
-      else {
-        val cols = aggs.map {
-          case (c, "sum") => sum(col(c)).as(c)
-          case (c, "max") => max(col(c)).as(c)
-          case (c, "min") => min(col(c)).as(c)
-          // sketch-valued state (the rollup segments' users_hll):
-          // union is the sketch's own associative merge
-          case (c, "hll") => hll_union_agg(col(c)).as(c)
-          case (c, fn) => throw new IllegalArgumentException(
-            s"unsupported merge '$fn' for state column '$c' (sum|max|min|hll)")
-        }
-        withOld.groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
-      }
+    val merged = Merge.frame(withOld, keys, merges)
     val nextG = cur.fold(1L)(_.gen + 1L)
     val next = new Path(genDir(path, nextG))
     f.delete(next, true) // debris from a previous crashed attempt
@@ -198,21 +173,15 @@ object StateCompactor {
     cur.foreach(g => f.delete(new Path(genDir(path, g.gen)), true))
   }
 
-  /** Set-state convenience: fold with distinct keys, no measures. */
-  def compactDistinct(spark: SparkSession, path: String,
-      keys: Seq[String]): Unit =
-    compactAdditive(spark, path, keys, Seq.empty)
-
   /** Targeted ERASURE over batch-id-partitioned ingest state — the
     * right-to-be-forgotten leg for the additive/monotone state roots
-    * ([[WauIngest]] (user, day) sets, [[CovisitIngest]] (user, type)
-    * sets), which [[graft.serving.Serving.eraseUser]]'s
+    * (the WAU (user, day) and co-visitation (user, type) sets), which [[graft.serving.Serving.eraseUser]]'s
     * recompute-touched-partitions pass cannot reach. Additive state
     * can't subtract, so the WHOLE visible state (committed
     * generation + every live batch partition) is folded into a new
     * generation with the matching rows filtered out; the manifest
     * create is the single atomic commit point, exactly as in
-    * [[compactAdditive]] — a crash before it leaves debris readers
+    * [[compactWith]] — a crash before it leaves debris readers
     * never see, a crash after it is complete.
     *
     * Unlike routine compaction this folds the MAX batch id too (the
@@ -222,7 +191,7 @@ object StateCompactor {
     * runtime later replays that last batch anyway, its rewritten
     * partition is already in the manifest and stays invisible to
     * readers: the erased rows cannot resurface through replay, and
-    * subsequent [[compactAdditive]] calls skip folded ids by
+    * subsequent [[compactWith]] calls skip folded ids by
     * construction.
     *
     * No-op when the root has no state yet.

@@ -194,20 +194,20 @@ object StreamingPipeline {
     */
   def compactRollupState(spark: SparkSession, rollupPath: String,
       dims: Seq[String] = Seq("event_type")): Unit = {
-    val measures = Seq("order_count" -> "sum",
-      "sum_value_cents" -> "sum", "users_hll" -> "hll")
+    val measures = Seq(Merge.Sum("order_count"),
+      Merge.Sum("sum_value_cents"), Merge.HllUnion("users_hll"))
     val keys = "window_start_ms" +: dims :+ "hour_of_day" :+ "day_of_week_iso"
     // refuse schema drift loudly: a measure added to rollupSegment
     // but not listed here would silently become a GROUPING KEY, the
     // fold would stop reducing, and the O(batches²) refreshTopK
     // hazard this compaction exists to bound would quietly return
     val schema = spark.read.parquet(rollupPath).schema.fieldNames.toSet
-    val unknown = schema -- keys.toSet -- measures.map(_._1).toSet - "batch_id"
+    val unknown = schema -- keys.toSet -- measures.map(_.column).toSet - "batch_id"
     require(unknown.isEmpty,
       s"rollup state at $rollupPath has columns $unknown this compactor " +
         "does not know — add them to compactRollupState's measures (with " +
         "their merge) or keys before folding")
-    val absent = (keys ++ measures.map(_._1)).filterNot(schema)
+    val absent = (keys ++ measures.map(_.column)).filterNot(schema)
     require(absent.isEmpty,
       s"rollup state at $rollupPath is missing expected columns $absent")
     StateCompactor.compactWith(spark, rollupPath, keys, measures)

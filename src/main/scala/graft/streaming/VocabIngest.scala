@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Ingestion-time WORD-FREQUENCY census — the streaming twin of the
   * tokenizer trainers' corpus statistic ([[graft.ops.Bpe.wordFreqs]],
@@ -27,21 +26,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object VocabIngest {
 
-  /** Process one micro-batch of `documents`-schema rows. */
-  def processBatch(batch: DataFrame, batchId: Long, docwordsPath: String,
-      censusPath: String): Unit = {
-    val words = batch
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("wd"))
+  /** (doc_id, wd, k) word profiles and the (wd, freq) census. */
+  val state: CensusState = CensusState(
+    _.select(col("doc_id"), explode(split(col("text"), " ")).as("wd"))
       .filter(col("wd") =!= "")
       .groupBy(col("doc_id"), col("wd"))
-      .agg(count(lit(1)).as("k"))
-      .persist()
-    try {
-      val census = words.groupBy(col("wd")).agg(sum(col("k")).as("freq"))
-      StreamingPipeline.writeBatchIdempotent(words, batchId, docwordsPath)
-      StreamingPipeline.writeBatchIdempotent(census, batchId, censusPath)
-    } finally { words.unpersist(); () }
-  }
+      .agg(count(lit(1)).as("k")),
+    _.groupBy(col("wd")).agg(sum(col("k")).as("freq")))
+
+  /** Process one micro-batch of `documents`-schema rows. */
+  def processBatch(batch: DataFrame, batchId: Long, docwordsPath: String,
+      censusPath: String): Unit =
+    state.append(batch, batchId, docwordsPath, censusPath)
 
   /** The corpus word-frequency table AS OF the ingested state —
     * identical to [[graft.ops.Bpe.wordFreqs]] over everything
@@ -56,36 +52,16 @@ object VocabIngest {
     */
   def compact(spark: SparkSession, docwordsPath: String,
       censusPath: String): Unit = {
-    StateCompactor.compactAdditive(spark, docwordsPath,
-      Seq("doc_id", "wd"), Seq("k"))
-    StateCompactor.compactAdditive(spark, censusPath, Seq("wd"), Seq("freq"))
+    StateCompactor.compactWith(spark, docwordsPath, Seq("doc_id", "wd"), Seq(Merge.Sum("k")))
+    StateCompactor.compactWith(spark, censusPath, Seq("wd"), Seq(Merge.Sum("freq")))
   }
 
-  /** Right-to-be-forgotten over the census state — the [[LmIngest]]
-    * order: the census REBUILDS from the per-doc profiles minus the
-    * victim first (grams unchanged, so a crashed erase re-runs
-    * idempotently), then the victim's profile rows fold out. After
-    * both, a tokenizer trained from [[readWordFreqs]] equals one
-    * trained on the corpus without the document.
+  /** Right-to-be-forgotten over the census state
+    * ([[CensusState.eraseDoc]]). After it, a tokenizer trained from
+    * [[readWordFreqs]] equals one trained on the corpus without the
+    * document.
     */
   def eraseDoc(spark: SparkSession, docwordsPath: String,
-      censusPath: String, docId: Long): Unit = {
-    val censusWithout = StateCompactor.readState(spark, docwordsPath)
-      .filter(col("doc_id") =!= docId)
-      .groupBy(col("wd")).agg(sum(col("k")).as("freq"))
-    StateCompactor.rewriteState(spark, censusPath, censusWithout)
-    StateCompactor.eraseWhere(spark, docwordsPath, col("doc_id") === docId)
-  }
-
-  /** Start the ingest stream over a `documents`-schema source. */
-  def start(spark: SparkSession, source: DataFrame, docwordsPath: String,
-      censusPath: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, docwordsPath, censusPath)
-      }
-      .start()
+      censusPath: String, docId: Long): Unit =
+    state.eraseDoc(spark, docwordsPath, censusPath, docId)
 }

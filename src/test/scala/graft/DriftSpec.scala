@@ -46,21 +46,21 @@ class DriftSpec extends SparkSuite {
   }
 
   test("ingest twin: out-of-order splits + replay equal the one-shot audit") {
-    import graft.streaming.DriftIngest
     val d = Tables.documents(spark, sfDir)
     val features = Seq[(String, org.apache.spark.sql.Column)](
       "lang" -> $"lang", "source" -> $"source")
     val isRef = $"doc_id" % 2 === 0
     val tmp = java.nio.file.Files.createTempDirectory("graft_drift_twin").toString
     val counts = s"$tmp/counts"
+    val state = Drift.countState(isRef, features)
     // thirds by id-mod (NOT contiguous), processed out of order:
     // additivity makes any split/order converge
     def third(k: Int) = d.filter($"doc_id" % 3 === k)
     Seq(2, 0, 1).foreach(k =>
-      DriftIngest.processBatch(third(k), k.toLong, counts, isRef, features))
+      state.append(third(k), k.toLong, counts))
     // replay one batch: idempotent partition overwrite, bit-exact no-op
-    DriftIngest.processBatch(third(0), 0L, counts, isRef, features)
-    val got = DriftIngest.readAudit(spark, counts)
+    state.append(third(0), 0L, counts)
+    val got = Drift.auditFromCounts(state.read(spark, counts))
       .as[(String, Long, String, Long)].collect().toSet
     val want = graft.ops.Drift.audit(d, isRef, features)
       .as[(String, Long, String, Long)].collect().toSet

@@ -174,7 +174,7 @@ class IngestEraseSpec extends SparkSuite {
     } else
       assert(after.count() == 1 && after.head().getAs[Long]("doc_id") != victim)
     // replay of the last (folded) batch writes invisible partitions
-    CurationIngest.release(CurationIngest.processBatch(
+    NearDup.releaseCheckpoint(CurationIngest.processBatch(
       batches(2), 2L, s"$t/kept", s"$t/index"))
     assert(rows(CurationIngest.readKept(spark, s"$t/kept")) == wantKept)
   }
@@ -252,7 +252,7 @@ class IngestEraseSpec extends SparkSuite {
   }
 
   test("media-ingest erase: state == rebuild-without-media; replay can't resurface; canonical re-mins") {
-    import graft.streaming.MediaIngest
+    import graft.queries.MediaQueries
     import graft.multimodal.Media
     val ev = Tables.events(spark, sfDir)
     val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
@@ -262,36 +262,36 @@ class IngestEraseSpec extends SparkSuite {
       ev.filter(col("event_id") > 2 * maxId / 3))
     val t = tmp("graft_media_erase")
     batches.zipWithIndex.foreach { case (b, i) =>
-      MediaIngest.processBatch(Media.mediaFromEvents(b), i.toLong, s"$t/m") }
+      MediaQueries.mediaDedupState.append(Media.mediaFromEvents(b), i.toLong, s"$t/m") }
     val media = Media.mediaFromEvents(ev)
     // victim: a canonical owner of duplicated content — its erase must
     // hand the canonical id to the next-smallest copy, not drop it
-    val victim = MediaIngest.readDedup(spark, s"$t/m")
+    val victim = MediaQueries.mediaDedupState.read(spark, s"$t/m")
       .filter(col("n_copies") > 1).agg(min(col("canonical_id")))
       .head().getLong(0)
-    MediaIngest.eraseMedia(spark, media, victim, s"$t/m")
+    MediaQueries.eraseMedia(spark, media, victim, s"$t/m")
     val retained = media.filter(col("media_id") =!= victim)
     val want = rows(retained
       .select(md5(col("bytes")).as("content_hash"), col("media_id"))
       .groupBy(col("content_hash"))
       .agg(min(col("media_id")).as("canonical_id"),
         count(lit(1)).as("n_copies")))
-    assert(rows(MediaIngest.readDedup(spark, s"$t/m")) == want)
-    assert(MediaIngest.readDedup(spark, s"$t/m")
+    assert(rows(MediaQueries.mediaDedupState.read(spark, s"$t/m")) == want)
+    assert(MediaQueries.mediaDedupState.read(spark, s"$t/m")
       .filter(col("canonical_id") === victim).isEmpty)
     // replay of the last (folded) batch writes invisible partitions
-    MediaIngest.processBatch(Media.mediaFromEvents(batches(2)), 2L, s"$t/m")
-    assert(rows(MediaIngest.readDedup(spark, s"$t/m")) == want)
+    MediaQueries.mediaDedupState.append(Media.mediaFromEvents(batches(2)), 2L, s"$t/m")
+    assert(rows(MediaQueries.mediaDedupState.read(spark, s"$t/m")) == want)
     // post-erase ingest + compaction stay consistent
-    MediaIngest.processBatch(
+    MediaQueries.mediaDedupState.append(
       Media.mediaFromEvents(batches(0).filter(col("event_id") =!= victim)),
       3L, s"$t/m")
-    MediaIngest.compact(spark, s"$t/m")
-    assert(MediaIngest.readDedup(spark, s"$t/m")
+    MediaQueries.mediaDedupState.compact(spark, s"$t/m")
+    assert(MediaQueries.mediaDedupState.read(spark, s"$t/m")
       .filter(col("canonical_id") === victim).isEmpty)
     // stale-frame guard
     intercept[IllegalArgumentException] {
-      MediaIngest.eraseMedia(spark,
+      MediaQueries.eraseMedia(spark,
         media.withColumn("bytes",
           concat(col("bytes"), lit("zz").cast("binary"))),
         victim + 1, s"$t/m")
@@ -304,8 +304,7 @@ class IngestEraseSpec extends SparkSuite {
     val batches = docBatches(d)
     val t = tmp("graft_boil_erase")
     batches.zipWithIndex.foreach { case (b, i) =>
-      BoilerplateIngest.release(
-        BoilerplateIngest.processBatch(b, i.toLong, s"$t/segs", s"$t/cnt")) }
+      BoilerplateIngest.processBatch(b, i.toLong, s"$t/segs", s"$t/cnt") }
     // victim: a contributor to some corpus-repeated segment, so the
     // erase moves a global count (possibly back under the threshold)
     val victim = NearDup.segmentsOf(d, 10)
@@ -324,35 +323,34 @@ class IngestEraseSpec extends SparkSuite {
     BoilerplateIngest.eraseDoc(spark, s"$t/segs", s"$t/cnt", victim)
     assert(rows(BoilerplateIngest.readScrubbed(spark, s"$t/segs", s"$t/cnt")) == want)
     // replay of the last (folded) batch writes invisible partitions
-    BoilerplateIngest.release(
-      BoilerplateIngest.processBatch(batches(2), 2L, s"$t/segs", s"$t/cnt"))
+    BoilerplateIngest.processBatch(batches(2), 2L, s"$t/segs", s"$t/cnt")
     assert(rows(BoilerplateIngest.readScrubbed(spark, s"$t/segs", s"$t/cnt")) == want)
   }
 
   test("drift-ingest erase: counts rebuild from the retained corpus; audit == rebuild-without-doc") {
-    import graft.streaming.DriftIngest
     import graft.ops.Drift
     val d = Tables.documents(spark, sfDir)
     val batches = docBatches(d)
     val feats = Seq("lang" -> col("lang"), "source" -> col("source"))
     val isRef = col("doc_id") % 2 === 0
     val t = tmp("graft_drift_erase")
+    val state = Drift.countState(isRef, feats)
+    def audit() = rows(Drift.auditFromCounts(state.read(spark, s"$t/cnt")))
     batches.zipWithIndex.foreach { case (b, i) =>
-      DriftIngest.processBatch(b, i.toLong, s"$t/cnt", isRef, feats) }
+      state.append(b, i.toLong, s"$t/cnt") }
     val victim = d.agg(min(col("doc_id"))).head().getLong(0)
-    val preCompact = rows(DriftIngest.readAudit(spark, s"$t/cnt"))
-    DriftIngest.compact(spark, s"$t/cnt")
-    assert(rows(DriftIngest.readAudit(spark, s"$t/cnt")) == preCompact)
-    DriftIngest.eraseDoc(spark, s"$t/cnt", d, victim, isRef, feats)
+    val preCompact = audit()
+    state.compact(spark, s"$t/cnt")
+    assert(audit() == preCompact)
+    Drift.eraseDoc(spark, s"$t/cnt", d, victim, isRef, feats)
     val want = rows(Drift.audit(d.filter(col("doc_id") =!= victim), isRef, feats))
-    assert(rows(DriftIngest.readAudit(spark, s"$t/cnt")) == want)
+    assert(audit() == want)
     // replay of the last (folded) batch writes invisible partitions
-    DriftIngest.processBatch(batches(2), 2L, s"$t/cnt", isRef, feats)
-    assert(rows(DriftIngest.readAudit(spark, s"$t/cnt")) == want)
+    state.append(batches(2), 2L, s"$t/cnt")
+    assert(audit() == want)
     // post-erase ingest of genuinely new mass still lands
-    DriftIngest.processBatch(
-      batches(0).filter(col("doc_id") =!= victim), 3L, s"$t/cnt", isRef, feats)
-    assert(DriftIngest.readAudit(spark, s"$t/cnt").count() == 2)
+    state.append(batches(0).filter(col("doc_id") =!= victim), 3L, s"$t/cnt")
+    assert(audit().size == 2)
   }
 
   test("importance-profile erase: negative delta == rebuild-without-doc; idempotent") {
@@ -453,7 +451,7 @@ class IngestEraseSpec extends SparkSuite {
     // CurationIngest: missing = an admitted doc with a unique fingerprint
     locally {
       val t = tmp("graft_cur_guard2")
-      CurationIngest.release(
+      NearDup.releaseCheckpoint(
         CurationIngest.processBatch(docs, 0L, s"$t/kept", s"$t/index"))
       val missing = DocPipeline.curate(docs)
         .groupBy(col("fp"))
@@ -464,16 +462,16 @@ class IngestEraseSpec extends SparkSuite {
           minOther(missing), s"$t/kept", s"$t/index")
       }
     }
-    // MediaIngest: every synthetic asset's content is duplicated, so
+    // media dedup: every synthetic asset's content is duplicated, so
     // "missing" is a whole CONTENT GROUP — dropping all its copies
     // makes its hash leave the state, which only the victim's own
     // hash is allowed to do
     locally {
-      import graft.streaming.MediaIngest
+      import graft.queries.MediaQueries
       import graft.multimodal.Media
       val media = Media.mediaFromEvents(Tables.events(spark, sfDir))
       val t = tmp("graft_media_guard2")
-      MediaIngest.processBatch(media, 0L, s"$t/m")
+      MediaQueries.mediaDedupState.append(media, 0L, s"$t/m")
       val withH = media.select(col("media_id"), md5(col("bytes")).as("h"))
       val missH = withH.agg(max(col("h"))).head().getString(0)
       val missingIds = withH.filter(col("h") === missH)
@@ -481,7 +479,7 @@ class IngestEraseSpec extends SparkSuite {
       val victim = media.filter(!col("media_id").isin(missingIds: _*))
         .agg(min(col("media_id"))).head().getLong(0)
       intercept[IllegalArgumentException] {
-        MediaIngest.eraseMedia(spark,
+        MediaQueries.eraseMedia(spark,
           media.filter(!col("media_id").isin(missingIds: _*)),
           victim, s"$t/m")
       }

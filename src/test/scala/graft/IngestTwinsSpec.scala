@@ -2,39 +2,100 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.queries.{AnalyticsQueries, DocQueries}
-import graft.streaming.{CovisitIngest, LmIngest}
+import graft.queries.{AnalyticsQueries, DocQueries, MediaQueries, OlapQueries}
+import graft.streaming.{LmIngest, MergeableState}
 
-/** The round-9 additive-state ingest twins (co-visitation set-union
-  * state, LM census state): stream == batch under OUT-OF-ORDER
-  * arrival and REPLAYED batches — the order-independence the
-  * additive/monotone state pattern promises (the gates check the
-  * in-order composition against the DuckDB oracle; this spec checks
-  * the orderings the gate split cannot express).
+/** The ingest states: stream == batch under OUT-OF-ORDER arrival,
+  * REPLAYED batches and compaction at any point — the
+  * order-independence the mergeable-state pattern promises (the
+  * gates check the in-order composition against the DuckDB oracle;
+  * this spec checks the orderings the gate split cannot express).
   */
 class IngestTwinsSpec extends SparkSuite {
 
-  private def rows(df: DataFrame): Set[String] =
-    df.collect().map(_.mkString("|")).toSet
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.mkString("|")).toSeq.sorted
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  test("covisit ingest: out-of-order + replay == batch") {
+  private def liveBatchDirs(root: String): Set[String] =
+    new java.io.File(root).listFiles()
+      .map(_.getName).filter(_.startsWith("batch_id=")).toSet
+
+  private val covisit = AnalyticsQueries.covisitState
+  private val wau = AnalyticsQueries.wauState
+
+  /** Every [[MergeableState]] with its full input and the id column
+    * the random splits hash on. Each batch op is
+    * `derive(merge(partial(input)))`, so `read` equal to
+    * `merge(partial(input))` is stream == batch for the derived gate.
+    */
+  private lazy val mergeableStates: Seq[(String, MergeableState, DataFrame, String)] = {
     val ev = Tables.events(spark, sfDir)
-    val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
-    val batches = Seq(
-      ev.filter(col("event_id") <= maxId / 3),
-      ev.filter(col("event_id") > maxId / 3 && col("event_id") <= 2 * maxId / 3),
-      ev.filter(col("event_id") > 2 * maxId / 3))
-    val t = tmp("graft_covisit_spec")
-    // reversed arrival order, then batch 2 replayed
-    Seq(2, 1, 0).foreach(i => CovisitIngest.processBatch(batches(i), i.toLong, s"$t/us"))
-    CovisitIngest.processBatch(batches(2), 2L, s"$t/us")
-    val streamed = rows(CovisitIngest.readLift(spark, s"$t/us"))
-    val direct = rows(AnalyticsQueries.liftOf(
-      ev.select(col("user_id"), col("event_type")).distinct()))
-    assert(streamed == direct && streamed.nonEmpty)
+    val media = graft.multimodal.Media.mediaFromEvents(ev)
+    val drift = graft.ops.Drift.countState(col("doc_id") % 2 === 0,
+      Seq("lang" -> col("lang"), "source" -> col("source")), col("n_chars"))
+    Seq(
+      ("covisit", AnalyticsQueries.covisitState, ev, "event_id"),
+      ("wau", AnalyticsQueries.wauState, ev, "event_id"),
+      ("rfm", AnalyticsQueries.rfmState, ev, "event_id"),
+      ("corr", OlapQueries.corrState, ev, "event_id"),
+      ("ohlc", OlapQueries.ohlcState, ev, "event_id"),
+      ("media dedup", MediaQueries.mediaDedupState, media, "media_id"),
+      ("media signatures", MediaQueries.mediaSignatureState, media, "media_id"),
+      ("drift", drift, Tables.documents(spark, sfDir), "doc_id"))
+  }
+
+  test("every mergeable state: any split, arrival order, replay and compaction point == batch") {
+    import org.scalacheck.{Gen, Prop, Test => PropTest}
+    import org.scalacheck.Prop.propBoolean
+    import org.scalacheck.rng.Seed
+    // (batches, hash seed of the split, arrival order, appends before
+    // the mid-stream compaction)
+    val genCase = for {
+      n <- Gen.choose(1, 4)
+      splitSeed <- Gen.choose(0, 1 << 20)
+      order <- Gen.long.map(l => new scala.util.Random(l).shuffle((0 until n).toList))
+      compactAfter <- Gen.choose(1, n)
+    } yield (n, splitSeed, order, compactAfter)
+    // the states share nothing but the session, and each case is a
+    // chain of small jobs: checking them on four driver threads keeps
+    // the cores busy through each job's driver-side barriers
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val checks = mergeableStates.zipWithIndex.map { case ((name, state, input, idCol), si) =>
+      scala.concurrent.Future {
+        val want = rows(state.merge(state.partial(input)))
+        val prop = Prop.forAllNoShrink(genCase) { case (n, splitSeed, order, compactAfter) =>
+          val batches = (0 until n).map(i =>
+            input.filter(pmod(hash(col(idCol), lit(splitSeed)), lit(n)) === i))
+          val root = tmp("graft_mergeable") + "/state"
+          order.zipWithIndex.foreach { case (i, k) =>
+            state.append(batches(i), i.toLong, root)
+            if (k + 1 == compactAfter) state.compact(spark, root)
+          }
+          // the max batch id is the one streaming can re-fire
+          state.append(batches(n - 1), n - 1L, root)
+          val replayed = rows(state.read(spark, root)) == want
+          state.compact(spark, root)
+          state.append(batches(n - 1), n - 1L, root)
+          (replayed && rows(state.read(spark, root)) == want &&
+            liveBatchDirs(root) == Set(s"batch_id=${n - 1}")) :|
+            s"n=$n split=$splitSeed order=$order compactAfter=$compactAfter"
+        }
+        val res = PropTest.check(PropTest.Parameters.default
+          .withMinSuccessfulTests(2).withInitialSeed(Seed(20261017L + si)), prop)
+        (name, want.nonEmpty, res)
+      }
+    }
+    try checks.foreach { f =>
+      val (name, nonEmpty, res) =
+        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+      assert(nonEmpty, name)
+      assert(res.passed, s"$name: $res")
+    } finally pool.shutdown()
   }
 
   test("covisit ingest: compaction preserves reads, replay-after-compaction safe") {
@@ -46,47 +107,26 @@ class IngestTwinsSpec extends SparkSuite {
       ev.filter(col("event_id") > 2 * maxId / 3))
     val t = tmp("graft_covisit_compact")
     batches.zipWithIndex.foreach { case (b, i) =>
-      CovisitIngest.processBatch(b, i.toLong, s"$t/us") }
-    val before = rows(CovisitIngest.readLift(spark, s"$t/us"))
-    CovisitIngest.compact(spark, s"$t/us")
-    assert(rows(CovisitIngest.readLift(spark, s"$t/us")) == before)
+      covisit.append(b, i.toLong, s"$t/us") }
+    val before = rows(AnalyticsQueries.liftOf(covisit.read(spark, s"$t/us")))
+    covisit.compact(spark, s"$t/us")
+    assert(rows(AnalyticsQueries.liftOf(covisit.read(spark, s"$t/us"))) == before)
     // batches 0/1 folded; only the last (replayable) partition remains
     val dirs = new java.io.File(s"$t/us").listFiles()
       .map(_.getName).filter(_.startsWith("batch_id=")).toSet
     assert(dirs == Set("batch_id=2"))
     // replay of the LAST batch (the only one streaming can re-fire)
-    CovisitIngest.processBatch(batches(2), 2L, s"$t/us")
-    assert(rows(CovisitIngest.readLift(spark, s"$t/us")) == before)
+    covisit.append(batches(2), 2L, s"$t/us")
+    assert(rows(AnalyticsQueries.liftOf(covisit.read(spark, s"$t/us"))) == before)
     // compact again (folds nothing new), then with a fresh batch
-    CovisitIngest.compact(spark, s"$t/us")
-    CovisitIngest.processBatch(batches(0), 3L, s"$t/us") // re-sent rows: set-union no-op
-    CovisitIngest.compact(spark, s"$t/us")
-    assert(rows(CovisitIngest.readLift(spark, s"$t/us")) == before)
+    covisit.compact(spark, s"$t/us")
+    covisit.append(batches(0), 3L, s"$t/us") // re-sent rows: set-union no-op
+    covisit.compact(spark, s"$t/us")
+    assert(rows(AnalyticsQueries.liftOf(covisit.read(spark, s"$t/us"))) == before)
     // an uncommitted generation (no _manifest — the crash-before-
     // commit debris) must be invisible to readers
     new java.io.File(s"$t/us/_consolidated/gen=99").mkdirs()
-    assert(rows(CovisitIngest.readLift(spark, s"$t/us")) == before)
-  }
-
-  test("wau ingest: out-of-order + replay == batch; compaction preserves reads") {
-    import graft.streaming.WauIngest
-    val ev = Tables.events(spark, sfDir)
-    val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
-    val batches = Seq(
-      ev.filter(col("event_id") <= maxId / 3),
-      ev.filter(col("event_id") > maxId / 3 && col("event_id") <= 2 * maxId / 3),
-      ev.filter(col("event_id") > 2 * maxId / 3))
-    val t = tmp("graft_wau_spec")
-    // reversed arrival order, then batch 2 replayed
-    Seq(2, 1, 0).foreach(i => WauIngest.processBatch(batches(i), i.toLong, s"$t/ud"))
-    WauIngest.processBatch(batches(2), 2L, s"$t/ud")
-    val streamed = rows(WauIngest.readWau(spark, s"$t/ud"))
-    val direct = rows(AnalyticsQueries.wauDaily(spark, sfDir))
-    assert(streamed == direct && streamed.nonEmpty)
-    WauIngest.compact(spark, s"$t/ud")
-    assert(rows(WauIngest.readWau(spark, s"$t/ud")) == streamed)
-    WauIngest.processBatch(batches(2), 2L, s"$t/ud") // replay after compaction
-    assert(rows(WauIngest.readWau(spark, s"$t/ud")) == streamed)
+    assert(rows(AnalyticsQueries.liftOf(covisit.read(spark, s"$t/us"))) == before)
   }
 
   test("lm ingest: compaction preserves scores (additive state)") {
@@ -127,73 +167,7 @@ class IngestTwinsSpec extends SparkSuite {
     assert(streamed == direct && streamed.nonEmpty)
   }
 
-  test("corr/rfm/ohlc ingest: out-of-order + replay == batch; compaction preserves reads") {
-    import graft.streaming.{CorrIngest, OhlcIngest, RfmIngest}
-    import graft.queries.OlapQueries
-    val ev = Tables.events(spark, sfDir)
-    val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
-    val batches = Seq(
-      ev.filter(col("event_id") <= maxId / 3),
-      ev.filter(col("event_id") > maxId / 3 && col("event_id") <= 2 * maxId / 3),
-      ev.filter(col("event_id") > 2 * maxId / 3))
-    val t = tmp("graft_merge_twins")
-    // reversed arrival order — the true hour-opening trades and
-    // last purchases land in the "wrong" batches — then a replay
-    Seq(2, 1, 0).foreach { i =>
-      CorrIngest.processBatch(batches(i), i.toLong, s"$t/moments")
-      RfmIngest.processBatch(batches(i), i.toLong, s"$t/per_user")
-      OhlcIngest.processBatch(batches(i), i.toLong, s"$t/bars")
-    }
-    CorrIngest.processBatch(batches(2), 2L, s"$t/moments")
-    RfmIngest.processBatch(batches(2), 2L, s"$t/per_user")
-    OhlcIngest.processBatch(batches(2), 2L, s"$t/bars")
-    val wantCorr = rows(OlapQueries.corrComponentsOf(ev))
-    val wantRfm = rows(AnalyticsQueries.rfmSegmentsOf(ev))
-    val wantOhlc = rows(OlapQueries.ohlcOf(ev))
-    assert(rows(CorrIngest.readMoments(spark, s"$t/moments")) == wantCorr)
-    assert(rows(RfmIngest.readSegments(spark, s"$t/per_user")) == wantRfm)
-    assert(rows(OhlcIngest.readBars(spark, s"$t/bars")) == wantOhlc)
-    // compaction (sum / max+sum / struct-min+max merges) preserves reads
-    CorrIngest.compact(spark, s"$t/moments")
-    RfmIngest.compact(spark, s"$t/per_user")
-    OhlcIngest.compact(spark, s"$t/bars")
-    assert(rows(CorrIngest.readMoments(spark, s"$t/moments")) == wantCorr)
-    assert(rows(RfmIngest.readSegments(spark, s"$t/per_user")) == wantRfm)
-    assert(rows(OhlcIngest.readBars(spark, s"$t/bars")) == wantOhlc)
-    // replay of the last (replayable) batch after compaction: no-op
-    CorrIngest.processBatch(batches(2), 2L, s"$t/moments")
-    OhlcIngest.processBatch(batches(2), 2L, s"$t/bars")
-    assert(rows(CorrIngest.readMoments(spark, s"$t/moments")) == wantCorr)
-    assert(rows(OhlcIngest.readBars(spark, s"$t/bars")) == wantOhlc)
-    assert(wantCorr.nonEmpty && wantRfm.nonEmpty && wantOhlc.nonEmpty)
-  }
-
-  test("media ingest: out-of-order + replay == batch; compaction preserves reads") {
-    import graft.streaming.MediaIngest
-    import graft.multimodal.Media
-    val ev = Tables.events(spark, sfDir)
-    val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
-    val batches = Seq(
-      ev.filter(col("event_id") <= maxId / 3),
-      ev.filter(col("event_id") > maxId / 3 && col("event_id") <= 2 * maxId / 3),
-      ev.filter(col("event_id") > 2 * maxId / 3))
-    val t = tmp("graft_media_spec")
-    // reversed arrival order, then batch 2 replayed: (min, sum) state
-    // is order-independent and the replay rewrites its own partition
-    Seq(2, 1, 0).foreach(i =>
-      MediaIngest.processBatch(Media.mediaFromEvents(batches(i)), i.toLong, s"$t/m"))
-    MediaIngest.processBatch(Media.mediaFromEvents(batches(2)), 2L, s"$t/m")
-    val streamed = rows(MediaIngest.readDedup(spark, s"$t/m"))
-    val direct = rows(graft.queries.MediaQueries.mediaDedup(spark, sfDir))
-    assert(streamed == direct && streamed.nonEmpty)
-    MediaIngest.compact(spark, s"$t/m")
-    assert(rows(MediaIngest.readDedup(spark, s"$t/m")) == streamed)
-    MediaIngest.processBatch(Media.mediaFromEvents(batches(2)), 2L, s"$t/m")
-    assert(rows(MediaIngest.readDedup(spark, s"$t/m")) == streamed)
-  }
-
   test("ingest-state erasure: erase == rebuild-without-user; replay can't resurface; compaction still sane") {
-    import graft.streaming.WauIngest
     val ev = Tables.events(spark, sfDir)
     val victim = ev.groupBy(col("user_id")).count()
       .orderBy(desc("count"), col("user_id")).head().getLong(0) // hottest user
@@ -204,23 +178,23 @@ class IngestTwinsSpec extends SparkSuite {
       ev.filter(col("event_id") > 2 * maxId / 3))
     val t = tmp("graft_erase_state")
     batches.zipWithIndex.foreach { case (b, i) =>
-      CovisitIngest.processBatch(b, i.toLong, s"$t/us")
-      WauIngest.processBatch(b, i.toLong, s"$t/ud")
+      covisit.append(b, i.toLong, s"$t/us")
+      wau.append(b, i.toLong, s"$t/ud")
     }
     // compact first so the erase has BOTH a generation and live
     // batch partitions to reach
-    CovisitIngest.compact(spark, s"$t/us")
-    WauIngest.compact(spark, s"$t/ud")
-    CovisitIngest.eraseUser(spark, s"$t/us", victim)
-    WauIngest.eraseUser(spark, s"$t/ud", victim)
+    covisit.compact(spark, s"$t/us")
+    wau.compact(spark, s"$t/ud")
+    covisit.eraseWhere(spark, s"$t/us", col("user_id") === victim)
+    wau.eraseWhere(spark, s"$t/ud", col("user_id") === victim)
     val evErased = ev.filter(col("user_id") =!= victim)
     val wantLift = rows(AnalyticsQueries.liftOf(
       evErased.select(col("user_id"), col("event_type")).distinct()))
     val wantWau = rows(AnalyticsQueries.wauOf(evErased
       .select(col("user_id"),
         expr("unix_micros(ts) DIV 86400000000").as("day")).distinct()))
-    assert(rows(CovisitIngest.readLift(spark, s"$t/us")) == wantLift)
-    assert(rows(WauIngest.readWau(spark, s"$t/ud")) == wantWau)
+    assert(rows(AnalyticsQueries.liftOf(covisit.read(spark, s"$t/us"))) == wantLift)
+    assert(rows(AnalyticsQueries.wauOf(wau.read(spark, s"$t/ud"))) == wantWau)
     // no row of the victim anywhere in the visible state
     assert(graft.streaming.StateCompactor.readState(spark, s"$t/us")
       .filter(col("user_id") === victim).isEmpty)
@@ -228,14 +202,14 @@ class IngestTwinsSpec extends SparkSuite {
       .filter(col("user_id") === victim).isEmpty)
     // a replay of the last (folded) batch rewrites its partition but
     // stays invisible: the erased user cannot resurface
-    CovisitIngest.processBatch(batches(2), 2L, s"$t/us")
-    WauIngest.processBatch(batches(2), 2L, s"$t/ud")
-    assert(rows(CovisitIngest.readLift(spark, s"$t/us")) == wantLift)
-    assert(rows(WauIngest.readWau(spark, s"$t/ud")) == wantWau)
+    covisit.append(batches(2), 2L, s"$t/us")
+    wau.append(batches(2), 2L, s"$t/ud")
+    assert(rows(AnalyticsQueries.liftOf(covisit.read(spark, s"$t/us"))) == wantLift)
+    assert(rows(AnalyticsQueries.wauOf(wau.read(spark, s"$t/ud"))) == wantWau)
     // fresh erased-world batches + compaction keep reads consistent
-    CovisitIngest.processBatch(batches(0).filter(col("user_id") =!= victim), 3L, s"$t/us")
-    CovisitIngest.processBatch(batches(1).filter(col("user_id") =!= victim), 4L, s"$t/us")
-    CovisitIngest.compact(spark, s"$t/us")
-    assert(rows(CovisitIngest.readLift(spark, s"$t/us")) == wantLift)
+    covisit.append(batches(0).filter(col("user_id") =!= victim), 3L, s"$t/us")
+    covisit.append(batches(1).filter(col("user_id") =!= victim), 4L, s"$t/us")
+    covisit.compact(spark, s"$t/us")
+    assert(rows(AnalyticsQueries.liftOf(covisit.read(spark, s"$t/us"))) == wantLift)
   }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.ops.Ann
 import graft.serving.{AnnIndex, EraseStage, Maintenance, SearchIndex}
-import graft.streaming.{MediaIngest, StateCompactor, StreamingPipeline}
+import graft.queries.MediaQueries.mediaDedupState
+import graft.streaming.{StateCompactor, StreamingPipeline}
 import graft.tables.TableManager
 
 /** The single scheduled-maintenance entry point
@@ -63,9 +64,9 @@ class MaintenanceSpec extends SparkSuite {
     // --- a media-ingest state, compacted through the generic wrapper
     val mPath = tmp("graft_maint_media") + "/m"
     val media = graft.multimodal.Media.mediaFromEvents(Tables.events(spark, sfDir))
-    MediaIngest.processBatch(media.limit(500), 0L, mPath)
-    MediaIngest.processBatch(media.limit(1000), 1L, mPath)
-    val mWant = MediaIngest.readDedup(spark, mPath)
+    mediaDedupState.append(media.limit(500), 0L, mPath)
+    mediaDedupState.append(media.limit(1000), 1L, mPath)
+    val mWant = mediaDedupState.read(spark, mPath)
       .collect().map(_.toString).sorted.toSeq
 
     // --- the streaming pipeline's rollup state (one batch_id
@@ -90,7 +91,7 @@ class MaintenanceSpec extends SparkSuite {
         retentionDays = Some(60), nowDate = Some("2024-02-01")),
       Maintenance.Search(sRoot),
       Maintenance.Ann(aRoot, minFiles = 2),
-      Maintenance.IngestCompact("media", s => MediaIngest.compact(s, mPath)),
+      Maintenance.IngestCompact("media", s => mediaDedupState.compact(s, mPath)),
       Maintenance.IngestCompact("rollup-state",
         s => StreamingPipeline.compactRollupState(s, rPath)))
     val log = Maintenance.run(spark, tasks)
@@ -112,7 +113,7 @@ class MaintenanceSpec extends SparkSuite {
     // compaction changed no answers
     assert(sServed() === sWant)
     assert(spark.read.parquet(aRoot).count() === aCount)
-    assert(MediaIngest.readDedup(spark, mPath)
+    assert(mediaDedupState.read(spark, mPath)
       .collect().map(_.toString).sorted.toSeq === mWant)
     // the rollup fold changed no answers and bounded the segment dirs
     // (batches 0,1 folded into the generation; the max id keeps its

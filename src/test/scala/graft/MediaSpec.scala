@@ -146,7 +146,8 @@ class MediaSpec extends SparkSuite {
   }
 
   test("streaming similarity tier: out-of-order split + replay reproduce the batch pair set; compaction commutes") {
-    import graft.streaming.MediaIngest
+    import graft.queries.MediaQueries
+    val sigs = MediaQueries.mediaSignatureState
     val tmp = java.nio.file.Files
       .createTempDirectory("media_sig_spec").toString
     val state = s"$tmp/state"
@@ -156,17 +157,17 @@ class MediaSpec extends SparkSuite {
     assert(batchPairs.nonEmpty)
     // odd ids before even (order-independence), plus a replay of
     // batch 0 (idempotence)
-    MediaIngest.processSignatureBatch(
+    sigs.append(
       media.filter($"media_id" % 2 === 1), 0L, state)
-    MediaIngest.processSignatureBatch(
+    sigs.append(
       media.filter($"media_id" % 2 === 0), 1L, state)
-    MediaIngest.processSignatureBatch(
+    sigs.append(
       media.filter($"media_id" % 2 === 1), 0L, state)
-    assert(MediaIngest.readNearDup(spark, state)
+    assert(MediaQueries.nearDupOf(sigs.read(spark, state))
       .as[(Long, Long)].collect().toSet === batchPairs,
       "stream-built similarity tier diverged from the batch op")
-    MediaIngest.compactSignatures(spark, state)
-    assert(MediaIngest.readNearDup(spark, state)
+    sigs.compact(spark, state)
+    assert(MediaQueries.nearDupOf(sigs.read(spark, state))
       .as[(Long, Long)].collect().toSet === batchPairs,
       "signature compaction changed the pair set")
   }

@@ -3,8 +3,9 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.ops.Rollup
-import graft.streaming.{ContinuousTopK, PerElementTopK, TimerDedup}
+import graft.streaming.{ContinuousTopK, PerElementTopK, StreamRunner, TimerDedup}
 
 /** D2 timer-dedup TTL semantics, the A5 processing-time rollup, and
   * the K1 per-element emission variant.
@@ -676,9 +677,13 @@ class StreamingVariantsSpec extends SparkSuite {
     // AvailableNow latches offsets at start — feed every micro-batch
     // first, then run the query to completion
     rest.grouped(150).foreach(mem.addData(_))
-    val q = graft.streaming.EmbedIngest.start(spark,
-      mem.toDF().toDF("vec_id", "embedding"), s"$dir/index", centroids,
-      s"$dir/ckpt", trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    // frozen centroids: a production IVF never moves its quantizer
+    // under served cells; append is content-keyed, so a replayed
+    // batch admits nothing twice
+    val q = StreamRunner.start(mem.toDF().toDF("vec_id", "embedding"),
+        s"$dir/ckpt", Trigger.AvailableNow()) { (b, _) =>
+      if (!b.isEmpty) AnnIndex.append(spark, s"$dir/index", b, centroids)
+    }
     try q.awaitTermination() finally q.stop()
     // at-least-once replay: re-delivering a batch admits nothing
     AnnIndex.append(spark, s"$dir/index",
@@ -708,9 +713,9 @@ class StreamingVariantsSpec extends SparkSuite {
       .as[Doc].collect().toSeq
     val mem = MemoryStream[Doc]
     rest.grouped(150).foreach(mem.addData(_))
-    val q = graft.streaming.SearchIngest.start(spark, mem.toDF(),
-      s"$dir/index", s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    val q = StreamRunner.start(mem.toDF(), s"$dir/ckpt", Trigger.AvailableNow()) {
+      (b, _) => if (!b.isEmpty) SearchIndex.append(spark, s"$dir/index", b)
+    }
     try q.awaitTermination() finally q.stop()
     // at-least-once replay: re-delivering docs admits nothing
     SearchIndex.append(spark, s"$dir/index", docs.filter(col("doc_id") >= 100).limit(50))
@@ -742,8 +747,9 @@ class StreamingVariantsSpec extends SparkSuite {
       .sortBy(_._1).map(d => Doc(d._1, d._2, d._3, d._4, d._5))
     val dir = java.nio.file.Files.createTempDirectory("graft_segingest").toString
     val mem = MemoryStream[Doc]
-    val q = SegmentIngest.start(spark, mem.toDF(),
-      s"$dir/kept", s"$dir/index", s"$dir/ckpt")
+    val q = StreamRunner.start(mem.toDF(), s"$dir/ckpt") {
+      (b, id) => SegmentIngest.processBatch(b, id, s"$dir/kept", s"$dir/index")
+    }
     val (first, second) = docs.splitAt(docs.size / 2)
     try {
       mem.addData(first: _*)
@@ -779,8 +785,9 @@ class StreamingVariantsSpec extends SparkSuite {
       .sortBy(_._1).map(d => Doc(d._1, d._2, d._3, d._4, d._5))
     val dir = java.nio.file.Files.createTempDirectory("graft_spaningest").toString
     val mem = MemoryStream[Doc]
-    val q = SpanIngest.start(spark, mem.toDF(),
-      s"$dir/kept", s"$dir/index", s"$dir/ckpt")
+    val q = StreamRunner.start(mem.toDF(), s"$dir/ckpt") {
+      (b, id) => SpanIngest.processBatch(b, id, s"$dir/kept", s"$dir/index")
+    }
     val (first, second) = docs.splitAt(docs.size / 2)
     try {
       mem.addData(first: _*)
@@ -815,8 +822,9 @@ class StreamingVariantsSpec extends SparkSuite {
       .sortBy(_._1).map(d => Doc(d._1, d._2, d._3, d._4, d._5))
     val dir = java.nio.file.Files.createTempDirectory("graft_curingest").toString
     val mem = MemoryStream[Doc]
-    val q = CurationIngest.start(spark, mem.toDF(),
-      s"$dir/kept", s"$dir/index", s"$dir/ckpt")
+    val q = StreamRunner.start(mem.toDF(), s"$dir/ckpt") {
+      (b, id) => CurationIngest.processBatch(b, id, s"$dir/kept", s"$dir/index")
+    }
     val (first, second) = docs.splitAt(docs.size / 2)
     try {
       mem.addData(first: _*)
@@ -854,8 +862,9 @@ class StreamingVariantsSpec extends SparkSuite {
       .sortBy(-_._1).map(d => Doc(d._1, d._2, d._3, d._4, d._5))
     val dir = java.nio.file.Files.createTempDirectory("graft_boilingest").toString
     val mem = MemoryStream[Doc]
-    val q = BoilerplateIngest.start(spark, mem.toDF(),
-      s"$dir/segs", s"$dir/counts", s"$dir/ckpt")
+    val q = StreamRunner.start(mem.toDF(), s"$dir/ckpt") {
+      (b, id) => BoilerplateIngest.processBatch(b, id, s"$dir/segs", s"$dir/counts")
+    }
     val (first, second) = docs.splitAt(docs.size / 3)
     try {
       mem.addData(first: _*)
@@ -890,8 +899,9 @@ class StreamingVariantsSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_impingest").toString
     val pred = col("lang") === "en"
     val mem = MemoryStream[Doc]
-    val q = ImportanceIngest.start(spark, mem.toDF(),
-      s"$dir/profile", s"$dir/ckpt", pred)
+    val q = StreamRunner.start(mem.toDF(), s"$dir/ckpt") {
+      (b, id) => ImportanceIngest.processBatch(b, id, s"$dir/profile", pred)
+    }
     val (first, second) = docs.splitAt(docs.size / 2)
     try {
       mem.addData(first: _*)
@@ -921,8 +931,9 @@ class StreamingVariantsSpec extends SparkSuite {
     val t4 = "fresh fourth text with columnar scans vectorized readers and pruning"
     val dir = java.nio.file.Files.createTempDirectory("graft_incdedup").toString
     val mem = MemoryStream[Doc]
-    val q = IncrementalDedup.start(spark, mem.toDF(),
-      s"$dir/admitted", s"$dir/index", s"$dir/ckpt")
+    val q = StreamRunner.start(mem.toDF(), s"$dir/ckpt") {
+      (b, id) => IncrementalDedup.processBatch(b, id, s"$dir/admitted", s"$dir/index")
+    }
     try {
       mem.addData(doc(1, t1), doc(2, t2), doc(3, t3))
       q.processAllAvailable()
@@ -940,6 +951,48 @@ class StreamingVariantsSpec extends SparkSuite {
     val indexed = spark.read.parquet(s"$dir/index")
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(indexed === admitted)
+  }
+
+  test("stream runner releases the pinned frame an admission batch returns: cached RDDs don't grow with batches") {
+    implicit val sql = spark.sqlContext
+    import graft.streaming.IncrementalDedup
+    import StreamingVariantsSpec.Doc
+    // a local checkpoint has no checkpoint file, so the release only
+    // unpersists its blocks
+    val local = spark.range(3).toDF().localCheckpoint(true)
+    assert(local.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
+    } === Seq(None))
+    graft.ops.NearDup.releaseCheckpoint(local)
+    val words = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
+      .split(" ")
+    // every batch admits fresh, mutually distinct docs
+    def doc(id: Long) = {
+      val text = (0 until 12).map(j => s"${words(j)}$id x${id * 7 + j}").mkString(" ")
+      Doc(id, text, "en", "src", text.length)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_runner_leak").toString
+    val mem = MemoryStream[Doc]
+    val q = StreamRunner.start(mem.toDF(), s"$dir/ckpt") {
+      (b, id) => IncrementalDedup.processBatch(b, id, s"$dir/admitted", s"$dir/index")
+    }
+    def cachedRdds() = spark.sparkContext.getRDDStorageInfo.length
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    // unpersists are asynchronous: let each batch's releases land, but
+    // a leaked pin stays cached until a GC runs the ContextCleaner
+    val before = cachedRdds()
+    try {
+      (0 to 3).foreach { k =>
+        mem.addData(doc(10L * k + 1), doc(10L * k + 2))
+        q.processAllAvailable()
+        eventually(timeout(10.seconds), interval(100.millis)) {
+          assert(cachedRdds() <= before,
+            s"cached RDDs grew from $before to ${cachedRdds()} by batch ${k + 1}")
+        }
+      }
+    } finally q.stop()
+    assert(spark.read.parquet(s"$dir/admitted").count() === 8)
   }
 
   test("ingest-time decontamination drops exactly the bloom-flagged overlap set") {
@@ -992,9 +1045,12 @@ class StreamingVariantsSpec extends SparkSuite {
       .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSeq
     val mem = MemoryStream[(Long, Seq[Float])]
     rest.grouped(100).foreach(mem.addData(_))
-    val q = graft.streaming.PqIngest.start(spark,
-      mem.toDF().toDF("vec_id", "embedding"), s"$dir/index",
-      s"$dir/ckpt", trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    // frozen codebooks: an absent root does not bootstrap — PQ needs a
+    // trained seed corpus; append is content-keyed, replays admit nothing
+    val q = StreamRunner.start(mem.toDF().toDF("vec_id", "embedding"),
+        s"$dir/ckpt", Trigger.AvailableNow()) { (b, _) =>
+      if (!b.isEmpty) PqIndex.append(spark, s"$dir/index", b)
+    }
     try q.awaitTermination() finally q.stop()
     // at-least-once replay: re-delivering a slice admits nothing
     PqIndex.append(spark, s"$dir/index", emb.filter(col("vec_id") >= 250).limit(50))
@@ -1014,7 +1070,6 @@ class StreamingVariantsSpec extends SparkSuite {
   test("streaming star-tree ingest equals a batch rebuild; replay is a no-op") {
     implicit val sql = spark.sqlContext
     import graft.serving.StarTree
-    import graft.streaming.StarTreeIngest
     import StreamingVariantsSpec.StarEvt
     val evAll = Tables.events(spark, sfDir)
     val seed = evAll.filter($"event_id" % 2 === 0)
@@ -1024,8 +1079,10 @@ class StreamingVariantsSpec extends SparkSuite {
     val mem = MemoryStream[StarEvt]
     delta.select($"ts", $"event_type", $"value_cents")
       .as[StarEvt].collect().grouped(1500).foreach(mem.addData(_))
-    val q = StarTreeIngest.start(spark, mem.toDF(), s"$dir/tree", s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    // StarTree.refresh's batch-id guard makes a re-delivered batch a no-op
+    val q = StreamRunner.start(mem.toDF(), s"$dir/ckpt", Trigger.AvailableNow()) {
+      (b, id) => if (!b.isEmpty) StarTree.refresh(spark, s"$dir/tree", b, id)
+    }
     try q.awaitTermination() finally q.stop()
     def nodes(r: String) = spark.read.parquet(s"$r/nodes")
       .collect().map(_.toSeq).toSet
