@@ -693,28 +693,14 @@ object DocQueries {
   }
 
   private val searchIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val searchIndexByPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    new TempRootCache("graft_search_index", "documents")
 
   /** Root of the materialized inverted index for `dir`'s documents,
-    * built on first use per dataset fingerprint. Regenerated-in-place
-    * datasets get a fresh index; superseded dirs for the same source
-    * path are deleted (the knnIvfServed pattern).
+    * built on first use per dataset fingerprint ([[TempRootCache]]).
     */
-  private[graft] def searchIndexRoot(spark: SparkSession, dir: String): String = {
-    val fp = Tables.fingerprint(spark, s"$dir/documents.parquet")
-    val root = searchIndexCache.getOrElseUpdate(fp, {
-      val p = java.nio.file.Files.createTempDirectory("graft_search_index").toString
-      graft.serving.SearchIndex.materialize(Tables.documents(spark, dir), p)
-      p
-    })
-    searchIndexByPath.put(dir, fp).filter(_ != fp)
-      .flatMap(searchIndexCache.remove).foreach { old =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(old))
-      }
-    root
-  }
+  private[graft] def searchIndexRoot(spark: SparkSession, dir: String): String =
+    searchIndexCache.root(spark, dir)(p =>
+      graft.serving.SearchIndex.materialize(Tables.documents(spark, dir), p))
 
   /** Sparse retrieval served from the MATERIALIZED inverted index
     * ([[graft.serving.SearchIndex]]): term-bucket-partitioned parquet
@@ -730,9 +716,7 @@ object DocQueries {
   }
 
   private val nearDupIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val nearDupIndexByPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    new TempRootCache("graft_neardup_index", "documents")
 
   /** Served near-duplicate lookup from the MATERIALIZED band index
     * ([[graft.serving.NearDupIndex]]): docs 50+ are the admitted
@@ -750,23 +734,13 @@ object DocQueries {
   }
 
   /** Root of the materialized band index over `dir`'s admitted corpus
-    * (docs 50+), built on first use per dataset fingerprint — the
-    * searchIndexRoot pattern.
+    * (docs 50+), built on first use per dataset fingerprint
+    * ([[TempRootCache]]).
     */
-  private[graft] def nearDupIndexRoot(spark: SparkSession, dir: String): String = {
-    val fp = Tables.fingerprint(spark, s"$dir/documents.parquet")
-    val root = nearDupIndexCache.getOrElseUpdate(fp, {
-      val p = java.nio.file.Files.createTempDirectory("graft_neardup_index").toString
+  private[graft] def nearDupIndexRoot(spark: SparkSession, dir: String): String =
+    nearDupIndexCache.root(spark, dir)(p =>
       graft.serving.NearDupIndex.materialize(
-        Tables.documents(spark, dir).filter(col("doc_id") >= 50), p)
-      p
-    })
-    nearDupIndexByPath.put(dir, fp).filter(_ != fp)
-      .flatMap(nearDupIndexCache.remove).foreach { old =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(old))
-      }
-    root
-  }
+        Tables.documents(spark, dir).filter(col("doc_id") >= 50), p))
 
   /** The same near-dup lookup through the OFFLINE distributed path
     * ([[graft.serving.NearDupIndex.queryAll]]): shuffle equi-joins,

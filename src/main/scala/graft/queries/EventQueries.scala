@@ -288,8 +288,7 @@ object EventQueries {
     * user cardinality so truncation (the reference's own
     * approximation) cannot perturb the exact oracle comparison.
     */
-  private val topkContFeedCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val topkContFeedCache = new TempRootCache("graft_feed")
 
   def topkContinuous(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -302,17 +301,10 @@ object EventQueries {
     // events table — land it once per corpus fingerprint and fan the
     // per-call streaming runs out of the shared copy (the
     // OlapQueries.eventsFeed discipline; every call still runs the
-    // full ContinuousTopK streaming query with fresh state).
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    val feed = topkContFeedCache.getOrElseUpdate(fp, {
-      // 1-row aggregate: bounded driver metadata (batch cut points)
-      val maxId = ev.agg(max(col("event_id"))).head().getLong(0)
-      val cuts = Seq(maxId / 3, 2 * maxId / 3)
-      OlapQueries.fileFeedDir(Seq(
-        ev.filter(col("event_id") <= cuts(0)),
-        ev.filter(col("event_id") > cuts(0) && col("event_id") <= cuts(1)),
-        ev.filter(col("event_id") > cuts(1))))
-    })
+    // full ContinuousTopK streaming query with fresh state). Dedup
+    // keeps every event_id, so the raw table's id cuts apply.
+    val feed = OlapQueries.cachedFeedDir(topkContFeedCache, spark, dir)(
+      OlapQueries.idThirds(spark, ev, "event_id", s"$dir/events.parquet"))
     val src = OlapQueries.fileFeedSource(spark, feed, ev.schema)
     def upd(key: org.apache.spark.sql.Column) = src.select(
       key.as("groupKey"),

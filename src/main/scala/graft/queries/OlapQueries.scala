@@ -589,24 +589,14 @@ object OlapQueries {
     * still runs its own full micro-batched streaming query (fresh
     * checkpoint + state) on every call, so the measured operator is
     * untouched. Superseded fingerprints for the same source dir drop
-    * their feed directory (the searchIndexRoot pattern).
+    * their feed directory ([[TempRootCache]]).
     */
-  private val eventsFeedCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val eventsFeedByPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val eventsFeedCache = new TempRootCache("graft_feed")
 
-  private[queries] def eventsFeed(spark: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    val feed = eventsFeedCache.getOrElseUpdate(fp,
-      fileFeedDir(idOrderedBatches(spark, dir)))
-    eventsFeedByPath.put(dir, fp).filter(_ != fp)
-      .flatMap(eventsFeedCache.remove).foreach { old =>
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(old).getParentFile)
-      }
-    fileFeedSource(spark, feed, Tables.events(spark, dir).schema)
-  }
+  private[queries] def eventsFeed(spark: SparkSession, dir: String): DataFrame =
+    fileFeedSource(spark,
+      cachedFeedDir(eventsFeedCache, spark, dir)(idOrderedBatches(spark, dir)),
+      Tables.events(spark, dir).schema)
 
   /** Materialize `batches` as one parquet file each under a fresh
     * feed directory (modification times force trigger order) and
@@ -617,11 +607,13 @@ object OlapQueries {
       batches: Seq[DataFrame]): DataFrame =
     fileFeedSource(spark, fileFeedDir(batches), batches.head.schema)
 
-  /** The feed directory alone — for gates that need TWO independent
-    * sources over the same batch sequence (stream-stream joins).
+  /** The feed directory alone (`<tmp>/feed`, staged under `tmp`) —
+    * for gates that need TWO independent sources over the same batch
+    * sequence (stream-stream joins), or that land the feed inside a
+    * [[TempRootCache]] root ([[cachedFeedDir]]).
     */
-  private[queries] def fileFeedDir(batches: Seq[DataFrame]): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_feed").toString
+  private[queries] def fileFeedDir(batches: Seq[DataFrame], tmp: String =
+      java.nio.file.Files.createTempDirectory("graft_feed").toString): String = {
     val feed = s"$tmp/feed"
     new java.io.File(feed).mkdirs()
     batches.zipWithIndex.foreach { case (b, i) =>
@@ -636,6 +628,11 @@ object OlapQueries {
     }
     feed
   }
+
+  /** [[fileFeedDir]] landed once per dataset fingerprint in `cache`. */
+  private[queries] def cachedFeedDir(cache: TempRootCache, spark: SparkSession,
+      dir: String)(batches: => Seq[DataFrame]): String =
+    cache.root(spark, dir)(fileFeedDir(batches, _)) + "/feed"
 
   private[queries] def fileFeedSource(spark: SparkSession, feed: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =

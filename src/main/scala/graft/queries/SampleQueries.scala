@@ -87,21 +87,16 @@ object SampleQueries {
     Sample.importanceWeights(Tables.documents(spark, dir),
       targetPred = col("lang") === "en", buckets = 256)
 
-  private val profileCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val profileCache = new TempRootCache("graft_importance", "documents")
 
-  /** Materialized profile root per source fingerprint (the
-    * searchIndexRoot pattern; a changed corpus gets a fresh profile).
+  /** Materialized profile root per source fingerprint
+    * ([[TempRootCache]]: a changed corpus gets a fresh profile and the
+    * superseded one is deleted).
     */
-  private[graft] def importanceRoot(spark: SparkSession, dir: String): String = {
-    val fp = Tables.fingerprint(spark, s"$dir/documents.parquet")
-    profileCache.getOrElseUpdate(fp, {
-      val p = java.nio.file.Files.createTempDirectory("graft_importance").toString
+  private[graft] def importanceRoot(spark: SparkSession, dir: String): String =
+    profileCache.root(spark, dir)(p =>
       graft.serving.ImportanceProfile.materialize(
-        Tables.documents(spark, dir), col("lang") === "en", p)
-      p
-    })
-  }
+        Tables.documents(spark, dir), col("lang") === "en", p))
 
   /** Importance scores SERVED from the materialized profile state —
     * additive deltas re-sum to the one-shot profile, so this shares

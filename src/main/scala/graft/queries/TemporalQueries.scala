@@ -76,8 +76,7 @@ object TemporalQueries {
     * stream ≡ batch exactly and the gate shares `q_attribution_24h`'s
     * oracle.
     */
-  private val temporalJoinCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val temporalJoinCache = new TempRootCache("graft_temporal_gate")
 
   /** ONE AvailableNow stream runs all THREE temporal stateful
     * operators — the attribution leftOuter interval join, the range
@@ -94,9 +93,8 @@ object TemporalQueries {
     * sentinel pair and the sentinel user one session — every
     * read-back filters `user_id >= 0`.
     */
-  private def temporalJoinsOut(spark: SparkSession, dir: String): String = {
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    temporalJoinCache.getOrElseUpdate(fp, {
+  private def temporalJoinsOut(spark: SparkSession, dir: String): String =
+    temporalJoinCache.root(spark, dir) { tmp =>
       val winUs = 24L * 3600L * 1000000L
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("ts"),
@@ -114,7 +112,7 @@ object TemporalQueries {
         ev.filter(tu > cuts(0) && tu <= cuts(1)),
         ev.filter(tu > cuts(1)),
         sentinel("purchase", -10L).unionByName(sentinel("click", -11L))
-          .unionByName(sentinel("error", -12L))))
+          .unionByName(sentinel("error", -12L))), tmp)
       def srcOf() = OlapQueries.fileFeedSource(spark, feed, ev.schema)
       val purchases = srcOf().filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("user_id"),
@@ -168,7 +166,6 @@ object TemporalQueries {
             padL("error_id"), lit(null).cast("timestamp").as("e_ts"),
             col("session_start_ms"), col("session_end_ms"),
             col("n_events"), col("sum_value_cents")))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_temporal_gate").toString
       val out = s"$tmp/out"
       OlapQueries.withGateStreamConf(spark) {
         val q = both.writeStream
@@ -181,9 +178,7 @@ object TemporalQueries {
           .start()
         try q.awaitTermination() finally q.stop()
       }
-      out
-    })
-  }
+    } + "/out"
 
   def attribution24hStream(spark: SparkSession, dir: String): DataFrame = {
     val out = temporalJoinsOut(spark, dir)

@@ -706,23 +706,15 @@ object TpchQueries {
     * and the report re-sums at read — stream-final ≡ batch under any
     * split, so the gate shares `q_tpch_revenue_by_nation`'s oracle.
     */
-  private val ordersFeedCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val ordersFeedCache = new TempRootCache("graft_feed", "orders")
 
   def revenueByNationStream(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)
     // the id-ordered-thirds orders feed lands once per corpus
     // fingerprint (the OlapQueries.eventsFeed discipline) — every
     // call still runs the full broadcast-enriched streaming query
-    val feed = ordersFeedCache.getOrElseUpdate(
-      Tables.fingerprint(spark, s"$dir/orders.parquet"), {
-        val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-        val cuts = Seq(maxKey / 3, 2 * maxKey / 3)
-        OlapQueries.fileFeedDir(Seq(
-          orders.filter(col("o_orderkey") <= cuts(0)),
-          orders.filter(col("o_orderkey") > cuts(0) && col("o_orderkey") <= cuts(1)),
-          orders.filter(col("o_orderkey") > cuts(1))))
-      })
+    val feed = OlapQueries.cachedFeedDir(ordersFeedCache, spark, dir)(
+      OlapQueries.idThirds(spark, orders, "o_orderkey", s"$dir/orders.parquet"))
     val dims = Tables.customer(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)),
         col("c_nationkey") === col("n_nationkey"))

@@ -288,9 +288,7 @@ object AnnIndex {
     val legs = eraseLegs(spark, root, vecIds)
     if (legs.isEmpty) return
     EraseStage.run(spark, root, legs)
-    legs.map(_._2).foreach(_.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false)))
+    legs.foreach(l => graft.ops.NearDup.releaseCheckpoint(l._2))
   }
 
   /** The staged legs [[erase]] commits — the seam the read-path

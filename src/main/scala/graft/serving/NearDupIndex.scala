@@ -55,31 +55,19 @@ object NearDupIndex {
   private def bucketOf(bandHash: Column): Column =
     pmod(bandHash, lit(nBuckets.toLong)).cast("int")
 
-  // Resolved bands/docs frames per root — the [[SearchIndex]]
-  // frameCache discipline: directory listing + footer schema
-  // resolution once per root instead of per probe; in-process writes
-  // invalidate; same single-writer scope as the upstream
-  // fingerprint-keyed root caches.
-  private val frameCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
+  // Resolved bands/postings frames per root, [[RootCache]] slots:
+  // directory listing + footer schema resolution once per root
+  // generation instead of per probe.
   private def indexFrame(spark: SparkSession, root: String, table: String): DataFrame =
-    frameCache.getOrElseUpdate((root, table), {
-      // READ-PATH recovery (the [[SearchIndex.indexFrame]] check): a
-      // fresh JVM's first probe completes a crashed-mid-apply staged
-      // erase/compaction instead of serving the holed index
-      EraseStage.recover(spark, root)
-      spark.read.parquet(s"$root/$table")
-    })
-
-  private[graft] def invalidate(root: String): Unit =
-    frameCache.keys.filter(_._1 == root).foreach(frameCache.remove)
+    RootCache.get(spark, root, table)(spark.read.parquet(s"$root/$table"))
 
   /** Build the index from scratch (overwrites `root`). `n` is the
     * shingle width the stored postings verify with — query calls must
     * pass the same n (enforced by the postings directory name).
     */
   def materialize(corpus: DataFrame, root: String, n: Int = 3): Unit = {
+    val spark = corpus.sparkSession
+    RootCache.bumpToken(spark, root)
     IncrementalDedup.bandBuckets(corpus)
       .withColumn("bucket", bucketOf(col("band_hash")))
       .write.mode("overwrite").partitionBy("bucket")
@@ -98,7 +86,7 @@ object NearDupIndex {
       .write.mode("overwrite")
       .option("parquet.bloom.filter.enabled#doc_id", "true")
       .parquet(s"$root/postings_$n")
-    invalidate(root)
+    RootCache.invalidate(spark, root)
   }
 
   /** Incrementally admit new documents: ids already present are
@@ -119,6 +107,7 @@ object NearDupIndex {
     // pin the delta before any write: `fresh` is anti-joined against
     // the very directory written below (the writeDelta discipline)
     val staged = fresh.select(col("doc_id"), col("text")).localCheckpoint(true)
+    RootCache.bumpToken(spark, root)
     IncrementalDedup.bandBuckets(staged)
       .withColumn("bucket", bucketOf(col("band_hash")))
       .write.mode("append").partitionBy("bucket")
@@ -132,10 +121,8 @@ object NearDupIndex {
       .write.mode("append")
       .option("parquet.bloom.filter.enabled#doc_id", "true")
       .parquet(s"$root/postings_$n")
-    staged.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-    invalidate(root)
+    NearDup.releaseCheckpoint(staged)
+    RootCache.invalidate(spark, root)
   }
 
   /** Small-file maintenance for the appended index — the
@@ -167,7 +154,10 @@ object NearDupIndex {
       EraseStage.run(spark, root, flat.map(t =>
         EraseStage.Overwrite(t, bloom, Some("doc_id")) ->
           spark.read.parquet(s"$root/$t")))
-    if (bands.nonEmpty || flat.nonEmpty) invalidate(root)
+    if (bands.nonEmpty || flat.nonEmpty) {
+      RootCache.bumpToken(spark, root)
+      RootCache.invalidate(spark, root)
+    }
     bands.map(b => s"bands/bucket=$b") ++ flat
   }
 
@@ -188,14 +178,13 @@ object NearDupIndex {
   def erase(spark: SparkSession, root: String, docIds: Seq[Long],
       n: Int = 3): Unit = {
     if (docIds.isEmpty) return
-    if (EraseStage.recover(spark, root)) invalidate(root)
+    if (EraseStage.recover(spark, root)) RootCache.invalidate(spark, root)
     val legs = eraseLegs(spark, root, docIds, n)
     if (legs.isEmpty) return
+    RootCache.bumpToken(spark, root)
     EraseStage.run(spark, root, legs)
-    legs.map(_._2).foreach(_.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false)))
-    invalidate(root)
+    legs.foreach(l => NearDup.releaseCheckpoint(l._2))
+    RootCache.invalidate(spark, root)
   }
 
   /** The staged legs [[erase]] commits — the seam the read-path

@@ -2,7 +2,7 @@ package graft.serving
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.KMeans
+import graft.ops.{KMeans, NearDup}
 
 /** MATERIALIZED IVFADC index — the PQ twin of [[AnnIndex]] and the
   * layout a billion-vector serving tier actually stores (FAISS's
@@ -35,6 +35,7 @@ object PqIndex {
       coarseK: Int = 8, m: Int = 16, k: Int = 64, scale: Long = 65536,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val idx = KMeans.ivfAdcIndex(corpus, coarseK, m, k, scale, idCol, vecCol)
+    RootCache.bumpToken(spark, root)
     idx.codes
       .write.mode("overwrite").partitionBy("cell").parquet(s"$root/codes")
     val cb = idx.coarse.zipWithIndex.map { case (v, i) => ("coarse", i, v) } ++
@@ -42,24 +43,16 @@ object PqIndex {
     import spark.implicits._
     cb.toDF("kind", "idx", "vec").withColumn("m", lit(idx.m))
       .coalesce(1).write.mode("overwrite").parquet(s"$root/codebooks")
-    loaded.remove(root)
+    RootCache.invalidate(spark, root)
   }
 
-  // loaded-index cache for the serving loop (codebook collect + file
-  // listing happen once per root); append/materialize invalidate it —
-  // a cached codes plan pins the file listing of its read time
-  private val loaded =
-    scala.collection.concurrent.TrieMap.empty[String, KMeans.IvfAdcIndex]
-
   /** Rehydrate codebooks (bounded driver metadata — k·dim longs, the
-    * same class as IVF centroids) + the lazily-read code table.
+    * same class as IVF centroids) + the lazily-read code table, once
+    * per root generation ([[RootCache]]; a cached codes plan pins the
+    * file listing of its read time, so every write here invalidates).
     */
   def load(spark: SparkSession, root: String): KMeans.IvfAdcIndex =
-    loaded.getOrElseUpdate(root, {
-      // READ-PATH recovery (the [[SearchIndex.indexFrame]] check): a
-      // fresh JVM's first load completes a crashed-mid-apply staged
-      // erase/compaction instead of pinning the holed code table
-      EraseStage.recover(spark, root)
+    RootCache.get(spark, root, "index") {
       val rows = spark.read.parquet(s"$root/codebooks").collect()
       def grab(kind: String): Seq[Seq[Long]] = rows
         .filter(_.getAs[String]("kind") == kind)
@@ -67,7 +60,7 @@ object PqIndex {
         .map(r => r.getSeq[Long](r.fieldIndex("vec")).toSeq).toSeq
       KMeans.IvfAdcIndex(spark.read.parquet(s"$root/codes"),
         grab("coarse"), grab("sub"), rows.head.getAs[Int]("m"))
-    })
+    }
 
   /** Incrementally admit new vectors: frozen-codebook encode, ids
     * already present dropped, new files appended inside their cell
@@ -76,9 +69,25 @@ object PqIndex {
   def append(spark: SparkSession, root: String, newVecs: DataFrame,
       scale: Long = 65536,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    KMeans.stagedCodes(load(spark, root), newVecs, scale, idCol, vecCol)
-      .write.mode("append").partitionBy("cell").parquet(s"$root/codes")
-    loaded.remove(root) // the cached codes plan pins a stale file list
+    val codes = KMeans.stagedCodes(load(spark, root), newVecs, scale, idCol, vecCol)
+    RootCache.bumpToken(spark, root)
+    codes.write.mode("append").partitionBy("cell").parquet(s"$root/codes")
+    RootCache.invalidate(spark, root)
+  }
+
+  /** Small-file maintenance for the appended code table — the
+    * [[AnnIndex.compactCells]] twin over `codes/cell=` directories
+    * (same staged commit, same fragmentation threshold, same
+    * identical-content contract). Returns the compacted cell ids.
+    */
+  def compactCells(spark: SparkSession, root: String,
+      minFiles: Int = 8): Seq[String] = {
+    val done = EraseStage.compactFragmented(spark, root, "codes", "cell", minFiles)
+    if (done.nonEmpty) {
+      RootCache.bumpToken(spark, root)
+      RootCache.invalidate(spark, root)
+    }
+    done
   }
 
   /** Targeted VECTOR ERASURE — the PQ-code leg of
@@ -93,30 +102,17 @@ object PqIndex {
     * recoverable from the durable stage ([[EraseStage.recover]],
     * run at the start of every erase). Absent ids no-op.
     */
-  /** Small-file maintenance for the appended code table — the
-    * [[AnnIndex.compactCells]] twin over `codes/cell=` directories
-    * (same staged commit, same fragmentation threshold, same
-    * identical-content contract). Returns the compacted cell ids.
-    */
-  def compactCells(spark: SparkSession, root: String,
-      minFiles: Int = 8): Seq[String] = {
-    val done = EraseStage.compactFragmented(spark, root, "codes", "cell", minFiles)
-    if (done.nonEmpty) loaded.remove(root)
-    done
-  }
-
   def erase(spark: SparkSession, root: String, vecIds: Seq[Long]): Unit = {
     if (vecIds.isEmpty) return
-    if (EraseStage.recover(spark, root)) loaded.remove(root)
+    if (EraseStage.recover(spark, root)) RootCache.invalidate(spark, root)
     val legs = eraseLegs(spark, root, vecIds)
     if (legs.isEmpty) return
     // staged-commit swap (EraseStage): kept rows are durable before
     // the cell directories drop — crash mid-erase is recoverable
+    RootCache.bumpToken(spark, root)
     EraseStage.run(spark, root, legs)
-    legs.map(_._2).foreach(_.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false)))
-    loaded.remove(root)
+    legs.foreach(l => NearDup.releaseCheckpoint(l._2))
+    RootCache.invalidate(spark, root)
   }
 
   /** The staged legs [[erase]] commits — the seam the read-path
@@ -154,7 +150,7 @@ object PqIndex {
   def reindex(spark: SparkSession, corpus: DataFrame, root: String,
       coarseK: Int = 8, m: Int = 16, k: Int = 64, scale: Long = 65536,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    if (EraseStage.recover(spark, root)) loaded.remove(root)
+    if (EraseStage.recover(spark, root)) RootCache.invalidate(spark, root)
     val stored = spark.read.parquet(s"$root/codes")
     val missing = stored.select(col("vec_id"))
       .join(corpus.select(col(idCol).as("vec_id")), Seq("vec_id"), "left_anti")
@@ -171,16 +167,12 @@ object PqIndex {
     import spark.implicits._
     val cbDf = cb.toDF("kind", "idx", "vec").withColumn("m", lit(idx.m))
     val affected = (oldCells ++ (0 until coarseK)).distinct.sorted
+    RootCache.bumpToken(spark, root)
     EraseStage.run(spark, root, Seq(
       EraseStage.Swap("codes", "cell", affected.map(_.toString)) -> idx.codes,
       EraseStage.Overwrite("codebooks") -> cbDf))
-    loaded.remove(root)
+    RootCache.invalidate(spark, root)
   }
-
-  /** Drop the cached loaded index — for writers outside this object
-    * (the read-path recovery specs simulating a fresh JVM).
-    */
-  private[graft] def invalidate(root: String): Unit = loaded.remove(root)
 
   /** Probe + ADC-rank a query batch against the stored codes —
     * [[KMeans.ivfAdcQuery]] over the loaded index, inheriting its

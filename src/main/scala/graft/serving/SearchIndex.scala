@@ -2,7 +2,7 @@ package graft.serving
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{SparseSearch, TopK}
+import graft.ops.{NearDup, SparseSearch, TopK}
 
 /** MATERIALIZED inverted index for sparse lexical retrieval — the
   * text-side twin of [[AnnIndex]]: term postings written as parquet
@@ -95,6 +95,7 @@ object SearchIndex {
     val nDelta = idRow.getLong(1)
     if (!overwrite && nDelta == 0) return
     val deltaId = s"${idRow.getDecimal(0).toBigInteger}_$nDelta"
+    RootCache.bumpToken(spark, root)
     val post = SparseSearch.termPostings(docs, "doc_id", "text")
       .withColumn("bucket", bucketOf(col("tok")))
       .localCheckpoint(true)
@@ -114,12 +115,8 @@ object SearchIndex {
     Seq((deltaId, nDelta)).toDF("delta_id", "n_delta")
       .write.mode(mode).parquet(s"$root/meta")
     post.write.mode(mode).partitionBy("bucket").parquet(s"$root/postings")
-    post.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-    writeGen.incrementAndGet()
-    nCache.remove(root)
-    frameCache.keys.filter(_._1 == root).foreach(frameCache.remove)
+    NearDup.releaseCheckpoint(post)
+    RootCache.invalidate(spark, root)
   }
 
   /** Segment-merge maintenance — the Pinot minion merge/rollup-task
@@ -139,7 +136,7 @@ object SearchIndex {
     * ids (pure content hashes of doc-id sets).
     */
   def compact(spark: SparkSession, root: String): Unit = {
-    if (EraseStage.recover(spark, root)) invalidateFrames(root)
+    if (EraseStage.recover(spark, root)) RootCache.invalidate(spark, root)
     val post = spark.read.parquet(s"$root/postings")
     val buckets = post.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq // bounded: <= nBuckets
@@ -154,13 +151,14 @@ object SearchIndex {
       .withColumn("delta_id", lit(deltaId))
     import spark.implicits._
     val affected = buckets.map(_.toString)
+    RootCache.bumpToken(spark, root)
     EraseStage.run(spark, root, Seq(
       EraseStage.Swap("stats", "bucket", affected) -> stats,
       EraseStage.Overwrite("meta") ->
         Seq((deltaId, n)).toDF("delta_id", "n_delta"),
       EraseStage.Swap("postings", "bucket", affected) ->
         post.repartition(buckets.size, col("bucket"))))
-    invalidateFrames(root)
+    RootCache.invalidate(spark, root)
   }
 
   /** Targeted DOCUMENT ERASURE — right-to-be-forgotten for the
@@ -196,14 +194,13 @@ object SearchIndex {
     */
   def eraseDocs(spark: SparkSession, root: String, docIds: Seq[Long]): Unit = {
     if (docIds.isEmpty) return
-    if (EraseStage.recover(spark, root)) invalidateFrames(root)
+    if (EraseStage.recover(spark, root)) RootCache.invalidate(spark, root)
     val legs = eraseLegs(spark, root, docIds)
     if (legs.isEmpty) return
+    RootCache.bumpToken(spark, root)
     EraseStage.run(spark, root, legs)
-    legs.map(_._2).foreach(_.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false)))
-    invalidateFrames(root)
+    legs.foreach(l => NearDup.releaseCheckpoint(l._2))
+    RootCache.invalidate(spark, root)
   }
 
   /** The staged legs [[eraseDocs]] commits — the seam the read-path
@@ -246,77 +243,23 @@ object SearchIndex {
       EraseStage.Swap("postings", "bucket", affected) -> keep)
   }
 
-  /** Top-k docs per query doc from the materialized index — same
-    * output and same numbers as [[SparseSearch.rankedRetrieval]],
-    * but reading only the term-bucket partitions the queries touch.
-    */
-  // Corpus size per index root, cached on the driver like
-  // [[Serving.anchorMs]]: one tiny meta aggregate on first query,
-  // invalidated by this JVM's own [[writeDelta]] calls (streaming
-  // appends run in-process via StreamRunner). An index appended to by
-  // ANOTHER process needs the meta re-read — same single-writer scope
-  // as the fingerprint-keyed index caches upstream. `writeGen` closes
-  // the check-then-act race with a concurrent in-process append: a
-  // reader that started its meta read before an append's invalidation
-  // must not install its (stale) value afterwards, so it only caches
-  // when no write happened in between; writers bump the generation
-  // BEFORE removing, so a reader can never observe the removal
-  // without also observing a generation change.
-  private val nCache = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private val writeGen = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  // Resolved postings/stats frames per root: `spark.read.parquet` on a
-  // 64-bucket partitioned dir pays directory listing + footer schema
-  // resolution EVERY call (~half the served lookup's warm latency,
-  // measured); the cached frame pins the resolved file index while
-  // per-query bucket pruning still applies to its scans. In-process
-  // writes invalidate alongside nCache (same single-writer scope; the
-  // writeGen race guard reasoning above applies identically).
-  private val frameCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
+  // Resolved postings/stats frames and the corpus size N per root,
+  // [[RootCache]] slots: `spark.read.parquet` on a 64-bucket
+  // partitioned dir pays directory listing + footer schema resolution
+  // EVERY call (~half the served lookup's warm latency, measured);
+  // the cached frame pins the resolved file index while per-query
+  // bucket pruning still applies to its scans.
   private def indexFrame(spark: SparkSession, root: String, table: String): DataFrame =
-    frameCache.get((root, table)).getOrElse {
-      // READ-PATH recovery (one FS existence check, cache-miss only):
-      // a crash mid-apply of a staged erase/compaction — after the
-      // manifest, with partition dirs already deleted — used to leave
-      // queries serving a holed index until the NEXT maintenance op;
-      // a fresh JVM's first query lands here and completes it
-      if (EraseStage.recover(spark, root)) invalidateFrames(root)
-      val gen0 = writeGen.get()
-      val df = spark.read.parquet(s"$root/$table")
-      if (writeGen.get() == gen0) frameCache.putIfAbsent((root, table), df)
-      df
-    }
+    RootCache.get(spark, root, table)(spark.read.parquet(s"$root/$table"))
 
-  /** Drop this root's cached frames/meta — for writers OUTSIDE
-    * [[writeDelta]] (tests simulating crash residue; an external
-    * process appending under the documented single-writer scope).
-    */
-  private[graft] def invalidateFrames(root: String): Unit = {
-    writeGen.incrementAndGet()
-    nCache.remove(root)
-    frameCache.keys.filter(_._1 == root).foreach(frameCache.remove)
-  }
-
-  private def corpusSize(spark: SparkSession, root: String): Long = {
-    // crash-replay can write a delta's meta/stats rows twice under the
-    // same delta_id (see writeDelta) — collapse before summing
-    nCache.get(root).getOrElse {
-      // the indexFrame read-path recovery, for the meta aggregate
-      // (query() computes N before it touches any cached frame)
-      if (EraseStage.recover(spark, root)) invalidateFrames(root)
-      val gen0 = writeGen.get()
-      val v = spark.read.parquet(s"$root/meta")
+  private def corpusSize(spark: SparkSession, root: String): Long =
+    RootCache.get(spark, root, "n") {
+      // crash-replay can write a delta's meta/stats rows twice under
+      // the same delta_id (see writeDelta) — collapse before summing
+      spark.read.parquet(s"$root/meta")
         .groupBy(col("delta_id")).agg(max(col("n_delta")).as("n_delta"))
         .agg(coalesce(sum(col("n_delta")), lit(0L))).head().getLong(0)
-      // cache only if no append invalidated while we were reading —
-      // a racing install of a pre-append value would serve stale idf
-      // until the NEXT append; better one extra meta read per race
-      if (writeGen.get() == gen0) nCache.putIfAbsent(root, v)
-      v
     }
-  }
 
   /** Per-query-term idf from the pruned stats scan: crash-replay
     * duplicate deltas collapse per delta_id, then df sums across
@@ -339,6 +282,10 @@ object SearchIndex {
       .select(col("bucket"), col("tok"), col("idf"))
   }
 
+  /** Top-k docs per query doc from the materialized index — same
+    * output and same numbers as [[SparseSearch.rankedRetrieval]],
+    * but reading only the term-bucket partitions the queries touch.
+    */
   def query(spark: SparkSession, root: String, queries: DataFrame, k: Int,
       idfScale: Long = 10000L,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {

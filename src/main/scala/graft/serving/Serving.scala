@@ -470,15 +470,11 @@ object Serving {
     * batch id, erase generation) — changes on every applied refresh
     * AND every erase, so derived copies (replica sets) can detect
     * in-place rewrites that directory mtimes do not reliably
-    * surface. Cached per root; in-process writes drop it via
-    * [[invalidate]] (the tableCache discipline, so a routed lookup
-    * costs no meta-read job between refreshes).
+    * surface. A [[RootCache]] slot, so a routed lookup costs no
+    * meta-read job between refreshes.
     */
   private[graft] def metaStamp(spark: SparkSession, root: String): (Long, Long, Long) =
-    stampCache.getOrElseUpdate(root, readMeta(spark, root))
-
-  private val stampCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long, Long)]
+    RootCache.get(spark, root, "stamp")(readMeta(spark, root))
 
   val allTables: Seq[String] = Seq(
     "topk_by_count", "topk_by_revenue",
@@ -511,10 +507,10 @@ object Serving {
       // per-leg renews — a holder paused past its TTL and taken over
       // must not rebuild the layout against the new owner
       Lease.renew(spark, root)
-      // generation token moves before the write ([[GenStamp]]): a
+      // generation token moves before the write ([[RootCache]]): a
       // FOREIGN process's cached frames re-probe it on a TTL, so this
       // rebuild becomes visible there without a restart
-      GenStamp.bumpDisk(spark, root)
+      RootCache.bumpToken(spark, root)
       writeAggState(root, agg, keyed)
       writeMinuteState(root, minuteRollupAgg(events), minuteUsers(events),
         minuteValueHist(events), minuteValueVals(events),
@@ -526,7 +522,7 @@ object Serving {
       writeMeta(spark, root, maxRow.getLong(0), -1L)
     } finally {
       agg.unpersist(); keyed.unpersist()
-      invalidate(root); anchorCache.remove(root)
+      RootCache.invalidate(spark, root)
     }
   }
 
@@ -595,7 +591,7 @@ object Serving {
     // place outside EraseStage's per-leg renew discipline (see
     // materializeInto's fence note)
     Lease.renew(spark, root)
-    GenStamp.bumpDisk(spark, root) // token moves before the rewrites
+    RootCache.bumpToken(spark, root) // token moves before the rewrites
     val deltaAgg = hourlyUserAgg(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deltaKeyed = hourlyKeyedAgg(batch)
@@ -759,13 +755,12 @@ object Serving {
             if (batchMaxRow.isNullAt(0)) oldMax
             else math.max(oldMax, batchMaxRow.getLong(0))
           writeMeta(spark, root, newMax, math.max(batchId, lastApplied), eraseGen)
-          anchorCache.put(root, newMax)
         } finally {
           agg.unpersist(); keyed.unpersist()
           roll.unpersist(); musers.unpersist(); hist.unpersist()
           cm.unpersist(); kmv.unpersist(); tuple.unpersist()
           profiles.unpersist()
-          invalidate(root)
+          RootCache.invalidate(spark, root)
         }
       }
     } finally { deltaAgg.unpersist(); deltaKeyed.unpersist() }
@@ -799,7 +794,7 @@ object Serving {
   private def eraseUserLocked(spark: SparkSession, root: String,
       events: DataFrame, userId: Long): Seq[String] = {
     // complete any crashed prior erase before reading state for this one
-    if (EraseStage.recover(spark, root)) invalidate(root)
+    if (EraseStage.recover(spark, root)) RootCache.invalidate(spark, root)
     val plan = eraseLegs(spark, root, events, userId)
     if (plan.dates.isEmpty) return Seq.empty
     try {
@@ -808,25 +803,23 @@ object Serving {
       // between two tables' rewrites — the window the old
       // delete-then-overwrite loop left open — recovers to the
       // complete erase instead of an inconsistent root
-      GenStamp.bumpDisk(spark, root) // token moves before the rewrites
+      RootCache.bumpToken(spark, root) // token moves before the rewrites
       EraseStage.run(spark, root, plan.legs)
-      anchorCache.put(root, plan.maxTsMs)
     } finally {
       plan.cached.foreach(_.unpersist())
-      invalidate(root)
+      RootCache.invalidate(spark, root)
     }
     plan.dates
   }
 
   /** The staged-erase plan: affected dates, one [[EraseStage]] leg
-    * per serving table (+ meta), the new anchor, and the persisted
+    * per serving table (+ meta), and the persisted
     * intermediates to release after the run. Package-visible so the
     * crash-recovery spec can stage the legs, "crash", and assert
     * recovery completes the erase. Empty dates = user unknown.
     */
   private[graft] final case class ErasePlan(dates: Seq[String],
-    legs: Seq[(EraseStage.Leg, DataFrame)], maxTsMs: Long,
-    cached: Seq[DataFrame])
+    legs: Seq[(EraseStage.Leg, DataFrame)], cached: Seq[DataFrame])
 
   private[graft] def eraseLegs(spark: SparkSession, root: String,
       events: DataFrame, userId: Long): ErasePlan = {
@@ -861,7 +854,7 @@ object Serving {
         "absent from the supplied frame — recomputing those dates from " +
         "this frame could drop other users' rows; pass the full raw events")
     val dates = (eventDates ++ storedDates).distinct.sorted
-    if (dates.isEmpty) return ErasePlan(Seq.empty, Seq.empty, 0L, Seq.empty)
+    if (dates.isEmpty) return ErasePlan(Seq.empty, Seq.empty, Seq.empty)
     val erased = events.filter(col("user_id") =!= userId)
     val maxRow = erased.agg(unix_millis(max(col("ts")))).head()
     require(!maxRow.isNullAt(0),
@@ -942,7 +935,7 @@ object Serving {
       EraseStage.Overwrite("meta") ->
         Seq((maxRow.getLong(0), lastApplied, eraseGen + 1L))
           .toDF("max_ts_ms", "last_batch_id", "erase_gen"))
-    ErasePlan(dates, legs, maxRow.getLong(0), Seq(agg, keyed))
+    ErasePlan(dates, legs, Seq(agg, keyed))
   }
 
   private def writeAggStatePartitions(root: String, agg: DataFrame, keyed: DataFrame): Unit = {
@@ -971,108 +964,29 @@ object Serving {
       "topk_keyed_by_revenue", keyedSort)
   }
 
-  // Hot serving tables pinned in executor memory — the Pinot
-  // memory-mapped-segment analog. Caching the DataFrame also caches
-  // its resolved file index, so a lookup does zero partition-listing
-  // or footer I/O; refreshes drop the entry via [[invalidate]].
-  private val tableCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  private def invalidate(root: String): Unit = {
-    // generation counter first ([[GenStamp]]): a reader whose frame
-    // build straddles this commit captured the old counter and will
-    // not publish its stale frame
-    GenStamp.bumpMem(root)
-    rootProbes.remove(root)
-    stampCache.remove(root)
-    tableCache.keys.filter(_._1 == root).foreach { k =>
-      tableCache.remove(k).foreach(_.unpersist())
-    }
-  }
-
-  // Cross-process staleness probe ([[GenStamp]] — ONE discipline with
-  // Tiered.read and the Evolve TTL cache): per root, the on-disk
-  // `_read_gen` token the pinned frames were built under, re-checked
-  // at most once per `graft.read.gen.ttl.ms`. A FOREIGN process's
-  // committed refresh/erase rewrote the token, so its changes are
-  // picked up here within one TTL window — the single-writer
-  // deployment shape is a freshness bound now, not a correctness
-  // assumption. Zero FS calls within the TTL.
-  private final class Probe(val stamp: String) {
-    @volatile var probedAt: Long = System.currentTimeMillis()
-  }
-  private val rootProbes =
-    scala.collection.concurrent.TrieMap.empty[String, Probe]
-
-  private def probeRoot(spark: SparkSession, root: String): Unit = {
-    val ttl = spark.conf.get("graft.read.gen.ttl.ms", "2000").toLong
-    val now = System.currentTimeMillis()
-    rootProbes.get(root) match {
-      case Some(p) if now - p.probedAt < ttl => ()
-      case prev =>
-        val s = GenStamp.probeDisk(spark, root)
-        if (prev.exists(_.stamp != s)) {
-          // a FOREIGN writer committed a new generation: drop every
-          // pinned frame + the driver-side stamp/anchor metadata
-          invalidate(root)
-          anchorCache.remove(root)
-        }
-        rootProbes.put(root, new Probe(s))
-    }
-  }
-
   def readTable(spark: SparkSession, dataDir: String, table: String): DataFrame =
     readTableAt(spark, materialize(spark, dataDir), table)
 
-  private[graft] def readTableAt(spark: SparkSession, root: String,
-      table: String): DataFrame = {
-    probeRoot(spark, root)
-    tableCache.get((root, table)) match {
-      case Some(df) => df
-      case None =>
-        val gen = GenStamp.mem(root)
-        // READ BARRIER (one lease-file probe per cache MISS, not per
-        // query): a foreign writer mid-refresh/erase rewrites
-        // partitions in place, and a listing taken mid-swap could pin
-        // a mix of generations into this cache — wait for its release
-        // (or refuse after the configured bound), so the pinned frame
-        // is always one complete generation. Our own lease (a writer's
-        // own queries) passes immediately.
-        Lease.awaitQuiesced(spark, root, waitMs =
-          spark.conf.get("graft.read.barrier.ms", "60000").toLong)
-        // READ-PATH recovery (the index frameCache discipline): a crash
-        // mid-apply of a staged eraseUser no longer serves a holed
-        // layout until the next maintenance op — a fresh JVM's first
-        // table read completes it (one FS existence check per miss)
-        if (EraseStage.recover(spark, root)) { stampCache.remove(root); () }
-        val df = spark.read.parquet(s"$root/$table")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (GenStamp.mem(root) != gen) {
-          // an invalidation ran while we built: this frame may predate
-          // its commit — serve it to this caller (barrier-complete)
-          // but do not publish it (the r15 ADVICE race)
-          df.unpersist()
-          df
-        } else tableCache.putIfAbsent((root, table), df) match {
-          case Some(existing) => df.unpersist(); existing
-          case None => df
-        }
-    }
-  }
-
-  private val anchorCache = scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  /** The now-anchor (max event ts, epoch ms). Read once per dataset
-    * from the 1-row meta table and cached on the driver — a bounded
-    * metadata fetch (like IVF centroids), NOT a data collect. Serving
-    * queries inline it as a literal so the lookup is a single scan
-    * with static row-group and partition-directory pruning, no
-    * broadcast-join stage.
+  /** A serving table pinned in executor memory — the Pinot
+    * memory-mapped-segment analog, one [[RootCache]] slot per table.
+    * Caching the DataFrame also caches its resolved file index, so a
+    * lookup does zero partition-listing or footer I/O.
     */
-  def anchorMs(spark: SparkSession, dataDir: String): Long = {
-    val root = materialize(spark, dataDir)
-    anchorCache.getOrElseUpdate(root, readMeta(spark, root)._1)
-  }
+  private[graft] def readTableAt(spark: SparkSession, root: String,
+      table: String): DataFrame =
+    RootCache.get(spark, root, s"table:$table") {
+      spark.read.parquet(s"$root/$table")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+
+  /** The now-anchor (max event ts, epoch ms) from the [[metaStamp]]
+    * slot — a bounded metadata fetch (like IVF centroids), NOT a data
+    * collect. Serving queries inline it as a literal so the lookup is
+    * a single scan with static row-group and partition-directory
+    * pruning, no broadcast-join stage.
+    */
+  def anchorMs(spark: SparkSession, dataDir: String): Long =
+    metaStamp(spark, materialize(spark, dataDir))._1
 
   /** UTC date string of an epoch-ms instant — for partition pruning
     * predicates on the `p_date` layout column.

@@ -143,9 +143,7 @@ object StarTree {
       .localCheckpoint(true) // pin BEFORE overwriting its own source
     writeNodes(root, merged)
     writeMeta(spark, root, batchId)
-    merged.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+    graft.ops.NearDup.releaseCheckpoint(merged)
   }
 
   /** Right-to-be-forgotten over the star-tree state: the node tables

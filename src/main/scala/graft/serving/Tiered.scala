@@ -62,48 +62,6 @@ object Tiered {
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def qualified(spark: SparkSession, root: String): String =
-    fs(spark, root).makeQualified(new Path(root)).toString
-
-  // ---- read-frame cache (the Serving.tableCache discipline) --------
-  // One read barrier + staged-commit recovery + frame construction
-  // per root per GENERATION, not per query: rebuilding two parquet
-  // frames per call costs a footer-inference + full file listing each
-  // (~150 ms local, multiplied at object-store latencies), which is
-  // what pushed the tiered serving gate past the 200 ms bar. The
-  // frames stay UNPINNED, deliberately: the hot tier's pruned scan
-  // reads one page-cached date per recent-window query, and columnar-
-  // cache decompression measured ~25% SLOWER than that (besides, the
-  // raw tiers can be arbitrarily large — Serving pins only its small
-  // derived tables). Staleness discipline ([[GenStamp]], shared with
-  // Serving.readTableAt): every in-process mutating op invalidates
-  // (generation-counter-guarded, so a build racing an invalidation
-  // can never publish a pre-commit frame), and a FOREIGN writer's
-  // committed mutation is picked up within `graft.read.gen.ttl.ms`
-  // via the on-disk `_read_gen` token its write body rewrote — no
-  // restart needed. Set `graft.tiered.read.cache=false` to rebuild
-  // per call.
-  private final class Cached(val gen: Long, val stamp: String,
-      val df: DataFrame) {
-    @volatile var probedAt: Long = System.currentTimeMillis()
-  }
-
-  private val readCache =
-    scala.collection.concurrent.TrieMap.empty[String, Cached]
-
-  /** Drop `root`'s cached read frame — called by every mutating op
-    * here after its commit. Bumps the in-process generation FIRST, so
-    * a concurrent reader whose frame build straddled this commit
-    * cannot re-insert the stale frame (its captured generation no
-    * longer matches).
-    */
-  private[graft] def invalidate(spark: SparkSession, root: String): Unit = {
-    val key = qualified(spark, root)
-    GenStamp.bumpMem(key)
-    readCache.remove(key)
-    ()
-  }
-
   /** One tier's rows, SCHEMA-EVOLUTION-AWARE: when the tiered root
     * carries an [[graft.tables.Evolve]] registry (register it at the
     * ROOT, not per tier), every read — serving, demote staging, erase
@@ -161,14 +119,14 @@ object Tiered {
       // paused past its TTL and taken over must not run this
       // destructive write body against the new owner
       Lease.renew(spark, root)
-      // generation token moves BEFORE the write ([[GenStamp]]): any
+      // generation token moves BEFORE the write ([[RootCache]]): any
       // mirror converged earlier is instantly non-current, so the
       // primary-damage inference can never mistake this rewrite for
       // damage, and foreign readers' TTL probes see the new token
-      GenStamp.bumpDisk(spark, root)
+      RootCache.bumpToken(spark, root)
       graft.tables.TableManager.writePartitioned(
         df, s"$root/hot", tsCol, sortCols, bloomCol)
-      invalidate(spark, root)
+      RootCache.invalidate(spark, root)
     }
 
   /** Append a batch into the HOT tier (live ingest always lands hot,
@@ -185,11 +143,11 @@ object Tiered {
       // renew a displaced holder (TTL takeover during a long pause)
       // would run the whole write unfenced against the new owner
       Lease.renew(spark, root)
-      GenStamp.bumpDisk(spark, root) // token moves before the write
+      RootCache.bumpToken(spark, root) // token moves before the write
       graft.tables.TableManager.writePartitioned(
         df, s"$root/hot", tsCol, sortCols, bloomCol,
         mode = org.apache.spark.sql.SaveMode.Append)
-      invalidate(spark, root)
+      RootCache.invalidate(spark, root)
     }
 
   /** Where a STREAMING pipeline lands its batch-keyed raw output
@@ -512,14 +470,14 @@ object Tiered {
                       s"to the registry at $root — ${e.getMessage}")
               })
                 .withColumn("p_date", to_date(col(tsCol)))
-            GenStamp.bumpDisk(spark, root) // token moves before the fold
+            RootCache.bumpToken(spark, root) // token moves before the fold
             EraseStage.run(spark, root, Seq(
               EraseStage.MoveIn("hot", "p_date", sortCols,
                 bloomCol.map(c =>
                   s"parquet.bloom.filter.enabled#$c" -> "true").toMap) ->
                 scrubErased(spark, root, landRows),
               EraseStage.Overwrite("absorb_wm") -> wmDf))
-            invalidate(spark, root)
+            RootCache.invalidate(spark, root)
           }
           foldable.foreach { b =>
             f.delete(new Path(s"${landingDir(root)}/batch_id=$b"), true)
@@ -567,12 +525,12 @@ object Tiered {
       if (frag.nonEmpty) {
         val kept = tierFrame(spark, root, "hot")
           .filter(col("p_date").cast("string").isin(frag: _*))
-        GenStamp.bumpDisk(spark, root) // token moves before the rewrite
+        RootCache.bumpToken(spark, root) // token moves before the rewrite
         EraseStage.run(spark, root, Seq(
           EraseStage.Swap("hot", "p_date", frag, sortCols,
             bloomCol.map(c =>
               s"parquet.bloom.filter.enabled#$c" -> "true").toMap) -> kept))
-        invalidate(spark, root)
+        RootCache.invalidate(spark, root)
       }
       frag
     }
@@ -634,7 +592,7 @@ object Tiered {
             .filter(col("p_date").cast("string").isin(expired: _*)))
         val demoted = coldExisting
           .map(c => hotRows.unionByName(c)).getOrElse(hotRows)
-        GenStamp.bumpDisk(spark, root) // token moves before the swap
+        RootCache.bumpToken(spark, root) // token moves before the swap
         EraseStage.run(spark, root, Seq(
           // cold first: rows are durable on the cold tier before the
           // hot directories can drop, at every crash point
@@ -642,7 +600,7 @@ object Tiered {
             coldOpts(coldBloomCols), shards = filesPerDate) -> demoted,
           EraseStage.Swap("hot", "p_date", expired) ->
             hotRows.limit(0)))
-        invalidate(spark, root)
+        RootCache.invalidate(spark, root)
         expired
       }
     }
@@ -793,9 +751,9 @@ object Tiered {
       val legs = tierLegs ++ landingLegs
       if (legs.isEmpty) Seq.empty
       else {
-        GenStamp.bumpDisk(spark, root) // token moves before the rewrites
+        RootCache.bumpToken(spark, root) // token moves before the rewrites
         EraseStage.run(spark, root, legs.map(_._1))
-        invalidate(spark, root)
+        RootCache.invalidate(spark, root)
         // right-to-be-forgotten reaches the MIRRORS in the same call:
         // the cold legs above rewrote the primary, but each replica
         // still holds the user's pre-erase segment files until
@@ -860,11 +818,11 @@ object Tiered {
           .filter(_.getName.stripPrefix("p_date=") < beforeDate)
           .sortBy(_.getName)
         if (expired.nonEmpty)
-          GenStamp.bumpDisk(spark, root) // token moves before the drops
+          RootCache.bumpToken(spark, root) // token moves before the drops
         val dropped = expired
           .map { p => f.delete(p, true); p.getName.stripPrefix("p_date=") }
         if (dropped.nonEmpty) {
-          invalidate(spark, root)
+          RootCache.invalidate(spark, root)
           // retention is a compliance delete too: expired dates must
           // leave the mirrors with the primary, not at the next tick
           convergeMirrors(spark, root)
@@ -875,11 +833,14 @@ object Tiered {
 
   /** The whole table, both tiers, as one DataFrame — p_date partition
     * pruning applies per-tier, so a time-bounded query lists (and
-    * reads) only the tier(s) its range touches. Same read discipline
-    * as [[Serving.readTable]], including its CACHE: the read barrier
-    * (wait out a live foreign writer), staged-commit recovery, and
-    * the frame construction run once per root per generation — every
-    * mutating op here invalidates (see readCache above). The cold
+    * reads) only the tier(s) its range touches. Built once per root
+    * per generation ([[RootCache]]; every mutating op here
+    * invalidates): rebuilding two parquet frames per call costs a
+    * footer inference + full file listing each (~150 ms local). The
+    * frame stays UNPINNED, deliberately: the hot tier's pruned scan
+    * reads one page-cached date per recent-window query, and
+    * columnar-cache decompression measured ~25% SLOWER than that
+    * (besides, the raw tiers can be arbitrarily large). The cold
     * tier routes through its replica set when one matching the
     * current archive content exists ([[replicateCold]]). Handles stay
     * subject to the documented discipline: consume promptly; a handle
@@ -887,45 +848,15 @@ object Tiered {
     * apply window.
     */
   def read(spark: SparkSession, root: String): DataFrame =
-    if (spark.conf.get("graft.tiered.read.cache", "true") != "true")
-      buildRead(spark, root)
-    else {
-      val key = qualified(spark, root)
-      val ttl = spark.conf.get("graft.read.gen.ttl.ms", "2000").toLong
-      def rebuild(): DataFrame = {
-        val gen = GenStamp.mem(key)
-        val stamp = GenStamp.probeDisk(spark, root)
-        val df = buildRead(spark, root)
-        // publish only if no in-process invalidation ran while we
-        // built — otherwise this frame may predate a commit whose
-        // invalidate already completed (the r15 ADVICE race)
-        if (GenStamp.mem(key) == gen)
-          readCache.put(key, new Cached(gen, stamp, df))
-        df
-      }
-      readCache.get(key) match {
-        case Some(c) if c.gen == GenStamp.mem(key) =>
-          val now = System.currentTimeMillis()
-          if (now - c.probedAt < ttl) c.df
-          else if (GenStamp.probeDisk(spark, root) == c.stamp) {
-            c.probedAt = now; c.df
-          } else rebuild() // a FOREIGN writer committed: new generation
-        case _ => rebuild()
-      }
+    RootCache.get(spark, root, "tiered") {
+      val tiers =
+        (if (liveTier(spark, root, "hot"))
+          Seq(tierServeFrame(spark, root, "hot")) else Nil) ++
+        (if (liveTier(spark, root, "cold"))
+          Seq(tierServeFrame(spark, root, "cold")) else Nil)
+      require(tiers.nonEmpty, s"no tiers under $root")
+      tiers.reduce(_ unionByName _)
     }
-
-  private def buildRead(spark: SparkSession, root: String): DataFrame = {
-    Lease.awaitQuiesced(spark, root, waitMs =
-      spark.conf.get("graft.read.barrier.ms", "60000").toLong)
-    EraseStage.recover(spark, root)
-    val tiers =
-      (if (liveTier(spark, root, "hot"))
-        Seq(tierServeFrame(spark, root, "hot")) else Nil) ++
-      (if (liveTier(spark, root, "cold"))
-        Seq(tierServeFrame(spark, root, "cold")) else Nil)
-    require(tiers.nonEmpty, s"no tiers under $root")
-    tiers.reduce(_ unionByName _)
-  }
 
   /** Tiers that can carry replica mirrors. `hot` and `cold` route
     * reads through their mirrors with failover; `landing` mirrors are
@@ -1069,7 +1000,7 @@ object Tiered {
       if (mirrors.isEmpty) primary
       else {
         val stamp = digestOf(tierListing(spark, root, tier))
-        val gen = GenStamp.probeDisk(spark, root)
+        val gen = RootCache.token(spark, root)
         val start = Replicas.replicaFor(s"$root/$tier", mirrors.size)
         val routed = (0 until mirrors.size)
           .map(d => mirrors((start + d) % mirrors.size))
@@ -1190,7 +1121,7 @@ object Tiered {
         healPrimary(spark, root, tier, n)
         val listing = tierListing(spark, root, tier)
         val want = listing.toMap
-        val gen = GenStamp.probeDisk(spark, root)
+        val gen = RootCache.token(spark, root)
         val manifestText =
           (if (gen.isEmpty) "" else s"#gen\t$gen\n") +
             listing.map { case (rel, len) => s"$rel\t$len" }
@@ -1246,7 +1177,7 @@ object Tiered {
           }
           adds.size
         }
-        invalidate(spark, root)
+        RootCache.invalidate(spark, root)
         copiedCounts
       }
     }
@@ -1264,7 +1195,7 @@ object Tiered {
     */
   private def healPrimary(spark: SparkSession, root: String,
       tier: String, n: Int): Unit = {
-    val gen = GenStamp.probeDisk(spark, root)
+    val gen = RootCache.token(spark, root)
     if (gen.nonEmpty) {
       val f = fs(spark, root)
       val primary = tierListing(spark, root, tier).toMap
@@ -1287,7 +1218,7 @@ object Tiered {
           case _ => () // stale/absent manifest: no heal authority
         }
       }
-      if (healed) invalidate(spark, root)
+      if (healed) RootCache.invalidate(spark, root)
     }
   }
 

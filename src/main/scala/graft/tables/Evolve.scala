@@ -103,8 +103,8 @@ object Evolve {
     schemaCache.remove(cacheKey(spark, path))
     // an evolution changes what a registry-aware read RETURNS without
     // touching any data file, so frame caches keyed on the root must
-    // drop too (no-op for roots that aren't tiered)
-    graft.serving.Tiered.invalidate(spark, path)
+    // drop too (no-op for roots nothing has cached)
+    graft.serving.RootCache.invalidate(spark, path)
   }
 
   private def load(spark: SparkSession, path: String): (Int, StructType, Map[String, String]) = {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.NearDup
-import graft.serving.NearDupIndex
+import graft.serving.{NearDupIndex, RootCache}
 
 /** The materialized near-dup band index: served lookup ≡ exhaustive
   * exact-Jaccard cross pairs, band-bucket pruning at the probe, and
@@ -189,7 +189,7 @@ class NearDupIndexSpec extends SparkSuite {
     // crash exactly AT the commit point, then a fresh JVM queries
     graft.serving.EraseStage.stage(spark, p,
       NearDupIndex.eraseLegs(spark, p, matched, 3))
-    NearDupIndex.invalidate(p) // fresh JVM: empty frame cache
+    RootCache.invalidate(spark, p) // fresh JVM: empty frame cache
     assert(served(p) === want)
     assert(served(p) !== served(root), "erase must be visible through the query")
     assert(!new java.io.File(s"$p/_erase_stage").exists,

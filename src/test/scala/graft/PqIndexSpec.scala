@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.KMeans
-import graft.serving.PqIndex
+import graft.serving.{PqIndex, RootCache}
 
 /** The materialized IVFADC index: served ≡ in-memory, probe reads
   * only the probed cell directories, and appends are idempotent.
@@ -128,7 +128,7 @@ class PqIndexSpec extends SparkSuite {
     PqIndex.materialize(spark, emb, p)
     graft.serving.EraseStage.stage(spark, p,
       PqIndex.eraseLegs(spark, p, erased))
-    PqIndex.invalidate(p) // fresh JVM: no cached loaded index
+    RootCache.invalidate(spark, p) // fresh JVM: no cached loaded index
     assert(served(p) === served(rb))
     assert(spark.read.parquet(s"$p/codes")
       .filter($"vec_id".isin(erased: _*)).isEmpty)
@@ -181,7 +181,7 @@ class PqIndexSpec extends SparkSuite {
       graft.serving.EraseStage.Swap("codes", "cell",
         (oldCells ++ (0 until 8)).distinct.sorted.map(_.toString)) -> idx.codes,
       graft.serving.EraseStage.Overwrite("codebooks") -> cbDf))
-    PqIndex.invalidate(p) // fresh JVM
+    RootCache.invalidate(spark, p) // fresh JVM
     // load recovers FIRST, then reads books + codes from the same
     // post-apply state — never old books over new codes
     assert(served(p, nprobe = 8) === served(fresh, nprobe = 8))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.SparseSearch
-import graft.serving.SearchIndex
+import graft.serving.{RootCache, SearchIndex}
 
 /** The materialized inverted index: served ≡ direct retrieval,
   * bucket-partition pruning at the probe, and consistent idempotent
@@ -153,7 +153,7 @@ class SearchIndexSpec extends SparkSuite {
       .write.mode("append").parquet(s"$p/meta")
     // the manual writes above bypass writeDelta — drop the cached
     // frames so the query actually reads the duplicated files
-    SearchIndex.invalidateFrames(p)
+    RootCache.invalidate(spark, p)
     assert(served(p).as[(Long, Long, Long)].collect().toSet === baseline)
   }
 
@@ -239,7 +239,7 @@ class SearchIndexSpec extends SparkSuite {
     SearchIndex.materialize(docs, p)
     graft.serving.EraseStage.stage(spark, p,
       SearchIndex.eraseLegs(spark, p, erased))
-    SearchIndex.invalidateFrames(p) // fresh JVM: empty caches
+    RootCache.invalidate(spark, p) // fresh JVM: empty caches
     assert(served(p).as[(Long, Long, Long)].collect().toSet === want)
     assert(!new java.io.File(s"$p/_erase_stage").exists,
       "the query's recovery must consume the stage")
@@ -255,7 +255,7 @@ class SearchIndexSpec extends SparkSuite {
     val fsys = new org.apache.hadoop.fs.Path(q)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fsys.delete(new org.apache.hadoop.fs.Path(s"$q/postings/bucket=$bucket"), true)
-    SearchIndex.invalidateFrames(q)
+    RootCache.invalidate(spark, q)
     assert(served(q).as[(Long, Long, Long)].collect().toSet === want)
   }
 }

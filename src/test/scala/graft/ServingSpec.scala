@@ -330,9 +330,9 @@ class ServingSpec extends SparkSuite {
       assert(Serving.readTableAt(spark, root, "agg_by_window") eq t0,
         "pinned frame not reused")
       // a FOREIGN process's refresh: emulated by the on-disk token
-      // rewrite its write body performs ([[GenStamp]] — this JVM's
-      // in-process invalidation never ran)
-      graft.serving.GenStamp.bumpDisk(spark, root)
+      // rewrite its write body performs ([[graft.serving.RootCache]] —
+      // this JVM's in-process invalidation never ran)
+      graft.serving.RootCache.bumpToken(spark, root)
       // within the TTL the pinned frame still serves (freshness bound)
       assert(Serving.readTableAt(spark, root, "agg_by_window") eq t0)
       // past the TTL the probe drops every pinned frame for the root

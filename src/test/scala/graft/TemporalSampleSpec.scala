@@ -432,6 +432,19 @@ class TemporalSampleSpec extends SparkSuite {
     assert(split === direct)
   }
 
+  test("importance profile root: a documents table rewritten in place deletes the superseded root") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_imp_evict").toString
+    def land(n: Int): Unit = Tables.documents(spark, sfDir).filter($"doc_id" < n)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    land(40)
+    val first = graft.queries.SampleQueries.importanceRoot(spark, dir)
+    land(30) // a new fingerprint for the same source path
+    val second = graft.queries.SampleQueries.importanceRoot(spark, dir)
+    assert(second !== first)
+    assert(new java.io.File(second).exists)
+    assert(!new java.io.File(first).exists, "the superseded profile root leaked")
+  }
+
   test("semanticDedupPairs ⊆ exact cosine near-dup pairs; no cartesian in the plan") {
     val emb = Tables.embeddings(spark, sfDir)
     val centroids = Ann.coarseCentroids(emb, nCells = 8)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import graft.serving.{Maintenance, Tiered}
+import graft.serving.{Maintenance, RootCache, Tiered}
 
 /** Tiered storage: hot/cold relocation is lossless and crash-safe,
   * the cold tier compacts to one file per date, time-range pruning
@@ -115,10 +115,6 @@ class TieredSpec extends SparkSuite {
     val t2 = Tiered.read(spark, root)
     assert(!(t2 eq t), "mutating op did not invalidate the read cache")
     assert(ids(t2) === ids(ev))
-    // cache off → every read rebuilds
-    spark.conf.set("graft.tiered.read.cache", "false")
-    try assert(!(Tiered.read(spark, root) eq Tiered.read(spark, root)))
-    finally spark.conf.unset("graft.tiered.read.cache")
   }
 
   test("crash at the manifest: the next read recovers the COMPLETE relocation") {
@@ -784,7 +780,7 @@ class TieredSpec extends SparkSuite {
     val segment = walk(new Path(mirror))
       .find(_.getName.endsWith(".parquet")).get
     f.delete(segment, false)
-    Tiered.invalidate(spark, root) // a fresh reader's first read
+    RootCache.invalidate(spark, root) // a fresh reader's first read
     assert(ids(Tiered.read(spark, root)) === ids(ev),
       "failover did not serve identical rows")
     // archive content changes (everything demotes) → mirrors are
@@ -873,7 +869,7 @@ class TieredSpec extends SparkSuite {
       .filter(_.getName.endsWith(".parquet")).head
     val victimLen = f.getFileStatus(victim).getLen
     f.delete(victim, false)
-    Tiered.invalidate(spark, root) // a fresh reader's first read
+    RootCache.invalidate(spark, root) // a fresh reader's first read
     assert(ids(Tiered.read(spark, root)) === ids(ev),
       "primary hot damage leaked into the read — no mirror failover")
     // the next replicate tick heals the primary FROM the mirror
@@ -961,12 +957,12 @@ class TieredSpec extends SparkSuite {
       // another PROCESS appends to the hot tier: emulated by writing
       // through TableManager directly (bypassing this JVM's Tiered
       // in-process invalidation) plus the on-disk token rewrite its
-      // write body performs ([[GenStamp]])
+      // write body performs ([[RootCache]])
       val extra = ev.limit(1).withColumn("event_id", lit(999999001L))
       graft.tables.TableManager.writePartitioned(
         extra, s"$root/hot", "ts", sortCols, None,
         mode = org.apache.spark.sql.SaveMode.Append)
-      graft.serving.GenStamp.bumpDisk(spark, root)
+      RootCache.bumpToken(spark, root)
       // inside the TTL the cached frame still serves — staleness is a
       // bounded freshness window, not an error
       assert(Tiered.read(spark, root) eq t0)
