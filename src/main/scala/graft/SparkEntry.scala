@@ -46,4 +46,21 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] =
     families.map(_._2).reduce(_ ++ _)
+
+  /** The local session every main runs on: `SPARK_GRAFT_CPUS` cores
+    * (default `defaultCpus`) and as many shuffle partitions, UTC, AQE
+    * on, no UI, WARN logging.
+    */
+  def session(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

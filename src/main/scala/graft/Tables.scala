@@ -40,10 +40,9 @@ object Tables {
   def cents(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     round(c * 100).cast(LongType)
 
-  // Row-group counts per table fingerprint: one footer read per file,
-  // driver metadata, cached so repeated gates never re-open footers.
-  private val rowGroupCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
+  // Row-group counts: one footer read per file, driver metadata,
+  // memoized so repeated gates never re-open footers.
+  private val rowGroups = new FpMemo[Int]()
 
   /** How many parquet ROW GROUPS back `path` — the scan's true
     * parallelism ceiling: Spark plans byte-range splits, but a task
@@ -52,7 +51,7 @@ object Tables {
     * many splits (or cores) exist.
     */
   private def scanRowGroups(spark: SparkSession, path: String): Int =
-    rowGroupCache.getOrElseUpdate(fingerprint(spark, path), {
+    rowGroups.get(spark, path) {
       val p = new org.apache.hadoop.fs.Path(path)
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = p.getFileSystem(conf)
@@ -66,7 +65,7 @@ object Tables {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRowGroups.size finally r.close()
       }.sum
-    })
+    }
 
   /** Spread heavy per-row map work off an UNDER-PARALLEL scan (guide
     * §2.5 "input skew: one huge unsplittable file … repartition

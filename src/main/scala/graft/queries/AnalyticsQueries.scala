@@ -206,19 +206,11 @@ object AnalyticsQueries {
       .agg(coalesce(sum(col("n")), lit(0L)).as("n_users"))
   }
 
-  /** [[cohortRetention]] rebuilt from a REAL micro-batched
-    * [[graft.streaming.CohortStream]] run — per-user day-set state
-    * over the id-ordered-thirds file feed, update-mode last-emission-
-    * per-user fold (each emission is the user's COMPLETE retention
-    * profile), the triangle re-counted from the folded profiles.
-    * Shares `q_cohort_retention`'s oracle.
-    */
-  private val cohortFoldCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val cohortFold = new graft.FpMemo[DataFrame](_.unpersist())
 
   /** LAST per-user cohort-profile emissions from ONE real
-    * [[graft.streaming.CohortStream]] run, cached per corpus
-    * fingerprint — the [[transitionEmissionsStreamed]] discipline:
+    * [[graft.streaming.CohortStream]] run ([[graft.FpMemo]]) — the
+    * [[transitionEmissionsStreamed]] discipline:
     * the per-user state (cohort day + active-day offsets) subsumes
     * the first-seen state, so this single run feeds BOTH the
     * retention gate and the user-growth gate instead of each paying
@@ -227,8 +219,7 @@ object AnalyticsQueries {
   private[queries] def cohortEmissionsStreamed(spark: SparkSession,
       dir: String): DataFrame = {
     import graft.streaming.CohortStream
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    cohortFoldCache.getOrElseUpdate(fp, {
+    cohortFold.get(spark, s"$dir/events.parquet") {
       val src = OlapQueries.eventsFeed(spark, dir)
       val updates = CohortStream.cohorts(spark, src)
       val folded = OlapQueries.streamFoldLast(spark, updates.toDF(), "user_id")
@@ -236,9 +227,16 @@ object AnalyticsQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       folded.count()
       folded
-    })
+    }
   }
 
+  /** [[cohortRetention]] rebuilt from a REAL micro-batched
+    * [[graft.streaming.CohortStream]] run — per-user day-set state
+    * over the id-ordered-thirds file feed, update-mode last-emission-
+    * per-user fold (each emission is the user's COMPLETE retention
+    * profile), the triangle re-counted from the folded profiles.
+    * Shares `q_cohort_retention`'s oracle.
+    */
   def cohortRetentionStream(spark: SparkSession, dir: String): DataFrame =
     cohortEmissionsStreamed(spark, dir)
       .select(col("user_id"), col("cohort_day"),
@@ -451,28 +449,24 @@ object AnalyticsQueries {
   /** The transition-count EDGE LIST (src, dst, w) shared by the two
     * batch PageRank gates: global and personalized centrality are two
     * consumers of ONE empirical transition graph, so the alphabet²-
-    * bounded edge table materializes once per corpus fingerprint (the
-    * lm/unigram shared-feed discipline) instead of each gate re-paying
+    * bounded edge table materializes once ([[graft.FpMemo]]) instead
+    * of each gate re-paying
     * the full user-keyed window scan over events. The edge list is a
     * kilobyte-scale aggregate, never fact-sized.
     */
-  private val transEdgesCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val transEdges = new graft.FpMemo[DataFrame](_.unpersist())
 
-  private def transitionEdges(spark: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    transEdgesCache.getOrElseUpdate(fp, {
+  private def transitionEdges(spark: SparkSession, dir: String): DataFrame =
+    transEdges.get(spark, s"$dir/events.parquet") {
       val edges = transitionCountsOf(Tables.events(spark, dir))
         .select(col("from_type").as("src"), col("to_type").as("dst"),
           col("n_trans").as("w"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       edges.count()
       edges
-    })
-  }
+    }
 
-  private val transEmissionsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val transEmissions = new graft.FpMemo[DataFrame](_.unpersist())
 
   /** LAST per-user pair-count emissions from a REAL micro-batched
     * run of [[graft.streaming.TransitionsStream]] over the events
@@ -481,21 +475,20 @@ object AnalyticsQueries {
     * each touched user's COMPLETE current counts, so the distributed
     * last-emission fold ([[OlapQueries.streamFoldLast]] — nothing
     * user-sized touches the driver) followed by the sum is exactly
-    * the batch operator. Cached per corpus fingerprint — the two
+    * the batch operator. Memoized ([[graft.FpMemo]]): the two
     * stream-composed gates share one stream run.
     */
   private def transitionEmissionsStreamed(spark: SparkSession,
       dir: String): DataFrame = {
     import graft.streaming.TransitionsStream
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    transEmissionsCache.getOrElseUpdate(fp, {
+    transEmissions.get(spark, s"$dir/events.parquet") {
       val src = OlapQueries.eventsFeed(spark, dir)
       val updates = TransitionsStream.pairs(spark, src)
       val folded = OlapQueries.streamFoldLast(spark, updates.toDF(), "user_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       folded.count()
       folded
-    })
+    }
   }
 
   /** The transition matrix rebuilt from the STREAMED per-user state
@@ -505,21 +498,18 @@ object AnalyticsQueries {
   def eventTransitionsStream(spark: SparkSession, dir: String): DataFrame = {
     // the alphabet²-bounded matrix derivation over the folded
     // emissions is shared by this gate AND the streamed-PageRank gate
-    // — materialize it once per corpus fingerprint (the
-    // transitionEdges discipline) instead of each consumer re-paying
-    // the fold-read + matrix aggregation
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    transMatrixStreamCache.getOrElseUpdate(fp, {
+    // — memoize it (FpMemo) instead of each consumer re-paying the
+    // fold-read + matrix aggregation
+    transMatrixStream.get(spark, s"$dir/events.parquet") {
       val m = graft.streaming.TransitionsStream.matrixOf(
           transitionEmissionsStreamed(spark, dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       m.count()
       m
-    })
+    }
   }
 
-  private val transMatrixStreamCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private val transMatrixStream = new graft.FpMemo[DataFrame](_.unpersist())
 
   /** PageRank served off the STREAMED transition state — graph
     * analytics on continuously-ingested edges; shares the batch

@@ -130,7 +130,7 @@ object DocQueries {
     * `q_doc_dedup_best` (each used to recompute the banding + star
     * contraction from scratch). Narrow id-width tables.
     */
-  private val nearDupCache = new TempRootCache("graft_neardup_labels",
+  private val nearDupCache = new graft.FpMemo.TempRoots("graft_neardup_labels",
     "documents")
 
   private def nearDupRoot(spark: SparkSession, dir: String): String =
@@ -452,7 +452,7 @@ object DocQueries {
       spark.read.parquet(s"$root/labels"))
   }
 
-  private val curateCache = new TempRootCache("graft_curate", "documents")
+  private val curateCache = new graft.FpMemo.TempRoots("graft_curate", "documents")
 
   private[graft] def curateStagesCompute(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -693,10 +693,10 @@ object DocQueries {
   }
 
   private val searchIndexCache =
-    new TempRootCache("graft_search_index", "documents")
+    new graft.FpMemo.TempRoots("graft_search_index", "documents")
 
   /** Root of the materialized inverted index for `dir`'s documents,
-    * built on first use per dataset fingerprint ([[TempRootCache]]).
+    * built on first use per dataset fingerprint ([[graft.FpMemo]]).
     */
   private[graft] def searchIndexRoot(spark: SparkSession, dir: String): String =
     searchIndexCache.root(spark, dir)(p =>
@@ -716,7 +716,7 @@ object DocQueries {
   }
 
   private val nearDupIndexCache =
-    new TempRootCache("graft_neardup_index", "documents")
+    new graft.FpMemo.TempRoots("graft_neardup_index", "documents")
 
   /** Served near-duplicate lookup from the MATERIALIZED band index
     * ([[graft.serving.NearDupIndex]]): docs 50+ are the admitted
@@ -735,7 +735,7 @@ object DocQueries {
 
   /** Root of the materialized band index over `dir`'s admitted corpus
     * (docs 50+), built on first use per dataset fingerprint
-    * ([[TempRootCache]]).
+    * ([[graft.FpMemo]]).
     */
   private[graft] def nearDupIndexRoot(spark: SparkSession, dir: String): String =
     nearDupIndexCache.root(spark, dir)(p =>
@@ -823,15 +823,13 @@ object DocQueries {
   // Trained merge rules are deterministic bounded driver metadata
   // (bpeTrainedN string pairs; the oracle retrains independently and
   // matches), so the trained and pack gates share one driver-side
-  // training pass — the unigramVocabCache discipline applied to BPE.
-  // The STREAM-census path deliberately stays separate.
-  private val bpeMergesCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
+  // training pass (FpMemo). The STREAM-census path deliberately stays
+  // separate.
+  private val bpeMerges = new graft.FpMemo[Seq[(String, String)]]()
 
   private def bpeTrainedMerges(spark: SparkSession,
       dir: String): Seq[(String, String)] =
-    bpeMergesCache.getOrElseUpdate(
-      graft.Tables.fingerprint(spark, s"$dir/documents.parquet"),
+    bpeMerges.get(spark, s"$dir/documents.parquet")(
       graft.ops.Bpe.trainMergesBatched(Tables.documents(spark, dir), bpeTrainedN))
 
   def docBpeTrained(spark: SparkSession, dir: String): DataFrame = {
@@ -851,17 +849,14 @@ object DocQueries {
     * (cost, piece count, piece sequence) tie-break — so the gate
     * hash-checks the whole train→encode path cross-engine.
     */
-  // trained vocab per corpus fingerprint: training is deterministic
-  // (the oracle retrains independently and matches), so the trained
-  // and pack gates share one driver-side training pass — bounded
-  // metadata, the centroid-cache class. The STREAM gate deliberately
-  // trains from its own streamed census instead.
-  private val unigramVocabCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.Unigram.Vocab]
+  // training is deterministic (the oracle retrains independently and
+  // matches), so the trained and pack gates share one driver-side
+  // training pass (FpMemo) — bounded metadata. The STREAM gate
+  // deliberately trains from its own streamed census instead.
+  private val unigramVocabs = new graft.FpMemo[graft.ops.Unigram.Vocab]()
 
   private def unigramVocab(spark: SparkSession, dir: String): graft.ops.Unigram.Vocab =
-    unigramVocabCache.getOrElseUpdate(
-      graft.Tables.fingerprint(spark, s"$dir/documents.parquet"),
+    unigramVocabs.get(spark, s"$dir/documents.parquet")(
       graft.ops.Unigram.train(Tables.documents(spark, dir)))
 
   def docUnigramTrained(spark: SparkSession, dir: String): DataFrame = {
@@ -1154,7 +1149,7 @@ object DocQueries {
     * (`localCheckpoint`) instead of once per ingest. Cached per
     * corpus fingerprint like the curation stages.
     */
-  private val docFeedCache = new TempRootCache("graft_docfeed", "documents")
+  private val docFeedCache = new graft.FpMemo.TempRoots("graft_docfeed", "documents")
 
   private def docFeedRoot(spark: SparkSession, dir: String): String =
     docFeedCache.root(spark, dir) { tmp =>

@@ -45,19 +45,15 @@ object EmbedQueries {
     Ann.hardNegatives(emb, emb.filter(col("vec_id") < 10), k = 3, maxSim = 0.4)
   }
 
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Double]]]
+  private val centroids = new graft.FpMemo[Seq[Seq[Double]]]()
 
-  /** The shared untrained coarse quantizer (16 lowest-id embeddings),
-    * cached per source FINGERPRINT (path+bytes+mtime, not path) so a
-    * dataset regenerated in place retrains instead of serving stale
-    * cells. One helper, one cell count — the IVF, served-IVF, and
-    * SemDeDup entries must all quantize identically or the per-entry
-    * oracles diverge.
+  /** The shared untrained coarse quantizer (16 lowest-id embeddings,
+    * [[graft.FpMemo]]). One helper, one cell count — the IVF,
+    * served-IVF, and SemDeDup entries must all quantize identically
+    * or the per-entry oracles diverge.
     */
   private def cachedCentroids(spark: SparkSession, dir: String): Seq[Seq[Double]] =
-    centroidCache.getOrElseUpdate(
-      graft.Tables.fingerprint(spark, s"$dir/embeddings.parquet"),
+    centroids.get(spark, s"$dir/embeddings.parquet")(
       Ann.coarseCentroids(Tables.embeddings(spark, dir), nCells = 16))
 
   /** The shared coarse quantizer, exposed for cross-family serving
@@ -89,7 +85,7 @@ object EmbedQueries {
       centroids = cachedCentroids(spark, dir), nprobe = nprobe)
   }
 
-  private val indexCache = new TempRootCache("graft_ann_index", "embeddings")
+  private val indexCache = new graft.FpMemo.TempRoots("graft_ann_index", "embeddings")
 
   /** KNN served from the MATERIALIZED IVF index
     * ([[graft.serving.AnnIndex]]): cell-partitioned parquet written
@@ -120,7 +116,7 @@ object EmbedQueries {
   }
 
   /** Root of the materialized IVF index for `dir`'s embeddings, built
-    * on first use per dataset fingerprint ([[TempRootCache]]).
+    * on first use per dataset fingerprint ([[graft.FpMemo]]).
     */
   private[graft] def annIndexRoot(spark: SparkSession, dir: String): String =
     indexCache.root(spark, dir) { p =>
@@ -158,7 +154,7 @@ object EmbedQueries {
     }
 
   private val reindexCache =
-    new TempRootCache("graft_ann_reindex", "embeddings")
+    new graft.FpMemo.TempRoots("graft_ann_reindex", "embeddings")
 
   /** Global top-20 most-similar embedding pairs (embedding-cosine
     * near-dup detection in ranked form).
@@ -234,10 +230,7 @@ object EmbedQueries {
     */
   def semanticDedupTrained(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val centroids = trainedCache.getOrElseUpdate(
-      graft.Tables.fingerprint(spark, s"$dir/embeddings.parquet"),
-      graft.ops.KMeans.refinedCentroids(emb, k = 10))
-    Ann.semanticDedupPairs(emb, centroids, threshold = 0.3)
+    Ann.semanticDedupPairs(emb, trainedCentroids(spark, dir), threshold = 0.3)
   }
 
   /** The optimizer-extension path, end-to-end: a PURE-SQL query that
@@ -288,8 +281,14 @@ object EmbedQueries {
     df
   }
 
-  private val trainedCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Double]]]
+  private val trained = new graft.FpMemo[Seq[Seq[Double]]]()
+
+  /** The Lloyd-refined k=10 quantizer shared by the trained SemDeDup
+    * and IVF entries ([[graft.FpMemo]]).
+    */
+  private def trainedCentroids(spark: SparkSession, dir: String): Seq[Seq[Double]] =
+    trained.get(spark, s"$dir/embeddings.parquet")(
+      graft.ops.KMeans.refinedCentroids(Tables.embeddings(spark, dir), k = 10))
 
   /** IVF over the TRAINED quantizer: the same cell-sharded KNN path
     * as `q_embed_knn_ivf`, but with [[graft.ops.KMeans]]'s Lloyd-
@@ -302,11 +301,8 @@ object EmbedQueries {
     */
   def knnIvfTrained(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val centroids = trainedCache.getOrElseUpdate(
-      graft.Tables.fingerprint(spark, s"$dir/embeddings.parquet"),
-      graft.ops.KMeans.refinedCentroids(emb, k = 10))
     Ann.ivfKnn(emb, emb.filter(col("vec_id") < 10), k = 5,
-      centroids = centroids, nprobe = 10)
+      centroids = trainedCentroids(spark, dir), nprobe = 10)
   }
 
   /** One exact quantized Lloyd step ([[graft.ops.KMeans]]): init =
@@ -408,43 +404,41 @@ object EmbedQueries {
   /** PQ serving: ADC top-5 for the standard query set (vec_id < 10)
     * over the 16×64 code table — integer LUT arithmetic end-to-end,
     * so even the APPROXIMATE ranking hash-checks. Like the IVFADC
-    * entry right below, the code table + codebook build once per
-    * dataset fingerprint and queries serve from the checkpointed
+    * entry right below, the code table + codebook build once
+    * ([[graft.FpMemo]]) and queries serve from the checkpointed
     * codes (the FAISS add/search split; first toucher pays the
     * encode, and `q_embed_pq_codes` keeps measuring the encode
     * itself through its own uncached [[graft.ops.KMeans.pqCodes]]
     * call).
     */
-  private val pqCodeCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.KMeans.PqCodeIndex]
+  private val pqCodes = new graft.FpMemo[graft.ops.KMeans.PqCodeIndex](idx =>
+    graft.ops.NearDup.releaseCheckpoint(idx.codes))
 
   def pqAdcKnn(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val idx = pqCodeCache.getOrElseUpdate(
-      graft.Tables.fingerprint(spark, s"$dir/embeddings.parquet"),
+    val idx = pqCodes.get(spark, s"$dir/embeddings.parquet")(
       graft.ops.KMeans.pqCodeIndex(emb))
     graft.ops.KMeans.adcQuery(idx, emb.filter(col("vec_id") < 10), topK = 5)
   }
 
-  private val ivfAdcCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.ops.KMeans.IvfAdcIndex]
+  private val ivfAdcIndexes = new graft.FpMemo[graft.ops.KMeans.IvfAdcIndex](idx =>
+    graft.ops.NearDup.releaseCheckpoint(idx.codes))
 
   /** IVFADC top-5 for the standard query set: 8 coarse cells,
     * nprobe=4, residual PQ 16×64 — both approximations (cell pruning
     * + code quantization) deterministic and hash-checked. The index
-    * (code table + codebooks) builds once per dataset fingerprint and
+    * (code table + codebooks) builds once ([[graft.FpMemo]]) and
     * serves from the checkpointed codes — the PQ twin of the
     * materialized-IVF entry, and what the warm bench numbers measure.
     */
   def ivfAdcTop5(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val idx = ivfAdcCache.getOrElseUpdate(
-      graft.Tables.fingerprint(spark, s"$dir/embeddings.parquet"),
+    val idx = ivfAdcIndexes.get(spark, s"$dir/embeddings.parquet")(
       graft.ops.KMeans.ivfAdcIndex(emb))
     graft.ops.KMeans.ivfAdcQuery(idx, emb.filter(col("vec_id") < 10), topK = 5)
   }
 
-  private val pqIndexCache = new TempRootCache("graft_pq_index", "embeddings")
+  private val pqIndexCache = new graft.FpMemo.TempRoots("graft_pq_index", "embeddings")
 
   /** The same IVFADC top-5 answered from the MATERIALIZED on-disk
     * index ([[graft.serving.PqIndex]]): codes partitioned by coarse
@@ -461,7 +455,7 @@ object EmbedQueries {
   }
 
   private val pqReindexCache =
-    new TempRootCache("graft_pq_reindex", "embeddings")
+    new graft.FpMemo.TempRoots("graft_pq_reindex", "embeddings")
 
   /** IVFADC top-5 served from a PQ index whose BOTH codebooks (coarse
     * + sub-quantizers) were refreshed in place

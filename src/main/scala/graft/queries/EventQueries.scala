@@ -288,7 +288,7 @@ object EventQueries {
     * user cardinality so truncation (the reference's own
     * approximation) cannot perturb the exact oracle comparison.
     */
-  private val topkContFeedCache = new TempRootCache("graft_feed")
+  private val topkContFeedCache = new graft.FpMemo.TempRoots("graft_feed")
 
   def topkContinuous(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

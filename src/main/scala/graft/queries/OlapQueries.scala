@@ -552,20 +552,19 @@ object OlapQueries {
 
   /** Three id-ranged micro-batches of `frame` (the shared stream-gate
     * split: ids up to max/3, up to 2·max/3, the rest). The cut points
-    * are a pure function of the table, so they are computed once per
-    * fingerprint of `file` (two longs of driver metadata) instead of
+    * are a pure function of the table, so they are memoized on `file`
+    * ([[graft.FpMemo]]; two longs of driver metadata) instead of
     * re-running the max() aggregate on every stream-gate call — many
     * gates split the same table the same way.
     */
-  private val idCutsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
+  private val idCuts = new graft.FpMemo[Seq[Long]]()
 
   private[queries] def idThirds(spark: SparkSession, frame: DataFrame,
       idCol: String, file: String): Seq[DataFrame] = {
-    val cuts = idCutsCache.getOrElseUpdate(Tables.fingerprint(spark, file), {
+    val cuts = idCuts.get(spark, file) {
       val maxId = frame.agg(max(col(idCol))).head().getLong(0)
       Seq(maxId / 3, 2 * maxId / 3)
-    })
+    }
     Seq(
       frame.filter(col(idCol) <= cuts(0)),
       frame.filter(col(idCol) > cuts(0) && col(idCol) <= cuts(1)),
@@ -581,17 +580,16 @@ object OlapQueries {
     idThirds(spark, Tables.documents(spark, dir), "doc_id", s"$dir/documents.parquet")
 
   /** The id-ordered-thirds EVENTS feed as an on-disk file-source
-    * stream, landed ONCE per corpus fingerprint and shared by every
-    * events-driven stream gate (funnel, bursts, type-history,
-    * transitions, cohorts): the production shape is one landed feed
-    * fanned out to many stream consumers, not one copy of the feed
-    * per consumer. Only the INPUT scaffolding is shared — each gate
+    * stream, landed ONCE per corpus fingerprint ([[graft.FpMemo]])
+    * and shared by every events-driven stream gate (funnel, bursts,
+    * type-history, transitions, cohorts): the production shape is one
+    * landed feed fanned out to many stream consumers, not one copy of
+    * the feed per consumer. Only the INPUT scaffolding is shared — each gate
     * still runs its own full micro-batched streaming query (fresh
     * checkpoint + state) on every call, so the measured operator is
-    * untouched. Superseded fingerprints for the same source dir drop
-    * their feed directory ([[TempRootCache]]).
+    * untouched.
     */
-  private val eventsFeedCache = new TempRootCache("graft_feed")
+  private val eventsFeedCache = new graft.FpMemo.TempRoots("graft_feed")
 
   private[queries] def eventsFeed(spark: SparkSession, dir: String): DataFrame =
     fileFeedSource(spark,
@@ -610,7 +608,7 @@ object OlapQueries {
   /** The feed directory alone (`<tmp>/feed`, staged under `tmp`) —
     * for gates that need TWO independent sources over the same batch
     * sequence (stream-stream joins), or that land the feed inside a
-    * [[TempRootCache]] root ([[cachedFeedDir]]).
+    * [[graft.FpMemo.TempRoots]] root ([[cachedFeedDir]]).
     */
   private[queries] def fileFeedDir(batches: Seq[DataFrame], tmp: String =
       java.nio.file.Files.createTempDirectory("graft_feed").toString): String = {
@@ -630,7 +628,7 @@ object OlapQueries {
   }
 
   /** [[fileFeedDir]] landed once per dataset fingerprint in `cache`. */
-  private[queries] def cachedFeedDir(cache: TempRootCache, spark: SparkSession,
+  private[queries] def cachedFeedDir(cache: graft.FpMemo.TempRoots, spark: SparkSession,
       dir: String)(batches: => Seq[DataFrame]): String =
     cache.root(spark, dir)(fileFeedDir(batches, _)) + "/feed"
 

@@ -87,11 +87,10 @@ object SampleQueries {
     Sample.importanceWeights(Tables.documents(spark, dir),
       targetPred = col("lang") === "en", buckets = 256)
 
-  private val profileCache = new TempRootCache("graft_importance", "documents")
+  private val profileCache = new graft.FpMemo.TempRoots("graft_importance", "documents")
 
   /** Materialized profile root per source fingerprint
-    * ([[TempRootCache]]: a changed corpus gets a fresh profile and the
-    * superseded one is deleted).
+    * ([[graft.FpMemo]]).
     */
   private[graft] def importanceRoot(spark: SparkSession, dir: String): String =
     profileCache.root(spark, dir)(p =>

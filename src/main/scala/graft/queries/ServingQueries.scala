@@ -322,7 +322,7 @@ object ServingQueries {
         col("score_micro"), col("n_events"))
   }
 
-  private val tieredCache = new TempRootCache("graft_tiered")
+  private val tieredCache = new graft.FpMemo.TempRoots("graft_tiered")
 
   /** A [[graft.serving.Tiered]] events table, built once per dataset
     * fingerprint: everything lands hot, then the OLDER HALF of the
@@ -379,7 +379,7 @@ object ServingQueries {
         sum(col("value_cents")).as("total_cents"))
   }
 
-  private val tieredStreamCache = new TempRootCache("graft_tiered_stream")
+  private val tieredStreamCache = new graft.FpMemo.TempRoots("graft_tiered_stream")
 
   /** The tiered table's INGEST-TWIN gate: the same root built the way
     * a live deployment builds it — an initial hot build plus two
@@ -421,7 +421,7 @@ object ServingQueries {
     tieredDailyOf(spark, root)
   }
 
-  private val tieredPipeCache = new TempRootCache("graft_tiered_pipe")
+  private val tieredPipeCache = new graft.FpMemo.TempRoots("graft_tiered_pipe")
 
   /** The tiered table built the way [[graft.streaming
     * .StreamingPipeline.startTiered]]'s raw leg builds it: id-split
@@ -461,7 +461,7 @@ object ServingQueries {
     tieredDailyOf(spark, root)
   }
 
-  private val evolveCache = new TempRootCache("graft_evolve")
+  private val evolveCache = new graft.FpMemo.TempRoots("graft_evolve")
 
   /** Schema evolution end-to-end ([[graft.tables.Evolve]]): a daily
     * rollup table whose first epoch (dates before the data-derived
@@ -501,7 +501,7 @@ object ServingQueries {
         sum(col("total_cents")).as("total_cents"))
   }
 
-  private val widenCache = new TempRootCache("graft_widen")
+  private val widenCache = new graft.FpMemo.TempRoots("graft_widen")
 
   /** TYPE-WIDENING evolution end-to-end ([[graft.tables.Evolve
     * .widenColumn]]): the daily rollup's `total_cents` metric starts
@@ -543,7 +543,7 @@ object ServingQueries {
         sum(col("total_cents")).as("total_cents"))
   }
 
-  private val streamRootCache = new TempRootCache("graft_serving_stream")
+  private val streamRootCache = new graft.FpMemo.TempRoots("graft_serving_stream")
 
   /** A serving root built by the STREAMING refresh leg: first batch
     * via [[Serving.materializeInto]], the rest as id-ordered

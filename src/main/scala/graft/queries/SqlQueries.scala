@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.serving.Serving
+import graft.serving.{RootCache, Serving}
 
 /** The reference's SQL surface: its users query Pinot tables in SQL
   * (pinot/README.md §Sample Queries). The engine's tables register as
@@ -17,103 +17,91 @@ object SqlQueries {
 
   type QFn = (SparkSession, String) => DataFrame
 
-  private val rollupViewCache =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame, Long)]
-  private val rollupViewByPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def registerRawView(spark: SparkSession, dir: String): Unit =
     Tables.events(spark, dir).createOrReplaceTempView("orders_raw")
 
-  /** The rollup views serve from the MATERIALIZED minute-grain state
-    * ([[graft.serving.Serving]] rollup_1m / rollup_1m_users — the
-    * Pinot orders_1m_rollup table analog) instead of recomputing the
-    * rollup from raw events on every call. Two pinned frames build
-    * once per dataset:
-    *
-    *  - `orders_1m_rollup` — counts/sums joined with per-(window,
-    *    type) user sketches derived from the distinct-user state (HLL
-    *    is duplicate-insensitive, so they equal sketches over raw
-    *    rows), plus the re-derived hour/day dims
-    *    (orders_1m_rollup_schema.json).
-    *  - `orders_user_state` — (event_type, user_id, last_wsm): the
-    *    upsert last-seen dim (orders_raw_upsert_table.json analog).
-    *    "Distinct users since X" = COUNT(*) WHERE last_wsm > X: a
-    *    user has an event past X iff their LAST window is past X —
-    *    users-sized state instead of a raw rescan.
-    *
-    * Both are repartition(1): serving lookups over ~10k-row frames
-    * are task-scheduling-bound at 32 cached partitions (~130 empty
-    * tasks per call measured — the whole 0.5 s the round-6 verdict
-    * flagged); one partition makes each scan one task. The returned
-    * anchor (max window) is inlined as a LITERAL in the serving SQL —
-    * the [[Serving.anchorMs]] policy: each scalar subquery would
-    * otherwise cost a whole extra job (~50 ms of planning/scheduling
-    * at any data size).
+  /** A value derived from `dir`'s served root: a [[RootCache]] slot of
+    * [[Serving.materialize]]'s root, so a refresh, an erase or a
+    * foreign commit drops it with the tables it was read from.
     */
-  private def registerRollupViews(spark: SparkSession, dir: String,
-      fp: String): (String, Long) = {
-    // a dataset regenerated in place gets a new fingerprint and fresh
-    // frames; unpersist the superseded entry's pinned frames or they
-    // hold executor storage forever (the docSearchServed discipline),
-    // and drop its prepared plans (they resolve to the stale frames)
-    rollupViewByPath.put(dir, fp).filter(_ != fp).foreach { old =>
-      rollupViewCache.remove(old).foreach { case (v, ls, _) =>
-        v.unpersist(blocking = false)
-        ls.unpersist(blocking = false)
-      }
-      histViewCache.remove(old).foreach(_.unpersist(blocking = false))
-      preparedCache.keysIterator.filter(_._1 == old)
-        .foreach(preparedCache.remove)
-    }
-    val (view, lastSeen, anchor) = rollupViewCache.getOrElseUpdate(fp, {
-        val users = Serving.readTable(spark, dir, "rollup_1m_users")
-        val sketches = users
-          .groupBy(col("window_start_ms"), col("event_type"))
-          .agg(hll_sketch_agg(col("user_id").cast("string")).as("users_hll"))
-        val w = timestamp_millis(col("window_start_ms"))
-        val v = Serving.readTable(spark, dir, "rollup_1m")
-          .join(sketches, Seq("window_start_ms", "event_type"))
-          .withColumn("hour_of_day", hour(w).cast("long"))
-          .withColumn("day_of_week_iso",
-            (((dayofweek(w) + lit(5)) % 7) + 1).cast("long"))
-          .select("window_start_ms", "event_type", "hour_of_day",
-            "day_of_week_iso", "order_count", "sum_value_cents", "users_hll")
-          .repartition(1)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        v.count() // pin eagerly: the build cost is paid once, not by the first query
-        val ls = users
-          .groupBy(col("event_type"), col("user_id"))
-          .agg(max(col("window_start_ms")).as("last_wsm"))
-          .repartition(1)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ls.count()
-        (v, ls, v.agg(max(col("window_start_ms"))).head().getLong(0))
-      })
-    view.createOrReplaceTempView("orders_1m_rollup")
-    lastSeen.createOrReplaceTempView("orders_user_state")
-    (fp, anchor)
+  private def slot[A](spark: SparkSession, dir: String, name: String)(
+      build: => A): A =
+    RootCache.get(spark, Serving.materialize(spark, dir), s"sql:$name")(build)
+
+  /** `df` as a pinned 1-partition serving frame: lookups over ~10k-row
+    * frames are task-scheduling-bound at 32 cached partitions (~130
+    * empty tasks per call measured — the whole 0.5 s the round-6
+    * verdict flagged); one partition makes each scan one task. Pinned
+    * eagerly: the build cost is paid once, not by the first query.
+    */
+  private def pinned(df: DataFrame): DataFrame = {
+    val p = df.repartition(1)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    p.count()
+    p
   }
 
-  private val histViewCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
+  /** `orders_1m_rollup`, served from the MATERIALIZED minute-grain
+    * state ([[Serving]] rollup_1m / rollup_1m_users — the Pinot
+    * orders_1m_rollup table analog) instead of recomputing the rollup
+    * from raw events on every call: counts/sums joined with
+    * per-(window, type) user sketches derived from the distinct-user
+    * state (HLL is duplicate-insensitive, so they equal sketches over
+    * raw rows), plus the re-derived hour/day dims
+    * (orders_1m_rollup_schema.json).
+    */
+  private def rollupView(spark: SparkSession, dir: String): DataFrame =
+    slot(spark, dir, "rollup") {
+      val sketches = Serving.readTable(spark, dir, "rollup_1m_users")
+        .groupBy(col("window_start_ms"), col("event_type"))
+        .agg(hll_sketch_agg(col("user_id").cast("string")).as("users_hll"))
+      val w = timestamp_millis(col("window_start_ms"))
+      pinned(Serving.readTable(spark, dir, "rollup_1m")
+        .join(sketches, Seq("window_start_ms", "event_type"))
+        .withColumn("hour_of_day", hour(w).cast("long"))
+        .withColumn("day_of_week_iso",
+          (((dayofweek(w) + lit(5)) % 7) + 1).cast("long"))
+        .select("window_start_ms", "event_type", "hour_of_day",
+          "day_of_week_iso", "order_count", "sum_value_cents", "users_hll"))
+    }
+
+  /** `orders_user_state` — (event_type, user_id, last_wsm): the upsert
+    * last-seen dim (orders_raw_upsert_table.json analog). "Distinct
+    * users since X" = COUNT(*) WHERE last_wsm > X: a user has an event
+    * past X iff their LAST window is past X — users-sized state
+    * instead of a raw rescan.
+    */
+  private def userStateView(spark: SparkSession, dir: String): DataFrame =
+    slot(spark, dir, "user_state") {
+      pinned(Serving.readTable(spark, dir, "rollup_1m_users")
+        .groupBy(col("event_type"), col("user_id"))
+        .agg(max(col("window_start_ms")).as("last_wsm")))
+    }
+
+  /** Register both rollup views and return the anchor (max window),
+    * which the serving SQL inlines as a LITERAL — the
+    * [[Serving.anchorMs]] policy: each scalar subquery would otherwise
+    * cost a whole extra job (~50 ms of planning/scheduling at any data
+    * size).
+    */
+  private def registerRollupViews(spark: SparkSession, dir: String): Long = {
+    val view = rollupView(spark, dir)
+    view.createOrReplaceTempView("orders_1m_rollup")
+    userStateView(spark, dir).createOrReplaceTempView("orders_user_state")
+    slot(spark, dir, "anchor")(
+      view.agg(max(col("window_start_ms"))).head().getLong(0))
+  }
 
   /** Register the minute-grain value-histogram state as the
     * `orders_1m_hist` SQL view (pinned, 1 partition — the same
     * serving-view discipline as the rollup view) for the percentile
     * statement.
     */
-  private def registerHistView(spark: SparkSession, dir: String, fp: String): Unit = {
-    val v = histViewCache.getOrElseUpdate(fp, {
-      val h = Serving.readTable(spark, dir, "rollup_1m_hist")
-        .select("window_start_ms", "event_type", "bin", "cnt")
-        .repartition(1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      h.count()
-      h
-    })
-    v.createOrReplaceTempView("orders_1m_hist")
-  }
+  private def registerHistView(spark: SparkSession, dir: String): Unit =
+    slot(spark, dir, "hist") {
+      pinned(Serving.readTable(spark, dir, "rollup_1m_hist")
+        .select("window_start_ms", "event_type", "bin", "cnt"))
+    }.createOrReplaceTempView("orders_1m_hist")
 
   /** Execute a serving-latency SQL statement with the ETL machinery
     * scoped out: AQE's per-exchange re-planning and 32-wide shuffles
@@ -127,40 +115,35 @@ object SqlQueries {
     * execution itself for these lookups. Brokers in every serving
     * system (Pinot, Presto) cache plans for repeated parameterized
     * queries; the statements here are literally the README dashboard
-    * samples, re-issued with identical text per dataset (the anchor
-    * literal is fingerprint-determined), so the plan is keyed by
-    * (dataset fingerprint, statement name) and built once. The
-    * physical plan is forced inside the scoped-conf block so the
-    * 1-partition/no-AQE shape is baked in. Calls return a LAZY frame
-    * over the prepared plan's RDD ([[GraftShim.overPreparedPlan]]),
-    * so one call = one job executing just that DAG. Two rejected
-    * shapes, both measured slower: an eager localCheckpoint per call
-    * doubles the jobs (checkpoint + the caller's action — ~90 ms);
-    * returning the prepared frame as-is makes the caller's action
-    * RE-PLAN the whole query under the session's live conf (AQE on,
-    * 32-wide shuffles — the scoped shape is lost entirely, ~200 ms).
-    * Because the plan's RDD DAG is shared across calls, Spark serves
-    * its UNCHANGED upstream shuffle stages from the map outputs the
-    * first execution wrote and re-executes only the final stage —
-    * correct here because the inputs are pinned immutable frames and
-    * invalidation drops the whole entry, and it is the broker
+    * samples, re-issued with identical text per root generation (the
+    * anchor literal is a slot of the same root), so the plan is the
+    * root's `sql:prepared:<name>` slot, built once. The physical plan
+    * is forced inside the scoped-conf block so the 1-partition/no-AQE
+    * shape is baked in. Calls return a LAZY frame over the prepared
+    * plan's RDD ([[GraftShim.overPreparedPlan]]), so one call = one
+    * job executing just that DAG. Two rejected shapes, both measured
+    * slower: an eager localCheckpoint per call doubles the jobs
+    * (checkpoint + the caller's action — ~90 ms); returning the
+    * prepared frame as-is makes the caller's action RE-PLAN the whole
+    * query under the session's live conf (AQE on, 32-wide shuffles —
+    * the scoped shape is lost entirely, ~200 ms). Because the plan's
+    * RDD DAG is shared across calls, Spark serves its UNCHANGED
+    * upstream shuffle stages from the map outputs the first execution
+    * wrote and re-executes only the final stage — correct here
+    * because the inputs are pinned immutable frames and every commit
+    * to the root drops the plan with them, and it is the broker
     * behavior a serving system wants; but it means the warm number
     * prices the final stage, not a cold end-to-end query (~220 ms
-    * re-planned cold). Entries for a superseded fingerprint are
-    * dropped in [[registerRollupViews]]'s cleanup. Measured:
-    * ~45-60 ms/call warm.
+    * re-planned cold). Measured: ~45-60 ms/call warm.
     *
     * The `sql` thunk (and the temp-view registration inside it, via
     * [[registerRollupViews]]) runs only on a cache miss: a resolved
     * plan references the pinned frames directly, so re-registering
     * views per call would be dead work on the hit path.
     */
-  private val preparedCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  private def servingSql(spark: SparkSession, fp: String, name: String)(
+  private def servingSql(spark: SparkSession, dir: String, name: String)(
       sql: => String): DataFrame = {
-    val prepared = preparedCache.getOrElseUpdate((fp, name), {
+    val prepared = slot(spark, dir, s"prepared:$name") {
       val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
       val parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -170,7 +153,7 @@ object SqlQueries {
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
         spark.conf.set("spark.sql.shuffle.partitions", parts)
       }
-    })
+    }
     org.apache.spark.sql.GraftShim.overPreparedPlan(spark, prepared)
   }
 
@@ -197,9 +180,8 @@ object SqlQueries {
     * hash-check directly.
     */
   def topkRollup(spark: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    servingSql(spark, fp, "topk_rollup") {
-    val anchor = registerRollupViews(spark, dir, fp)._2
+    servingSql(spark, dir, "topk_rollup") {
+    val anchor = registerRollupViews(spark, dir)
     s"""
       WITH agg AS (
         SELECT event_type,
@@ -226,9 +208,8 @@ object SqlQueries {
 
   /** README sample 3: revenue by hour of day over the rollup. */
   def revenueByHour(spark: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    servingSql(spark, fp, "revenue_by_hour") {
-    val anchor = registerRollupViews(spark, dir, fp)._2
+    servingSql(spark, dir, "revenue_by_hour") {
+    val anchor = registerRollupViews(spark, dir)
     s"""
       SELECT CAST(hour_of_day AS BIGINT) AS hour_of_day,
         -- 100.0D: Spark's bare 100.0 is DECIMAL, which would make this
@@ -249,10 +230,9 @@ object SqlQueries {
     * same prepared-plan serving path as the other statements.
     */
   def percentileSql(spark: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fingerprint(spark, s"$dir/events.parquet")
-    servingSql(spark, fp, "percentile") {
-    val anchor = registerRollupViews(spark, dir, fp)._2
-    registerHistView(spark, dir, fp)
+    servingSql(spark, dir, "percentile") {
+    val anchor = registerRollupViews(spark, dir)
+    registerHistView(spark, dir)
     s"""
       WITH h AS (
         SELECT bin, SUM(cnt) AS c

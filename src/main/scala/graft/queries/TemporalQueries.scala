@@ -76,7 +76,7 @@ object TemporalQueries {
     * stream ≡ batch exactly and the gate shares `q_attribution_24h`'s
     * oracle.
     */
-  private val temporalJoinCache = new TempRootCache("graft_temporal_gate")
+  private val temporalJoinCache = new graft.FpMemo.TempRoots("graft_temporal_gate")
 
   /** ONE AvailableNow stream runs all THREE temporal stateful
     * operators — the attribution leftOuter interval join, the range

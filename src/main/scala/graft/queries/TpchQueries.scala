@@ -706,7 +706,7 @@ object TpchQueries {
     * and the report re-sums at read — stream-final ≡ batch under any
     * split, so the gate shares `q_tpch_revenue_by_nation`'s oracle.
     */
-  private val ordersFeedCache = new TempRootCache("graft_feed", "orders")
+  private val ordersFeedCache = new graft.FpMemo.TempRoots("graft_feed", "orders")
 
   def revenueByNationStream(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)

@@ -2,7 +2,7 @@ package graft.serving
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{FpMemo, Tables}
 
 /** Materialized star-tree pre-aggregation — the full Pinot star-tree
   * analog (reference: `orders_1m_rollup_table.json:29-45`, a
@@ -168,13 +168,15 @@ object StarTree {
     writeMeta(spark, root, last)
   }
 
-  // fingerprint-keyed root + in-process guard, the Serving.materialize
-  // freshness discipline: a regenerated dataset gets a new directory
-  private val built = scala.collection.concurrent.TrieMap.empty[String, String]
+  // the root is a deterministic path per source fingerprint (the
+  // Serving.materialize discipline) that other JVMs may reuse, so a
+  // superseded entry is dropped, never deleted
+  private val built = new FpMemo[String]()
 
   def materialize(spark: SparkSession, dataDir: String): String = {
-    val fp = Tables.fingerprint(spark, s"$dataDir/events.parquet")
-    built.getOrElseUpdate(fp, {
+    val file = s"$dataDir/events.parquet"
+    built.get(spark, file) {
+      val fp = Tables.fingerprint(spark, file)
       val key = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(fp))
       val root = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_startree/$key"
       val done = new org.apache.hadoop.fs.Path(s"$root/nodes/_SUCCESS")
@@ -182,7 +184,7 @@ object StarTree {
       if (!fs.exists(done))
         materializeInto(spark, root, Tables.events(spark, dataDir))
       root
-    })
+    }
   }
 
   /** Answer GROUP BY `groupDims` from the matching node: one pruned

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev decomposition harness: run one SparkEntry query warm and print
   * every Spark JOB it submits on the measured pass (job id, wall ms,
   * #tasks, first line of the call site) — the per-action breakdown
@@ -13,59 +11,56 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session(32)
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).count() // warm-up pass (codegen, caches, feeds)
-    case class J(id: Int, start: Long, var end: Long = 0L,
-      var tasks: Int = 0, site: String)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
+    final class J(val id: Int, val start: Long, val site: String) {
+      var end = 0L
+      var tasks = 0
+    }
+    // written by the listener-bus thread, read by main: guarded by `jobs`
+    val jobs = scala.collection.mutable.Map.empty[Int, J]
+    val stageJob = scala.collection.mutable.Map.empty[Int, Int]
+    var executed = 0
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.synchronized {
         val site = Option(e.properties)
           .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-        jobs.put(e.jobId, J(e.jobId, e.time, site = site))
+        jobs(e.jobId) = new J(e.jobId, e.time, site)
+        // a stage shared by overlapping jobs runs once: it belongs to
+        // the first job that lists it
+        e.stageInfos.foreach(st => stageJob.getOrElseUpdate(st.stageId, e.jobId))
       }
       override def onJobEnd(
-          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        Option(jobs.get(e.jobId)).foreach(_.end = e.time)
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        jobs.forEach((_, j) => if (j.end == 0L) ())
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = jobs.synchronized {
+        jobs.get(e.jobId).foreach(_.end = e.time)
+      }
       override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        // attribute the stage's tasks to the job that owns it via the
-        // shared time window (exact enough for a sequential gate)
-        val info = e.stageInfo
-        jobs.forEach { (_, j) =>
-          if (info.submissionTime.exists(_ >= j.start) &&
-              (j.end == 0L || info.completionTime.forall(_ <= j.end)))
-            j.tasks += info.numTasks
-        }
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = jobs.synchronized {
+        stageJob.get(e.stageInfo.stageId).flatMap(jobs.get)
+          .foreach(_.tasks += e.stageInfo.numTasks)
+      }
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = jobs.synchronized {
+        executed += 1
       }
     }
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
     fn(spark, sfDir).count() // measured pass
     val totalMs = (System.nanoTime() - t0) / 1e6
+    Thread.sleep(300) // let the listener bus deliver the pass's last events
     spark.sparkContext.removeSparkListener(listener)
-    Thread.sleep(300) // let the listener bus drain
-    val js = jobs.values.toArray(Array.empty[J]).sortBy(_.id)
+    val js = jobs.synchronized(jobs.values.toSeq.sortBy(_.id))
     var sum = 0L
     js.foreach { j =>
       val ms = if (j.end > 0) j.end - j.start else -1
       if (ms > 0) sum += ms
-      println(f"[jobprofile] job ${j.id}%4d ${ms}%6d ms  tasks~${j.tasks}%4d  ${j.site}")
+      println(f"[jobprofile] job ${j.id}%4d ${ms}%6d ms  tasks ${j.tasks}%4d  ${j.site}")
     }
-    println(f"[jobprofile] $name: ${js.length} jobs, job-sum ${sum} ms, wall ${totalMs}%.0f ms")
+    println(f"[jobprofile] $name: ${js.length} jobs, job-sum ${sum} ms, wall ${totalMs}%.0f ms, " +
+      s"tasks ${js.map(_.tasks).sum} in jobs / ${jobs.synchronized(executed)} executed")
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev plan-capture harness: write `.explain("formatted")` for the
   * named SparkEntry queries (regex over gate names) into a directory —
   * the before/after plan evidence the optimization rounds commit under
@@ -18,15 +16,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag) = args.take(3)
     val pattern = (if (args.length > 3) args(3) else ".*").r.pattern
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session(32)
     graft.serving.Serving.materialize(spark, sfDir)
     graft.queries.DocQueries.searchIndexRoot(spark, sfDir)
     graft.queries.EmbedQueries.annIndexRoot(spark, sfDir)

@@ -45,15 +45,7 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/sf1x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session(32)
 
     // the slope table must time the COMPUTATION — banding, star
     // contraction, the quality model — not the materialized stage

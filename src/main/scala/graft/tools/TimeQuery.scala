@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling harness: time one SparkEntry query N times warm.
   *
   *   sbt "runMain graft.tools.TimeQuery /root/testdata/sf0.1 q_sql_topk_rollup 10"
@@ -14,15 +12,7 @@ object TimeQuery {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name, nStr) = args.take(3)
     val n = nStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session(32)
     val fn = graft.SparkEntry.queries(name)
     val times = (1 to n).map { i =>
       val t0 = System.nanoTime()

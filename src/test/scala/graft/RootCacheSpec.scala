@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.api.TopKApi
+import graft.queries.SqlQueries
 import graft.serving.{NearDupIndex, PqIndex, RootCache, SearchIndex, Serving, Tiered}
 
 /** The one per-root read cache: a fill that races an invalidate never
@@ -68,10 +69,20 @@ class RootCacheSpec extends SparkSuite {
 
   /** A served root kind: `open` builds a root and returns it with the
     * cached read under test (the ids it serves); `commit` is the
-    * other process's write, run on a copy of the root.
+    * other process's write, run on a copy of the root; `fresh` tells
+    * the post-commit answer (by default: it serves the marker id).
     */
   private final case class Kind(name: String,
-      open: () => (String, () => Set[Long]), commit: String => Unit)
+      open: () => (String, () => Set[Long]), commit: String => Unit,
+      fresh: Set[Long] => Boolean = _.contains(marker))
+
+  /** A data dir holding `baseEvents` as its events table. */
+  private def baseDataDir(prefix: String): String = {
+    val dataDir = tmp(prefix)
+    events(baseEvents: _*).drop("value_cents").coalesce(1)
+      .write.parquet(s"$dataDir/events.parquet")
+    dataDir
+  }
 
   private val kinds = Seq(
     Kind("Tiered.read", { () =>
@@ -87,12 +98,18 @@ class RootCacheSpec extends SparkSuite {
         .select("user_id").as[Long].collect().toSet)
     }, root => Serving.refreshWithBatch(spark, root, foreignEvents, 1L)),
     Kind("TopKApi.topk via ReplicaRouter + anchorMs", { () =>
-      val dataDir = tmp("rc_api")
-      events(baseEvents: _*).drop("value_cents").coalesce(1)
-        .write.parquet(s"$dataDir/events.parquet")
+      val dataDir = baseDataDir("rc_api")
       (Serving.materialize(spark, dataDir), () => TopKApi.topk(spark, dataDir)
         .select("user_id").as[Long].collect().toSet)
     }, root => Serving.refreshWithBatch(spark, root, foreignEvents, 1L)),
+    // the marker's clicks move the anchor: the 24 h window keeps only
+    // event 3's 200 cents and the marker's 3 x 900
+    Kind("SqlQueries.topkRollup", { () =>
+      val dataDir = baseDataDir("rc_sql")
+      (Serving.materialize(spark, dataDir), () => SqlQueries.topkRollup(spark, dataDir)
+        .select("total_revenue_cents").as[Long].collect().toSet)
+    }, root => Serving.refreshWithBatch(spark, root, foreignEvents, 1L),
+      fresh = _ == Set(2900L)),
     Kind("SearchIndex.query", { () =>
       val root = tmp("rc_search")
       SearchIndex.materialize(docs, root)
@@ -154,11 +171,43 @@ class RootCacheSpec extends SparkSuite {
         if (read() != before) Some(s"${k.name}: a foreign commit served inside the TTL")
         else {
           spark.conf.set("graft.read.gen.ttl.ms", "0")
-          if (read().contains(marker)) None
+          if (k.fresh(read())) None
           else Some(s"${k.name}: the foreign commit was not served past the TTL")
         }
       } finally spark.conf.unset("graft.read.gen.ttl.ms")
     }
     assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  test("served SQL: an erase through Serving.eraseUser reaches SqlQueries.topkRollup with no explicit invalidate") {
+    val dir = tmp("rc_sql_erase")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
+      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    def answer(): Set[(String, Long, Long, Long)] = SqlQueries.topkRollup(spark, dir)
+      .select("event_type", "total_revenue_cents", "total_orders", "unique_customers")
+      .as[(String, Long, Long, Long)].collect().toSet
+    // the oracle's recompute over the raw events, without `erased`
+    def recompute(erased: Long): Set[(String, Long, Long, Long)] = {
+      val w = Tables.events(spark, dir).filter($"user_id" =!= erased)
+        .select($"event_type", $"user_id", $"value_cents",
+          unix_millis(date_trunc("minute", $"ts")).as("wsm"))
+      val anchor = w.agg(max($"wsm")).head().getLong(0)
+      w.filter($"wsm" > anchor - 24L * 3600 * 1000)
+        .groupBy($"event_type")
+        .agg(sum($"value_cents"), count(lit(1)), countDistinct($"user_id"))
+        .as[(String, Long, Long, Long)].collect().toSet
+    }
+    answer()
+    assert(answer() === recompute(-1L), "fixture: the warm answer is the recompute")
+    // the user with the most events in the last 24 h
+    val ev = Tables.events(spark, dir)
+    val maxTs = ev.agg(max($"ts")).head().getTimestamp(0)
+    val user = ev.filter($"ts" > lit(new Timestamp(maxTs.getTime - 24L * 3600 * 1000)))
+      .groupBy($"user_id").count().orderBy($"count".desc, $"user_id")
+      .select("user_id").as[Long].head()
+    val expected = recompute(user)
+    require(expected != recompute(-1L), "fixture: the user must move the answer")
+    Serving.eraseUser(spark, Serving.materialize(spark, dir), ev, user)
+    assert(answer() === expected, "the served SQL still counts the erased user")
   }
 }
