@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** The one memo for values derived from a SOURCE FILE. The engine
   * keeps exactly two caches, chosen by what the value derives from:
@@ -52,15 +52,9 @@ final class FpMemo[V](release: V => Unit = (_: V) => ()) {
         else publish(file, fp, v)
     }
 
-  /** Release `v` unless it holds `kept`'s storage: a Dataset whose
-    * plan has the same result as one already cached persists nothing
-    * of its own, it shares that cache entry.
-    */
-  private def drop(v: V, kept: V): Unit = (v, kept) match {
-    case (a: Dataset[_], b: Dataset[_])
-        if a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed) => ()
-    case _ => release(v)
-  }
+  /** Release `v` unless it holds `kept`'s storage. */
+  private def drop(v: V, kept: V): Unit =
+    if (!graft.serving.RootCache.sharesCache(v, kept)) release(v)
 }
 
 object FpMemo {

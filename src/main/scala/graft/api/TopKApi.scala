@@ -1,8 +1,11 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.serving.Serving
+import org.apache.spark.sql.types.{DateType, LongType, StringType}
+import graft.plans.{Param, Prepared}
+import graft.serving.{ReplicaRouter, Replicas, RootCache, Serving}
 
 /** Query-API façade — the reference's REST surface re-expressed as a
   * library call (TopKController.kt:34-38, QueryService.kt:43-129).
@@ -27,13 +30,133 @@ import graft.serving.Serving
   * A window is in range when it OVERLAPS [from, to) — the default
   * 1-hour range therefore returns the in-progress window plus the
   * previous one, which is what a "last hour" dashboard wants.
-  * Every call is a single pruned scan of a materialized table.
+  *
+  * Every route is a PREPARED route: its query is built over
+  * [[graft.plans.Param]]s standing for `from`, `to`, the restaurant
+  * id and the `p_date` bounds, and physically planned once per
+  * served-root generation and route SHAPE (table, global vs keyed,
+  * ordering, `k`, the p-list, and the replica the tenant routes to).
+  * The plan is the serving root's [[RootCache]] slot `api:<shape>`,
+  * so a refresh, an erase or a foreign commit drops it together with
+  * the replica pins it scans. A call only binds its values into a
+  * copy of that plan ([[graft.plans.Prepared]]): no analysis,
+  * optimization or planning per call — that was 50-220 ms per call,
+  * more than the execution. Each pin is ONE partition, so every call
+  * runs as one job of one stage over the pin, with no exchange.
+  * Reusing one plan across the calls of a session is the idea of
+  * PAPERS.md's "Incremental … Top-K Similarity Search in Interactive
+  * Data Analysis Sessions" (EDBT 2020).
   */
 object TopKApi {
 
   val All = "all"
 
   private val hourMs = Serving.hourMs
+
+  private val fromP = Param.column("from", LongType)
+  private val toP = Param.column("to", LongType)
+  private val ridP = Param.column("rid", StringType)
+  private val fromDateP = Param.column("from_date", DateType)
+  private val toDateP = Param.column("to_date", DateType)
+
+  /** The windows of `grainMs` that OVERLAP [from, to), with two-sided
+    * `p_date` bounds: a historical range reads only its own days.
+    */
+  private def inRange(grainMs: Long): Column =
+    col("p_date") >= fromDateP && col("p_date") <= toDateP &&
+      col("window_start_ms") < toP && col("window_start_ms") + grainMs > fromP
+
+  /** Route plans of the quantile family kept per served root. Every
+    * other route shape is bounded by the code (k ≤ [[Serving.K]], two
+    * orderings, three routings: 69 shapes); a p-list is the caller's
+    * free choice, so past this many kept plans a new p-list is planned
+    * for its call alone.
+    */
+  private[graft] val MaxQuantilePlans = 16
+
+  /** One call of the route `name` over the routed serving `table`:
+    * resolve the range (default: the `spanMs` before now) and the
+    * tenant, fetch the route's prepared plan — `build` makes its query
+    * on the first call of this root generation, from the tenant's
+    * routed pin (already filtered to the restaurant when keyed) and
+    * the restaurant-id column — and bind the call's values into it.
+    */
+  private def serve(spark: SparkSession, dataDir: String, name: String,
+      table: String, restaurantId: String, fromMs: Option[Long],
+      toMs: Option[Long], spanMs: Long)(
+      build: (DataFrame, Column) => DataFrame): DataFrame = {
+    val root = Serving.materialize(spark, dataDir)
+    val to = toMs.getOrElse(Serving.metaStamp(spark, root)._1)
+    val from = fromMs.getOrElse(to - spanMs)
+    require(from < to, s"empty range [$from, $to)")
+    // ids are normalized to lowercase for BOTH the "all" sentinel and
+    // the keyed filter (the reference lowercases its routing check,
+    // TopKController.kt:108; table keys are lowercase) — a caller
+    // passing "Click" gets "click", not silently zero rows.
+    val rid = restaurantId.toLowerCase(java.util.Locale.ROOT)
+    val keyed = rid != All
+    // every API call routes through the replica set, pinned by its
+    // tenant (here: the restaurant id) — the reference's replica-group
+    // routing applies to EVERY query class, and copies are identical,
+    // so routing never changes a result (ApiSpec proves copy-equality)
+    val shape = s"$name:${if (keyed) "keyed" else "global"}:" +
+      s"replica=${Replicas.replicaFor(rid, ReplicaRouter.N)}"
+    val route = RootCache.get(spark, root, s"api:$shape", family = "api:quantile",
+        max = MaxQuantilePlans) {
+      val scan = ReplicaRouter.table(spark, dataDir, table, tenant = rid)
+      Prepared(
+        if (keyed) build(scan.filter(col("event_type") === ridP), ridP)
+        else build(scan, lit(All)))
+    }
+    route.bind(spark, Map("from" -> from, "to" -> to, "rid" -> rid,
+      "from_date" -> Serving.utcDay(from), "to_date" -> Serving.utcDay(to)))
+  }
+
+  /** The quantile routes' answer: order statistics of a weighted
+    * value multiset per group of `keys`, one row per group labelled
+    * `rid` and the call's range. For each named point p (per `scale`),
+    * `edge` of the smallest `value` whose cumulative `cnt` reaches
+    * p/scale of the group's total — the exact integer form
+    * `cum·scale >= p·n`.
+    *
+    * ONE window stage computes the running total and the total: the
+    * default RANGE frame makes same-value rows share the through-value
+    * running total, so the first row whose shared cum crosses p·n sits
+    * in exactly the crossing value and no value-collapse groupBy is
+    * needed (a groupBy → cumsum → per-p groupBy → pivot chain was 6
+    * scheduled stages of ~40 ms each on a ~1k-row frame). One
+    * aggregate per group then takes the estimates: without keys it
+    * answers ONE row over any input — `n` 0 and null estimates over an
+    * empty range, the envelope contract — with no union or join. The
+    * estimates are minima of one-field structs, and struct-typed
+    * buffers plan as a sort aggregate that streams the window's
+    * already-sorted output. Rows of zero weight never answer.
+    */
+  private def orderStats(rows: DataFrame, rid: Column, keys: Seq[Column], scale: Long,
+      points: Seq[(String, Long)], edge: Column => Column): DataFrame = {
+    val w = Window.partitionBy(keys: _*).orderBy(col("value"))
+    val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val ranked = rows
+      .withColumn("cum", sum(col("cnt")).over(w))
+      .withColumn("n", sum(col("cnt")).over(full))
+    val figures = max(col("n")).as("n") +: points.map { case (name, p) =>
+      min(when(col("cnt") > 0 && col("cum") * scale >= lit(p) * col("n"),
+        struct(edge(col("value")).as("v")))).as(name)
+    }
+    val one = if (keys.isEmpty) ranked.agg(figures.head, figures.tail: _*)
+      else ranked.groupBy(keys: _*).agg(figures.head, figures.tail: _*)
+    one.select(rid.as("restaurant_id") +: fromP.as("from_ms") +: toP.as("to_ms") +:
+      coalesce(col("n"), lit(0L)).as("n") +:
+      points.map(pt => col(s"${pt._1}.v").as(pt._1)): _*)
+  }
+
+  /** The per-mille p list of a quantile route, validated. */
+  private def perMille(pPerMille: Seq[Long]): Seq[Long] = {
+    require(pPerMille.nonEmpty && pPerMille.forall(p => p >= 1 && p <= 1000),
+      s"per-mille p values must be in [1, 1000], got $pPerMille")
+    require(pPerMille.distinct == pPerMille, s"duplicate p values: $pPerMille")
+    pPerMille
+  }
 
   def topk(
       spark: SparkSession,
@@ -44,49 +167,29 @@ object TopKApi {
       k: Int = 10,
       byRevenue: Boolean = false): DataFrame = {
     require(k >= 1 && k <= Serving.K, s"k must be in [1, ${Serving.K}], got $k")
-    val now = Serving.anchorMs(spark, dataDir)
-    val to = toMs.getOrElse(now)
-    val from = fromMs.getOrElse(to - hourMs)
-    require(from < to, s"empty range [$from, $to)")
-    // ids are normalized to lowercase for BOTH the "all" sentinel and
-    // the keyed filter (the reference lowercases its routing check,
-    // TopKController.kt:108; table keys are lowercase) — a caller
-    // passing "Click" gets "click", not silently zero rows.
-    val rid = restaurantId.toLowerCase(java.util.Locale.ROOT)
-    val global = rid == All
     val ordering = if (byRevenue) "revenue" else "count"
-    val table = if (global) s"topk_by_$ordering" else s"topk_keyed_by_$ordering"
-    // every API call routes through the replica set, pinned by its
-    // tenant (here: the restaurant id) — the reference's replica-group
-    // routing applies to EVERY query class, and copies are identical,
-    // so routing never changes a result (ApiSpec proves copy-equality)
-    val scan = graft.serving.ReplicaRouter.table(spark, dataDir, table, tenant = rid)
-    val routed =
-      if (global) scan.withColumn("restaurant_id", lit(All))
-      else scan.filter(col("event_type") === rid)
-        .withColumnRenamed("event_type", "restaurant_id")
-    val inRange = routed
-      // two-sided directory pruning: a historical [from, to) scans
-      // only its own day directories, not everything up to present
-      .filter(col("p_date") >= Serving.utcDate(from) &&
-        col("p_date") <= Serving.utcDate(to) &&
-        col("window_start_ms") < to && col("window_start_ms") + hourMs > from)
-      .select(col("restaurant_id"), col("window_start_ms"),
-        (col("window_start_ms") + hourMs).as("window_end_ms"),
-        col("rank"), col("user_id"), col("order_count"), col("total_cents"))
-    if (byRevenue)
-      // Flat revenue top-k over the stored per-window top-K rows; the
-      // true global top-k rows all have window-rank <= k <= K, so the
-      // serving table loses nothing.
-      inRange
-        .orderBy(col("total_cents").desc, col("window_end_ms").desc, col("user_id").asc)
-        .limit(k)
-    else
-      // serving result is k×windows rows — sort in one partition
-      // rather than paying a range-partitioning sampling pass.
-      inRange.filter(col("rank") <= k)
-        .coalesce(1)
-        .sortWithinPartitions(col("window_start_ms").desc, col("rank").asc)
+    val keyed = restaurantId.toLowerCase(java.util.Locale.ROOT) != All
+    val table = if (keyed) s"topk_keyed_by_$ordering" else s"topk_by_$ordering"
+    serve(spark, dataDir, s"topk:$table:k=$k", table, restaurantId, fromMs,
+        toMs, hourMs) { (scan, rid) =>
+      val inRangeRows = scan.filter(inRange(hourMs))
+        .select(rid.as("restaurant_id"), col("window_start_ms"),
+          (col("window_start_ms") + hourMs).as("window_end_ms"),
+          col("rank"), col("user_id"), col("order_count"), col("total_cents"))
+      if (byRevenue)
+        // Flat revenue top-k over the stored per-window top-K rows; the
+        // true global top-k rows all have window-rank <= k <= K, so the
+        // serving table loses nothing.
+        inRangeRows
+          .orderBy(col("total_cents").desc, col("window_end_ms").desc, col("user_id").asc)
+          .limit(k)
+      else
+        // serving result is k×windows rows — sort in one partition
+        // rather than paying a range-partitioning sampling pass.
+        inRangeRows.filter(col("rank") <= k)
+          .coalesce(1)
+          .sortWithinPartitions(col("window_start_ms").desc, col("rank").asc)
+    }
   }
 
   /** Distinct-users endpoint — the API-shaped companion to the topk
@@ -103,25 +206,14 @@ object TopKApi {
       dataDir: String,
       restaurantId: String = All,
       fromMs: Option[Long] = None,
-      toMs: Option[Long] = None): DataFrame = {
-    val now = Serving.anchorMs(spark, dataDir)
-    val to = toMs.getOrElse(now)
-    val from = fromMs.getOrElse(to - hourMs)
-    require(from < to, s"empty range [$from, $to)")
-    val rid = restaurantId.toLowerCase(java.util.Locale.ROOT)
-    val st = graft.serving.ReplicaRouter.table(
-      spark, dataDir, "rollup_1m_users", tenant = rid)
-    val keyed = if (rid == All) st else st.filter(col("event_type") === rid)
-    keyed
-      // two-sided directory pruning: an explicit historical range
-      // must not scan every day directory up to the present
-      .filter(col("p_date") >= Serving.utcDate(from) &&
-        col("p_date") <= Serving.utcDate(to) &&
-        col("window_start_ms") < to && col("window_start_ms") + 60000L > from)
-      .agg(countDistinct(col("user_id")).as("distinct_users"))
-      .select(lit(rid).as("restaurant_id"), lit(from).as("from_ms"),
-        lit(to).as("to_ms"), col("distinct_users"))
-  }
+      toMs: Option[Long] = None): DataFrame =
+    serve(spark, dataDir, "distinct_users", "rollup_1m_users", restaurantId,
+        fromMs, toMs, hourMs) { (scan, rid) =>
+      scan.filter(inRange(60000L))
+        .agg(countDistinct(col("user_id")).as("distinct_users"))
+        .select(rid.as("restaurant_id"), fromP.as("from_ms"), toP.as("to_ms"),
+          col("distinct_users"))
+    }
 
   /** EXACT distinct-users endpoint — the no-error-bar upgrade of
     * [[distinctUsers]] for day-grain ranges, answered from the
@@ -143,22 +235,13 @@ object TopKApi {
       toMs: Option[Long] = None): DataFrame = {
     import graft.functions.BitmapDistinct
     val dayMs = 24L * hourMs
-    val now = Serving.anchorMs(spark, dataDir)
-    val to = toMs.getOrElse(now)
-    val from = fromMs.getOrElse(to - 3L * dayMs)
-    require(from < to, s"empty range [$from, $to)")
-    val rid = restaurantId.toLowerCase(java.util.Locale.ROOT)
-    val st = graft.serving.ReplicaRouter.table(
-      spark, dataDir, "bitmap_daily", tenant = rid)
-    val keyed = if (rid == All) st else st.filter(col("event_type") === rid)
-    keyed
-      .filter(col("p_date") >= Serving.utcDate(from) &&
-        col("p_date") <= Serving.utcDate(to) &&
-        col("window_start_ms") < to && col("window_start_ms") + dayMs > from)
-      .agg(BitmapDistinct.bitmapMerge(col("bm")).as("bm"))
-      .select(lit(rid).as("restaurant_id"), lit(from).as("from_ms"),
-        lit(to).as("to_ms"),
-        BitmapDistinct.cardinality(col("bm")).as("distinct_users"))
+    serve(spark, dataDir, "distinct_exact", "bitmap_daily", restaurantId,
+        fromMs, toMs, 3L * dayMs) { (scan, rid) =>
+      scan.filter(inRange(dayMs))
+        .agg(BitmapDistinct.bitmapMerge(col("bm")).as("bm"))
+        .select(rid.as("restaurant_id"), fromP.as("from_ms"), toP.as("to_ms"),
+          BitmapDistinct.cardinality(col("bm")).as("distinct_users"))
+    }
   }
 
   /** Percentiles endpoint — order-value p50/p90/p99 for [from, to)
@@ -177,58 +260,13 @@ object TopKApi {
       restaurantId: String = All,
       fromMs: Option[Long] = None,
       toMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val now = Serving.anchorMs(spark, dataDir)
-    val to = toMs.getOrElse(now)
-    val from = fromMs.getOrElse(to - hourMs)
-    require(from < to, s"empty range [$from, $to)")
-    val rid = restaurantId.toLowerCase(java.util.Locale.ROOT)
-    val st = graft.serving.ReplicaRouter.table(
-      spark, dataDir, "rollup_1m_hist", tenant = rid)
-    val keyed = if (rid == All) st else st.filter(col("event_type") === rid)
-    val rows = keyed
-      // two-sided directory pruning (see distinctUsers)
-      .filter(col("p_date") >= Serving.utcDate(from) &&
-        col("p_date") <= Serving.utcDate(to) &&
-        col("window_start_ms") < to && col("window_start_ms") + 60000L > from)
-      .select(col("bin"), col("cnt"))
-    // ONE window stage computes everything — a groupBy(bin) → cumsum
-    // → per-p groupBy → pivot chain is 6 scheduled stages of ~40 ms
-    // each on a ~1k-row frame (measured ~300 ms/call; stage count,
-    // not data, was the cost). The default RANGE frame makes same-bin
-    // rows share the through-bin running total, so the bin-collapse
-    // groupBy is redundant: the first row whose shared cum crosses
-    // p%·n sits in exactly the crossing bin. The single-partition
-    // sort is over the occupied state rows in range — the same
-    // bounded frame the cumsum always needed.
-    val w = Window.orderBy(col("bin"))
-    val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    def estAt(p: Long) = min(when(
-      col("cum") * 100 >= lit(p) * col("n"),
-      col("bin") * lit(Serving.histBinCents))).over(full)
-    val est = rows
-      .withColumn("cum", sum(col("cnt")).over(w))
-      .withColumn("n", sum(col("cnt")).over(full))
-      .withColumn("p50_cents", estAt(50))
-      .withColumn("p90_cents", estAt(90))
-      .withColumn("p99_cents", estAt(99))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("n"), col("p50_cents"), col("p90_cents"), col("p99_cents"))
-    // envelope contract (exactly ONE row, n=0/NULL pcts over an empty
-    // range) via union + priority-take: a left join against the 0-or-
-    // 1-row frame would BROADCAST a subquery — a separate job worth
-    // ~100 ms of pure latency on a serving route (measured)
-    val empty = spark.range(1).select(lit(0L).as("n"),
-      lit(null).cast("long").as("p50_cents"),
-      lit(null).cast("long").as("p90_cents"),
-      lit(null).cast("long").as("p99_cents"))
-    est.withColumn("pri", lit(0))
-      .unionByName(empty.withColumn("pri", lit(1)))
-      .orderBy(col("pri")).limit(1)
-      .select(lit(rid).as("restaurant_id"), lit(from).as("from_ms"),
-        lit(to).as("to_ms"), col("n"),
-        col("p50_cents"), col("p90_cents"), col("p99_cents"))
+    val points = Seq(50L, 90L, 99L).map(p => s"p${p}_cents" -> p)
+    serve(spark, dataDir, "percentiles", "rollup_1m_hist", restaurantId,
+        fromMs, toMs, hourMs) { (scan, rid) =>
+      val rows = scan.filter(inRange(60000L))
+        .select(col("bin").as("value"), col("cnt"))
+      orderStats(rows, rid, Nil, 100L, points, _ * lit(Serving.histBinCents))
+    }
   }
 
   /** Arbitrary-p quantile endpoint — `quantile(p, from, to)` for ANY
@@ -251,52 +289,13 @@ object TopKApi {
       pPerMille: Seq[Long] = Seq(500L),
       fromMs: Option[Long] = None,
       toMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(pPerMille.nonEmpty && pPerMille.forall(p => p >= 1 && p <= 1000),
-      s"per-mille p values must be in [1, 1000], got $pPerMille")
-    require(pPerMille.distinct == pPerMille,
-      s"duplicate p values: $pPerMille")
-    val now = Serving.anchorMs(spark, dataDir)
-    val to = toMs.getOrElse(now)
-    val from = fromMs.getOrElse(to - hourMs)
-    require(from < to, s"empty range [$from, $to)")
-    val rid = restaurantId.toLowerCase(java.util.Locale.ROOT)
-    val st = graft.serving.ReplicaRouter.table(
-      spark, dataDir, "rollup_1m_vals", tenant = rid)
-    val keyed = if (rid == All) st else st.filter(col("event_type") === rid)
-    val rows = keyed
-      .filter(col("p_date") >= Serving.utcDate(from) &&
-        col("p_date") <= Serving.utcDate(to) &&
-        col("window_start_ms") < to && col("window_start_ms") + 60000L > from)
-      .select(col("value_cents"), col("cnt"))
-    // one window stage, like percentiles: same-value rows share the
-    // through-value running total under the default RANGE frame, so
-    // no value-collapse groupBy is needed and the whole computation
-    // is a single bounded single-partition sort
-    val w = Window.orderBy(col("value_cents"))
-    val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    def estAt(p: Long) = min(when(
-      col("cum") * 1000 >= lit(p) * col("n"), col("value_cents"))).over(full)
-    val est = pPerMille
-      .foldLeft(rows
-        .withColumn("cum", sum(col("cnt")).over(w))
-        .withColumn("n", sum(col("cnt")).over(full))) {
-        (df, p) => df.withColumn(s"p${p}_cents", estAt(p))
-      }
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("n") +: pPerMille.map(p => col(s"p${p}_cents")): _*)
-    // union + priority-take envelope — see percentiles' broadcast note
-    val empty = spark.range(1).select(
-      lit(0L).as("n") +:
-        pPerMille.map(p => lit(null).cast("long").as(s"p${p}_cents")): _*)
-    est.withColumn("pri", lit(0))
-      .unionByName(empty.withColumn("pri", lit(1)))
-      .orderBy(col("pri")).limit(1)
-      .select(
-        lit(rid).as("restaurant_id") +: lit(from).as("from_ms") +:
-          lit(to).as("to_ms") +: col("n") +:
-          pPerMille.map(p => col(s"p${p}_cents")): _*)
+    val points = perMille(pPerMille).map(p => s"p${p}_cents" -> p)
+    serve(spark, dataDir, s"quantile:${pPerMille.mkString(",")}", "rollup_1m_vals",
+        restaurantId, fromMs, toMs, hourMs) { (scan, rid) =>
+      val rows = scan.filter(inRange(60000L))
+        .select(col("value_cents").as("value"), col("cnt"))
+      orderStats(rows, rid, Nil, 1000L, points, identity)
+    }
   }
 
   /** Approximate arbitrary-p quantiles from the HARD-BOUNDED integer
@@ -308,7 +307,7 @@ object TopKApi {
     * unbounded metrics (latencies, sizes) where the exact
     * value-grain table ([[quantile]]) would grow with the domain.
     * Same route shape as the exact one: one window stage over the
-    * routed pin, union+take envelope, `p<ppm>_cents_est` columns.
+    * routed pin, one-row envelope, `p<ppm>_cents_est` columns.
     */
   def quantileApprox(
       spark: SparkSession,
@@ -317,47 +316,13 @@ object TopKApi {
       pPerMille: Seq[Long] = Seq(500L),
       fromMs: Option[Long] = None,
       toMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(pPerMille.nonEmpty && pPerMille.forall(p => p >= 1 && p <= 1000),
-      s"per-mille p values must be in [1, 1000], got $pPerMille")
-    require(pPerMille.distinct == pPerMille, s"duplicate p values: $pPerMille")
-    val now = Serving.anchorMs(spark, dataDir)
-    val to = toMs.getOrElse(now)
-    val from = fromMs.getOrElse(to - hourMs)
-    require(from < to, s"empty range [$from, $to)")
-    val rid = restaurantId.toLowerCase(java.util.Locale.ROOT)
-    val st = graft.serving.ReplicaRouter.table(
-      spark, dataDir, "rollup_1m_loghist", tenant = rid)
-    val keyed = if (rid == All) st else st.filter(col("event_type") === rid)
-    val rows = keyed
-      .filter(col("p_date") >= Serving.utcDate(from) &&
-        col("p_date") <= Serving.utcDate(to) &&
-        col("window_start_ms") < to && col("window_start_ms") + 60000L > from)
-      .select(col("lbucket"), col("cnt"))
-    val w = Window.orderBy(col("lbucket"))
-    val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    def estAt(p: Long) = min(when(
-      col("cum") * 1000 >= lit(p) * col("n"),
-      Serving.logBucketEdge(col("lbucket")))).over(full)
-    val est = pPerMille
-      .foldLeft(rows
-        .withColumn("cum", sum(col("cnt")).over(w))
-        .withColumn("n", sum(col("cnt")).over(full))) {
-        (df, p) => df.withColumn(s"p${p}_cents_est", estAt(p))
-      }
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("n") +: pPerMille.map(p => col(s"p${p}_cents_est")): _*)
-    val empty = spark.range(1).select(
-      lit(0L).as("n") +:
-        pPerMille.map(p => lit(null).cast("long").as(s"p${p}_cents_est")): _*)
-    est.withColumn("pri", lit(0))
-      .unionByName(empty.withColumn("pri", lit(1)))
-      .orderBy(col("pri")).limit(1)
-      .select(
-        lit(rid).as("restaurant_id") +: lit(from).as("from_ms") +:
-          lit(to).as("to_ms") +: col("n") +:
-          pPerMille.map(p => col(s"p${p}_cents_est")): _*)
+    val points = perMille(pPerMille).map(p => s"p${p}_cents_est" -> p)
+    serve(spark, dataDir, s"quantile_approx:${pPerMille.mkString(",")}",
+        "rollup_1m_loghist", restaurantId, fromMs, toMs, hourMs) { (scan, rid) =>
+      val rows = scan.filter(inRange(60000L))
+        .select(col("lbucket").as("value"), col("cnt"))
+      orderStats(rows, rid, Nil, 1000L, points, Serving.logBucketEdge)
+    }
   }
 
   /** [[quantileApprox]] for EVERY event type in ONE pass — the
@@ -365,15 +330,16 @@ object TopKApi {
     * per-type log-histogram state with the quantile window
     * PARTITIONED by type, instead of one routed call per type (the
     * per-call plan/schedule overhead dominates at five types and
-    * grows with the alphabet). Types absent from the requested range
-    * still get the one-row empty envelope (n=0, null estimates), so
-    * the result is row-identical to the per-type route union.
+    * grows with the alphabet). Rows outside the requested range weigh
+    * zero instead of being filtered out, so every type of the state
+    * keeps its row — n=0 and null estimates when none of its rows is
+    * in range — and the result is row-identical to the per-type route
+    * union, with no join against the type alphabet.
     *
     * Latency posture: this is the REPORT route (one sweep for the
-    * whole tenant alphabet — ~75 ms/tenant amortized at 5 types,
-    * measured), not a single-key lookup; the ≤200 ms serving bar
-    * applies to the per-tenant [[quantileApprox]] it replaces five
-    * calls of.
+    * whole tenant alphabet), not a single-key lookup; the ≤200 ms
+    * serving bar applies to the per-tenant [[quantileApprox]] it
+    * replaces five calls of.
     */
   def quantileApproxAllTypes(
       spark: SparkSession,
@@ -381,44 +347,14 @@ object TopKApi {
       pPerMille: Seq[Long] = Seq(500L),
       fromMs: Option[Long] = None,
       toMs: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(pPerMille.nonEmpty && pPerMille.forall(p => p >= 1 && p <= 1000),
-      s"per-mille p values must be in [1, 1000], got $pPerMille")
-    require(pPerMille.distinct == pPerMille, s"duplicate p values: $pPerMille")
-    val now = Serving.anchorMs(spark, dataDir)
-    val to = toMs.getOrElse(now)
-    val from = fromMs.getOrElse(to - hourMs)
-    require(from < to, s"empty range [$from, $to)")
-    val st = graft.serving.ReplicaRouter.table(
-      spark, dataDir, "rollup_1m_loghist", tenant = All)
-    // the tenant alphabet from the (bounded) state, NOT a fact scan —
-    // range-independent so out-of-range types keep their envelope row
-    val alphabet = st.select(col("event_type")).distinct()
-    val rows = st
-      .filter(col("p_date") >= Serving.utcDate(from) &&
-        col("p_date") <= Serving.utcDate(to) &&
-        col("window_start_ms") < to && col("window_start_ms") + 60000L > from)
-      .select(col("event_type"), col("lbucket"), col("cnt"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("lbucket"))
-    val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    def estAt(p: Long) = min(when(
-      col("cum") * 1000 >= lit(p) * col("n"),
-      Serving.logBucketEdge(col("lbucket")))).over(full)
-    val est = pPerMille
-      .foldLeft(rows
-        .withColumn("cum", sum(col("cnt")).over(w))
-        .withColumn("n", sum(col("cnt")).over(full))) {
-        (df, p) => df.withColumn(s"p${p}_cents_est", estAt(p))
-      }
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("event_type") +: col("n") +:
-        pPerMille.map(p => col(s"p${p}_cents_est")): _*)
-    alphabet.join(est, Seq("event_type"), "left")
-      .select(
-        col("event_type").as("restaurant_id") +: lit(from).as("from_ms") +:
-          lit(to).as("to_ms") +: coalesce(col("n"), lit(0L)).as("n") +:
-          pPerMille.map(p => col(s"p${p}_cents_est")): _*)
+    val points = perMille(pPerMille).map(p => s"p${p}_cents_est" -> p)
+    serve(spark, dataDir, s"quantile_approx_all:${pPerMille.mkString(",")}",
+        "rollup_1m_loghist", All, fromMs, toMs, hourMs) { (scan, _) =>
+      val rows = scan.select(col("event_type"), col("lbucket").as("value"),
+        when(inRange(60000L), col("cnt")).otherwise(lit(0L)).as("cnt"))
+      orderStats(rows, col("event_type"), Seq(col("event_type")), 1000L, points,
+        Serving.logBucketEdge)
+    }
   }
 
   /** EP1 wire envelope — the reference's `TopKResponse`

@@ -1,11 +1,18 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate, Cast, Expression, ExpressionInfo, LambdaFunction, Literal, Multiply, NamedLambdaVariable, ZipWith}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.GraftShim
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate, Attribute, Cast, Expression, ExpressionInfo, LambdaFunction, LeafExpression, Literal, Multiply, NamedLambdaVariable, ZipWith}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import graft.functions.VecDot
 
 /** Catalyst optimizer rule: rewrite the interpreted higher-order
@@ -69,6 +76,134 @@ object VecKernelRewrite extends Rule[LogicalPlan] {
         // only the cast-to-double spelling rewrites
         VecDot(a, b)
     }
+}
+
+/** A query parameter: a non-foldable leaf standing for a value bound
+  * per call, so one planned query serves every value. Unbound (the
+  * prepared template) it cannot be evaluated. Bound, its generated
+  * code reads the value from the stage's `references` array
+  * (`ctx.addReferenceObj`) instead of inlining it, so every value
+  * generates the SAME source and hits Spark's compile cache.
+  */
+case class Param(name: String, dataType: DataType, value: Option[Any] = None)
+    extends LeafExpression {
+
+  override def nullable: Boolean = false
+
+  private def bound: Any =
+    value.getOrElse(throw new IllegalStateException(s"parameter $name is not bound"))
+
+  override def eval(input: InternalRow): Any = bound
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj(name, bound, CodeGenerator.boxedType(dataType))
+    val v = if (CodeGenerator.isPrimitiveType(dataType)) s"$ref.${javaType}Value()" else ref
+    ev.copy(code = code"final $javaType ${ev.value} = $v;", isNull = FalseLiteral)
+  }
+
+  override def sql: String = s"param($name)"
+  override def toString: String = s"param:$name" + value.fold("")(v => s"=$v")
+}
+
+object Param {
+
+  def column(name: String, dataType: DataType): Column = GraftShim.column(Param(name, dataType))
+
+  private def valueOf(values: Map[String, Any], p: Param): Any = CatalystTypeConverters
+    .convertToCatalyst(values.getOrElse(p.name,
+      throw new IllegalArgumentException(s"no value for parameter ${p.name}")))
+
+  /** `plan` with every Param bound to its value in `values`. */
+  def bind(plan: SparkPlan, values: Map[String, Any]): SparkPlan =
+    plan.transformAllExpressions { case p: Param => p.copy(value = Some(valueOf(values, p))) }
+
+  /** `plan` with every Param replaced by its value as a literal. */
+  def inline(plan: LogicalPlan, values: Map[String, Any]): LogicalPlan =
+    plan.transformAllExpressions { case p: Param => Literal(valueOf(values, p), p.dataType) }
+}
+
+/** A logical leaf over a prepared physical `plan` whose Params are
+  * bound for one call, planned by [[PreparedPlanning]] into that
+  * physical tree, so `queryExecution.executedPlan` shows it. The
+  * analyzed `template` and the call's `values` reproduce the same call
+  * through normal planning ([[Prepared.inlined]]).
+  */
+case class PreparedRelation(output: Seq[Attribute], plan: SparkPlan,
+    template: LogicalPlan, values: Map[String, Any])
+    extends LeafNode with MultiInstanceRelation {
+  override def newInstance(): PreparedRelation = copy(output = output.map(_.newInstance()))
+  override def computeStats(): Statistics = template.stats
+}
+
+/** Runs a prepared physical plan as one leaf. The plan shows as an
+  * inner child; keeping it out of `children` keeps the caller's
+  * preparation rules (codegen collapse, AQE) from re-preparing it.
+  */
+case class PreparedExec(output: Seq[Attribute], plan: SparkPlan) extends LeafExecNode {
+  override def innerChildren: Seq[SparkPlan] = Seq(plan)
+  override def outputPartitioning: Partitioning = plan.outputPartitioning match {
+    case SinglePartition => SinglePartition
+    case p => UnknownPartitioning(p.numPartitions)
+  }
+  override protected def doExecute(): RDD[InternalRow] = plan.execute()
+  override def executeCollect(): Array[InternalRow] = plan.executeCollect()
+}
+
+object PreparedPlanning extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case r: PreparedRelation => PreparedExec(r.output, r.plan) :: Nil
+    case _ => Nil
+  }
+}
+
+/** A prepared query: a frame built over [[Param]]s, analyzed and
+  * physically planned ONCE (without adaptive execution), then served
+  * per call by binding values into a copy of that physical plan.
+  */
+final class Prepared private (template: LogicalPlan, physical: SparkPlan) {
+
+  /** A frame for one call: `values` bound into a per-call copy of the
+    * physical plan — no analysis, optimization or planning of the
+    * query itself. Lazy, and independent of any other call's frame:
+    * every node holding or above a Param is copied; a Param-free
+    * subtree (a scan) is shared, as when one frame is collected twice.
+    */
+  def bind(spark: SparkSession, values: Map[String, Any]): DataFrame = {
+    Prepared.install(spark)
+    val bound = GraftShim.withActive(spark)(Param.bind(physical, values))
+    GraftShim.ofRows(spark, PreparedRelation(physical.output, bound, template, values))
+  }
+}
+
+object Prepared {
+
+  def apply(df: DataFrame): Prepared =
+    new Prepared(df.queryExecution.analyzed, GraftShim.planWithoutAqe(df))
+
+  /** The same call as `df` (a [[Prepared.bind]] frame), its Params
+    * inlined as literals and planned the normal way.
+    */
+  def inlined(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
+    case r: PreparedRelation =>
+      GraftShim.ofRows(df.sparkSession, Param.inline(r.template, r.values))
+    case other => throw new IllegalArgumentException(s"not a prepared frame: $other")
+  }
+
+  // the sessions PreparedPlanning is registered on
+  private val installed = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  /** Register [[PreparedPlanning]] on `spark` once: the first bind on a
+    * session adds it to the session's extra strategies (concurrent
+    * first binds wait for it), every later bind only finds the session
+    * here.
+    */
+  private def install(spark: SparkSession): Unit =
+    installed.computeIfAbsent(spark, { s =>
+      s.experimental.extraStrategies = PreparedPlanning +: s.experimental.extraStrategies
+      java.lang.Boolean.TRUE
+    })
 }
 
 /** `SparkSessionExtensions` entry point: register via

@@ -28,30 +28,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Caching discipline (the broker metadata cache): the generation
   * root is derived from the stamp (no listing), and each ROUTED COPY
-  * is pinned per replica index — between stamp changes a routed query
-  * re-lists nothing and re-reads nothing; a stamp change drops the
-  * superseded pins and re-replicates from the refreshed primary. The
-  * pin cache is LRU-BOUNDED: a long-lived broker process serving
-  * many (root, table) pairs evicts and unpersists the coldest pin
-  * instead of growing without bound.
+  * is pinned per replica index as a [[RootCache]] slot of the serving
+  * root (`replica:<table>:<idx>`) — between commits a routed query
+  * re-lists nothing and re-reads nothing; a refresh, an erase or a
+  * foreign commit drops the pins together with every other slot of
+  * the root (among them the prepared API plans that scan them), and
+  * the next routed read re-replicates from the refreshed primary.
   */
 object ReplicaRouter {
 
   /** Replication factor for routed serving tables. */
   val N = 2
-
-  /** Pin-cache bound: pins beyond this evict coldest-first. */
-  private val MaxPins = 64
-
-  // (replica set gen root, replica idx) -> pinned routed frame;
-  // access-ordered so eldest = least recently routed
-  private val pins = new java.util.LinkedHashMap[(String, Int), DataFrame](
-    32, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, Int), DataFrame]): Boolean =
-      if (size() > MaxPins) { e.getValue.unpersist(blocking = false); true }
-      else false
-  }
 
   private def genName(stamp: (Long, Long, Long)): String =
     s"gen=${stamp._1}_${stamp._2}_${stamp._3}"
@@ -68,10 +55,10 @@ object ReplicaRouter {
   def table(spark: SparkSession, dataDir: String, table: String,
       tenant: String = "tenant-analytics"): DataFrame = {
     val servingRoot = Serving.materialize(spark, dataDir)
-    val stamp = Serving.metaStamp(spark, servingRoot)
-    val genRoot = s"${tableReplicaRoot(servingRoot, table)}/${genName(stamp)}"
     val idx = Replicas.replicaFor(tenant, N)
-    pins.synchronized(Option(pins.get((genRoot, idx)))).getOrElse {
+    RootCache.get(spark, servingRoot, s"replica:$table:$idx") {
+      val genRoot = s"${tableReplicaRoot(servingRoot, table)}/" +
+        genName(Serving.metaStamp(spark, servingRoot))
       // build the generation if this is its first routed use; the
       // serving root's single-writer lease quiesces refresh/erase
       // while the copy reads the primary, and makes concurrent
@@ -91,20 +78,14 @@ object ReplicaRouter {
         }
       val (df, _) = Replicas.read(spark, genRoot, tenant, N)
       // serving tables are date-sliced into many small files; cache
-      // them as a few fat blocks, not one block per file — a ~100 ms
-      // warm lookup is mostly per-task scheduling at 30 partitions
-      // of a 1 MB table (measured), and every serving query rescans
-      // this pin. 8 blocks keeps parallelism for the rare big table.
-      val pinned = df.coalesce(8)
+      // each as ONE block: every serving query over the pin then runs
+      // as one job of one stage with no exchange — at serving sizes a
+      // stage or a task costs more than the data (a ~100 ms warm
+      // lookup was mostly per-task scheduling at 30 partitions of a
+      // 1 MB table, measured) — and a prepared route's parameters
+      // never sit below an exchange whose map output could be reused
+      df.coalesce(1)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pins.synchronized {
-        Option(pins.putIfAbsent((genRoot, idx), pinned)) match {
-          case Some(raced) => // another thread pinned first: keep theirs
-            pinned.unpersist(blocking = false)
-            raced
-          case None => pinned
-        }
-      }
     }
   }
 
@@ -112,8 +93,9 @@ object ReplicaRouter {
     * `<servingRoot>/_replicas` — the maintenance-tick leg
     * ([[Maintenance.ReplicaSets]]). The generation matching the
     * CURRENT content stamp survives; older (and newer-orphaned,
-    * e.g. from a rolled-back stamp) directories are deleted and
-    * their pins dropped. Returns the swept paths.
+    * e.g. from a rolled-back stamp) directories are deleted — their
+    * pins went with the commit that superseded them. Returns the
+    * swept paths.
     */
   private[graft] def sweepStale(spark: SparkSession,
       servingRoot: String): Seq[String] = {
@@ -130,20 +112,7 @@ object ReplicaRouter {
             .filter(_.getPath.getName != live)
             .map(_.getPath)
       }
-      stale.foreach { p =>
-        pins.synchronized {
-          val it = pins.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            if (e.getKey._1 == p.toString ||
-                e.getKey._1 == fs.makeQualified(p).toString) {
-              e.getValue.unpersist(blocking = false)
-              it.remove()
-            }
-          }
-        }
-        fs.delete(p, true)
-      }
+      stale.foreach(fs.delete(_, true))
       stale.map(_.toString)
     }
   }

@@ -4,9 +4,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The one per-root read cache of the serving layer: every cached
-  * read of [[Tiered]], [[Serving]], [[SearchIndex]], [[NearDupIndex]]
-  * and [[PqIndex]] is a named SLOT of its root here, so one staleness
-  * discipline covers them all. A root's content GENERATION is
+  * read of [[Tiered]], [[Serving]], [[ReplicaRouter]], [[SearchIndex]],
+  * [[NearDupIndex]] and [[PqIndex]], and every prepared
+  * [[graft.api.TopKApi]] route plan, is a named SLOT of its root here,
+  * so one staleness discipline covers them all. A root's content GENERATION is
   *
   *  - on disk, a single tiny `_read_gen` file holding an opaque token
   *    rewritten by every mutating op ([[bumpToken]], one small-file
@@ -22,7 +23,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    if it has not moved — a reader that started building before a
   *    writer's commit can never insert the pre-commit value after the
   *    writer's invalidate ran. The loser serves its value to its own
-  *    caller (barrier-complete) and unpersists it if it was pinned.
+  *    caller (barrier-complete) and unpersists it if it was pinned —
+  *    unless the slot's published value is a same-result frame, whose
+  *    cache entry it shares.
   *
   * Every miss runs the read barrier (wait out a live foreign writer's
   * lease, [[Lease.awaitQuiesced]]) and read-path recovery (complete a
@@ -66,8 +69,25 @@ object RootCache {
     case _ => ()
   }
 
-  /** `root`'s cached value for `slot`, built by `build` on a miss. */
-  def get[A](spark: SparkSession, root: String, slot: String)(build: => A): A = {
+  /** Whether `v` holds `kept`'s storage: a Dataset whose plan has the
+    * same result as one already cached persists nothing of its own, it
+    * shares that cache entry — releasing `v` would drop `kept`'s.
+    */
+  private[graft] def sharesCache(v: Any, kept: Any): Boolean = (v, kept) match {
+    case (a: Dataset[_], b: Dataset[_]) =>
+      a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
+    case _ => false
+  }
+
+  /** `root`'s cached value for `slot`, built by `build` on a miss. A
+    * slot of an open-ended family — one whose name starts with
+    * `family`, as a route plan keyed by a caller-chosen shape — is
+    * published only while the root holds fewer than `max` slots of
+    * that family (misses racing the last free place may each take it);
+    * past that a miss builds for its caller alone.
+    */
+  def get[A](spark: SparkSession, root: String, slot: String, family: String = "",
+      max: Int = Int.MaxValue)(build: => A): A = {
     val r = rootOf(spark, root)
     val now = System.currentTimeMillis()
     if (now - r.probedAt >= spark.conf.get("graft.read.gen.ttl.ms", "2000").toLong) {
@@ -85,9 +105,14 @@ object RootCache {
         if (EraseStage.recover(spark, root)) invalidate(spark, root)
         val gen = r.gen.get
         val v = build
-        if (r.gen.get != gen) { release(v); v }
+        // an unpublished value is released, unless the slot's
+        // published value is a same-result frame sharing its entry
+        def drop(kept: Option[Any]): Unit = if (!kept.exists(sharesCache(v, _))) release(v)
+        if (r.gen.get != gen) { drop(r.slots.get(slot)); v }
+        else if (max < Int.MaxValue && slot.startsWith(family) && !r.slots.contains(slot) &&
+            r.slots.keys.count(_.startsWith(family)) >= max) { release(v); v }
         else r.slots.putIfAbsent(slot, v) match {
-          case Some(existing) => release(v); existing.asInstanceOf[A]
+          case Some(existing) => drop(Some(existing)); existing.asInstanceOf[A]
           case None =>
             // an invalidate that slipped between the check and the put
             // bumped the counter before its drop: retract our entry

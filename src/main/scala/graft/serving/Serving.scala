@@ -991,7 +991,8 @@ object Serving {
   /** UTC date string of an epoch-ms instant — for partition pruning
     * predicates on the `p_date` layout column.
     */
-  def utcDate(ms: Long): String =
-    java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC)
-      .toLocalDate.toString
+  def utcDate(ms: Long): String = utcDay(ms).toString
+
+  def utcDay(ms: Long): java.time.LocalDate =
+    java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC).toLocalDate
 }

@@ -1,7 +1,9 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 
 /** Bridge into Spark's `private[sql]` Column<->Expression converters.
   *
@@ -43,6 +45,29 @@ object GraftShim {
     val cs = spark.asInstanceOf[classic.SparkSession]
     cs.internalCreateDataFrame(
       classicDf.queryExecution.toRdd, classicDf.schema, isStreaming = false)
+  }
+
+  /** A frame over an already-built logical plan, and `f` run with
+    * `spark` as the thread's active session (physical nodes take
+    * their session from it when they are built or copied).
+    * `Dataset.ofRows` and `withActive` are `private[sql]`.
+    */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  def withActive[T](spark: SparkSession)(f: => T): T =
+    spark.asInstanceOf[classic.SparkSession].withActive(f)
+
+  /** Physically plan `df` the way Spark plans a subquery: its
+    * optimized plan (cached data substituted) through the planner and
+    * the preparation rules, WITHOUT adaptive execution and without
+    * touching the session's conf — so the caller's concurrent queries
+    * keep their AQE while this plan keeps a fixed shape.
+    */
+  def planWithoutAqe(df: DataFrame): SparkPlan = {
+    val qe = df.queryExecution
+    withActive(qe.sparkSession)(
+      QueryExecution.prepareExecutedPlan(qe.sparkSession, qe.optimizedPlan))
   }
 
   /** Register a SQL function on a LIVE session (the post-hoc twin of

@@ -163,4 +163,102 @@ class ApiSpec extends SparkSuite {
       r.isNullAt(r.fieldIndex("p90_cents")) &&
       r.isNullAt(r.fieldIndex("p99_cents")))
   }
+  /** A copy of the fixture's events in a fresh directory, so its
+    * serving root and route plans are the test's own.
+    */
+  private def isolated(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
+      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    dir
+  }
+
+  /** The prepared plan a route frame was bound from (its template). */
+  private def templateOf(df: org.apache.spark.sql.DataFrame): AnyRef =
+    df.queryExecution.analyzed match {
+      case r: graft.plans.PreparedRelation => r.template
+      case other => fail(s"not a prepared frame: $other")
+    }
+
+  test("prepared routes equal their literal-planned twin over a range × restaurant × k grid, before and after a refresh") {
+    import java.sql.Timestamp
+    import graft.plans.Prepared
+    import graft.serving.{ReplicaRouter, Replicas}
+    // isolated dataset: the refresh rewrites the serving root
+    val dir = isolated("graft_api_prepared")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq
+    // every route over from × to × restaurant × k, each frame with its
+    // route shape; "absent" is a type with no rows in any range
+    def grid(): Seq[(String, String, org.apache.spark.sql.DataFrame)] = {
+      val now = Serving.anchorMs(spark, dir)
+      val ranges = for (to <- Seq(now, now - 30L * Serving.hourMs);
+          span <- Seq(2L, 48L)) yield (Some(to - span * Serving.hourMs), Some(to))
+      ranges.map { case (from, to) => ("all-types", s"all-types $from $to",
+        TopKApi.quantileApproxAllTypes(spark, dir, Seq(125L, 975L), from, to))
+      } ++ (for ((from, to) <- ranges; rid <- Seq("all", "click", "absent")) yield {
+        val at = s"$rid $from $to"
+        val routing = if (rid == "all") "global" else s"${Replicas.replicaFor(rid, ReplicaRouter.N)}"
+        (Seq(1, 10).flatMap(k => Seq(false, true).map(rev =>
+            (s"topk k=$k rev=$rev", TopKApi.topk(spark, dir, rid, from, to, k, rev)))) ++
+          Seq("distinct" -> TopKApi.distinctUsers(spark, dir, rid, from, to),
+            "exact" -> TopKApi.distinctUsersExact(spark, dir, rid, from, to),
+            "percentiles" -> TopKApi.percentiles(spark, dir, rid, from, to),
+            "quantile" -> TopKApi.quantile(spark, dir, rid, Seq(125L, 975L), from, to),
+            "approx" -> TopKApi.quantileApprox(spark, dir, rid, Seq(125L, 975L), from, to)))
+          .map { case (route, df) => (s"$route $routing", s"$route $at", df) }
+      }).flatten
+    }
+    def check(): (Seq[Seq[String]], Set[AnyRef]) = {
+      val frames = grid()
+      val answers = frames.map { case (_, label, df) =>
+        // the per-type sweep has no row order; every other route has
+        val order = if (label.startsWith("all-types")) (r: Seq[String]) => r.sorted
+          else (r: Seq[String]) => r
+        val got = order(rows(df))
+        assert(got === order(rows(Prepared.inlined(df))), label)
+        got
+      }
+      // one prepared plan per route shape across the whole grid
+      frames.groupBy(_._1).foreach { case (shape, fs) =>
+        val plans = fs.map(f => templateOf(f._3))
+        assert(plans.forall(_ eq plans.head), s"one plan build for $shape")
+      }
+      (answers, frames.map(f => templateOf(f._3)).toSet)
+    }
+    val (first, firstPlans) = check()
+    val anchor = Serving.anchorMs(spark, dir)
+    val batch = (1 to 5).map(i => (new Timestamp(anchor - i * 60000L), 424242L, "click", 9900L))
+      .toDF("ts", "user_id", "event_type", "value_cents")
+    Serving.refreshWithBatch(spark, Serving.materialize(spark, dir), batch, batchId = 0L)
+    val (second, secondPlans) = check()
+    assert(second !== first, "the refresh must change some answer")
+    assert(firstPlans.forall(p => !secondPlans.exists(_ eq p)),
+      "the refresh drops every route plan")
+    // two frames of one route, built before either is collected, and
+    // collected in reverse order: each answers its own range
+    val a = TopKApi.percentiles(spark, dir, fromMs = Some(anchor - 2L * Serving.hourMs),
+      toMs = Some(anchor))
+    val b = TopKApi.percentiles(spark, dir, fromMs = Some(anchor - 48L * Serving.hourMs),
+      toMs = Some(anchor - 24L * Serving.hourMs))
+    val (rb, ra) = (rows(b), rows(a))
+    assert(ra !== rb)
+    assert(ra === rows(Prepared.inlined(a)) && rb === rows(Prepared.inlined(b)))
+  }
+
+  test("a root keeps a bounded number of p-list route plans; further p-lists plan per call") {
+    val dir = isolated("graft_api_plists")
+    val lists = (1L to TopKApi.MaxQuantilePlans + 4L).map(p => Seq(p, 1000L - p))
+    def plans(): Seq[AnyRef] = lists.map(ps => templateOf(TopKApi.quantile(spark, dir, pPerMille = ps)))
+    val (once, again) = (plans(), plans())
+    val kept = once.zip(again).map { case (a, b) => a eq b }
+    assert(kept === lists.indices.map(_ < TopKApi.MaxQuantilePlans),
+      "the first p-lists keep their plan, the ones past the bound do not")
+    // the bound holds the quantile family only
+    assert(templateOf(TopKApi.percentiles(spark, dir)) eq templateOf(TopKApi.percentiles(spark, dir)))
+    // every answer still equals its literal-planned twin
+    val df = TopKApi.quantile(spark, dir, pPerMille = lists.last)
+    assert(df.collect().toSeq === graft.plans.Prepared.inlined(df).collect().toSeq)
+  }
 }

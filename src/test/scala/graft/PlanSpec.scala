@@ -262,6 +262,31 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("prepared API routes: every call scans the one-partition pin in memory, no exchange") {
+    // one job of one stage per call: a routed pin is one partition, so
+    // no route plans an exchange — and no prepared parameter can sit
+    // below one, where a map output written under another call's
+    // values could be reused
+    import graft.api.TopKApi
+    import graft.serving.Serving
+    val from = Some(Serving.anchorMs(spark, sfDir) - 72L * Serving.hourMs)
+    for (df <- Seq(
+        TopKApi.topk(spark, sfDir),
+        TopKApi.topk(spark, sfDir, fromMs = from, byRevenue = true),
+        TopKApi.topk(spark, sfDir, restaurantId = "click", fromMs = from, k = 3),
+        TopKApi.topk(spark, sfDir, restaurantId = "click", fromMs = from, byRevenue = true),
+        TopKApi.distinctUsers(spark, sfDir, restaurantId = "click", fromMs = from),
+        TopKApi.distinctUsersExact(spark, sfDir),
+        TopKApi.percentiles(spark, sfDir, fromMs = from),
+        TopKApi.quantile(spark, sfDir, restaurantId = "click", pPerMille = Seq(125L, 975L)),
+        TopKApi.quantileApprox(spark, sfDir, fromMs = from),
+        TopKApi.quantileApproxAllTypes(spark, sfDir, pPerMille = Seq(125L, 500L)))) {
+      val p = planOf(df)
+      assert(p.contains("InMemoryTableScan"), p)
+      assert(!p.contains("Exchange"), p)
+    }
+  }
+
   test("segment dedup: hash-keyed partial-agg keep-first, no window, no joins") {
     val p = planOf(graft.ops.NearDup.segmentDedup(
       Tables.documents(spark, sfDir), segWords = 10))

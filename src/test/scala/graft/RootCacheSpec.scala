@@ -44,6 +44,65 @@ class RootCacheSpec extends SparkSuite {
     next.unpersist()
   }
 
+  test("a build losing the insert race to a same-result frame leaves the winner cached") {
+    val root = tmp("root_cache_loser")
+    spark.range(10).write.parquet(s"$root/t")
+    def pinned(): DataFrame = spark.read.parquet(s"$root/t").persist()
+    val built = new java.util.concurrent.CountDownLatch(1)
+    val published = new java.util.concurrent.CountDownLatch(1)
+    @volatile var lost: DataFrame = null
+    // the loser builds first and publishes last: its persist registers
+    // the cache entry, the winner's persist shares it
+    val loser = new Thread(() => {
+      lost = RootCache.get(spark, root, "t") {
+        val df = pinned()
+        built.countDown()
+        published.await()
+        df
+      }
+    })
+    loser.start()
+    built.await()
+    val winner = RootCache.get(spark, root, "t")(pinned())
+    published.countDown()
+    loser.join()
+    assert(lost eq winner, "the loser is served the published value")
+    assert(winner.storageLevel !== org.apache.spark.storage.StorageLevel.NONE,
+      "the loser's release dropped the published slot's cache entry")
+    RootCache.invalidate(spark, root)
+    assert(winner.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("a build straddling a commit leaves the same-result frame published after it cached") {
+    import java.util.concurrent.CountDownLatch
+    val root = tmp("root_cache_straddle")
+    spark.range(10).write.parquet(s"$root/t")
+    def pinned(): DataFrame = spark.read.parquet(s"$root/t").persist()
+    val built = new CountDownLatch(1)
+    val go = new CountDownLatch(1)
+    // the straddler registers the cache entry, a commit lands, and a
+    // post-commit build (sharing that entry) publishes before the
+    // straddler finishes — which then must not drop the entry
+    val straddler = new Thread(() => {
+      RootCache.get(spark, root, "t") {
+        val df = pinned()
+        built.countDown()
+        go.await()
+        df
+      }
+    })
+    straddler.start()
+    built.await()
+    RootCache.invalidate(spark, root)
+    val after = RootCache.get(spark, root, "t")(pinned())
+    go.countDown()
+    straddler.join()
+    assert((RootCache.get(spark, root, "t")(pinned()) eq after), "the post-commit frame is published")
+    assert(after.storageLevel !== org.apache.spark.storage.StorageLevel.NONE,
+      "the straddler's release dropped the published slot's cache entry")
+    RootCache.invalidate(spark, root)
+  }
+
   // ---- foreign-commit fixtures, one per served root kind ----------
 
   private def events(rows: (Long, String, Long, String, Long)*): DataFrame =
