@@ -49,7 +49,8 @@ object SparkEntry {
 
   /** The local session every main runs on: `SPARK_GRAFT_CPUS` cores
     * (default `defaultCpus`) and as many shuffle partitions, UTC, AQE
-    * on, no UI, WARN logging.
+    * on, no UI, WARN logging, and the fork-free local filesystem
+    * ([[graft.tables.LocalFs]]).
     */
   def session(defaultCpus: Int): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
@@ -61,6 +62,7 @@ object SparkEntry {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.tables.LocalFs.install(spark)
     spark
   }
 }

@@ -536,6 +536,7 @@ object Serving {
 
   /** Build the serving tables if absent; return the serving root. */
   def materialize(spark: SparkSession, dataDir: String): String = {
+    graft.tables.LocalFs.install(spark)
     val root = servingRoot(spark, dataDir)
     if (verifiedRoots.contains(root)) root
     else this.synchronized {

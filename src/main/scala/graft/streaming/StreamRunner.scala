@@ -21,7 +21,8 @@ object StreamRunner {
     */
   def start(source: DataFrame, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("1 second"))(
-      body: (DataFrame, Long) => Any): StreamingQuery =
+      body: (DataFrame, Long) => Any): StreamingQuery = {
+    graft.tables.LocalFs.install(source.sparkSession)
     source.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -32,4 +33,5 @@ object StreamRunner {
         }
       }
       .start()
+  }
 }

@@ -11,11 +11,17 @@ import graft.ops.TopK
   *   source → event-time watermark (10 s out-of-orderness,
   *   TopKStreamingJob.kt:248-249) → dedup on event_id with
   *   watermark-scoped state (the Flink ValueState+TTL dedup,
-  *   :87-119) → ONE foreachBatch fan-out: raw sink; per-batch 1-minute
-  *   rollup segment (with mergeable HLL bytes) → rollup sink;
-  *   date-scoped top-K re-rank over the merged segments → topk sink
-  *   (the legacy continuous path's output tables,
-  *   restaurant_topk/global_topk).
+  *   :87-119) → ONE foreachBatch fan-out of two concurrent legs:
+  *   raw sink ∥ per-batch 1-minute rollup segment (with mergeable HLL
+  *   bytes) → rollup sink → date-scoped top-K re-rank over the merged
+  *   segments → topk sink (the legacy continuous path's output
+  *   tables, restaurant_topk/global_topk).
+  *
+  * The deduped batch is cached and filled by one count before either
+  * leg starts, so the stateful dedup executes once per trigger; the
+  * raw leg runs on a second driver thread beside the segment → top-K
+  * leg, and the batch ends when both have (a failure in either fails
+  * the batch, and the replay rewrites both idempotent partitions).
   *
   * Exactly like the reference forks ONE deduped stream into both
   * sinks (TopKStreamingJob.kt:260,311), [[start]] runs ONE streaming
@@ -134,8 +140,49 @@ object StreamingPipeline {
     */
   def servingRefreshSink(root: String): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty)
+      withCachedBatch(batch) {
         graft.serving.Serving.refreshWithBatch(batch.sparkSession, root, batch, batchId)
+      }
+
+  /** Run `body` if the micro-batch holds rows, with `batch` cached for
+    * it. The batch is persisted BEFORE its first action, and that
+    * action is a full `count`, which fills every partition of the
+    * cache: the stateful dedup above the batch then executes once per
+    * trigger and every later frame derived from `batch` reads the
+    * cached rows. (`isEmpty` first would run the dedup in a job of its
+    * own, and every later action would run it again, re-committing the
+    * state-store version.)
+    */
+  private def withCachedBatch(batch: DataFrame)(body: => Unit): Unit = {
+    batch.persist()
+    try { if (batch.count() > 0) body }
+    finally { batch.unpersist(); () }
+  }
+
+  /** Run `side` on a second driver thread while `main` runs on this
+    * one, and return once both have finished; if either failed, throw
+    * (`main`'s error first, `side`'s attached to it). The thread is
+    * new, so it inherits this thread's Spark local properties: the
+    * query's job group, its SQL execution ids, the active session.
+    */
+  private def alongside(side: => Unit)(main: => Unit): Unit = {
+    val task = new java.util.concurrent.FutureTask[Unit](() => side)
+    val thread = new Thread(task, "graft-pipeline-side-leg")
+    thread.setDaemon(true)
+    thread.start()
+    val mainErr = try { main; None } catch { case e: Throwable => Some(e) }
+    val sideErr =
+      try { task.get(); None }
+      catch {
+        case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+        case e: InterruptedException => task.cancel(true); throw e
+      }
+    (mainErr, sideErr) match {
+      case (Some(m), s) => s.foreach(m.addSuppressed); throw m
+      case (None, Some(s)) => throw s
+      case _ => ()
+    }
+  }
 
   /** One micro-batch → one rollup SEGMENT: the batch's partial
     * (window, dims) pre-aggregate with counts, integer-cents sums and
@@ -154,9 +201,12 @@ object StreamingPipeline {
     */
   def refreshTopK(spark: SparkSession, rollupPath: String, topkPath: String,
       segment: DataFrame, k: Int, dims: Seq[String] = Seq("event_type")): Unit = {
+    // one narrow job over the (persisted, small) segment: a rollup
+    // segment has one row per (window, dims), so de-duplicating the
+    // dates on the driver is cheaper than a distinct() shuffle job
     val dates = segment
       .select(to_date(timestamp_millis(col("window_start_ms"))).as("p_date"))
-      .distinct().collect().map(_.getDate(0).toString).toSeq
+      .collect().map(_.getDate(0).toString).distinct.toSeq
     if (dates.nonEmpty) {
       // read through the compaction view: the committed consolidated
       // generation plus unfolded batch partitions. Without periodic
@@ -168,6 +218,11 @@ object StreamingPipeline {
       val merged = StateCompactor.readState(spark, rollupPath)
         .withColumn("p_date", to_date(timestamp_millis(col("window_start_ms"))))
         .filter(col("p_date").isin(dates: _*))
+        // the touched dates' windows are ranked in ONE partition: the
+        // merge and the per-window rank both take it as their
+        // clustering, so this is the plan's only exchange, and the
+        // dynamic overwrite writes one file per date
+        .repartition(1)
         .groupBy((col("window_start_ms") +: dims.map(col)): _*)
         .agg(
           sum(col("order_count")).as("order_count"),
@@ -216,11 +271,13 @@ object StreamingPipeline {
   /** Wire the full pipeline as ONE streaming query (single source
     * read, single dedup state — the reference's single-dataflow fork,
     * TopKStreamingJob.kt:260,311) fanning out in `foreachBatch`:
-    * raw events and the batch's rollup segment are written
-    * idempotently under their batch_id partition, then the touched
-    * dates' top-K is re-ranked from the merged segments. All three
-    * legs are exactly-once: at-least-once foreachBatch + idempotent
-    * (batch-keyed or recomputed-deterministic) writes.
+    * raw events are written idempotently under their batch_id
+    * partition while, beside them, the batch's rollup segment is
+    * written the same way and the touched dates' top-K is re-ranked
+    * from the merged segments. All three writes are exactly-once:
+    * at-least-once foreachBatch + idempotent (batch-keyed or
+    * recomputed-deterministic) writes, and a batch whose either leg
+    * failed is not committed, so its replay rewrites both.
     */
   def start(
       spark: SparkSession,
@@ -269,22 +326,21 @@ object StreamingPipeline {
       checkpointRoot: String,
       k: Int,
       trigger: Trigger): Seq[StreamingQuery] = {
+    graft.tables.LocalFs.install(spark)
     val deduped = dedupStream(withEventTime(source))
     val q = deduped.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$checkpointRoot/pipeline")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.persist()
-          try {
-            rawLeg(batch, batchId)
+        withCachedBatch(batch) {
+          alongside(rawLeg(batch, batchId)) {
             val segment = rollupSegment(batch).persist()
             try {
               writeBatchIdempotent(segment, batchId, rollupPath)
               refreshTopK(batch.sparkSession, rollupPath, topkPath, segment, k)
             } finally { segment.unpersist(); () }
-          } finally { batch.unpersist(); () }
+          }
         }
       }
       .start()

@@ -445,4 +445,128 @@ class StreamingSpec extends SparkSuite {
     assert(rollup.filter(col("window_start_ms") === w0)
       .agg(sum("order_count")).head.getLong(0) === 3L)
   }
+
+  /** Per micro-batch of the query `run` drives, the executed stages
+    * that ran the stateful dedup: a `StateStoreRDD` in the stage's
+    * lineage whose state-store metrics (state rows, store instances)
+    * the stage's tasks updated. A stage that reads the cached batch
+    * lists the same RDD in its lineage but updates none of them; an
+    * `isEmpty` pass, which stops each partition after one row, updates
+    * its rows counter without committing a store.
+    */
+  private def dedupStagesPerBatch(run: => java.util.UUID): Map[Long, Int] = {
+    import org.apache.spark.scheduler._
+    val batchOf = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        for (p <- Option(e.properties); q <- Option(p.getProperty("sql.streaming.queryId"));
+             b <- Option(p.getProperty("streaming.sql.batchId")))
+          batchOf.put(e.stageInfo.stageId, (q, b.toLong))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        if (si.rddInfos.exists(_.name == "StateStoreRDD") &&
+            si.accumulables.values.exists(_.name.exists(_.contains("state"))))
+          Option(batchOf.get(si.stageId)).foreach(ran.add)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val queryId =
+      try { val id = run; org.apache.spark.ListenerDrain(spark.sparkContext); id }
+      finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    ran.asScala.toSeq.collect { case (q, b) if q == queryId.toString => b }
+      .groupBy(identity).map { case (b, xs) => b -> xs.size }
+  }
+
+  test("the stateful dedup executes once per trigger (pipeline and serving-refresh sink)") {
+    implicit val sql = spark.sqlContext
+    val batches = (0 until 3).map(b => (0 until 20).map(i =>
+      Ev(b * 100L + i, ts(b * 3, i), i % 5, if (i % 3 == 0) "click" else "view", i.toDouble)))
+    // each drain runs one data batch (and any watermark-only batch
+    // after it) to completion, so no trigger is cut short by a stop
+    def drain(start: => Seq[org.apache.spark.sql.streaming.StreamingQuery]): java.util.UUID = {
+      val qs = start
+      try { qs.foreach(_.awaitTermination()); qs.head.id } finally qs.foreach(_.stop())
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_once").toString
+    val mem = MemoryStream[Ev]
+    val pipeline = dedupStagesPerBatch {
+      batches.map { b =>
+        mem.addData(b)
+        drain(StreamingPipeline.start(spark, mem.toDF(),
+          s"$dir/raw", s"$dir/rollup", s"$dir/topk", s"$dir/ckpt", k = 2,
+          trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+      }.last
+    }
+    assert(spark.read.parquet(s"$dir/raw").count() === 60)
+    assert(pipeline.size >= 3 && pipeline.values.forall(_ == 1),
+      s"dedup stages per batch: $pipeline")
+
+    val root = java.nio.file.Files.createTempDirectory("graft_dedup_once_srs").toString
+    graft.serving.Serving.materializeInto(spark, root,
+      StreamingPipeline.withEventTime(batches.head.take(2).toDF()))
+    val mem2 = MemoryStream[Ev]
+    val sink = dedupStagesPerBatch {
+      batches.map { b =>
+        mem2.addData(b)
+        drain(Seq(StreamingPipeline.dedupStream(StreamingPipeline.withEventTime(mem2.toDF()))
+          .writeStream
+          .option("checkpointLocation", s"$root/ckpt")
+          .foreachBatch(StreamingPipeline.servingRefreshSink(root))
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()))
+      }.last
+    }
+    assert(sink.size >= 3 && sink.values.forall(_ == 1), s"dedup stages per batch: $sink")
+  }
+
+  test("overlapped legs: a raw leg failing on a batch's first attempt fails it; the replay restores exactly-once") {
+    implicit val sql = spark.sqlContext
+    import graft.serving.Tiered
+    val dir = java.nio.file.Files.createTempDirectory("graft_overlap").toString
+    val troot = s"$dir/troot"
+    val mem = MemoryStream[Ev]
+    def start() = StreamingPipeline.startTiered(spark, mem.toDF(),
+      troot, s"$dir/rollup", s"$dir/topk", s"$dir/ckpt", k = 2,
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    val b1 = Seq(Ev(1, ts(0, 1), 10, "click", 1.0), Ev(1, ts(0, 1), 10, "click", 1.0),
+      Ev(2, ts(0, 2), 11, "view", 2.0), Ev(3, ts(1, 3), 12, "click", 3.0),
+      Ev(4, ts(1, 4), 13, "cart", 4.0))
+    val b2 = Seq(Ev(2, ts(0, 2), 11, "view", 2.0), // cross-batch duplicate
+      Ev(5, ts(1, 5), 10, "click", 5.0), Ev(6, ts(2, 6), 11, "view", 6.0))
+    // a regular file where the landing directory goes: the raw leg's
+    // first attempt cannot write, while the rollup leg beside it can
+    val blocker = new java.io.File(Tiered.landingDir(troot))
+    blocker.getParentFile.mkdirs()
+    assert(blocker.createNewFile())
+    mem.addData(b1)
+    val qs = start()
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      qs.foreach(_.awaitTermination()))
+    finally qs.foreach(_.stop())
+    assert(new java.io.File(s"$dir/rollup/batch_id=0").isDirectory,
+      "the rollup leg ran beside the failed raw leg, so the replay must overwrite it")
+    assert(blocker.delete())
+    def drain(): Unit = { val q = start(); try q.foreach(_.awaitTermination()) finally q.foreach(_.stop()) }
+    drain() // replays batch 0 from the checkpoint
+    mem.addData(b2)
+    drain()
+
+    val oracle = StreamingPipeline.withEventTime((b1 ++ b2).toDF())
+      .dropDuplicates("event_id")
+    val landing = Tiered.landingDir(troot)
+    assert(spark.read.option("basePath", landing).parquet(s"$landing/batch_id=*")
+      .select($"event_id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L, 4L, 5L, 6L))
+    val want = StreamingPipeline.rollupSegment(oracle)
+      .groupBy($"window_start_ms", $"event_type")
+      .agg(sum($"order_count").as("order_count"), sum($"sum_value_cents").as("sum_value_cents"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val got = graft.streaming.StateCompactor.readState(spark, s"$dir/rollup")
+      .groupBy($"window_start_ms", $"event_type")
+      .agg(sum($"order_count").as("order_count"), sum($"sum_value_cents").as("sum_value_cents"))
+    assert(rows(got) === rows(want))
+    assert(rows(spark.read.parquet(s"$dir/topk").drop("p_date")) ===
+      rows(StreamingPipeline.rankBatch(want, 2)))
+  }
 }
