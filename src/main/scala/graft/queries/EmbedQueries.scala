@@ -261,8 +261,7 @@ object EmbedQueries {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ VecKernelRewrite
     }
-    Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings")
-    val df = spark.sql(
+    val df = org.apache.spark.sql.GraftShim.sqlOver(spark,
       """WITH anchor AS (SELECT embedding AS av FROM embeddings WHERE vec_id = 0),
         |dots AS (
         |  SELECT e.vec_id,
@@ -274,7 +273,8 @@ object EmbedQueries {
         |top AS (SELECT vec_id, dot FROM dots ORDER BY dot DESC, vec_id ASC LIMIT 20)
         |SELECT CAST(row_number() OVER (ORDER BY dot DESC, vec_id ASC) AS BIGINT) AS rank,
         |  vec_id
-        |FROM top""".stripMargin)
+        |FROM top""".stripMargin,
+      Map("embeddings" -> Tables.embeddings(spark, dir)))
     require(df.queryExecution.optimizedPlan.exists(
         _.expressions.exists(_.exists(_.isInstanceOf[graft.functions.VecDot]))),
       "VecKernelRewrite did not fire on the HOF dot-product spelling")

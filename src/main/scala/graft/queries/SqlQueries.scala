@@ -1,24 +1,27 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.Prepared
 import graft.serving.{RootCache, Serving}
 
 /** The reference's SQL surface: its users query Pinot tables in SQL
-  * (pinot/README.md §Sample Queries). The engine's tables register as
-  * Spark SQL views under the Pinot table names' analogs
-  * (orders_raw → events mapping per EventQueries' domain note), and
-  * the README's three sample queries run through `spark.sql` with
-  * only the schema mapping and a deterministic `ago()` anchor
-  * (max ts) changed — API-surface parity, not just operator parity.
+  * (pinot/README.md §Sample Queries). Each statement names the
+  * engine's tables by the Pinot table names' analogs (orders_raw →
+  * events mapping per EventQueries' domain note), bound to frames per
+  * call ([[GraftShim.sqlOver]] — the caller's session catalog is never
+  * written), and the README's three sample queries run with only the
+  * schema mapping and a deterministic `ago()` anchor (max ts) changed
+  * — API-surface parity, not just operator parity.
   */
 object SqlQueries {
 
   type QFn = (SparkSession, String) => DataFrame
 
-  private def registerRawView(spark: SparkSession, dir: String): Unit =
-    Tables.events(spark, dir).createOrReplaceTempView("orders_raw")
+  /** `text` over the raw events table as `orders_raw`. */
+  private def overRaw(spark: SparkSession, dir: String, text: String): DataFrame =
+    GraftShim.sqlOver(spark, text, Map("orders_raw" -> Tables.events(spark, dir)))
 
   /** A value derived from `dir`'s served root: a [[RootCache]] slot of
     * [[Serving.materialize]]'s root, so a refresh, an erase or a
@@ -78,89 +81,49 @@ object SqlQueries {
         .agg(max(col("window_start_ms")).as("last_wsm")))
     }
 
-  /** Register both rollup views and return the anchor (max window),
-    * which the serving SQL inlines as a LITERAL — the
-    * [[Serving.anchorMs]] policy: each scalar subquery would otherwise
-    * cost a whole extra job (~50 ms of planning/scheduling at any data
-    * size).
-    */
-  private def registerRollupViews(spark: SparkSession, dir: String): Long = {
-    val view = rollupView(spark, dir)
-    view.createOrReplaceTempView("orders_1m_rollup")
-    userStateView(spark, dir).createOrReplaceTempView("orders_user_state")
-    slot(spark, dir, "anchor")(
-      view.agg(max(col("window_start_ms"))).head().getLong(0))
-  }
+  /** Both rollup views by their SQL names. */
+  private def rollupViews(spark: SparkSession, dir: String): Map[String, DataFrame] =
+    Map("orders_1m_rollup" -> rollupView(spark, dir),
+      "orders_user_state" -> userStateView(spark, dir))
 
-  /** Register the minute-grain value-histogram state as the
-    * `orders_1m_hist` SQL view (pinned, 1 partition — the same
-    * serving-view discipline as the rollup view) for the percentile
-    * statement.
+  /** The anchor (max window), which the serving SQL inlines as a
+    * LITERAL — the [[Serving.anchorMs]] policy: each scalar subquery
+    * would otherwise cost a whole extra job (~50 ms of
+    * planning/scheduling at any data size).
     */
-  private def registerHistView(spark: SparkSession, dir: String): Unit =
+  private def rollupAnchor(spark: SparkSession, dir: String): Long =
+    slot(spark, dir, "anchor")(
+      rollupView(spark, dir).agg(max(col("window_start_ms"))).head().getLong(0))
+
+  /** The minute-grain value-histogram state as the `orders_1m_hist`
+    * view (pinned, 1 partition — the same serving-view discipline as
+    * the rollup view) for the percentile statement.
+    */
+  private def histView(spark: SparkSession, dir: String): DataFrame =
     slot(spark, dir, "hist") {
       pinned(Serving.readTable(spark, dir, "rollup_1m_hist")
         .select("window_start_ms", "event_type", "bin", "cnt"))
-    }.createOrReplaceTempView("orders_1m_hist")
+    }
 
-  /** Execute a serving-latency SQL statement with the ETL machinery
-    * scoped out: AQE's per-exchange re-planning and 32-wide shuffles
-    * are wins on big scans and pure overhead on lookups over pinned
-    * ~10k-row frames — each extra job/stage costs ~50 ms at ANY data
-    * size (measured; it was most of the 0.5 s the round-6 verdict
-    * flagged).
-    *
-    * Prepared-statement cache: parse/analyze/optimize/physical-plan
-    * cost ~75 ms per call at ANY data size (measured) — more than the
-    * execution itself for these lookups. Brokers in every serving
-    * system (Pinot, Presto) cache plans for repeated parameterized
-    * queries; the statements here are literally the README dashboard
-    * samples, re-issued with identical text per root generation (the
-    * anchor literal is a slot of the same root), so the plan is the
-    * root's `sql:prepared:<name>` slot, built once. The physical plan
-    * is forced inside the scoped-conf block so the 1-partition/no-AQE
-    * shape is baked in. Calls return a LAZY frame over the prepared
-    * plan's RDD ([[GraftShim.overPreparedPlan]]), so one call = one
-    * job executing just that DAG. Two rejected shapes, both measured
-    * slower: an eager localCheckpoint per call doubles the jobs
-    * (checkpoint + the caller's action — ~90 ms); returning the
-    * prepared frame as-is makes the caller's action RE-PLAN the whole
-    * query under the session's live conf (AQE on, 32-wide shuffles —
-    * the scoped shape is lost entirely, ~200 ms). Because the plan's
-    * RDD DAG is shared across calls, Spark serves its UNCHANGED
-    * upstream shuffle stages from the map outputs the first execution
-    * wrote and re-executes only the final stage — correct here
-    * because the inputs are pinned immutable frames and every commit
-    * to the root drops the plan with them, and it is the broker
-    * behavior a serving system wants; but it means the warm number
-    * prices the final stage, not a cold end-to-end query (~220 ms
-    * re-planned cold). Measured: ~45-60 ms/call warm.
-    *
-    * The `sql` thunk (and the temp-view registration inside it, via
-    * [[registerRollupViews]]) runs only on a cache miss: a resolved
-    * plan references the pinned frames directly, so re-registering
-    * views per call would be dead work on the hit path.
+  /** A serving statement over `views`, prepared once per root
+    * generation: the root's `sql:prepared:<name>` slot holds its
+    * [[Prepared]] plan (parse, analysis, optimization and physical
+    * planning cost ~75 ms per call at any data size, more than these
+    * lookups take to run), and each call binds a frame over it. The
+    * views are pinned one-partition frames, so the plan needs no
+    * exchange above them; the statement text, views and anchor are
+    * built only on a miss.
     */
   private def servingSql(spark: SparkSession, dir: String, name: String)(
-      sql: => String): DataFrame = {
-    val prepared = slot(spark, dir, s"prepared:$name") {
-      val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      val parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      try { val df = spark.sql(sql); df.queryExecution.executedPlan; df }
-      finally {
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-      }
-    }
-    org.apache.spark.sql.GraftShim.overPreparedPlan(spark, prepared)
-  }
+      statement: => (String, Map[String, DataFrame])): DataFrame =
+    slot(spark, dir, s"prepared:$name") {
+      val (text, views) = statement
+      Prepared(GraftShim.sqlOver(spark, text, views))
+    }.bind(spark, Map.empty)
 
   /** README sample 1: top items by revenue over the raw table. */
   def topkRaw(spark: SparkSession, dir: String): DataFrame = {
-    registerRawView(spark, dir)
-    spark.sql("""
+    overRaw(spark, dir, """
       SELECT event_type,
         SUM(value_cents) AS total_revenue_cents,
         COUNT(*) AS order_count
@@ -181,7 +144,7 @@ object SqlQueries {
     */
   def topkRollup(spark: SparkSession, dir: String): DataFrame = {
     servingSql(spark, dir, "topk_rollup") {
-    val anchor = registerRollupViews(spark, dir)
+    val anchor = rollupAnchor(spark, dir)
     s"""
       WITH agg AS (
         SELECT event_type,
@@ -202,14 +165,14 @@ object SqlQueries {
              THEN 1L ELSE 0L END AS est_ok
       FROM agg a JOIN exact e ON a.event_type = e.event_type
       ORDER BY total_revenue_cents DESC, event_type ASC
-      LIMIT 10"""
+      LIMIT 10""" -> rollupViews(spark, dir)
     }
   }
 
   /** README sample 3: revenue by hour of day over the rollup. */
   def revenueByHour(spark: SparkSession, dir: String): DataFrame = {
     servingSql(spark, dir, "revenue_by_hour") {
-    val anchor = registerRollupViews(spark, dir)
+    val anchor = rollupAnchor(spark, dir)
     s"""
       SELECT CAST(hour_of_day AS BIGINT) AS hour_of_day,
         -- 100.0D: Spark's bare 100.0 is DECIMAL, which would make this
@@ -219,7 +182,7 @@ object SqlQueries {
       FROM orders_1m_rollup
       WHERE window_start_ms > $anchor - 7*24*3600*1000
       GROUP BY hour_of_day
-      ORDER BY hour_of_day"""
+      ORDER BY hour_of_day""" -> rollupViews(spark, dir)
     }
   }
 
@@ -231,8 +194,7 @@ object SqlQueries {
     */
   def percentileSql(spark: SparkSession, dir: String): DataFrame = {
     servingSql(spark, dir, "percentile") {
-    val anchor = registerRollupViews(spark, dir)
-    registerHistView(spark, dir)
+    val anchor = rollupAnchor(spark, dir)
     s"""
       WITH h AS (
         SELECT bin, SUM(cnt) AS c
@@ -246,7 +208,7 @@ object SqlQueries {
         CAST(min(CASE WHEN cum*100 >= 50*n THEN bin*100 END) AS BIGINT) AS p50_cents,
         CAST(min(CASE WHEN cum*100 >= 90*n THEN bin*100 END) AS BIGINT) AS p90_cents,
         CAST(min(CASE WHEN cum*100 >= 99*n THEN bin*100 END) AS BIGINT) AS p99_cents
-      FROM cum"""
+      FROM cum""" -> Map("orders_1m_hist" -> histView(spark, dir))
     }
   }
 
@@ -258,9 +220,8 @@ object SqlQueries {
     * mirror of the same bucket math).
     */
   def quantileSketchSql(spark: SparkSession, dir: String): DataFrame = {
-    registerRawView(spark, dir)
     graft.plans.GraftExtensions.registerTextFunctions(spark)
-    spark.sql("""
+    overRaw(spark, dir, """
       WITH f AS (
         SELECT graft_log_bucket(value_cents) AS b
         FROM orders_raw
@@ -279,8 +240,7 @@ object SqlQueries {
     * semantics and oracle as TemporalQueries.sessionize).
     */
   def sessionizeSql(spark: SparkSession, dir: String): DataFrame = {
-    registerRawView(spark, dir)
-    spark.sql("""
+    overRaw(spark, dir, """
       SELECT user_id,
         unix_millis(session_window.start) AS session_start_ms,
         unix_millis(session_window.end) AS session_end_ms,
@@ -298,8 +258,7 @@ object SqlQueries {
     * `q_session_transitions`; both share the DuckDB oracle).
     */
   def sessionTransitionsSql(spark: SparkSession, dir: String): DataFrame = {
-    registerRawView(spark, dir)
-    spark.sql("""
+    overRaw(spark, dir, """
       WITH p AS (
         SELECT lag(event_type, 1) OVER w AS from_type,
           event_type AS to_type,
@@ -329,15 +288,14 @@ object SqlQueries {
     */
   def textFunctionsSql(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.registerTextFunctions(spark)
-    Tables.documents(spark, dir).createOrReplaceTempView("documents")
-    spark.sql("""
+    GraftShim.sqlOver(spark, """
       SELECT doc_id,
         graft_normalize(text) AS norm_text,
         graft_token_count(text) AS n_tokens,
         graft_fingerprint(text) AS fp,
         graft_hash_bucket(doc_id, 100) AS bucket,
         graft_lang_id(text) AS lang_pred
-      FROM documents""")
+      FROM documents""", Map("documents" -> Tables.documents(spark, dir)))
   }
 
   /** The KMV theta sketch as a PURE SQL surface — Pinot's
@@ -354,9 +312,8 @@ object SqlQueries {
     spark.udf.register("graft_kmv",
       udaf(new KmvSketch.KmvAgg(KmvSketch.DefaultK),
         org.apache.spark.sql.Encoders.scalaLong))
-    registerRawView(spark, dir)
     val (k, m) = (KmvSketch.DefaultK, KmvSketch.M)
-    spark.sql(s"""
+    overRaw(spark, dir, s"""
       WITH h AS (
         SELECT event_type,
           CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10) AS BIGINT) AS h
@@ -425,8 +382,7 @@ object SqlQueries {
     spark.udf.register("graft_bitmap_or",
       udaf(new BitmapDistinct.BitmapMergeAgg,
         org.apache.spark.sql.Encoders.product[BitmapDistinct.Bm]))
-    registerRawView(spark, dir)
-    spark.sql("""
+    overRaw(spark, dir, """
       WITH g AS (
         SELECT date_trunc('day', ts) AS d, event_type,
           graft_bitmap(CAST(user_id AS BIGINT)) AS bm
@@ -465,11 +421,10 @@ object SqlQueries {
         org.apache.spark.sql.Encoders.tuple(
           org.apache.spark.sql.Encoders.scalaLong,
           org.apache.spark.sql.Encoders.scalaLong)))
-    registerRawView(spark, dir)
     val (k, m) = (KmvSketch.DefaultK, KmvSketch.M)
     val empty = "named_struct('hs', CAST(array() AS ARRAY<BIGINT>), " +
       "'vs', CAST(array() AS ARRAY<BIGINT>))"
-    spark.sql(s"""
+    overRaw(spark, dir, s"""
       WITH h AS (
         SELECT event_type,
           CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10) AS BIGINT) AS h,

@@ -168,14 +168,10 @@ object TemporalQueries {
             col("n_events"), col("sum_value_cents")))
       val out = s"$tmp/out"
       OlapQueries.withGateStreamConf(spark) {
-        val q = both.writeStream
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            graft.streaming.StreamingPipeline.writeBatchIdempotent(b, id, out)
-          }
-          .start()
+        val q = graft.streaming.StreamRunner.start(both, s"$tmp/ckpt",
+            org.apache.spark.sql.streaming.Trigger.AvailableNow()) { (b, id) =>
+          graft.streaming.StreamingPipeline.writeBatchIdempotent(b, id, out)
+        }
         try q.awaitTermination() finally q.stop()
       }
     } + "/out"

@@ -730,18 +730,14 @@ object TpchQueries {
         cents(col("o_totalprice")).as("order_cents"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_dimjoin_gate").toString
     val out = s"$tmp/out"
-    val q = enriched.writeStream
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        graft.streaming.StreamingPipeline.writeBatchIdempotent(
-          b.groupBy(col("r_name"), col("n_name"))
-            .agg(sum(col("order_cents")).as("total_cents"),
-              count(lit(1)).as("n_orders")),
-          id, out)
-      }
-      .start()
+    val q = graft.streaming.StreamRunner.start(enriched, s"$tmp/ckpt",
+        org.apache.spark.sql.streaming.Trigger.AvailableNow()) { (b, id) =>
+      graft.streaming.StreamingPipeline.writeBatchIdempotent(
+        b.groupBy(col("r_name"), col("n_name"))
+          .agg(sum(col("order_cents")).as("total_cents"),
+            count(lit(1)).as("n_orders")),
+        id, out)
+    }
     try q.awaitTermination() finally q.stop()
     spark.read.parquet(out)
       .groupBy(col("r_name"), col("n_name"))

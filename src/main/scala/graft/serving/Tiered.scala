@@ -157,8 +157,20 @@ object Tiered {
     */
   def landingDir(root: String): String = s"$root/landing"
 
+  // A batch's commit marker in the landing dir. Underscore-prefixed
+  // and free of '=': Spark's file listing hides a `_` name only when
+  // it holds no '=', so a parquet read of the landing never sees it.
+  private val MarkerPrefix = "_done_batch_"
+
   private def landingMarker(root: String, batchId: Long) =
-    new Path(s"${landingDir(root)}/_done.batch_id=$batchId")
+    new Path(s"${landingDir(root)}/$MarkerPrefix$batchId")
+
+  /** The batch id a landing entry's name marks as committed, if it is
+    * a commit marker.
+    */
+  private def markedBatch(name: String): Option[Long] =
+    if (name.startsWith(MarkerPrefix)) name.stripPrefix(MarkerPrefix).toLongOption
+    else None
 
   /** Land one micro-batch exactly-once: batch-id dynamic-partition
     * overwrite (a replay rewrites its own partition), bracketed by
@@ -170,8 +182,8 @@ object Tiered {
     * removed before the overwrite touches the old files — without
     * that, a tick could fold the partition mid-rewrite and then sweep
     * the fully-replayed rows as already-absorbed debris, losing
-    * them). Underscore-prefixed, so parquet directory reads of the
-    * landing never see the marker.
+    * them). The marker's name starts with `_` and holds no `=`, so
+    * parquet directory reads of the landing never see it.
     */
   def landBatch(batch: DataFrame, batchId: Long, root: String): Unit = {
     val f = fs(batch.sparkSession, root)
@@ -302,8 +314,7 @@ object Tiered {
         // sweep's dir and marker deletes leaves one) — cleaned here
         // or it would accumulate forever.
         val (batchIds, orphans) = f.listStatus(landing).toSeq
-          .map(_.getPath.getName).filter(_.startsWith("_done.batch_id="))
-          .map(_.stripPrefix("_done.batch_id=").toLong)
+          .flatMap(st => markedBatch(st.getPath.getName))
           .sorted
           .partition(b => f.exists(new Path(s"${landingDir(root)}/batch_id=$b")))
         orphans.foreach(b => f.delete(landingMarker(root, b), false))
@@ -693,9 +704,7 @@ object Tiered {
       val landingLegs =
         if (!landingActive) Nil
         else {
-          val marked = landingEntries
-            .filter(_.startsWith("_done.batch_id="))
-            .map(_.stripPrefix("_done.batch_id=").toLong)
+          val marked = landingEntries.flatMap(markedBatch)
             .filter(b => f.exists(new Path(s"${landingDir(root)}/batch_id=$b")))
             .sorted
           marked.filter(_ <= wm).foreach { b =>
@@ -734,11 +743,9 @@ object Tiered {
       // side, the conservative direction for right-to-be-forgotten.
       if (landingActive) {
         val ids = landingEntries.flatMap { n =>
-          if (n.startsWith("_done.batch_id="))
-            n.stripPrefix("_done.batch_id=").toLongOption
-          else if (n.startsWith("batch_id="))
-            n.stripPrefix("batch_id=").toLongOption
-          else None
+          markedBatch(n).orElse(
+            if (n.startsWith("batch_id=")) n.stripPrefix("batch_id=").toLongOption
+            else None)
         }
         val maxLanded = (ids :+ wm).max + 1
         if (maxLanded >= 0) {
@@ -876,7 +883,7 @@ object Tiered {
   /** One tier's (relative path → size) file listing — the tier's
     * content identity: any mutation changes it, so a mirror whose
     * manifest digests to the same value is byte-current. For the
-    * LANDING tier the zero-length `_done.batch_id=` commit markers
+    * LANDING tier the zero-length commit markers
     * are part of the content (a restored copy without them would
     * absorb nothing), so they are the one underscore-prefixed name
     * class that tier's walk keeps.
@@ -887,7 +894,7 @@ object Tiered {
     val base = f.makeQualified(new Path(s"$root/$tier"))
     def keep(n: String): Boolean =
       (!n.startsWith("_") && !n.startsWith(".")) ||
-        (tier == "landing" && n.startsWith("_done.batch_id="))
+        (tier == "landing" && markedBatch(n).isDefined)
     def walk(p: Path): Seq[(String, Long)] =
       f.listStatus(p).toSeq
         .filter(s => keep(s.getPath.getName))
@@ -910,7 +917,7 @@ object Tiered {
     val base = f.makeQualified(new Path(mirror))
     def keep(n: String): Boolean =
       (!n.startsWith("_") && !n.startsWith(".")) ||
-        (tier == "landing" && n.startsWith("_done.batch_id="))
+        (tier == "landing" && markedBatch(n).isDefined)
     def walk(p: Path): Seq[(String, Long)] =
       if (!f.exists(p)) Nil
       else f.listStatus(p).toSeq

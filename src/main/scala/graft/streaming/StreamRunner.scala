@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.NearDup
 
-/** The one foreachBatch runner for the ingest legs: every ingest
-  * object exposes its batch body (`processBatch`, an index `append`,
-  * a [[MergeableState.append]]) and this starts it as a streaming
-  * query. Exactly-once is the body's own contract — an idempotent
+/** The one append-mode foreachBatch runner: every ingest object
+  * exposes its batch body (`processBatch`, an index `append`, a
+  * [[MergeableState.append]]) and this starts it as a streaming query,
+  * as it does [[StreamingPipeline]]'s pipeline and the streamed gates. Exactly-once is the body's own contract — an idempotent
   * `batch_id` write or a content-keyed append — since foreachBatch is
   * at-least-once and replays the last batch after a restart.
   */

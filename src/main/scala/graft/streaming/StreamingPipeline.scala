@@ -288,7 +288,7 @@ object StreamingPipeline {
       checkpointRoot: String,
       k: Int = 5,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): Seq[StreamingQuery] =
-    startWith(spark, source,
+    startWith(source,
       (batch, id) => writeBatchIdempotent(batch, id, rawPath),
       rollupPath, topkPath, checkpointRoot, k, trigger)
 
@@ -313,37 +313,28 @@ object StreamingPipeline {
       checkpointRoot: String,
       k: Int = 5,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): Seq[StreamingQuery] =
-    startWith(spark, source,
+    startWith(source,
       (batch, id) => graft.serving.Tiered.landBatch(batch, id, tieredRawRoot),
       rollupPath, topkPath, checkpointRoot, k, trigger)
 
   private def startWith(
-      spark: SparkSession,
       source: DataFrame,
       rawLeg: (DataFrame, Long) => Unit,
       rollupPath: String,
       topkPath: String,
       checkpointRoot: String,
       k: Int,
-      trigger: Trigger): Seq[StreamingQuery] = {
-    graft.tables.LocalFs.install(spark)
-    val deduped = dedupStream(withEventTime(source))
-    val q = deduped.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/pipeline")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withCachedBatch(batch) {
-          alongside(rawLeg(batch, batchId)) {
-            val segment = rollupSegment(batch).persist()
-            try {
-              writeBatchIdempotent(segment, batchId, rollupPath)
-              refreshTopK(batch.sparkSession, rollupPath, topkPath, segment, k)
-            } finally { segment.unpersist(); () }
-          }
+      trigger: Trigger): Seq[StreamingQuery] =
+    Seq(StreamRunner.start(dedupStream(withEventTime(source)),
+        s"$checkpointRoot/pipeline", trigger) { (batch, batchId) =>
+      withCachedBatch(batch) {
+        alongside(rawLeg(batch, batchId)) {
+          val segment = rollupSegment(batch).persist()
+          try {
+            writeBatchIdempotent(segment, batchId, rollupPath)
+            refreshTopK(batch.sparkSession, rollupPath, topkPath, segment, k)
+          } finally { segment.unpersist(); () }
         }
       }
-      .start()
-    Seq(q)
-  }
+    })
 }

@@ -1,7 +1,9 @@
 package org.apache.spark.sql
 
+import java.util.Locale
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 
@@ -29,24 +31,6 @@ object GraftShim {
   def toResolvableExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
-  /** Re-expose an already-planned DataFrame as a LAZY frame over its
-    * physical plan's RDD (`queryExecution.toRdd` builds the RDD DAG
-    * without executing). Actions on the result run ONE job that
-    * re-executes only the stages Spark hasn't computed yet — shuffle
-    * map stages from earlier executions of the same DAG are served
-    * from their existing map outputs — with none of the re-planning a
-    * fresh action on the original frame would do under the session's
-    * CURRENT conf (which is the point: serving plans are prepared
-    * under a scoped 1-partition/no-AQE conf and must keep that shape).
-    * `internalCreateDataFrame` is `private[sql]`, hence the forwarder.
-    */
-  def overPreparedPlan(spark: SparkSession, prepared: DataFrame): DataFrame = {
-    val classicDf = prepared.asInstanceOf[classic.DataFrame]
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    cs.internalCreateDataFrame(
-      classicDf.queryExecution.toRdd, classicDf.schema, isStreaming = false)
-  }
-
   /** A frame over an already-built logical plan, and `f` run with
     * `spark` as the thread's active session (physical nodes take
     * their session from it when they are built or copied).
@@ -57,6 +41,29 @@ object GraftShim {
 
   def withActive[T](spark: SparkSession)(f: => T): T =
     spark.asInstanceOf[classic.SparkSession].withActive(f)
+
+  /** SQL `text` as a frame whose single-part table names in `views`
+    * (matched case-insensitively) read those frames: parsed with the
+    * session's parser, each such name — in the body, in CTE
+    * definitions and in subqueries — replaced by its view's analyzed
+    * plan, then analyzed. Nothing is registered in the session's
+    * catalog, so concurrent callers binding the same name to
+    * different frames cannot see each other's. A CTE must not reuse
+    * a name in `views`.
+    */
+  def sqlOver(spark: SparkSession, text: String,
+      views: Map[String, DataFrame]): DataFrame = {
+    val byName = views.map { case (n, v) => n.toLowerCase(Locale.ROOT) -> v }
+    def bind(plan: LogicalPlan): LogicalPlan = plan.transformDownWithSubqueries {
+      case UnresolvedRelation(Seq(name), _, _)
+          if byName.contains(name.toLowerCase(Locale.ROOT)) =>
+        SubqueryAlias(name, byName(name.toLowerCase(Locale.ROOT)).queryExecution.analyzed)
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, q, depth) =>
+          (n, bind(q).asInstanceOf[SubqueryAlias], depth) })
+    }
+    ofRows(spark, bind(spark.sessionState.sqlParser.parsePlan(text)))
+  }
 
   /** Physically plan `df` the way Spark plans a subquery: its
     * optimized plan (cached data substituted) through the planner and

@@ -287,6 +287,37 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("served SQL statements: the prepared plan scans the pins in memory, no shuffle above them, one job per warm call") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.queries.SqlQueries
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try for (statement <- Seq[(org.apache.spark.sql.SparkSession, String) => DataFrame](
+        SqlQueries.topkRollup, SqlQueries.revenueByHour, SqlQueries.percentileSql)) {
+      val df = statement(spark, sfDir)
+      df.collect() // warm: pins, plan and broadcast built
+      val prepared = df.queryExecution.executedPlan.collectFirst {
+        case p: graft.plans.PreparedExec => p.plan
+      }
+      assert(prepared.isDefined, df.queryExecution.executedPlan.treeString)
+      val plan = prepared.get
+      // collect stops at the in-memory scans: the pins' own one-partition
+      // exchange is not part of the statement's plan
+      assert(plan.collect { case s: InMemoryTableScanExec => s }.nonEmpty, plan.treeString)
+      assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan.treeString)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      jobs.set(0)
+      statement(spark, sfDir).collect()
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      assert(jobs.get() === 1, plan.treeString)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("segment dedup: hash-keyed partial-agg keep-first, no window, no joins") {
     val p = planOf(graft.ops.NearDup.segmentDedup(
       Tables.documents(spark, sfDir), segWords = 10))

@@ -332,7 +332,7 @@ class TieredSpec extends SparkSuite {
       "absorb deleted an unmarked (in-flight) batch")
     // the write "completes" (marker lands) → the next tick folds it
     fs(root).create(
-      new Path(s"${Tiered.landingDir(root)}/_done.batch_id=1"), true).close()
+      new Path(s"${Tiered.landingDir(root)}/_done_batch_1"), true).close()
     assert(Tiered.absorb(spark, root, "ts", sc) === Seq(1L))
     assert(ids(Tiered.read(spark, root)) === Set(1L, 2L))
     // idempotent: nothing fresh, nothing re-folded
@@ -380,7 +380,7 @@ class TieredSpec extends SparkSuite {
     val landingFiles = Option(
       new java.io.File(Tiered.landingDir(root)).listFiles()).toSeq.flatten
     assert(!landingFiles.exists(f => f.getName.startsWith("batch_id=") ||
-      f.getName.startsWith("_done.")),
+      f.getName.startsWith("_done_")),
       s"landing not drained: ${landingFiles.map(_.getName).mkString(",")}")
   }
 
@@ -455,11 +455,26 @@ class TieredSpec extends SparkSuite {
       .toDF("event_id", "ts", "user_id"), 0L, root)
     // crash-shaped debris: a sweep deleted the dir but not the marker
     fs(root).create(new Path(
-      s"${Tiered.landingDir(root)}/_done.batch_id=42"), true).close()
+      s"${Tiered.landingDir(root)}/_done_batch_42"), true).close()
     assert(Tiered.absorb(spark, root, "ts", sc) === Seq(0L))
     assert(!fs(root).exists(new Path(
-      s"${Tiered.landingDir(root)}/_done.batch_id=42")),
+      s"${Tiered.landingDir(root)}/_done_batch_42")),
       "orphaned marker survived the tick")
+  }
+
+  test("a parquet read of the landing dir returns the landed rows, never the commit markers") {
+    def t(s: String) = java.sql.Timestamp.valueOf(s)
+    val root = freshRoot()
+    Tiered.landBatch(Seq((1L, t("2024-10-02 10:00:00"), 10L),
+        (2L, t("2024-10-02 11:00:00"), 11L))
+      .toDF("event_id", "ts", "user_id"), 0L, root)
+    Tiered.landBatch(Seq((3L, t("2024-10-02 12:00:00"), 12L))
+      .toDF("event_id", "ts", "user_id"), 1L, root)
+    assert(fs(root).listStatus(new Path(Tiered.landingDir(root)))
+      .count(_.getPath.getName.startsWith("_done")) === 2, "both batches carry a marker")
+    val landed = spark.read.parquet(Tiered.landingDir(root))
+    assert(ids(landed) === Set(1L, 2L, 3L))
+    assert(landed.count() === 3L)
   }
 
   test("compactHot folds a tick-fragmented hot date to one file; below-threshold dates untouched") {
@@ -907,7 +922,7 @@ class TieredSpec extends SparkSuite {
         s"landing mirror $i missing the batch directory")
       // the zero-length commit marker is part of the mirrored content
       // (a restored copy without it would absorb nothing)
-      assert(f.exists(new Path(s"$mirror/_done.batch_id=0")),
+      assert(f.exists(new Path(s"$mirror/_done_batch_0")),
         s"landing mirror $i missing the commit marker")
       assert(spark.read.parquet(s"$mirror/batch_id=0")
         .filter($"user_id" === victim).count() === 1L)
@@ -920,7 +935,7 @@ class TieredSpec extends SparkSuite {
       assert(spark.read.parquet(s"$mirror/batch_id=0")
         .filter($"user_id" === victim).count() === 0L,
         s"landing mirror $i still holds the erased user at rest")
-      assert(f.exists(new Path(s"$mirror/_done.batch_id=0")))
+      assert(f.exists(new Path(s"$mirror/_done_batch_0")))
     }
     // the innocent landed row still folds from the scrubbed landing
     assert(Tiered.absorb(spark, root, "ts", sc) === Seq(0L))
