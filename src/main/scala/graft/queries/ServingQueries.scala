@@ -35,15 +35,15 @@ object ServingQueries {
 
   /** The count-path lookup routed through replica groups
     * ([[graft.serving.ReplicaRouter]], the X6 analog): the
-    * materialized `topk_by_count` table is replicated n=2 on first
-    * routed use (keyed by serving root, so a regenerated dataset
-    * re-replicates), and the query pins to the replica its tenant key
-    * hashes to — identical results from any copy (ReplicasSpec proves
-    * copy-equality and failover), so this shares
+    * materialized `topk_by_count` table keeps n=2 mirrors under its
+    * serving root, converged incrementally on the first routed read
+    * after each commit, and the query pins to the mirror its tenant
+    * key hashes to — identical results from any copy (ReplicasSpec
+    * proves copy-equality and failover), so this shares
     * `q_topk_lookup_served`'s oracle and hash-checks the whole
-    * replicate → route → read path. Stamp-driven re-replication and
-    * the pinned-copy cache live in the shared router, which also
-    * serves the revenue path and the API façade.
+    * converge → route → read path. Convergence and the pinned-copy
+    * cache live in the shared router, which also serves the revenue
+    * path and the API façade.
     */
   def topKLookupReplica(spark: SparkSession, dir: String): DataFrame = {
     val table = graft.serving.ReplicaRouter.table(spark, dir, "topk_by_count")
@@ -62,7 +62,8 @@ object ServingQueries {
     * desc (user asc tie-break pinned for determinism). Reads through
     * the replica router like the count path — Pinot routes every
     * query class through replica groups, not just one table — so
-    * this gate hash-checks the routed revenue path end-to-end.
+    * this gate hash-checks the routed revenue path (the
+    * `topk_by_revenue` mirrors) end-to-end.
     */
   def topKLookupRevenue(spark: SparkSession, dir: String): DataFrame = {
     val t0 = Serving.anchorMs(spark, dir) - 72L * hourMs
@@ -347,8 +348,8 @@ object ServingQueries {
       // the whole cold tier (TieredSpec pins the pruning)
       graft.serving.Tiered.demote(spark, p, midDate(spark, dir), sortCols,
         coldBloomCols = Seq("user_id"))
-      graft.serving.Tiered.replicateHot(spark, p, n = 2)
-      graft.serving.Tiered.replicateCold(spark, p, n = 2)
+      graft.serving.Tiered.replicate(spark, p, "hot", n = 2)
+      graft.serving.Tiered.replicate(spark, p, "cold", n = 2)
     }
 
   /** Mid-range date cut derived from the data itself (every oracle
@@ -801,7 +802,7 @@ object ServingQueries {
          |ORDER BY window_start_ms DESC, rnk ASC""".stripMargin,
     // the replica route reads a byte-identical copy of the same
     // table, so the oracle is the served lookup's — the gate then
-    // checks replicate + route + read end-to-end
+    // checks converge + route + read end-to-end
     "q_topk_lookup_replica" ->
       s"""SELECT window_start_ms, CAST(rnk AS BIGINT) AS rank, user_id, order_count, total_cents FROM (
          |  SELECT window_start_ms, user_id, order_count, total_cents,

@@ -48,8 +48,11 @@ import org.apache.spark.sql.SparkSession
   * same-process threads serialize without file round-trips and
   * nested acquires (Serving.eraseUser → EraseStage.run) are
   * reentrant. The underscore prefix keeps `_lease` invisible to every
-  * parquet read of the root's tables, and [[Replicas]] skips
-  * underscore entries when copying.
+  * parquet read of the root's tables, and the mirror walk of
+  * [[Replicas]] skips underscore entries, so the lease and its
+  * heartbeat sidecars never land in a mirror. Mirror convergence runs
+  * under this lease ([[Tiered.replicate]], [[ReplicaRouter.table]],
+  * the erase paths).
   *
   * Known limit (documented, standard for lock files): rename-based
   * takeover assumes the FS renames atomically (HDFS, local, ABFS do;

@@ -17,12 +17,15 @@ import graft.tables.TableManager
   *  2. sweeps retention (expired `p_date` directory drops);
   *  3. compacts every FRAGMENTED index/state root — and only the
   *     fragmented ones, so the call is idempotent: a second run over
-  *     a clean fleet reads directory listings and rewrites nothing.
+  *     a clean fleet reads directory listings and rewrites nothing;
+  *  4. runs the [[Tiered]] lifecycle (absorb, demote, retention) and
+  *     converges the tiers' mirrors last ([[Replicas]]; mirrors
+  *     converge in place, so no superseded copy set needs a sweep).
   *
-  * Returns a log of the actions actually taken
-  * (`recovered:`/`swept:`/`compacted:`/`ran:` entries), empty when
-  * the fleet was already clean — what a scheduler surfaces as the
-  * task result.
+  * Returns a log of the actions actually taken (`recovered:`/
+  * `swept:`/`compacted:`/`absorbed:`/`demoted:`/`replicated:`/`ran:`
+  * entries), empty when the fleet was already clean — what a
+  * scheduler surfaces as the task result.
   */
 object Maintenance {
 
@@ -64,15 +67,6 @@ object Maintenance {
   final case class NearDupIdx(root: String, n: Int = 3,
     minFiles: Int = 8) extends Task
 
-  /** A serving root's replica sets
-    * (`<servingRoot>/_replicas/<table>/gen=*`): sweep the
-    * generations a refresh/erase superseded — the router builds new
-    * generations but never deletes old ones mid-query, so without
-    * this leg a long-lived deployment accretes one full table copy
-    * set per content-stamp change.
-    */
-  final case class ReplicaSets(servingRoot: String) extends Task
-
   /** A [[Tiered]] root: fold any landed streaming batches into the
     * hot tier first (when `absorbIngest`, [[Tiered.absorb]] — the
     * realtime→offline leg), then relocate hot dates older than
@@ -88,11 +82,13 @@ object Maintenance {
     * SAME values every run or relocated dates drift between layouts.
     * `replicateCold = Some(n)` additionally converges the archive's
     * n replica mirrors as one of the tick's LAST legs
-    * ([[Tiered.replicateCold]] — incremental, O(changed dates));
+    * ([[Tiered.replicate]] — incremental, O(changed dates));
     * `replicateHot`/`replicateLanding` do the same for the hot tier
     * (realtime-segment replication — after the tick's absorb/demote/
     * compact settle the hot content) and the landing zone (durability
-    * copies of landed-but-unabsorbed batches).
+    * copies of landed-but-unabsorbed batches). Serving-table mirrors
+    * need no leg here: they converge on the next routed read
+    * ([[ReplicaRouter]]) and inside [[Serving.eraseUser]].
     */
   final case class Tier(root: String, sortCols: Seq[String],
     hotDays: Int, nowDate: String,
@@ -144,7 +140,6 @@ object Maintenance {
         case Ann(r, _) => r
         case Pq(r, _) => r
         case NearDupIdx(r, _, _) => r
-        case ReplicaSets(servingRoot) => servingRoot
         case t: Tier => t.root
         case IngestCompact(_, _) => throw new MatchError(t) // unreachable
       }
@@ -192,10 +187,6 @@ object Maintenance {
       val rec = recovered(spark, root)
       rec ++ NearDupIndex.compact(spark, root, n, minFiles)
         .map(t => s"compacted:$root/$t")
-
-    case ReplicaSets(servingRoot) =>
-      ReplicaRouter.sweepStale(spark, servingRoot)
-        .map(p => s"swept:$p")
 
     case Tier(root, sortCols, hotDays, nowDate, retention, filesPerDate,
         coldBloomCols, absorbIngest, tsCol, bloomCol, compactMin,
@@ -246,19 +237,15 @@ object Maintenance {
       // tiers' content, so mirroring earlier in the tick would
       // converge the replicas to a state this same tick immediately
       // obsoletes
-      def repl(tier: String, nOpt: Option[Int],
-          f: Int => Seq[Int]): Seq[String] =
+      def repl(tier: String, nOpt: Option[Int]): Seq[String] =
         nOpt.toSeq.flatMap { n =>
-          f(n).zipWithIndex.collect {
+          Tiered.replicate(spark, root, tier, n).zipWithIndex.collect {
             case (c, i) if c > 0 =>
               s"replicated:$root/_replicas/$tier/replica=$i:+$c"
           }
         }
-      val replicated =
-        repl("hot", replicateHot, Tiered.replicateHot(spark, root, _)) ++
-        repl("landing", replicateLanding,
-          Tiered.replicateLanding(spark, root, _)) ++
-        repl("cold", replicate, Tiered.replicateCold(spark, root, _))
+      val replicated = repl("hot", replicateHot) ++
+        repl("landing", replicateLanding) ++ repl("cold", replicate)
       rec ++ absorbed ++ demoted ++ compacted ++ swept ++ replicated
 
     case IngestCompact(_, _) =>

@@ -32,11 +32,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * crashed staged commit, [[EraseStage.recover]]) before building, so
   * a fresh JVM's first read never serves a holed or mixed layout.
   *
-  * The disk token doubles as the replica-mirror generation
-  * ([[Tiered]]): a mirror manifest recording the CURRENT token was
-  * converged after the last mutation, which is what authorizes
-  * serving it when the primary's listing has drifted (primary damage,
-  * not staleness — see [[Tiered.replicateTier]]).
+  * The disk token doubles as the mirror generation of [[Replicas]]
+  * (the [[Tiered]] tiers' and the routed [[Serving]] tables' mirrors):
+  * a mirror manifest recording the CURRENT token was converged after
+  * the last mutation, which is what authorizes serving it — and
+  * healing the primary from it — when the primary's listing has
+  * drifted (primary damage, not staleness).
   *
   * Token reads/writes are not atomic with the data commit — a reader
   * can observe the token before the commit it announces or vice

@@ -445,10 +445,10 @@ object Serving {
   /** Meta row: the now-anchor (max event ts) + the last applied
     * refresh batch id (-1 = built by batch rebuild; see
     * [[refreshWithBatch]]'s replay guard) + the erase generation —
-    * bumped by every [[eraseUser]], because an erase that does not
-    * move the max ts or the batch id is STILL a content change that
-    * derived copies (replica sets) must re-derive from; without it a
-    * replica set would keep serving the erased user forever.
+    * bumped by every [[eraseUser]], so the row changes on every
+    * content change, even an erase that moves neither the max ts nor
+    * the batch id. (Mirrors of the routed tables follow the root's
+    * [[RootCache]] token, not this row.)
     */
   private def writeMeta(spark: SparkSession, root: String, maxTsMs: Long,
       lastBatchId: Long, eraseGen: Long = 0L): Unit =
@@ -466,12 +466,9 @@ object Serving {
     (row.getAs[Long]("max_ts_ms"), row.getAs[Long]("last_batch_id"), gen)
   }
 
-  /** Content stamp of the serving state: (max event ts, last applied
-    * batch id, erase generation) — changes on every applied refresh
-    * AND every erase, so derived copies (replica sets) can detect
-    * in-place rewrites that directory mtimes do not reliably
-    * surface. A [[RootCache]] slot, so a routed lookup costs no
-    * meta-read job between refreshes.
+  /** The meta row: (max event ts, last applied batch id, erase
+    * generation). A [[RootCache]] slot, so the now-anchor
+    * ([[anchorMs]]) costs no meta-read job between refreshes.
     */
   private[graft] def metaStamp(spark: SparkSession, root: String): (Long, Long, Long) =
     RootCache.get(spark, root, "stamp")(readMeta(spark, root))
@@ -779,9 +776,13 @@ object Serving {
     * dynamic overwrite alone cannot erase a partition the recomputed
     * frame no longer writes). The user-keyed profile table rewrites
     * whole (it is user-, not date-partitioned), the meta anchor
-    * recomputes from the surviving events, and the content stamp
-    * change makes replica sets re-replicate. Crash recovery matches
-    * [[refreshWithBatch]]'s contract: rebuild from the raw sink.
+    * recomputes from the surviving events, and every existing mirror
+    * set under `<root>/_replicas` ([[ReplicaRouter]]) converges inside
+    * the same lease, so the erased user's rows leave every copy AT
+    * REST in this call (after a crash between the commit and this
+    * convergence, the next routed read converges). Crash recovery
+    * matches [[refreshWithBatch]]'s contract: rebuild from the raw
+    * sink.
     *
     * Returns the affected p_date strings (empty = user unknown,
     * nothing touched).
@@ -789,7 +790,12 @@ object Serving {
   def eraseUser(spark: SparkSession, root: String, events: DataFrame,
       userId: Long): Seq[String] =
     Lease.withLease(spark, root, "erase-user") {
-      eraseUserLocked(spark, root, events, userId)
+      val dates = eraseUserLocked(spark, root, events, userId)
+      if (dates.nonEmpty) {
+        val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        Replicas.convergeAll(spark, root, t => fs.exists(new Path(s"$root/$t")))
+      }
+      dates
     }
 
   private def eraseUserLocked(spark: SparkSession, root: String,
@@ -930,9 +936,9 @@ object Serving {
       EraseStage.Overwrite("profile_upsert",
         Map("parquet.bloom.filter.enabled#user_id" -> "true"),
         Some("user_id")) -> profileUpsertState(erased),
-      // the meta stamp commits atomically WITH the rewrites: the
-      // erase-generation bump (replica re-derive trigger) can no
-      // longer be lost to a crash after the data rewrites landed
+      // the meta row commits atomically WITH the rewrites: the
+      // erase-generation bump can never be lost to a crash after the
+      // data rewrites landed
       EraseStage.Overwrite("meta") ->
         Seq((maxRow.getLong(0), lastApplied, eraseGen + 1L))
           .toDF("max_ts_ms", "last_batch_id", "erase_gen"))

@@ -774,37 +774,6 @@ object Tiered {
       }
     }
 
-  /** Re-converge every existing tier mirror to its primary's current
-    * content (no-op listing when nothing changed); a tier that no
-    * longer exists — everything erased or retention-swept — takes its
-    * mirrors with it. Called by the deletion paths ([[eraseUser]],
-    * [[retentionSweep]]) so compliance deletes propagate to every
-    * copy in the same call; additive changes ([[demote]]'s
-    * relocations, [[absorb]]'s appends) leave convergence to the
-    * maintenance tick's replicate legs. A LONE mirror (n = 1 — a
-    * partially-bootstrapped or half-deleted replica area, below the
-    * public APIs' n ≥ 2 floor) still converges: it is unreachable by
-    * routing but holds the erased user's segment files AT REST, which
-    * is exactly what right-to-be-forgotten forbids (r15 ADVICE).
-    */
-  private def convergeMirrors(spark: SparkSession, root: String): Unit = {
-    val f = fs(spark, root)
-    mirrorTiers.foreach { tier =>
-      val area = new Path(replicaArea(root, tier))
-      if (f.exists(area)) {
-        val tierLive =
-          if (tier == "landing") f.exists(new Path(landingDir(root)))
-          else liveTier(spark, root, tier)
-        if (!tierLive) { f.delete(area, true); () }
-        else {
-          val n = f.listStatus(area).count(s =>
-            s.isDirectory && s.getPath.getName.startsWith("replica="))
-          if (n >= 1) { replicateTier(spark, root, tier, n); () }
-        }
-      }
-    }
-  }
-
   /** Final deletion at the end of the lifecycle: drop every COLD date
     * strictly older than `beforeDate` (directory-grain, idempotent —
     * the [[graft.tables.TableManager.retentionSweep]] semantics on
@@ -847,9 +816,9 @@ object Tiered {
     * frame stays UNPINNED, deliberately: the hot tier's pruned scan
     * reads one page-cached date per recent-window query, and
     * columnar-cache decompression measured ~25% SLOWER than that
-    * (besides, the raw tiers can be arbitrarily large). The cold
-    * tier routes through its replica set when one matching the
-    * current archive content exists ([[replicateCold]]). Handles stay
+    * (besides, the raw tiers can be arbitrarily large). Each tier
+    * routes through its mirrors when a verified one exists
+    * ([[replicate]]). Handles stay
     * subject to the documented discipline: consume promptly; a handle
     * parked across a maintenance tick can observe a relocation's
     * apply window.
@@ -865,103 +834,26 @@ object Tiered {
       tiers.reduce(_ unionByName _)
     }
 
-  /** Tiers that can carry replica mirrors. `hot` and `cold` route
-    * reads through their mirrors with failover; `landing` mirrors are
-    * durability copies only (nothing queries the landing zone — a
-    * lost landed batch restores from its mirror operator-side), but
-    * they converge and scrub on the same machinery, so the landing
-    * zone stops being single-copy data between [[landBatch]] and
-    * [[absorb]].
+  /** Tiers that can carry replica mirrors ([[Replicas]], keyed by
+    * (root, tier)). `hot` and `cold` route reads through their
+    * mirrors with failover; `landing` mirrors are durability copies
+    * only (nothing queries the landing zone — a lost landed batch
+    * restores from its mirror operator-side), but they converge and
+    * scrub on the same machinery, so the landing zone stops being
+    * single-copy data between [[landBatch]] and [[absorb]].
     */
   private[graft] val mirrorTiers = Seq("hot", "cold", "landing")
 
-  private def replicaArea(root: String, tier: String): String =
-    s"$root/_replicas/$tier"
-
-  private val MirrorManifest = "_replica_manifest"
-
-  /** One tier's (relative path → size) file listing — the tier's
-    * content identity: any mutation changes it, so a mirror whose
-    * manifest digests to the same value is byte-current. For the
-    * LANDING tier the zero-length commit markers
-    * are part of the content (a restored copy without them would
-    * absorb nothing), so they are the one underscore-prefixed name
-    * class that tier's walk keeps.
+  /** The one hidden-name class a tier's mirrors carry: the LANDING
+    * tier's zero-length commit markers are part of its content (a
+    * restored copy without them would absorb nothing).
     */
-  private def tierListing(spark: SparkSession, root: String,
-      tier: String): Seq[(String, Long)] = {
-    val f = fs(spark, root)
-    val base = f.makeQualified(new Path(s"$root/$tier"))
-    def keep(n: String): Boolean =
-      (!n.startsWith("_") && !n.startsWith(".")) ||
-        (tier == "landing" && markedBatch(n).isDefined)
-    def walk(p: Path): Seq[(String, Long)] =
-      f.listStatus(p).toSeq
-        .filter(s => keep(s.getPath.getName))
-        .flatMap(s =>
-          if (s.isDirectory) walk(s.getPath)
-          else Seq((s.getPath.toString.stripPrefix(base.toString)
-            .stripPrefix("/"), s.getLen)))
-    if (!f.exists(base)) Nil else walk(base)
-  }
+  private def mirrorKeep(tier: String): String => Boolean =
+    n => tier == "landing" && markedBatch(n).isDefined
 
-  /** A mirror's ACTUAL (relative path → size) map — ONE recursive
-    * listing walk (O(directories) FS calls), shared by verification
-    * at serve time and the convergence diff; replaces the r15
-    * per-file `getFileStatus` probes (the wrong shape at a
-    * multi-million-file archive).
-    */
-  private def mirrorActual(spark: SparkSession, mirror: String,
-      tier: String): Map[String, Long] = {
-    val f = fs(spark, mirror)
-    val base = f.makeQualified(new Path(mirror))
-    def keep(n: String): Boolean =
-      (!n.startsWith("_") && !n.startsWith(".")) ||
-        (tier == "landing" && markedBatch(n).isDefined)
-    def walk(p: Path): Seq[(String, Long)] =
-      if (!f.exists(p)) Nil
-      else f.listStatus(p).toSeq
-        .filter(s => s.isDirectory || keep(s.getPath.getName))
-        .flatMap(s =>
-          if (s.isDirectory) walk(s.getPath)
-          else Seq((s.getPath.toString.stripPrefix(base.toString)
-            .stripPrefix("/"), s.getLen)))
-    walk(base).toMap
-  }
-
-  private def digestOf(listing: Seq[(String, Long)]): String = {
-    val text = listing.map { case (rel, len) => s"$rel\t$len" }
-      .sorted.mkString("\n")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** A mirror manifest: the generation token it was converged under
-    * ("" for manifests predating the token) + the (rel, size)
-    * entries. Lines starting with `#` are metadata (`#gen\t<token>`);
-    * unknown metadata keys are ignored, so older readers of newer
-    * manifests degrade to the listing-match check only.
-    */
-  private def readMirrorManifest(spark: SparkSession,
-      mirror: String): Option[(String, Seq[(String, Long)])] = {
-    val f = fs(spark, mirror)
-    val p = new Path(s"$mirror/$MirrorManifest")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = txt.linesIterator.filter(_.nonEmpty).toSeq
-      val gen = lines.collectFirst {
-        case l if l.startsWith("#gen\t") => l.stripPrefix("#gen\t")
-      }.getOrElse("")
-      Some((gen, lines.filterNot(_.startsWith("#")).map { l =>
-        val t = l.lastIndexOf('\t')
-        (l.substring(0, t), l.substring(t + 1).toLong)
-      }))
-    }
-  }
+  private def tierLive(spark: SparkSession, root: String, tier: String): Boolean =
+    if (tier == "landing") fs(spark, root).exists(new Path(landingDir(root)))
+    else liveTier(spark, root, tier)
 
   /** A mirror directory read through the root's schema registry when
     * one exists — the same rule as [[tierFrame]]: a mirror is
@@ -976,257 +868,56 @@ object Tiered {
       graft.tables.Evolve.readAt(spark, root, dir)
     else spark.read.parquet(dir)
 
-  /** One tier's serving frame: when replica MIRRORS exist
-    * ([[replicateTier]]), the read routes to the copy the (root,
-    * tier) hashes to, with two-sided failover:
-    *
-    *  - a mirror whose manifest digests to the live primary listing
-    *    and whose files verify (one listing walk) serves — the
-    *    steady state;
-    *  - a mirror that verifies against its own manifest AND whose
-    *    manifest records the CURRENT generation token serves even
-    *    when the primary listing has drifted: with no intervening
-    *    write (the token every write body rewrites is unchanged),
-    *    drift means the PRIMARY is damaged — a lost/truncated
-    *    segment — and the converged mirror is the good copy. This is
-    *    the direction r15 could not express: freshness wins over
-    *    replication, but damage is not freshness.
-    *  - anything else (stale after a write, damaged copy) is skipped
-    *    for the next copy and finally the primary.
+  /** One tier's serving frame: the verified mirror the (root, tier)
+    * hashes to, else the next verified mirror, else the primary
+    * ([[Replicas.servingCopy]]).
     */
   private def tierServeFrame(spark: SparkSession, root: String,
-      tier: String): DataFrame = {
-    val f = fs(spark, root)
-    val area = new Path(replicaArea(root, tier))
-    def primary = tierFrame(spark, root, tier)
-    if (!f.exists(area)) primary
-    else {
-      val mirrors = f.listStatus(area).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("replica="))
-        .sorted
-      if (mirrors.isEmpty) primary
-      else {
-        val stamp = digestOf(tierListing(spark, root, tier))
-        val gen = RootCache.token(spark, root)
-        val start = Replicas.replicaFor(s"$root/$tier", mirrors.size)
-        val routed = (0 until mirrors.size)
-          .map(d => mirrors((start + d) % mirrors.size))
-        def intact(dir: String, entries: Seq[(String, Long)]): Boolean = {
-          val actual = mirrorActual(spark, dir, tier)
-          entries.forall { case (rel, len) => actual.get(rel).contains(len) }
-        }
-        routed.iterator.flatMap { m =>
-          val dir = s"${replicaArea(root, tier)}/$m"
-          readMirrorManifest(spark, dir) match {
-            case Some((_, entries)) if digestOf(entries) == stamp &&
-                intact(dir, entries) =>
-              Some(mirrorFrame(spark, root, dir))
-            case Some((mGen, entries)) if mGen.nonEmpty && mGen == gen &&
-                intact(dir, entries) =>
-              // primary listing drifted with no intervening write:
-              // primary damage — serve the converged, verified copy
-              Some(mirrorFrame(spark, root, dir))
-            case _ => None // stale or damaged: fail over
-          }
-        }.nextOption().getOrElse(primary)
-      }
-    }
-  }
+      tier: String): DataFrame =
+    Replicas.servingCopy(spark, root, tier, s"$root/$tier", mirrorKeep(tier))
+      .map(mirrorFrame(spark, root, _))
+      .getOrElse(tierFrame(spark, root, tier))
 
-  /** Maintain `n` replica MIRRORS of the COLD tier under
-    * `<root>/_replicas/cold/replica=<i>` — the archive-side X6 leg:
-    * the hot tier and every serving table already route through
-    * replica groups, and the archive was the one remaining single
-    * copy (a deleted cold file was unrecoverable). Unlike the serving
-    * tables' generation copies ([[Replicas.replicate]] — fine for
-    * small derived tables), the archive mirrors INCREMENTALLY: each
-    * tick diffs the primary listing against the mirror's ACTUAL files
-    * (one metadata walk, no data read — which is also what lets a
-    * damaged mirror HEAL: a deleted/truncated segment re-copies on
-    * the next tick instead of staying a permanent failover) and
-    * copies only what the mirror lacks (one cluster job fans files
-    * across executors; segments copy byte-identical, so sort order,
-    * row-group stats, and the erase-key blooms carry over), commits
-    * the new manifest atomically (tmp + rename), then sweeps files
-    * the manifest no longer lists — so a steady-state tick costs
-    * O(changed dates) in DATA, the same bound as the demote/erase it
-    * mirrors, never O(archive). Crash safety is read-side: a mirror
-    * without a current manifest (mid-update, crashed update) fails
-    * the digest or size check in [[read]] and the route falls through
-    * to the next copy or the primary; the next tick re-converges the
-    * mirror idempotently. Returns the per-mirror file counts copied
-    * (all-zero = mirrors were already current; empty = no cold
-    * tier).
-    */
-  def replicateCold(spark: SparkSession, root: String,
-      n: Int = 2): Seq[Int] = {
-    require(n >= 2, s"replication below 2 is just the table (n=$n)")
-    replicateTier(spark, root, "cold", n)
-  }
-
-  /** Maintain `n` mirrors of the HOT tier — the r15 gap: after the
-    * archive got its mirrors, hot dates were the system's only
-    * routinely-read single-copy data (sole copy between [[absorb]],
-    * which sweeps the landing, and [[demote]]); Pinot replicates
-    * realtime/consuming segments too
+  /** Maintain `n` replica mirrors of one tier (`hot`, `cold` or
+    * `landing`) under `<root>/_replicas/<tier>/replica=<i>` — Pinot
+    * replicates realtime and offline segments alike
     * (orders_raw_upsert_table.json:14 `replication`, :64-66
-    * replica-group routing of every query class). Same incremental
-    * machinery, same failover/heal semantics, running on the same
-    * maintenance tick.
+    * replica-group routing of every query class). Convergence is
+    * [[Replicas.converge]]: incremental (a steady-state tick costs
+    * O(changed dates) in DATA, the same bound as the demote/erase it
+    * mirrors, never O(tier)), heals a damaged primary from a
+    * current-generation mirror first, and is crash-safe read-side.
+    * Additive changes ([[demote]]'s relocations, [[absorb]]'s
+    * appends) converge on the maintenance tick's replicate legs; the
+    * deletion paths converge in-call. Returns the per-mirror file
+    * counts copied (all-zero = mirrors were already current; empty =
+    * tier absent).
     */
-  def replicateHot(spark: SparkSession, root: String,
+  def replicate(spark: SparkSession, root: String, tier: String,
       n: Int = 2): Seq[Int] = {
     require(n >= 2, s"replication below 2 is just the table (n=$n)")
-    replicateTier(spark, root, "hot", n)
-  }
-
-  /** Durability mirrors of the LANDING zone (commit markers
-    * included), closing the landed-but-unabsorbed single-copy window.
-    */
-  def replicateLanding(spark: SparkSession, root: String,
-      n: Int = 2): Seq[Int] = {
-    require(n >= 2, s"replication below 2 is just the table (n=$n)")
-    replicateTier(spark, root, "landing", n)
-  }
-
-  /** Converge `n` replica mirrors of one tier to the primary's
-    * current content. Unlike the serving tables' generation copies
-    * ([[Replicas.replicate]] — fine for small derived tables), tier
-    * mirrors converge INCREMENTALLY: each tick diffs the primary
-    * listing against the mirror's ACTUAL files (one metadata walk, no
-    * data read — which is also what lets a damaged mirror HEAL: a
-    * deleted/truncated segment re-copies on the next tick instead of
-    * staying a permanent failover) and copies only what the mirror
-    * lacks (one cluster job fans files across executors; segments
-    * copy byte-identical, so sort order, row-group stats, and the
-    * erase-key blooms carry over), commits the new manifest
-    * atomically (tmp + rename) with the current generation token
-    * recorded, then sweeps files the manifest no longer lists — so a
-    * steady-state tick costs O(changed dates) in DATA, the same bound
-    * as the mutation it mirrors, never O(tier). Before converging, a
-    * DAMAGED PRIMARY heals from its mirrors: a file a current-
-    * generation mirror holds at manifest size but the primary lacks
-    * copies BACK (legitimate rewrites always move the generation
-    * token first, so a same-generation drift can only be damage).
-    * Crash safety is read-side: a mirror without a current manifest
-    * fails the digest or size check in [[read]] and the route falls
-    * through; the next tick re-converges idempotently. Returns the
-    * per-mirror file counts copied (all-zero = mirrors were already
-    * current; empty = tier absent).
-    */
-  private[graft] def replicateTier(spark: SparkSession, root: String,
-      tier: String, n: Int): Seq[Int] =
+    require(mirrorTiers.contains(tier), s"unknown tier $tier")
     Lease.withLease(spark, root, "tiered-replicate") {
       EraseStage.recover(spark, root)
-      require(mirrorTiers.contains(tier), s"unknown tier $tier")
-      val landingLive = tier == "landing" &&
-        fs(spark, root).exists(new Path(landingDir(root)))
-      if (!landingLive && !liveTier(spark, root, tier)) Seq.empty
+      if (!tierLive(spark, root, tier)) Seq.empty
       else {
-        val f = fs(spark, root)
-        val primaryQ = f.makeQualified(new Path(s"$root/$tier")).toString
-        healPrimary(spark, root, tier, n)
-        val listing = tierListing(spark, root, tier)
-        val want = listing.toMap
-        val gen = RootCache.token(spark, root)
-        val manifestText =
-          (if (gen.isEmpty) "" else s"#gen\t$gen\n") +
-            listing.map { case (rel, len) => s"$rel\t$len" }
-              .sorted.mkString("", "\n", "\n")
-        val copiedCounts = (0 until n).map { i =>
-          val mirror = s"${replicaArea(root, tier)}/replica=$i"
-          // diff against the mirror's ACTUAL files, not its manifest
-          // (one metadata listing walk per tick, no data read)
-          val actual = mirrorActual(spark, mirror, tier)
-          val adds = listing.filter { case (rel, len) =>
-            !actual.get(rel).contains(len) }
-          if (adds.nonEmpty) {
-            val serConf = new org.apache.spark.util.SerializableConfiguration(
-              spark.sparkContext.hadoopConfiguration)
-            val pairs = adds.map { case (rel, _) =>
-              (s"$primaryQ/$rel", s"$mirror/$rel") }
-            spark.sparkContext
-              .parallelize(pairs, math.min(pairs.size, 64).max(1))
-              .foreach { case (from, to) =>
-                val c = serConf.value
-                val fp = new Path(from)
-                val tp = new Path(to)
-                org.apache.hadoop.fs.FileUtil.copy(
-                  fp.getFileSystem(c), fp, tp.getFileSystem(c), tp,
-                  false, true, c)
-                ()
-              }
-          }
-          // current = same entries AND the same generation token
-          // recorded (a content-identical manifest from a previous
-          // generation still rewrites, so the token authorizing the
-          // primary-damage inference stays fresh)
-          val manifestCurrent = readMirrorManifest(spark, mirror)
-            .exists { case (mGen, entries) =>
-              digestOf(entries) == digestOf(listing) && mGen == gen }
-          if (adds.nonEmpty || !manifestCurrent) {
-            // atomic manifest swap: tmp + delete-old + rename. A crash
-            // between the delete and the rename leaves the mirror
-            // manifest-less — readers fail it over, the next tick
-            // re-converges it from the actual-file diff
-            val tmp = new Path(s"$mirror/.${MirrorManifest}.tmp")
-            val out = f.create(tmp, true)
-            try out.write(manifestText.getBytes("UTF-8"))
-            finally out.close()
-            f.delete(new Path(s"$mirror/$MirrorManifest"), false)
-            require(f.rename(tmp, new Path(s"$mirror/$MirrorManifest")),
-              s"failed to publish mirror manifest for $mirror")
-            // sweep files the new manifest no longer lists (dropped
-            // dates, erased rewrites, crashed-update orphans)
-            actual.keysIterator
-              .filterNot(want.contains)
-              .foreach(rel => f.delete(new Path(s"$mirror/$rel"), false))
-          }
-          adds.size
-        }
+        val copied = Replicas.converge(spark, root, tier, n, mirrorKeep(tier))
         RootCache.invalidate(spark, root)
-        copiedCounts
+        copied
       }
     }
+  }
 
-  /** Restore PRIMARY files lost to damage from a current-generation
-    * mirror, before convergence would otherwise propagate the loss
-    * into every copy (making the tick that exists to protect the data
-    * the thing that destroys its last good copy). The inference is
-    * the same one [[tierServeFrame]] serves on: every legitimate
-    * rewrite moves the generation token BEFORE touching files, so a
-    * mirror manifest recording the CURRENT token that lists a file
-    * the primary lacks (or holds at another size) can only mean the
-    * primary lost it. Only files the mirror actually holds at
-    * manifest size copy back; anything else waits for an operator.
+  /** Re-converge every existing tier mirror set to its primary (no-op
+    * listing when nothing changed); a tier that no longer exists —
+    * everything erased or retention-swept — takes its mirrors with
+    * it. Called inside the deletion paths' lease ([[eraseUser]],
+    * [[retentionSweep]]) so compliance deletes reach every copy in
+    * the same call.
     */
-  private def healPrimary(spark: SparkSession, root: String,
-      tier: String, n: Int): Unit = {
-    val gen = RootCache.token(spark, root)
-    if (gen.nonEmpty) {
-      val f = fs(spark, root)
-      val primary = tierListing(spark, root, tier).toMap
-      var healed = false
-      (0 until n).foreach { i =>
-        val mirror = s"${replicaArea(root, tier)}/replica=$i"
-        readMirrorManifest(spark, mirror) match {
-          case Some((mGen, entries)) if mGen == gen =>
-            val actual = mirrorActual(spark, mirror, tier)
-            entries.foreach { case (rel, len) =>
-              if (!primary.get(rel).contains(len) &&
-                  actual.get(rel).contains(len)) {
-                val from = new Path(s"$mirror/$rel")
-                val to = new Path(s"$root/$tier/$rel")
-                org.apache.hadoop.fs.FileUtil.copy(f, from, f, to,
-                  false, true, spark.sparkContext.hadoopConfiguration)
-                healed = true
-              }
-            }
-          case _ => () // stale/absent manifest: no heal authority
-        }
-      }
-      if (healed) RootCache.invalidate(spark, root)
-    }
+  private def convergeMirrors(spark: SparkSession, root: String): Unit = {
+    Replicas.convergeAll(spark, root, tierLive(spark, root, _), mirrorKeep)
+    RootCache.invalidate(spark, root)
   }
 
   /** One tier's frame (plan tests / tier-local audits). */

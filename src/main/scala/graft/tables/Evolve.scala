@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * metadata sweep per query, unusable over millions of segments. Here
   * the authoritative schema lives in ONE versioned file under the
   * table root (`_schema.v<N>`, atomic create, max version wins — the
-  * same monotonic-version discipline the replica generations use),
+  * same monotonic-version discipline StateCompactor's generations use),
   * so a read costs one small-file fetch regardless of table size, and
   * evolution is one metadata write: no data file is touched, ever.
   *

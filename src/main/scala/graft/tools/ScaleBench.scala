@@ -165,7 +165,7 @@ object ScaleBench {
     // intentionally O(archive) step (a brand-new replica has
     // everything to copy)
     val t2 = System.nanoTime()
-    Tiered.replicateCold(spark, root, n = 2)
+    Tiered.replicate(spark, root, "cold", n = 2)
     val mirrorBootS = (System.nanoTime() - t2) / 1e9
     // (b) erase a user present in 2 of the archive's dates: bloom
     // row-group skipping bounds the discovery, the rewrite touches 2
@@ -185,7 +185,7 @@ object ScaleBench {
     // all) and its cost is the pure no-op metadata walk, the floor
     // every quiet tick pays however large the archive is
     val t3 = System.nanoTime()
-    val steadied = Tiered.replicateCold(spark, root, n = 2)
+    val steadied = Tiered.replicate(spark, root, "cold", n = 2)
     val mirrorSteadyS = (System.nanoTime() - t3) / 1e9
     require(steadied == Seq(0, 0),
       s"steady mirror tick copied $steadied files — the in-call erase " +

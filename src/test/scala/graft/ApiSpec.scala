@@ -100,15 +100,20 @@ class ApiSpec extends SparkSuite {
   }
 
   test("API routes through replica groups; both copies serve identical rows") {
-    import graft.serving.ReplicaRouter
-    // a routed call builds the replica set lazily
+    import graft.serving.{ReplicaRouter, Replicas}
+    val servingRoot = Serving.materialize(spark, sfDir)
+    // the table's N mirrors, each with its manifest
+    def mirrored(table: String): Boolean =
+      (0 until ReplicaRouter.N).forall(i => new java.io.File(
+        s"${Replicas.area(servingRoot, table)}/replica=$i/_replica_manifest").exists)
+    // a routed call converges the mirrors lazily
     val routed = TopKApi.topk(spark, sfDir).collect()
     assert(routed.nonEmpty)
-    val root = ReplicaRouter.replicaRootFor(spark, sfDir, "topk_by_count")
-    assert(root.isDefined, "API topk call must have built a replica set")
-    val a = spark.read.parquet(s"${root.get}/replica=0")
+    assert(mirrored("topk_by_count"), "API topk call must have built the mirrors")
+    val area = Replicas.area(servingRoot, "topk_by_count")
+    val a = spark.read.parquet(s"$area/replica=0")
       .collect().map(_.toString).sorted.toSeq
-    val b = spark.read.parquet(s"${root.get}/replica=1")
+    val b = spark.read.parquet(s"$area/replica=1")
       .collect().map(_.toString).sorted.toSeq
     assert(a === b) // copy-equality: any replica serves the same envelope
     assert(a.nonEmpty)
@@ -119,8 +124,8 @@ class ApiSpec extends SparkSuite {
     // the histogram/users states route too (percentiles/distinctUsers)
     TopKApi.percentiles(spark, sfDir).collect()
     TopKApi.distinctUsers(spark, sfDir).collect()
-    assert(ReplicaRouter.replicaRootFor(spark, sfDir, "rollup_1m_hist").isDefined)
-    assert(ReplicaRouter.replicaRootFor(spark, sfDir, "rollup_1m_users").isDefined)
+    assert(mirrored("rollup_1m_hist"))
+    assert(mirrored("rollup_1m_users"))
   }
 
   test("sketch quantiles honor the 6.25% relative-error bound against the exact route") {
@@ -163,16 +168,6 @@ class ApiSpec extends SparkSuite {
       r.isNullAt(r.fieldIndex("p90_cents")) &&
       r.isNullAt(r.fieldIndex("p99_cents")))
   }
-  /** A copy of the fixture's events in a fresh directory, so its
-    * serving root and route plans are the test's own.
-    */
-  private def isolated(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    dir
-  }
 
   /** The prepared plan a route frame was bound from (its template). */
   private def templateOf(df: org.apache.spark.sql.DataFrame): AnyRef =
@@ -186,7 +181,7 @@ class ApiSpec extends SparkSuite {
     import graft.plans.Prepared
     import graft.serving.{ReplicaRouter, Replicas}
     // isolated dataset: the refresh rewrites the serving root
-    val dir = isolated("graft_api_prepared")
+    val dir = eventsCopy("graft_api_prepared")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
     // every route over from × to × restaurant × k, each frame with its
@@ -248,7 +243,7 @@ class ApiSpec extends SparkSuite {
   }
 
   test("a root keeps a bounded number of p-list route plans; further p-lists plan per call") {
-    val dir = isolated("graft_api_plists")
+    val dir = eventsCopy("graft_api_plists")
     val lists = (1L to TopKApi.MaxQuantilePlans + 4L).map(p => Seq(p, 1000L - p))
     def plans(): Seq[AnyRef] = lists.map(ps => templateOf(TopKApi.quantile(spark, dir, pPerMille = ps)))
     val (once, again) = (plans(), plans())

@@ -18,13 +18,11 @@ import graft.tables.TableManager
 class MaintenanceSpec extends SparkSuite {
   import spark.implicits._
 
-  private def tmp(p: String): String =
-    java.nio.file.Files.createTempDirectory(p).toString
 
   test("one tick: debris recovered + expired dates swept + fragmented roots compacted; second tick no-op") {
     // --- a dated raw table: expired date, fragmented date, and a
     //     committed-but-unapplied staged erase
-    val t = tmp("graft_maint_tbl")
+    val t = tempDir("graft_maint_tbl")
     def evRows(d: String, ids: Range): DataFrame = ids
       .map(i => (i.toLong, java.sql.Timestamp.valueOf(s"$d 10:0${i % 6}:00"), i.toLong % 5))
       .toDF("event_id", "ts", "user_id")
@@ -44,7 +42,7 @@ class MaintenanceSpec extends SparkSuite {
 
     // --- a search index fragmented by three append deltas
     val docs = Tables.documents(spark, sfDir)
-    val sRoot = tmp("graft_maint_search")
+    val sRoot = tempDir("graft_maint_search")
     SearchIndex.materialize(docs.filter($"doc_id" % 3 === 0), sRoot)
     SearchIndex.append(spark, sRoot, docs.filter($"doc_id" % 3 === 1))
     SearchIndex.append(spark, sRoot, docs.filter($"doc_id" % 3 === 2))
@@ -55,14 +53,14 @@ class MaintenanceSpec extends SparkSuite {
     // --- an IVF index with cells fragmented by repeated appends
     val emb = Tables.embeddings(spark, sfDir)
     val centroids = Ann.coarseCentroids(emb, nCells = 4)
-    val aRoot = tmp("graft_maint_ann")
+    val aRoot = tempDir("graft_maint_ann")
     AnnIndex.materialize(emb.filter($"vec_id" % 3 === 0), centroids, aRoot)
     AnnIndex.append(spark, aRoot, emb.filter($"vec_id" % 3 === 1), centroids)
     AnnIndex.append(spark, aRoot, emb.filter($"vec_id" % 3 === 2), centroids)
     val aCount = spark.read.parquet(aRoot).count()
 
     // --- a media-ingest state, compacted through the generic wrapper
-    val mPath = tmp("graft_maint_media") + "/m"
+    val mPath = tempDir("graft_maint_media") + "/m"
     val media = graft.multimodal.Media.mediaFromEvents(Tables.events(spark, sfDir))
     mediaDedupState.append(media.limit(500), 0L, mPath)
     mediaDedupState.append(media.limit(1000), 1L, mPath)
@@ -73,7 +71,7 @@ class MaintenanceSpec extends SparkSuite {
     // partition per micro-batch), folded through the same wrapper —
     // the scheduled leg that keeps refreshTopK's per-batch read
     // bounded
-    val rPath = tmp("graft_maint_rollup") + "/r"
+    val rPath = tempDir("graft_maint_rollup") + "/r"
     val rEv = Tables.events(spark, sfDir)
     (0L to 2L).foreach { b =>
       StreamingPipeline.writeBatchIdempotent(
@@ -139,7 +137,7 @@ class MaintenanceSpec extends SparkSuite {
     import java.sql.Timestamp
     import graft.serving.{NearDupIndex, PqIndex, Serving}
     // a serving root crashed mid-erase (staged, manifest committed)
-    val root = java.nio.file.Files.createTempDirectory("graft_maint_srv").toString
+    val root = tempDir("graft_maint_srv")
     def ev(id: Long, t: String, u: Long, et: String, cents: Long) =
       (id, Timestamp.valueOf(t), u, et, cents / 100.0)
     val rows = Seq(
@@ -152,12 +150,12 @@ class MaintenanceSpec extends SparkSuite {
     EraseStage.stage(spark, root, Serving.eraseLegs(spark, root, evDf, 2L).legs)
     // fragmented PQ + near-dup roots
     val emb = Tables.embeddings(spark, sfDir)
-    val pqRoot = java.nio.file.Files.createTempDirectory("graft_maint_pq").toString
+    val pqRoot = tempDir("graft_maint_pq")
     PqIndex.materialize(spark, emb.filter($"vec_id" < 250), pqRoot)
     PqIndex.append(spark, pqRoot, emb.filter($"vec_id" >= 250 && $"vec_id" % 2 === 0))
     PqIndex.append(spark, pqRoot, emb.filter($"vec_id" >= 250 && $"vec_id" % 2 === 1))
     val docs = Tables.documents(spark, sfDir)
-    val ndRoot = java.nio.file.Files.createTempDirectory("graft_maint_nd").toString
+    val ndRoot = tempDir("graft_maint_nd")
     NearDupIndex.materialize(docs.filter($"doc_id" % 2 === 0), ndRoot)
     NearDupIndex.append(spark, ndRoot, docs.filter($"doc_id" % 2 === 1))
     val ndDocs = spark.read.parquet(s"$ndRoot/docs").count()
@@ -179,45 +177,5 @@ class MaintenanceSpec extends SparkSuite {
     assert(spark.read.parquet(s"$ndRoot/docs").count() === ndDocs)
     // idempotent second tick
     assert(Maintenance.run(spark, tasks).isEmpty)
-  }
-
-  test("the tick sweeps superseded replica generations; the live one survives") {
-    import java.sql.Timestamp
-    import graft.serving.{ReplicaRouter, Serving}
-    // isolated dataset: routing + refresh mutate the serving root
-    val dir = java.nio.file.Files.createTempDirectory("graft_maint_repl").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    // generation A: first routed use replicates under the serving root
-    val before = ReplicaRouter.table(spark, dir, "topk_by_count")
-      .collect().map(_.toString).sorted.toSeq
-    val genA = ReplicaRouter.replicaRootFor(spark, dir, "topk_by_count").get
-    val servingRoot = Serving.materialize(spark, dir)
-    assert(genA.startsWith(s"$servingRoot/_replicas/topk_by_count/gen="),
-      s"replica sets must live under the serving root, got $genA")
-    // a refresh moves the content stamp -> generation B on next route
-    val anchor = Serving.anchorMs(spark, dir)
-    val batch = (1 to 5).map(i =>
-        (new Timestamp(anchor + i * 60000L), 424242L, "click", 100L))
-      .toDF("ts", "user_id", "event_type", "value_cents")
-    Serving.refreshWithBatch(spark, servingRoot, batch, batchId = 0L)
-    val after = ReplicaRouter.table(spark, dir, "topk_by_count")
-      .collect().map(_.toString).sorted.toSeq
-    val genB = ReplicaRouter.replicaRootFor(spark, dir, "topk_by_count").get
-    assert(genB !== genA)
-    assert(after !== before, "refresh should have changed the served window")
-    assert(new java.io.File(genA.stripPrefix("file:")).exists,
-      "the router must never delete the superseded generation mid-query")
-    // the tick sweeps A, keeps B; routed reads still serve
-    val log = Maintenance.run(spark, Seq(Maintenance.ReplicaSets(servingRoot)))
-    assert(log.exists(l => l.startsWith("swept:") && l.contains("gen=")),
-      log.mkString("\n"))
-    assert(!new java.io.File(genA.stripPrefix("file:")).exists, "stale generation survived the sweep")
-    assert(new java.io.File(genB.stripPrefix("file:")).exists, "live generation swept")
-    assert(ReplicaRouter.table(spark, dir, "topk_by_count")
-      .collect().map(_.toString).sorted.toSeq === after)
-    // second tick: no-op
-    assert(Maintenance.run(spark, Seq(Maintenance.ReplicaSets(servingRoot))).isEmpty)
   }
 }

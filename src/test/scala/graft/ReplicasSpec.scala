@@ -1,50 +1,66 @@
 package graft
 
+import java.io.File
 import org.apache.spark.sql.functions._
-import graft.serving.{Replicas, Serving}
+import graft.serving.{ReplicaRouter, Replicas, Serving}
 
 /** Replica-group routing: identical copies, deterministic key→replica
-  * pinning, and failover when a replica disappears.
+  * pinning, failover when a replica is damaged or disappears, and
+  * in-place incremental convergence of the serving tables' mirrors.
   */
 class ReplicasSpec extends SparkSuite {
+  import spark.implicits._
 
-  private lazy val root: String = {
-    val servingRoot = Serving.materialize(spark, sfDir)
-    val r = java.nio.file.Files.createTempDirectory("graft_replicas").toString
-    Replicas.replicate(spark, s"$servingRoot/topk_by_count", r, n = 3)
+  private val table = "topk_by_count"
+
+  /** An isolated copy of the shared serving root's `topk_by_count`,
+    * mirrored n = 3 (a set's mirror count is whatever is on disk, so
+    * n = 3 never touches the shared root, which routes with N = 2).
+    */
+  private def mirroredCopy(prefix: String): String = {
+    val r = tempDir(prefix)
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new File(s"${Serving.materialize(spark, sfDir)}/$table"), new File(s"$r/$table"))
+    Replicas.converge(spark, r, table, 3)
     r
   }
+
+  private lazy val root: String = mirroredCopy("graft_replicas")
+
+  private def mirror(r: String, i: Int): String = s"${Replicas.area(r, table)}/replica=$i"
+
+  private def tenantOn(i: Int, n: Int = 3): String = (0 until 100).map(j => s"tenant-$j")
+    .find(Replicas.replicaFor(_, n) == i).get
+
+  private def walk(f: File): Seq[File] =
+    Option(f.listFiles).toSeq.flatten.flatMap(c => if (c.isDirectory) walk(c) else Seq(c))
+
+  private def segments(dir: String): Seq[File] =
+    walk(new File(dir)).filter(_.getName.endsWith(".parquet"))
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.select(col("window_start_ms"), col("rank"), col("user_id"))
       .collect().map(_.toString).toSet
 
   test("every replica serves the identical table") {
-    val all = (0 until 3).map(i => rows(spark.read.parquet(s"$root/replica=$i")))
+    val all = (0 until 3).map(i => rows(spark.read.parquet(mirror(root, i))))
     assert(all.forall(_ === all.head))
     assert(all.head.nonEmpty)
   }
 
   test("replicas are byte-identical segment copies: same files, same bytes, layout preserved") {
-    val servingRoot = Serving.materialize(spark, sfDir)
-    val src = s"$servingRoot/topk_by_count"
-    def manifest(dir: String): Map[String, Long] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        Option(f.listFiles).toSeq.flatten.flatMap(c =>
-          if (c.isDirectory) walk(c) else Seq(c))
-      walk(new java.io.File(dir))
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getAbsolutePath.stripPrefix(dir) -> f.length).toMap
-    }
+    val src = s"$root/$table"
+    def manifest(dir: String): Map[String, Long] =
+      segments(dir).map(f => f.getAbsolutePath.stripPrefix(dir) -> f.length).toMap
     val want = manifest(src)
     assert(want.nonEmpty)
     for (i <- 0 until 3)
-      assert(manifest(s"$root/replica=$i") === want,
+      assert(manifest(mirror(root, i)) === want,
         s"replica $i is not a byte-identical segment copy")
     // spot-check actual bytes on the largest segment
     val biggest = want.maxBy(_._2)._1
     def bytes(p: String) = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
-    assert(java.util.Arrays.equals(bytes(src + biggest), bytes(s"$root/replica=1$biggest")))
+    assert(java.util.Arrays.equals(bytes(src + biggest), bytes(mirror(root, 1) + biggest)))
   }
 
   test("routing is deterministic and actually spreads keys") {
@@ -52,15 +68,14 @@ class ReplicasSpec extends SparkSuite {
     val routed = keys.map(Replicas.replicaFor(_, 3))
     assert(routed === keys.map(Replicas.replicaFor(_, 3)), "routing not stable")
     assert(routed.distinct.sorted === Seq(0, 1, 2), "keys all pinned to one replica")
-    // the routed read reports the replica the key hashes to
+    // the routed read serves the replica the key hashes to
     val k = keys.head
-    val (df, served) = Replicas.read(spark, root, k, n = 3)
-    assert(served === Replicas.replicaFor(k, 3))
-    assert(rows(df).nonEmpty)
+    val served = Replicas.servingCopy(spark, root, table, k)
+    assert(served === Some(mirror(root, Replicas.replicaFor(k, 3))))
+    assert(rows(spark.read.parquet(served.get)).nonEmpty)
   }
 
   test("replica-routed gate equals the direct served lookup from any replica") {
-    import spark.implicits._
     val served = graft.queries.ServingQueries.topKLookupServed(spark, sfDir)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     val routed = graft.queries.ServingQueries.topKLookupReplica(spark, sfDir)
@@ -70,13 +85,9 @@ class ReplicasSpec extends SparkSuite {
   }
 
   test("replica set re-replicates after an in-place serving refresh (freshness stamp)") {
-    import spark.implicits._
     // isolated dataset copy: the shared sfDir serving root must not
     // be mutated under the other suites
-    val dir = java.nio.file.Files.createTempDirectory("replica_fresh").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    val dir = eventsCopy("replica_fresh")
     val before = graft.queries.ServingQueries.topKLookupReplica(spark, dir)
       .collect().map(_.toString).toSeq
     // refresh the SAME serving root with a late batch that rewrites
@@ -96,16 +107,11 @@ class ReplicasSpec extends SparkSuite {
   }
 
   test("erasure propagates through replication: no replica serves the erased user") {
-    import spark.implicits._
     // isolated dataset copy: the erase mutates the serving root
-    val dir = java.nio.file.Files.createTempDirectory("replica_erase").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    val dir = eventsCopy("replica_erase")
     // victim: a user visible in the replica-routed lookup, chosen so
     // it does NOT own the global max ts — the erase then changes
-    // neither max_ts_ms nor last_batch_id, and only the erase
-    // generation can tell the replica set the content moved
+    // neither max_ts_ms nor last_batch_id
     val ev = Tables.events(spark, dir)
     val lastUser = ev.orderBy(col("ts").desc).select(col("user_id"))
       .head().getLong(0)
@@ -123,59 +129,91 @@ class ReplicasSpec extends SparkSuite {
     // and EVERY replica of the ranked table is clean — route a tenant
     // to each replica and scan its whole copy, not just the window
     for (i <- 0 until 3) {
-      val tenant = (0 until 100).map(j => s"tenant-$j")
-        .find(Replicas.replicaFor(_, 3) == i).get
-      val full = graft.serving.ReplicaRouter.table(
-        spark, dir, "topk_by_count", tenant)
+      val full = ReplicaRouter.table(spark, dir, table, tenantOn(i))
       assert(full.filter(col("user_id") === victim).isEmpty,
         s"replica $i still serves the erased user")
     }
   }
 
-  test("a partial replica — crashed or in-flight rebuild — fails over, never serves silently") {
-    val servingRoot = Serving.materialize(spark, sfDir)
-    val r = java.nio.file.Files.createTempDirectory("graft_replicas_part").toString
-    Replicas.replicate(spark, s"$servingRoot/topk_by_count", r, n = 3)
-    // publish staged atomically: no stage debris, a manifest in every copy
-    assert(!new java.io.File(s"$r/_stage").exists)
-    for (i <- 0 until 3)
-      assert(new java.io.File(s"$r/replica=$i/_replica_manifest").exists)
-    def tenantOn(i: Int): String = (0 until 100).map(j => s"tenant-$j")
-      .find(Replicas.replicaFor(_, 3) == i).get
-    val want = rows(spark.read.parquet(s"$r/replica=2"))
-    assert(want.nonEmpty)
-    // crashed rebuild: replica 0 lost a segment its manifest records
-    def segs(i: Int): Seq[java.io.File] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        Option(f.listFiles).toSeq.flatten.flatMap(c =>
-          if (c.isDirectory) walk(c) else Seq(c))
-      walk(new java.io.File(s"$r/replica=$i"))
-        .filter(_.getName.endsWith(".parquet"))
+  test("eraseUser leaves no mirror file at rest holding the erased user") {
+    val dir = eventsCopy("replica_erase_rest")
+    val root = Serving.materialize(spark, dir)
+    // route the table through both of its mirrors
+    (0 until ReplicaRouter.N).foreach(i =>
+      ReplicaRouter.table(spark, dir, table, tenantOn(i, ReplicaRouter.N)).count())
+    // every parquet file under the mirror area, read directly from
+    // disk — not through routing, which would skip a superseded copy
+    def atRest(user: Long): Long = spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$root/_replicas").filter(col("user_id") === user).count()
+    val victim = ReplicaRouter.table(spark, dir, table)
+      .select(col("user_id")).as[Long].head()
+    assert(atRest(victim) > 0, "the mirrors never held the victim")
+    Serving.eraseUser(spark, root, Tables.events(spark, dir), victim)
+    assert(atRest(victim) === 0L, "the erased user's rows are still at rest in a mirror")
+  }
+
+  test("serving mirrors converge in place: k refreshes copy only changed files and keep N mirror dirs") {
+    val dir = eventsCopy("replica_incr")
+    val root = Serving.materialize(spark, dir)
+    val area = Replicas.area(root, table)
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def routedEqualsPrimary(): Unit =
+      assert(sorted(ReplicaRouter.table(spark, dir, table)) ===
+        sorted(Serving.readTable(spark, dir, table)), "routed read differs from the primary")
+    def mtimes(): Map[String, Long] =
+      segments(area).map(f => f.getPath -> f.lastModified).toMap
+    routedEqualsPrimary()
+    val anchor = Serving.anchorMs(spark, dir)
+    (1 to 3).foreach { k =>
+      val before = mtimes()
+      val batch = (1 to 5).map(i => (new java.sql.Timestamp(anchor + k * Serving.hourMs + i * 60000L),
+          900000L + k, "click", 100L))
+        .toDF("ts", "user_id", "event_type", "value_cents")
+      Serving.refreshWithBatch(spark, root, batch, batchId = k.toLong)
+      routedEqualsPrimary()
+      val after = mtimes()
+      val kept = before.keySet intersect after.keySet
+      assert(kept.nonEmpty, s"refresh $k re-copied every mirror file")
+      assert(kept.forall(p => before(p) == after(p)),
+        s"refresh $k re-copied mirror files the refresh did not change")
+      assert(after.keySet !== before.keySet, s"refresh $k's changed files never reached the mirrors")
+      assert(new File(area).list().sorted.toSeq === Seq("replica=0", "replica=1"),
+        s"refresh $k left a mirror area other than the N mirrors")
     }
-    assert(segs(0).head.delete())
-    val (df0, served0) = Replicas.read(spark, r, tenantOn(0), n = 3)
-    assert(served0 === 1, "partial replica 0 must fail over to 1")
-    assert(rows(df0) === want)
-    // in-flight rebuild: replica 1 has files but no manifest yet
-    assert(new java.io.File(s"$r/replica=1/_replica_manifest").delete())
-    val (df1, served1) = Replicas.read(spark, r, tenantOn(1), n = 3)
-    assert(served1 === 2, "manifest-less replica 1 must fail over to 2")
-    assert(rows(df1) === want)
-    // and re-replication heals both: every copy serves again
-    Replicas.replicate(spark, s"$servingRoot/topk_by_count", r, n = 3)
+  }
+
+  test("a partial replica — crashed or in-flight rebuild — fails over, never serves silently") {
+    val r = mirroredCopy("graft_replicas_part")
+    // every copy committed its manifest: one per mirror, no tmp left
+    for (i <- 0 until 3) {
+      assert(new File(s"${mirror(r, i)}/_replica_manifest").exists)
+      assert(!new File(s"${mirror(r, i)}/._replica_manifest.tmp").exists)
+    }
+    def served(i: Int): Option[String] = Replicas.servingCopy(spark, r, table, tenantOn(i))
+    val want = rows(spark.read.parquet(mirror(r, 2)))
+    assert(want.nonEmpty)
+    // crashed update: replica 0 lost a segment its manifest records
+    assert(segments(mirror(r, 0)).head.delete())
+    assert(served(0) === Some(mirror(r, 1)), "partial replica 0 must fail over to 1")
+    assert(rows(spark.read.parquet(served(0).get)) === want)
+    // in-flight update: replica 1 has files but no manifest
+    assert(new File(s"${mirror(r, 1)}/_replica_manifest").delete())
+    assert(served(1) === Some(mirror(r, 2)), "manifest-less replica 1 must fail over to 2")
+    assert(rows(spark.read.parquet(served(1).get)) === want)
+    // and convergence heals both: every copy serves again
+    Replicas.converge(spark, r, table, 3)
     for (i <- 0 until 3)
-      assert(Replicas.read(spark, r, tenantOn(i), n = 3)._2 === i)
+      assert(served(i) === Some(mirror(r, i)))
   }
 
   test("a lost replica fails over with identical results") {
-    val k = (0 until 100).map(i => s"tenant-$i")
-      .find(Replicas.replicaFor(_, 3) == 1).get
-    val before = rows(Replicas.read(spark, root, k, n = 3)._1)
-    val victim = new org.apache.hadoop.fs.Path(s"$root/replica=1")
+    val k = tenantOn(1)
+    val before = rows(spark.read.parquet(Replicas.servingCopy(spark, root, table, k).get))
+    val victim = new org.apache.hadoop.fs.Path(mirror(root, 1))
     val fs = victim.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(victim, true)
-    val (df, served) = Replicas.read(spark, root, k, n = 3)
-    assert(served === 2, "failover must move to the next replica")
-    assert(rows(df) === before, "failover changed the served result")
+    val served = Replicas.servingCopy(spark, root, table, k)
+    assert(served === Some(mirror(root, 2)), "failover must move to the next replica")
+    assert(rows(spark.read.parquet(served.get)) === before, "failover changed the served result")
   }
 }

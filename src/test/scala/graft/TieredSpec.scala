@@ -15,8 +15,7 @@ class TieredSpec extends SparkSuite {
   private lazy val ev = Tables.events(spark, sfDir)
   private val sortCols = Seq("event_type", "ts")
 
-  private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("tiered_spec").toString
+  private def freshRoot(): String = tempDir("tiered_spec")
 
   private def buildDemoted(): (String, String) = {
     val root = freshRoot()
@@ -777,12 +776,12 @@ class TieredSpec extends SparkSuite {
     val (root, cutoff) = buildDemoted()
     Tiered.demote(spark, root, cutoff, sortCols,
       coldBloomCols = Seq("user_id"))
-    val copied = Tiered.replicateCold(spark, root, n = 2)
+    val copied = Tiered.replicate(spark, root, "cold", n = 2)
     assert(copied.size === 2 && copied.forall(_ > 0), copied.toString)
     assert(ids(Tiered.read(spark, root)) === ids(ev),
       "replica-routed read lost rows")
     // an unchanged archive re-mirrors NOTHING
-    assert(Tiered.replicateCold(spark, root, n = 2) === Seq(0, 0))
+    assert(Tiered.replicate(spark, root, "cold", n = 2) === Seq(0, 0))
     val f = fs(root)
     def walk(p: Path): Seq[Path] =
       f.listStatus(p).toSeq.flatMap(s =>
@@ -832,7 +831,7 @@ class TieredSpec extends SparkSuite {
     val (root, cutoff) = buildDemoted()
     Tiered.demote(spark, root, cutoff, sortCols,
       coldBloomCols = Seq("user_id"))
-    Tiered.replicateCold(spark, root, n = 2)
+    Tiered.replicate(spark, root, "cold", n = 2)
     // a user living in a COLD date
     val victim = Tiered.read(spark, root)
       .filter($"p_date" < lit(cutoff))
@@ -868,7 +867,7 @@ class TieredSpec extends SparkSuite {
   test("hot mirrors: a lost PRIMARY hot segment fails over to a converged mirror and heals on the next tick") {
     val (root, cutoff) = buildDemoted()
     Tiered.demote(spark, root, cutoff, sortCols)
-    val copied = Tiered.replicateHot(spark, root, n = 2)
+    val copied = Tiered.replicate(spark, root, "hot", n = 2)
     assert(copied.size === 2 && copied.forall(_ > 0), copied.toString)
     assert(ids(Tiered.read(spark, root)) === ids(ev),
       "mirror-routed hot read lost rows")
@@ -913,7 +912,7 @@ class TieredSpec extends SparkSuite {
       (2L, t("2024-07-02 11:00:00"), victim),
       (3L, t("2024-07-02 12:00:00"), 11L)).toDF("event_id", "ts", "user_id"),
       0L, root)
-    val copied = Tiered.replicateLanding(spark, root, n = 2)
+    val copied = Tiered.replicate(spark, root, "landing", n = 2)
     assert(copied.size === 2 && copied.forall(_ > 0), copied.toString)
     val f = fs(root)
     (0 to 1).foreach { i =>
