@@ -41,8 +41,9 @@ import graft.serving.{ReplicaRouter, Replicas, RootCache, Serving}
   * the replica pins it scans. A call only binds its values into a
   * copy of that plan ([[graft.plans.Prepared]]): no analysis,
   * optimization or planning per call — that was 50-220 ms per call,
-  * more than the execution. Each pin is ONE partition, so every call
-  * runs as one job of one stage over the pin, with no exchange.
+  * more than the execution. Each pin is ONE partition and a route
+  * plans no exchange, so a call's collect evaluates that partition on
+  * the calling thread, with no Spark job.
   * Reusing one plan across the calls of a session is the idea of
   * PAPERS.md's "Incremental … Top-K Similarity Search in Interactive
   * Data Analysis Sessions" (EDBT 2020).

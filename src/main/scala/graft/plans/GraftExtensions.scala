@@ -5,13 +5,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtens
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate, Attribute, Cast, Expression, ExpressionInfo, LambdaFunction, LeafExpression, Literal, Multiply, NamedLambdaVariable, ZipWith}
+import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate, Attribute, AttributeMap, Cast, Expression, ExpressionInfo, LambdaFunction, LeafExpression, Literal, Multiply, NamedExpression, NamedLambdaVariable, SubqueryExpression, ZipWith}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{LeafExecNode, ProjectExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import graft.functions.VecDot
 
@@ -139,6 +140,12 @@ case class PreparedRelation(output: Seq[Attribute], plan: SparkPlan,
 /** Runs a prepared physical plan as one leaf. The plan shows as an
   * inner child; keeping it out of `children` keeps the caller's
   * preparation rules (codegen collapse, AQE) from re-preparing it.
+  *
+  * Collecting or taking from it evaluates the plan's one partition on
+  * the calling thread ([[GraftShim.evalLocally]]), as
+  * `LocalTableScanExec` answers from the driver: a served call pays
+  * no job. `doExecute` serves a frame that composes a prepared frame
+  * into a larger plan.
   */
 case class PreparedExec(output: Seq[Attribute], plan: SparkPlan) extends LeafExecNode {
   override def innerChildren: Seq[SparkPlan] = Seq(plan)
@@ -147,12 +154,28 @@ case class PreparedExec(output: Seq[Attribute], plan: SparkPlan) extends LeafExe
     case p => UnknownPartitioning(p.numPartitions)
   }
   override protected def doExecute(): RDD[InternalRow] = plan.execute()
-  override def executeCollect(): Array[InternalRow] = plan.executeCollect()
+  override def executeCollect(): Array[InternalRow] =
+    GraftShim.evalLocally(plan.execute())(_.map(_.copy()).toArray)
+  override def executeTake(n: Int): Array[InternalRow] =
+    GraftShim.evalLocally(plan.execute())(_.take(n).map(_.copy()).toArray)
 }
 
+/** Plans a [[PreparedRelation]] as its [[PreparedExec]], and a
+  * projection straight over one into the prepared leaf (as Spark folds
+  * a projection into a local relation), so `show` on a served frame
+  * also evaluates on the calling thread. A projection holding a
+  * subquery stays an ordinary node: the leaf's plan is not prepared
+  * again, so a subquery inside it would never be planned.
+  */
 object PreparedPlanning extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case r: PreparedRelation => PreparedExec(r.output, r.plan) :: Nil
+    case Project(list, r: PreparedRelation) if !list.exists(SubqueryExpression.hasSubquery) =>
+      val toPlan = AttributeMap(r.output.zip(r.plan.output))
+      val bound = list.map(_.transform {
+        case a: Attribute if toPlan.contains(a) => toPlan(a)
+      }.asInstanceOf[NamedExpression])
+      PreparedExec(plan.output, ProjectExec(bound, r.plan)) :: Nil
     case _ => Nil
   }
 }
@@ -178,8 +201,29 @@ final class Prepared private (template: LogicalPlan, physical: SparkPlan) {
 
 object Prepared {
 
-  def apply(df: DataFrame): Prepared =
-    new Prepared(df.queryExecution.analyzed, GraftShim.planWithoutAqe(df))
+  /** Prepare `df`. Its plan must answer in ONE partition, and every
+    * exchange in it must be a broadcast over no [[Param]]: a served
+    * call evaluates that partition on the calling thread, where no map
+    * stage runs, and a Param below an exchange would rebuild it per
+    * call — or, below a shuffle, could be served a map output written
+    * under another call's values. A Param-free broadcast is built once
+    * per plan and read by every call.
+    */
+  def apply(df: DataFrame): Prepared = {
+    val physical = GraftShim.planWithoutAqe(df)
+    val parts = physical.outputPartitioning.numPartitions
+    require(parts == 1,
+      s"a prepared plan must answer in one partition, this one has $parts:\n${physical.treeString}")
+    def holdsParam(p: SparkPlan) = p.exists(_.expressions.exists(_.exists(_.isInstanceOf[Param])))
+    physical.foreach {
+      case e: BroadcastExchangeExec if !holdsParam(e) =>
+      case e: Exchange => throw new IllegalArgumentException(
+        s"a prepared plan must hold no ${e.nodeName} (only a broadcast over no parameter):\n" +
+          physical.treeString)
+      case _ =>
+    }
+    new Prepared(df.queryExecution.analyzed, physical)
+  }
 
   /** The same call as `df` (a [[Prepared.bind]] frame), its Params
     * inlined as literals and planned the normal way.

@@ -48,8 +48,9 @@ object ReplicaRouter {
           .getOrElse(s"$servingRoot/$table"))
       }
       // serving tables are date-sliced into many small files; cache
-      // each as ONE block: every serving query over the pin then runs
-      // as one job of one stage with no exchange — at serving sizes a
+      // each as ONE block: every serving query over the pin then reads
+      // one partition with no exchange (a prepared route evaluates it
+      // on the calling thread, with no job) — at serving sizes a
       // stage or a task costs more than the data (a ~100 ms warm
       // lookup was mostly per-task scheduling at 30 partitions of a
       // 1 MB table, measured) — and a prepared route's parameters

@@ -256,4 +256,27 @@ class ApiSpec extends SparkSuite {
     val df = TopKApi.quantile(spark, dir, pPerMille = lists.last)
     assert(df.collect().toSeq === graft.plans.Prepared.inlined(df).collect().toSeq)
   }
+
+  test("head, take, first and show on a route frame evaluate on the calling thread: no job") {
+    val now = Serving.anchorMs(spark, sfDir)
+    def route() = TopKApi.topk(spark, sfDir, fromMs = Some(now - 72 * Serving.hourMs), k = 5,
+      byRevenue = true)
+    val all = route().collect().toSeq // warm: pin and plan built
+    assert(all.length === 5)
+    val shown = new java.io.ByteArrayOutputStream()
+    val calls = Seq[(String, () => Any, Any)](
+      ("collect", () => route().collect().toSeq, all),
+      ("head", () => route().head(2).toSeq, all.take(2)),
+      ("take", () => route().take(3).toSeq, all.take(3)),
+      ("first", () => route().first(), all.head),
+      ("show", () => Console.withOut(shown)(route().show(2)), ()))
+    for ((name, call, expected) <- calls) {
+      val (got, jobs) = withJobCount(call())
+      assert(got === expected, name)
+      assert(jobs === 0, name)
+    }
+    val table = shown.toString
+    assert(table.contains(s"${all.head.getAs[Long]("user_id")}|") &&
+      table.contains("only showing top 2 rows"), table)
+  }
 }

@@ -287,17 +287,11 @@ class PlanSpec extends SparkSuite {
     }
   }
 
-  test("served SQL statements: the prepared plan scans the pins in memory, no shuffle above them, one job per warm call") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  test("served SQL statements: the prepared plan scans the pins in memory, no shuffle above them, no job per warm call") {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import graft.queries.SqlQueries
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try for (statement <- Seq[(org.apache.spark.sql.SparkSession, String) => DataFrame](
+    for (statement <- Seq[(org.apache.spark.sql.SparkSession, String) => DataFrame](
         SqlQueries.topkRollup, SqlQueries.revenueByHour, SqlQueries.percentileSql)) {
       val df = statement(spark, sfDir)
       df.collect() // warm: pins, plan and broadcast built
@@ -310,12 +304,33 @@ class PlanSpec extends SparkSuite {
       // exchange is not part of the statement's plan
       assert(plan.collect { case s: InMemoryTableScanExec => s }.nonEmpty, plan.treeString)
       assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan.treeString)
-      org.apache.spark.ListenerDrain(spark.sparkContext)
-      jobs.set(0)
-      statement(spark, sfDir).collect()
-      org.apache.spark.ListenerDrain(spark.sparkContext)
-      assert(jobs.get() === 1, plan.treeString)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val (_, jobs) = withJobCount(statement(spark, sfDir).collect())
+      assert(jobs === 0, plan.treeString)
+    }
+  }
+
+  test("Prepared rejects a plan of more than one partition or with an exchange a call could not run locally") {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.types.LongType
+    import graft.plans.{Param, Prepared}
+    def rejection(df: DataFrame): String =
+      intercept[IllegalArgumentException](Prepared(df)).getMessage
+    val one = spark.range(0, 100, 1, 4).toDF().coalesce(1)
+    assert(rejection(spark.range(0, 100, 1, 4).toDF()).startsWith(
+      "requirement failed: a prepared plan must answer in one partition, this one has 4"))
+    // one partition out, but a shuffle below: its map stage never runs
+    // on the calling thread
+    val shuffled = spark.range(0, 100, 1, 4).groupBy(col("id") % 3).count().coalesce(1)
+    assert(rejection(shuffled).startsWith("a prepared plan must hold no Exchange"))
+    // a broadcast over a parameter would be rebuilt on every call
+    val small = spark.range(10).filter(col("id") < Param.column("p", LongType))
+    assert(rejection(one.join(broadcast(small), "id")).startsWith(
+      "a prepared plan must hold no BroadcastExchange"))
+    // a parameter-free broadcast is built once and read by every call
+    val fixed = Prepared(one.join(broadcast(spark.range(10).toDF()), "id")
+      .select(col("id") + Param.column("p", LongType)))
+    assert(fixed.bind(spark, Map("p" -> 100L)).collect().map(_.getLong(0)).sorted.toSeq ===
+      (100L until 110L))
   }
 
   test("segment dedup: hash-keyed partial-agg keep-first, no window, no joins") {

@@ -32,6 +32,22 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
+  /** `f`'s value and the number of Spark jobs started while it ran. */
+  def withJobCount[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val value = f
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      (value, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   override protected def afterAll(): Unit =
     try temps.forEach { d =>
       graft.serving.RootCache.invalidate(spark, d) // release pinned frames
