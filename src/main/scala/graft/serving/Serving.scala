@@ -3,8 +3,10 @@ package graft.serving
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
-import graft.ops.TopK
+import graft.ops.{NearDup, TopK}
+import graft.streaming.Merge
 import graft.tables.TableManager
 
 /** Materialized serving layer — the Spark analog of the reference's
@@ -356,91 +358,151 @@ object Serving {
     s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_serving/$key"
   }
 
+  private sealed trait Table {
+    def name: String
+    def sortCols: Seq[String]
+    /** Column of the parquet bloom filter the full build writes (the
+      * partitions a refresh or an erase rewrites carry none).
+      */
+    def bloomCol: Option[String] = None
+  }
+
+  /** A date-partitioned state table: `build` aggregates events to the
+    * table's grain, and `merge` re-aggregates rows of that grain (the
+    * stored rows of the dates a batch touches, unioned with the
+    * batch's built rows). Every merge is associative, so merging the
+    * partials of any split of the events equals building from all of
+    * them: the property that makes a refresh equal a rebuild.
+    */
+  private final case class StateTable(name: String, build: DataFrame => DataFrame,
+      sortCols: Seq[String], merge: DataFrame => DataFrame) extends Table
+
+  /** A ranked serving view: the top [[K]] of `source`'s rows per
+    * `partition` key, by `order`. Derived, not merged: a write path
+    * ranks the source rows it writes. The full-grain source is what
+    * makes a refresh's re-rank correct: a user outside the stored
+    * top-K can enter it after an increment.
+    */
+  private final case class RankedTable(name: String, source: StateTable,
+      partition: Seq[String], order: Seq[Column], sortCols: Seq[String]) extends Table {
+    override def bloomCol: Option[String] = Some("user_id")
+    def rank(rows: DataFrame): DataFrame =
+      TopK.topKPerKey(rows, partition, order, K).withColumn("rank", col("rank").cast("long"))
+  }
+
+  /** Sum each measure per key, every other column being the key; with
+    * no measure, the distinct rows (set-valued state).
+    */
+  private def summed(measures: String*): DataFrame => DataFrame = rows =>
+    Merge.frame(rows, rows.columns.toSeq.filterNot(measures.contains), measures.map(Merge.Sum))
+
+  // KMV merge per day: explode the day sketches back to hashes and
+  // re-sketch — exact (an evicted hash can never re-enter the merged
+  // bottom-k), so refresh == rebuild bit-for-bit per date partition
+  private def kmvMerge(rows: DataFrame): DataFrame = {
+    import graft.functions.KmvSketch
+    rows.select(col("window_start_ms"), col("event_type"), explode(col("sk")).as("h"))
+      .groupBy(col("window_start_ms"), col("event_type"))
+      .agg(KmvSketch.kmv(col("h"), KmvSketch.DefaultK).as("sk"))
+  }
+
+  // tuple sketches re-merge the same way, the (hash, sum) pairs
+  // exploded so equal hashes sum — exact per the day-merge argument
+  // on [[dailyTupleSketches]]
+  private def tupleMerge(rows: DataFrame): DataFrame = {
+    import graft.functions.{KmvSketch, TupleSketch}
+    rows.select(col("window_start_ms"), col("event_type"),
+        explode(arrays_zip(col("sk.hs"), col("sk.vs"))).as("e"))
+      .groupBy(col("window_start_ms"), col("event_type"))
+      .agg(TupleSketch.tupleSk(col("e.hs"), col("e.vs"), KmvSketch.DefaultK).as("sk"))
+  }
+
+  // bitmap merge per day: OR — associative, commutative and
+  // IDEMPOTENT, so re-applying rows changes nothing
+  private def bitmapMerge(rows: DataFrame): DataFrame =
+    rows.groupBy(col("window_start_ms"), col("event_type"))
+      .agg(graft.functions.BitmapDistinct.bitmapMerge(col("bm")).as("bm"))
+
+  private val userAgg = StateTable("agg_by_window", hourlyUserAgg,
+    Seq("window_start_ms", "user_id"), summed("order_count", "total_cents"))
+  private val keyedAgg = StateTable("agg_keyed_by_window", hourlyKeyedAgg,
+    Seq("event_type", "window_start_ms", "user_id"), summed("order_count", "total_cents"))
+
+  /** The date-partitioned state tables: the serving layout's one
+    * declaration of them, which every write path folds over.
+    */
+  private val stateTables: Seq[StateTable] = Seq(userAgg, keyedAgg,
+    StateTable("rollup_1m", minuteRollupAgg,
+      Seq("event_type", "window_start_ms"), summed("order_count", "sum_value_cents")),
+    StateTable("rollup_1m_users", minuteUsers,
+      Seq("event_type", "window_start_ms", "user_id"), summed()),
+    StateTable("rollup_1m_hist", minuteValueHist,
+      Seq("event_type", "window_start_ms", "bin"), summed("cnt")),
+    StateTable("rollup_1m_vals", minuteValueVals,
+      Seq("event_type", "window_start_ms", "value_cents"), summed("cnt")),
+    StateTable("rollup_1m_loghist", minuteValueLogHist,
+      Seq("event_type", "window_start_ms", "lbucket"), summed("cnt")),
+    StateTable("cm_daily", dailyCmSketch, Seq("i", "bucket"), summed("c")),
+    StateTable("kmv_daily", kmvDailySketches, Seq("event_type", "window_start_ms"), kmvMerge),
+    StateTable("tuple_daily", dailyTupleSketches,
+      Seq("event_type", "window_start_ms"), tupleMerge),
+    StateTable("bitmap_daily", dailyBitmaps, Seq("event_type", "window_start_ms"), bitmapMerge))
+
+  private val countOrder = Seq(col("order_count").desc, col("total_cents").desc, col("user_id").asc)
+  private val revenueOrder = Seq(col("total_cents").desc, col("order_count").desc, col("user_id").asc)
   private val globalSort = Seq("window_start_ms", "rank")
   // keyed tables sort restaurant-first so a one-restaurant query
   // prunes row groups on the dominant predicate.
   private val keyedSort = Seq("event_type", "window_start_ms", "rank")
 
-  private def countOrder = Seq(col("order_count").desc, col("total_cents").desc, col("user_id").asc)
-  private def revenueOrder = Seq(col("total_cents").desc, col("order_count").desc, col("user_id").asc)
+  /** The ranked serving views, the reference's two query paths each
+    * global and per restaurant.
+    */
+  private val rankedTables: Seq[RankedTable] = Seq(
+    RankedTable("topk_by_count", userAgg, Seq("window_start_ms"), countOrder, globalSort),
+    RankedTable("topk_by_revenue", userAgg, Seq("window_start_ms"), revenueOrder, globalSort),
+    RankedTable("topk_keyed_by_count", keyedAgg,
+      Seq("window_start_ms", "event_type"), countOrder, keyedSort),
+    RankedTable("topk_keyed_by_revenue", keyedAgg,
+      Seq("window_start_ms", "event_type"), revenueOrder, keyedSort))
 
-  private def writeRanked(root: String, ranked: DataFrame, table: String,
-      sortCols: Seq[String]): Unit =
-    TableManager.writePartitioned(
-      ranked
-        .withColumn("rank", col("rank").cast("long"))
-        .withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/$table",
-      tsCol = "w_ts",
-      sortCols = sortCols,
-      bloomCol = Some("user_id"))
+  /** The state tables a ranking reads: each feeds its own table and
+    * two rankings, so a write path persists its rows.
+    */
+  private val rankSources: Seq[StateTable] = rankedTables.map(_.source).distinct
 
-  /** Rebuild all four ranked tables from full-grain agg frames. */
-  private def writeRankedTables(root: String, agg: DataFrame, keyed: DataFrame): Unit = {
-    writeRanked(root, TopK.topKPerKey(agg, Seq("window_start_ms"), countOrder, K),
-      "topk_by_count", globalSort)
-    writeRanked(root, TopK.topKPerKey(agg, Seq("window_start_ms"), revenueOrder, K),
-      "topk_by_revenue", globalSort)
-    writeRanked(root, TopK.topKPerKey(keyed, Seq("window_start_ms", "event_type"), countOrder, K),
-      "topk_keyed_by_count", keyedSort)
-    writeRanked(root, TopK.topKPerKey(keyed, Seq("window_start_ms", "event_type"), revenueOrder, K),
-      "topk_keyed_by_revenue", keyedSort)
-  }
+  /** Each state table's rows from `rows`, persisted for [[rankSources]]. */
+  private def stateRows(rows: StateTable => DataFrame): Map[StateTable, DataFrame] =
+    stateTables.map { t =>
+      t -> (if (rankSources.contains(t)) rows(t).persist(StorageLevel.MEMORY_AND_DISK)
+        else rows(t))
+    }.toMap
 
-  private def writeAggState(root: String, agg: DataFrame, keyed: DataFrame): Unit = {
-    TableManager.writePartitioned(
-      agg.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/agg_by_window", tsCol = "w_ts",
-      sortCols = Seq("window_start_ms", "user_id"))
-    TableManager.writePartitioned(
-      keyed.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/agg_keyed_by_window", tsCol = "w_ts",
-      sortCols = Seq("event_type", "window_start_ms", "user_id"))
-  }
+  /** Every date-partitioned table with its rows, state tables first:
+    * `state` holds each state table's rows, and each ranked table
+    * ranks its source's. Rows carry `w_ts`, the window start their
+    * `p_date` partition derives from.
+    */
+  private def layout(state: Map[StateTable, DataFrame]): Seq[(Table, DataFrame)] =
+    (stateTables.map(t => t -> state(t)) ++
+      rankedTables.map(r => r -> r.rank(state(r.source))))
+      .map { case (t, rows) => t -> rows.withColumn("w_ts", timestamp_millis(col("window_start_ms"))) }
 
-  private def writeMinuteState(root: String, roll: DataFrame, users: DataFrame,
-      hist: DataFrame, vals: DataFrame, loghist: DataFrame): Unit = {
-    TableManager.writePartitioned(
-      roll.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/rollup_1m", tsCol = "w_ts",
-      sortCols = Seq("event_type", "window_start_ms"))
-    TableManager.writePartitioned(
-      users.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/rollup_1m_users", tsCol = "w_ts",
-      sortCols = Seq("event_type", "window_start_ms", "user_id"))
-    TableManager.writePartitioned(
-      hist.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/rollup_1m_hist", tsCol = "w_ts",
-      sortCols = Seq("event_type", "window_start_ms", "bin"))
-    TableManager.writePartitioned(
-      vals.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/rollup_1m_vals", tsCol = "w_ts",
-      sortCols = Seq("event_type", "window_start_ms", "value_cents"))
-    TableManager.writePartitioned(
-      loghist.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/rollup_1m_loghist", tsCol = "w_ts",
-      sortCols = Seq("event_type", "window_start_ms", "lbucket"))
-  }
-
-  private def writeSketchState(root: String, cm: DataFrame, kmv: DataFrame,
-      tuple: DataFrame, bitmap: DataFrame): Unit = {
-    TableManager.writePartitioned(
-      bitmap.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/bitmap_daily", tsCol = "w_ts",
-      sortCols = Seq("event_type", "window_start_ms"))
-    TableManager.writePartitioned(
-      cm.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/cm_daily", tsCol = "w_ts",
-      sortCols = Seq("i", "bucket"))
-    TableManager.writePartitioned(
-      kmv.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/kmv_daily", tsCol = "w_ts",
-      sortCols = Seq("event_type", "window_start_ms"))
-    TableManager.writePartitioned(
-      tuple.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/tuple_daily", tsCol = "w_ts",
-      sortCols = Seq("event_type", "window_start_ms"))
-  }
+  /** The p_dates of every grain's rows built from `events`: for each
+    * event's epoch-aligned hour window, the local date of its start
+    * and of its last millisecond. One date per grain is not enough:
+    * minute windows inside an hour window can land on the NEXT local
+    * date in fractional-offset session timezones (+05:30: hour start
+    * 23:30 local, minutes past 00:00), and a local-hour truncation of
+    * the event misses the hour window's own date. An extra date only
+    * widens a read-back, rewritten unchanged.
+    */
+  private def dateCover(events: DataFrame): Seq[String] =
+    events.select(unix_millis(window(col("ts"), "1 hour").getField("start")).as("w"))
+      .select(explode(array(
+        to_date(timestamp_millis(col("w"))),
+        to_date(timestamp_millis(col("w") + lit(3599999L))))).as("p_date"))
+      .distinct().collect().map(_.getDate(0).toString).toSeq
 
   /** Meta row: the now-anchor (max event ts) + the last applied
     * refresh batch id (-1 = built by batch rebuild; see
@@ -473,31 +535,23 @@ object Serving {
   private[graft] def metaStamp(spark: SparkSession, root: String): (Long, Long, Long) =
     RootCache.get(spark, root, "stamp")(readMeta(spark, root))
 
-  val allTables: Seq[String] = Seq(
-    "topk_by_count", "topk_by_revenue",
-    "topk_keyed_by_count", "topk_keyed_by_revenue",
-    "agg_by_window", "agg_keyed_by_window",
-    "rollup_1m", "rollup_1m_users", "rollup_1m_hist", "rollup_1m_vals",
-    "rollup_1m_loghist",
-    "cm_daily", "kmv_daily", "tuple_daily", "bitmap_daily",
-    "profile_upsert", "meta")
+  val allTables: Seq[String] =
+    (stateTables ++ rankedTables).map(_.name) ++ Seq("profile_upsert", "meta")
 
   /** Full build of the serving layout at `root` from an events frame
     * (batch path; the streaming path refreshes incrementally via
-    * [[refreshWithBatch]]). The full-grain agg tables are the state
-    * that makes incremental rank refresh possible — they are the
-    * Pinot rollup-table analog; the ranked tables are its serving
-    * views.
+    * [[refreshWithBatch]]): every table of the declaration
+    * ([[stateTables]], [[rankedTables]]) from its builder, then the
+    * profile state and `meta`. The full-grain state tables are what
+    * make incremental rank refresh possible — they are the Pinot
+    * rollup-table analog; the ranked tables are its serving views.
     */
   def materializeInto(spark: SparkSession, root: String,
       events: DataFrame): Unit = Lease.withLease(spark, root, "materialize") {
     val maxRow = events.agg(unix_millis(max(col("ts"))).as("max_ts_ms")).head()
     require(!maxRow.isNullAt(0),
       s"cannot materialize serving tables at $root from an empty events frame")
-    val agg = hourlyUserAgg(events)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keyed = hourlyKeyedAgg(events)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val state = stateRows(_.build(events))
     try {
       // fence (the Lease.renew displaced-writer discipline): this
       // write body runs under the lease but outside EraseStage's
@@ -508,17 +562,14 @@ object Serving {
       // FOREIGN process's cached frames re-probe it on a TTL, so this
       // rebuild becomes visible there without a restart
       RootCache.bumpToken(spark, root)
-      writeAggState(root, agg, keyed)
-      writeMinuteState(root, minuteRollupAgg(events), minuteUsers(events),
-        minuteValueHist(events), minuteValueVals(events),
-        minuteValueLogHist(events))
-      writeSketchState(root, dailyCmSketch(events), kmvDailySketches(events),
-        dailyTupleSketches(events), dailyBitmaps(events))
+      layout(state).foreach { case (t, rows) =>
+        TableManager.writePartitioned(rows, s"$root/${t.name}", tsCol = "w_ts",
+          sortCols = t.sortCols, bloomCol = t.bloomCol)
+      }
       writeProfileState(root, profileUpsertState(events))
-      writeRankedTables(root, agg, keyed)
       writeMeta(spark, root, maxRow.getLong(0), -1L)
     } finally {
-      agg.unpersist(); keyed.unpersist()
+      rankSources.foreach(state(_).unpersist())
       RootCache.invalidate(spark, root)
     }
   }
@@ -549,17 +600,13 @@ object Serving {
 
   /** Incremental refresh from a (deduped) event micro-batch — the
     * `foreachBatch` serving-freshness path. Only the date partitions
-    * the batch touches are rewritten:
-    *
-    *  1. aggregate the batch at the serving grain (delta);
-    *  2. merge delta into the full-grain agg state for the affected
-    *     dates (union + re-sum — associative, so increments compose);
-    *  3. re-rank those dates from the merged state and overwrite the
-    *     same partitions of the ranked tables.
-    *
-    * The full-grain state is what makes step 3 correct: a user
-    * outside the stored top-K can enter it after an increment, which
-    * rank-only state could never recover.
+    * the batch touches are rewritten: for each state table of the
+    * declaration ([[stateTables]]), the stored rows of those dates
+    * unioned with the batch's built rows, re-aggregated by the
+    * table's merge; then each ranked table ([[rankedTables]])
+    * re-ranked from its merged source, the profile state, and `meta`.
+    * The merges are associative, so increments compose and a refresh
+    * equals a rebuild.
     *
     * Exactly-once: `batchId` (pass the foreachBatch batch id) is
     * recorded in `meta` after a successful refresh, and a batch whose
@@ -590,178 +637,46 @@ object Serving {
     // materializeInto's fence note)
     Lease.renew(spark, root)
     RootCache.bumpToken(spark, root) // token moves before the rewrites
-    val deltaAgg = hourlyUserAgg(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deltaKeyed = hourlyKeyedAgg(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dates = dateCover(batch)
+    if (dates.isEmpty) return
+    // localCheckpoint (eager): each merged frame is written back over
+    // the partitions it was read from — the lineage must be cut or
+    // Spark (rightly) rejects overwriting a read path. Unpersist does
+    // not release a local checkpoint, so each is released explicitly.
+    val merged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def checkpointed(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(true)
+      merged += c
+      c
+    }
     try {
-      // one date per GRAIN: minute windows inside an hour window can
-      // land on the NEXT local date in fractional-offset session
-      // timezones (e.g. +05:30: hour start 23:30 local, minutes past
-      // 00:00) — deriving dates from the hour starts alone would then
-      // exclude those minute partitions from the read-back while the
-      // merged frame still writes them, silently dropping history.
-      // Covering both the hour start and the hour's last millisecond
-      // bounds every contained minute's date; extra dates only widen
-      // the read-back (re-written unchanged), never lose rows.
-      val dates = deltaAgg
-        .select(explode(array(
-          to_date(timestamp_millis(col("window_start_ms"))),
-          to_date(timestamp_millis(col("window_start_ms") + lit(3599999L)))))
-          .as("p_date"))
-        .distinct().collect().map(_.getDate(0).toString).toSeq
-      if (dates.nonEmpty) {
-        // ONE merge shape for every additive state table: read back
-        // just the touched dates, union the delta, re-sum per key.
-        // localCheckpoint (eager): the merged state is written back
-        // over the partitions it was read from — the lineage must be
-        // cut or Spark (rightly) rejects overwriting a read path.
-        def merge(statePath: String, delta: DataFrame, keys: Seq[String],
-            measures: Seq[String]): DataFrame = {
-          val cols = (keys ++ measures).map(col)
-          val sums = measures.map(m => sum(col(m)).as(m))
-          spark.read.parquet(statePath)
-            .filter(col("p_date").isin(dates: _*))
-            .select(cols: _*)
-            .unionAll(delta.select(cols: _*))
-            .groupBy(keys.map(col): _*)
-            .agg(sums.head, sums.tail: _*)
-            .localCheckpoint(true)
-        }
-        val agg = merge(s"$root/agg_by_window", deltaAgg,
-          Seq("window_start_ms", "user_id"),
-          Seq("order_count", "total_cents"))
-        val keyed = merge(s"$root/agg_keyed_by_window", deltaKeyed,
-          Seq("window_start_ms", "event_type", "user_id"),
-          Seq("order_count", "total_cents"))
-        // minute-grain state merges the same way: sums re-sum (and
-        // distinct-user rows union+distinct) — deterministic, so
-        // refresh==rebuild holds exactly (ServingSpec asserts it).
-        val roll = merge(s"$root/rollup_1m", minuteRollupAgg(batch),
-          Seq("window_start_ms", "event_type"),
-          Seq("order_count", "sum_value_cents"))
-        val hist = merge(s"$root/rollup_1m_hist", minuteValueHist(batch),
-          Seq("window_start_ms", "event_type", "bin"),
-          Seq("cnt"))
-        val vals = merge(s"$root/rollup_1m_vals", minuteValueVals(batch),
-          Seq("window_start_ms", "event_type", "value_cents"),
-          Seq("cnt"))
-        val loghist = merge(s"$root/rollup_1m_loghist", minuteValueLogHist(batch),
-          Seq("window_start_ms", "event_type", "lbucket"),
-          Seq("cnt"))
-        // CM sketch counts are additive — same merge shape, day grain
-        val cm = merge(s"$root/cm_daily", dailyCmSketch(batch),
-          Seq("window_start_ms", "i", "bucket"), Seq("c"))
-        // the one non-additive table: distinct user rows, set-union
-        val musers = spark.read.parquet(s"$root/rollup_1m_users")
+      val state = stateTables.map { t =>
+        val delta = t.build(batch)
+        val stored = spark.read.parquet(s"$root/${t.name}")
           .filter(col("p_date").isin(dates: _*))
-          .select("window_start_ms", "event_type", "user_id")
-          .unionAll(minuteUsers(batch))
-          .distinct()
-          .localCheckpoint(true)
-        // KMV merge per touched day: explode the stored day sketches
-        // back to hashes, union the batch's hashes, re-sketch — exact
-        // (an evicted hash can never re-enter the merged top-k), so
-        // refresh == rebuild bit-for-bit per date partition.
-        val kmv = spark.read.parquet(s"$root/kmv_daily")
-          .filter(col("p_date").isin(dates: _*))
-          .select(col("window_start_ms"), col("event_type"),
-            explode(col("sk")).as("h"))
-          .unionAll(batch.select(
-            unix_millis(date_trunc("day", col("ts"))).as("window_start_ms"),
-            col("event_type"),
-            graft.functions.KmvSketch.keyHash(col("user_id")).as("h")))
-          .groupBy(col("window_start_ms"), col("event_type"))
-          .agg(graft.functions.KmvSketch.kmv(col("h"),
-            graft.functions.KmvSketch.DefaultK).as("sk"))
-          .localCheckpoint(true)
-        // tuple sketches re-merge the same way, with the stored
-        // (hash, sum) pairs exploded so equal hashes sum with the
-        // batch's raw rows — exact per the day-merge argument on
-        // [[dailyTupleSketches]]
-        val tuple = spark.read.parquet(s"$root/tuple_daily")
-          .filter(col("p_date").isin(dates: _*))
-          .select(col("window_start_ms"), col("event_type"),
-            explode(arrays_zip(col("sk.hs"), col("sk.vs"))).as("e"))
-          .select(col("window_start_ms"), col("event_type"),
-            col("e.hs").as("h"), col("e.vs").as("v"))
-          .unionAll(batch.select(
-            unix_millis(date_trunc("day", col("ts"))).as("window_start_ms"),
-            col("event_type"),
-            graft.functions.KmvSketch.keyHash(col("user_id")).as("h"),
-            col("value_cents").as("v")))
-          .groupBy(col("window_start_ms"), col("event_type"))
-          .agg(graft.functions.TupleSketch.tupleSk(col("h"), col("v"),
-            graft.functions.KmvSketch.DefaultK).as("sk"))
-          .localCheckpoint(true)
-        // bitmap merge per touched day: OR the stored day states with
-        // the batch's day bitmaps — OR is associative/commutative/
-        // IDEMPOTENT, so refresh == rebuild bit-for-bit per date
-        // partition and re-applying rows changes nothing
-        val bmState = spark.read.parquet(s"$root/bitmap_daily")
-          .filter(col("p_date").isin(dates: _*))
-          .select(col("window_start_ms"), col("event_type"), col("bm"))
-          .unionAll(dailyBitmaps(batch))
-          .groupBy(col("window_start_ms"), col("event_type"))
-          .agg(graft.functions.BitmapDistinct.bitmapMerge(col("bm")).as("bm"))
-          .localCheckpoint(true)
-        // profile state: stored rows replay as per-field pseudo-
-        // patches, merged with the batch's patches under the same
-        // newest-setter-wins guard — associative, so inc == rebuild
-        val profiles = mergeProfilePatches(
-          profileAsPatches(spark.read.parquet(s"$root/profile_upsert"))
-            .unionAll(graft.ops.Dedup.profilePatches(batch)))
-          .localCheckpoint(true)
-        try {
-          writeAggStatePartitions(root, agg, keyed)
-          TableManager.overwritePartitions(
-            roll.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-            s"$root/rollup_1m", "w_ts", Seq("event_type", "window_start_ms"))
-          TableManager.overwritePartitions(
-            musers.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-            s"$root/rollup_1m_users", "w_ts",
-            Seq("event_type", "window_start_ms", "user_id"))
-          TableManager.overwritePartitions(
-            hist.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-            s"$root/rollup_1m_hist", "w_ts",
-            Seq("event_type", "window_start_ms", "bin"))
-          TableManager.overwritePartitions(
-            vals.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-            s"$root/rollup_1m_vals", "w_ts",
-            Seq("event_type", "window_start_ms", "value_cents"))
-          TableManager.overwritePartitions(
-            loghist.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-            s"$root/rollup_1m_loghist", "w_ts",
-            Seq("event_type", "window_start_ms", "lbucket"))
-          TableManager.overwritePartitions(
-            cm.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-            s"$root/cm_daily", "w_ts", Seq("i", "bucket"))
-          TableManager.overwritePartitions(
-            kmv.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-            s"$root/kmv_daily", "w_ts", Seq("event_type", "window_start_ms"))
-          TableManager.overwritePartitions(
-            tuple.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-            s"$root/tuple_daily", "w_ts", Seq("event_type", "window_start_ms"))
-          TableManager.overwritePartitions(
-            bmState.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-            s"$root/bitmap_daily", "w_ts", Seq("event_type", "window_start_ms"))
-          writeProfileState(root, profiles)
-          writeRankedPartitions(root, agg, keyed)
-          val (oldMax, _, eraseGen) = readMeta(spark, root)
-          val batchMaxRow = batch.agg(unix_millis(max(col("ts")))).head()
-          val newMax =
-            if (batchMaxRow.isNullAt(0)) oldMax
-            else math.max(oldMax, batchMaxRow.getLong(0))
-          writeMeta(spark, root, newMax, math.max(batchId, lastApplied), eraseGen)
-        } finally {
-          agg.unpersist(); keyed.unpersist()
-          roll.unpersist(); musers.unpersist(); hist.unpersist()
-          cm.unpersist(); kmv.unpersist(); tuple.unpersist()
-          profiles.unpersist()
-          RootCache.invalidate(spark, root)
-        }
+          .select(delta.columns.toSeq.map(col): _*)
+        t -> checkpointed(t.merge(stored.unionAll(delta)))
+      }.toMap
+      // profile state: stored rows replay as per-field pseudo-
+      // patches, merged with the batch's patches under the same
+      // newest-setter-wins guard — associative, so inc == rebuild
+      val profiles = checkpointed(mergeProfilePatches(
+        profileAsPatches(spark.read.parquet(s"$root/profile_upsert"))
+          .unionAll(graft.ops.Dedup.profilePatches(batch))))
+      layout(state).foreach { case (t, rows) =>
+        TableManager.overwritePartitions(rows, s"$root/${t.name}", "w_ts", t.sortCols)
       }
-    } finally { deltaAgg.unpersist(); deltaKeyed.unpersist() }
+      writeProfileState(root, profiles)
+      val (oldMax, _, eraseGen) = readMeta(spark, root)
+      val batchMaxRow = batch.agg(unix_millis(max(col("ts")))).head()
+      val newMax =
+        if (batchMaxRow.isNullAt(0)) oldMax
+        else math.max(oldMax, batchMaxRow.getLong(0))
+      writeMeta(spark, root, newMax, math.max(batchId, lastApplied), eraseGen)
+    } finally {
+      merged.foreach(NearDup.releaseCheckpoint)
+      RootCache.invalidate(spark, root)
+    }
   }
 
   /** Targeted USER ERASURE across the whole serving layout — the
@@ -769,20 +684,21 @@ object Serving {
     * segment-rewrite/upsert-compaction tasks; here it is
     * first-class). Most state tables are ADDITIVE — no subtraction
     * exists — so the date partitions the user's events touch are
-    * RECOMPUTED from the surviving events and overwritten in place
-    * (the refresh write path); dates the user never touched are
-    * neither read nor written. A date whose rows all belonged to the
-    * user VANISHES (its partition directories are dropped first —
-    * dynamic overwrite alone cannot erase a partition the recomputed
-    * frame no longer writes). The user-keyed profile table rewrites
-    * whole (it is user-, not date-partitioned), the meta anchor
-    * recomputes from the surviving events, and every existing mirror
-    * set under `<root>/_replicas` ([[ReplicaRouter]]) converges inside
-    * the same lease, so the erased user's rows leave every copy AT
-    * REST in this call (after a crash between the commit and this
-    * convergence, the next routed read converges). Crash recovery
-    * matches [[refreshWithBatch]]'s contract: rebuild from the raw
-    * sink.
+    * RECOMPUTED from the surviving events, for every table of the
+    * declaration ([[stateTables]] from their builders, [[rankedTables]]
+    * ranked from those), and overwritten in place; dates the user
+    * never touched are neither read nor written. A date whose rows
+    * all belonged to the user VANISHES (its partition directories are
+    * dropped first — dynamic overwrite alone cannot erase a partition
+    * the recomputed frame no longer writes). The user-keyed profile
+    * table rewrites whole (it is user-, not date-partitioned), the
+    * meta anchor recomputes from the surviving events, and every
+    * existing mirror set under `<root>/_replicas` ([[ReplicaRouter]])
+    * converges inside the same lease, so the erased user's rows leave
+    * every copy AT REST in this call (after a crash between the
+    * commit and this convergence, the next routed read converges).
+    * Crash recovery matches [[refreshWithBatch]]'s contract: rebuild
+    * from the raw sink.
     *
     * Returns the affected p_date strings (empty = user unknown,
     * nothing touched).
@@ -830,27 +746,17 @@ object Serving {
 
   private[graft] def eraseLegs(spark: SparkSession, root: String,
       events: DataFrame, userId: Long): ErasePlan = {
-    val mine = events.filter(col("user_id") === userId)
-    // one date per GRAIN: the same two-sided hour-window cover as
-    // refreshWithBatch (minute windows inside an hour can land on the
-    // next local date under fractional-offset session timezones)
-    val eventDates = mine
-      .select(explode(array(
-        to_date(date_trunc("hour", col("ts"))),
-        to_date(timestamp_millis(
-          unix_millis(date_trunc("hour", col("ts"))) + lit(3599999L)))))
-        .as("p_date"))
-      .distinct().collect().map(_.getDate(0).toString).toSeq
+    val eventDates = dateCover(events.filter(col("user_id") === userId))
     // cross-check against STORED state: a stale or partial events
     // frame must not silently no-op or leave the user's rows behind
-    // in partitions it doesn't know about. agg_by_window is
-    // user-keyed at the same hour grain the write paths cover, so
-    // its p_date set for the user is exactly the set of serving
-    // partitions holding the user's rows.
+    // in partitions it doesn't know about. The user-keyed hour table
+    // has the same date cover as every other grain, so its p_date set
+    // for the user is exactly the set of serving partitions holding
+    // the user's rows.
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val storedDates =
-      if (!fs.exists(new Path(s"$root/agg_by_window"))) Seq.empty[String]
-      else spark.read.parquet(s"$root/agg_by_window")
+      if (!fs.exists(new Path(s"$root/${userAgg.name}"))) Seq.empty[String]
+      else spark.read.parquet(s"$root/${userAgg.name}")
         .filter(col("user_id") === userId)
         .select(col("p_date").cast("string")).distinct()
         .collect().map(_.getString(0)).toSeq
@@ -873,64 +779,24 @@ object Serving {
       Seq(ld.minusDays(1), ld, ld.plusDays(1)).map(_.toString)
     }.distinct
     val sub = erased.filter(to_date(col("ts")).cast("string").isin(expanded: _*))
-    def dated(df: DataFrame) = df.filter(
-      to_date(timestamp_millis(col("window_start_ms"))).cast("string")
-        .isin(dates: _*))
-    // the recomputed agg state is the bulk of the recompute plan and
-    // feeds six legs (its own two + four ranked) — persist across the
-    // staged writes
-    val agg = dated(hourlyUserAgg(sub))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keyed = dated(hourlyKeyedAgg(sub))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    agg.count(); keyed.count()
+    val state = stateRows(t => t.build(sub).filter(
+      to_date(timestamp_millis(col("window_start_ms"))).cast("string").isin(dates: _*)))
+    // the ranked tables' sources are the bulk of the recompute plan:
+    // computed once, before the staged writes read them six times
+    val cached = rankSources.map(state)
+    cached.foreach(_.count())
+    val (_, lastApplied, eraseGen) = readMeta(spark, root)
+    import spark.implicits._
     // one Swap leg per date-partitioned table: EraseStage stages the
     // recomputed rows durably, commits one manifest, and only then
     // drops + rewrites the affected p_date directories with the
     // serving sort layout (sortCols ride in the manifest). A date the
     // recompute no longer writes stays deleted — the vanishing-date
     // semantics of the old delete-then-overwrite loop, made atomic.
-    def wts(df: DataFrame): DataFrame = {
-      val t = df.withColumn("w_ts", timestamp_millis(col("window_start_ms")))
-      t.withColumn("p_date", to_date(col("w_ts")))
-    }
-    def swap(df: DataFrame, table: String, sortCols: Seq[String]) =
-      EraseStage.Swap(table, "p_date", dates, sortCols) -> wts(df)
-    def rankedSwap(df: DataFrame, table: String, sortCols: Seq[String]) =
-      swap(df.withColumn("rank", col("rank").cast("long")), table, sortCols)
-    val (_, lastApplied, eraseGen) = readMeta(spark, root)
-    import spark.implicits._
-    val legs = Seq(
-      swap(agg, "agg_by_window", Seq("window_start_ms", "user_id")),
-      swap(keyed, "agg_keyed_by_window",
-        Seq("event_type", "window_start_ms", "user_id")),
-      swap(dated(minuteRollupAgg(sub)), "rollup_1m",
-        Seq("event_type", "window_start_ms")),
-      swap(dated(minuteUsers(sub)), "rollup_1m_users",
-        Seq("event_type", "window_start_ms", "user_id")),
-      swap(dated(minuteValueHist(sub)), "rollup_1m_hist",
-        Seq("event_type", "window_start_ms", "bin")),
-      swap(dated(minuteValueVals(sub)), "rollup_1m_vals",
-        Seq("event_type", "window_start_ms", "value_cents")),
-      swap(dated(minuteValueLogHist(sub)), "rollup_1m_loghist",
-        Seq("event_type", "window_start_ms", "lbucket")),
-      swap(dated(dailyCmSketch(sub)), "cm_daily", Seq("i", "bucket")),
-      swap(dated(kmvDailySketches(sub)), "kmv_daily",
-        Seq("event_type", "window_start_ms")),
-      swap(dated(dailyTupleSketches(sub)), "tuple_daily",
-        Seq("event_type", "window_start_ms")),
-      swap(dated(dailyBitmaps(sub)), "bitmap_daily",
-        Seq("event_type", "window_start_ms")),
-      rankedSwap(TopK.topKPerKey(agg, Seq("window_start_ms"), countOrder, K),
-        "topk_by_count", globalSort),
-      rankedSwap(TopK.topKPerKey(agg, Seq("window_start_ms"), revenueOrder, K),
-        "topk_by_revenue", globalSort),
-      rankedSwap(TopK.topKPerKey(keyed,
-          Seq("window_start_ms", "event_type"), countOrder, K),
-        "topk_keyed_by_count", keyedSort),
-      rankedSwap(TopK.topKPerKey(keyed,
-          Seq("window_start_ms", "event_type"), revenueOrder, K),
-        "topk_keyed_by_revenue", keyedSort),
+    val legs = layout(state).map { case (t, rows) =>
+      EraseStage.Swap(t.name, "p_date", dates, t.sortCols) ->
+        rows.withColumn("p_date", to_date(col("w_ts")))
+    } ++ Seq(
       // the user-keyed profile table rewrites whole (it is user-, not
       // date-partitioned), inside the SAME staged commit
       EraseStage.Overwrite("profile_upsert",
@@ -942,33 +808,7 @@ object Serving {
       EraseStage.Overwrite("meta") ->
         Seq((maxRow.getLong(0), lastApplied, eraseGen + 1L))
           .toDF("max_ts_ms", "last_batch_id", "erase_gen"))
-    ErasePlan(dates, legs, Seq(agg, keyed))
-  }
-
-  private def writeAggStatePartitions(root: String, agg: DataFrame, keyed: DataFrame): Unit = {
-    TableManager.overwritePartitions(
-      agg.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/agg_by_window", "w_ts", Seq("window_start_ms", "user_id"))
-    TableManager.overwritePartitions(
-      keyed.withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-      s"$root/agg_keyed_by_window", "w_ts", Seq("event_type", "window_start_ms", "user_id"))
-  }
-
-  private def writeRankedPartitions(root: String, agg: DataFrame, keyed: DataFrame): Unit = {
-    def ow(ranked: DataFrame, table: String, sortCols: Seq[String]): Unit =
-      TableManager.overwritePartitions(
-        ranked
-          .withColumn("rank", col("rank").cast("long"))
-          .withColumn("w_ts", timestamp_millis(col("window_start_ms"))),
-        s"$root/$table", "w_ts", sortCols)
-    ow(TopK.topKPerKey(agg, Seq("window_start_ms"), countOrder, K),
-      "topk_by_count", globalSort)
-    ow(TopK.topKPerKey(agg, Seq("window_start_ms"), revenueOrder, K),
-      "topk_by_revenue", globalSort)
-    ow(TopK.topKPerKey(keyed, Seq("window_start_ms", "event_type"), countOrder, K),
-      "topk_keyed_by_count", keyedSort)
-    ow(TopK.topKPerKey(keyed, Seq("window_start_ms", "event_type"), revenueOrder, K),
-      "topk_keyed_by_revenue", keyedSort)
+    ErasePlan(dates, legs, cached)
   }
 
   def readTable(spark: SparkSession, dataDir: String, table: String): DataFrame =

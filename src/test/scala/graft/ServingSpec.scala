@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.queries.{EventQueries, ServingQueries}
 import graft.serving.Serving
@@ -93,8 +94,8 @@ class ServingSpec extends SparkSuite {
     val after = ev.filter(unix_millis(col("ts")) > cutoff)
     assert(after.count() > 0 && before.count() > 0)
 
-    val incRoot = java.nio.file.Files.createTempDirectory("graft_inc").toString
-    val fullRoot = java.nio.file.Files.createTempDirectory("graft_full").toString
+    val incRoot = tempDir("graft_inc")
+    val fullRoot = tempDir("graft_full")
     Serving.materializeInto(spark, incRoot, before)
     Serving.refreshWithBatch(spark, incRoot, after) // the streaming micro-batch path
     Serving.materializeInto(spark, fullRoot, ev)
@@ -115,16 +116,11 @@ class ServingSpec extends SparkSuite {
     assertRefreshEqualsRebuild()
   }
 
-  test("incremental refresh equals rebuild in a fractional-offset session timezone") {
-    // +05:30: local midnight falls at 18:30 UTC, INSIDE the
-    // epoch-aligned 18:00 UTC hour window, so that window's minutes
-    // straddle a local date boundary. The refresh batch below lives
-    // ENTIRELY in the 18:00 hour but past local midnight — its hour
-    // date set alone would exclude the next-date partition where the
-    // seed's 18:3x-UTC minute rows already live, and the dynamic
-    // partition overwrite would drop them (inc ≠ rebuild). A dense
-    // batch masks this (the following hour window contributes the
-    // next date); a batch ending mid-hour is the trailing-edge case.
+  // +05:30: local midnight falls at 18:30 UTC, INSIDE the
+  // epoch-aligned 18:00 UTC hour window, so that window's minutes
+  // straddle a local date boundary. The batch lives ENTIRELY in the
+  // 18:00 hour but past local midnight.
+  private def inKolkata(f: (DataFrame, DataFrame) => Unit): Unit = {
     val prevTz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
     try {
@@ -140,8 +136,31 @@ class ServingSpec extends SparkSuite {
       val batch = frame(Seq(
         ev("2024-06-01T18:50:00Z", 5L, 500L, "click"),    // local 00:20 Jun 2,
         ev("2024-06-01T18:55:00Z", 3L, 250L, "click")))   // hour window 18:00
-      val incRoot = java.nio.file.Files.createTempDirectory("graft_inc_tz").toString
-      val fullRoot = java.nio.file.Files.createTempDirectory("graft_full_tz").toString
+      f(seed, batch)
+    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+  }
+
+  /** Every table of `root` holds the same rows as `rebuilt`'s. */
+  private def assertLayoutEqual(root: String, rebuilt: String, after: String): Unit =
+    for (t <- Serving.allTables if t != "meta") {
+      val cols = spark.read.parquet(s"$rebuilt/$t").drop("w_ts").columns.sorted.toSeq
+      val a = spark.read.parquet(s"$root/$t").drop("w_ts")
+        .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      val b = spark.read.parquet(s"$rebuilt/$t").drop("w_ts")
+        .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      assert(a === b, s"table $t diverged after $after")
+    }
+
+  test("incremental refresh equals rebuild in a fractional-offset session timezone") {
+    // The refresh batch's hour date set alone would exclude the
+    // next-date partition where the seed's 18:3x-UTC minute rows
+    // already live, and the dynamic partition overwrite would drop
+    // them (inc ≠ rebuild). A dense batch masks this (the following
+    // hour window contributes the next date); a batch ending mid-hour
+    // is the trailing-edge case.
+    inKolkata { (seed, batch) =>
+      val incRoot = tempDir("graft_inc_tz")
+      val fullRoot = tempDir("graft_full_tz")
       Serving.materializeInto(spark, incRoot, seed)
       Serving.refreshWithBatch(spark, incRoot, batch)
       Serving.materializeInto(spark, fullRoot, seed.unionAll(batch))
@@ -153,12 +172,28 @@ class ServingSpec extends SparkSuite {
         val b = full.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
         assert(a === b, s"table $t diverged after fractional-offset refresh")
       }
-    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+    }
+  }
+
+  test("user erasure equals rebuild in a fractional-offset session timezone") {
+    // user 5's hour window starts 23:30 Jun 1 local, its minute and
+    // day rows fall on Jun 2: the erase must cover the hour window's
+    // own date (where agg_by_window stores the user), not only the
+    // local dates of the event
+    inKolkata { (seed, batch) =>
+      val events = seed.unionAll(batch)
+      val root = tempDir("graft_erase_tz")
+      Serving.materializeInto(spark, root, events)
+      assert(Serving.eraseUser(spark, root, events, 5L) === Seq("2024-06-01", "2024-06-02"))
+      val rebuilt = tempDir("graft_erase_tz_rb")
+      Serving.materializeInto(spark, rebuilt, events.filter(col("user_id") =!= 5L))
+      assertLayoutEqual(root, rebuilt, "fractional-offset erasure")
+    }
   }
 
   test("user erasure: layout == rebuild without the user; untouched dates not rewritten; sole-owner date vanishes") {
     import java.sql.Timestamp
-    val root = java.nio.file.Files.createTempDirectory("graft_erase").toString
+    val root = tempDir("graft_erase")
     def ev(id: Long, t: String, u: Long, et: String, cents: Long) =
       (id, Timestamp.valueOf(t), u, et, cents / 100.0)
     val rows = Seq(
@@ -188,7 +223,7 @@ class ServingSpec extends SparkSuite {
     // untouched date partitions were neither read back nor rewritten
     assert(mtimes("rollup_1m", "2024-01-01") === before)
     // full layout equals a rebuild from the surviving events
-    val fullRoot = java.nio.file.Files.createTempDirectory("graft_erase_full").toString
+    val fullRoot = tempDir("graft_erase_full")
     Serving.materializeInto(spark, fullRoot, mkDf(rows.take(3)))
     for (t <- Serving.allTables if t != "meta") {
       val cols = spark.read.parquet(s"$fullRoot/$t").drop("w_ts").columns.sorted.toSeq
@@ -215,7 +250,7 @@ class ServingSpec extends SparkSuite {
         .filter(col("user_id") === 2L).isEmpty, s"$t still holds user 2")
     // and every table — the day-grain sketch tables included — equals
     // the rebuild without the user, asserted individually
-    val rb2 = java.nio.file.Files.createTempDirectory("graft_erase_full2").toString
+    val rb2 = tempDir("graft_erase_full2")
     Serving.materializeInto(spark, rb2,
       mkDf(rows.take(3)).filter(col("user_id") =!= 2L))
     for (t <- Serving.allTables if t != "meta") {
@@ -230,7 +265,7 @@ class ServingSpec extends SparkSuite {
 
   test("user erasure: crash between manifest and apply recovers to the complete erase (staged commit)") {
     import java.sql.Timestamp
-    val root = java.nio.file.Files.createTempDirectory("graft_erase_crash").toString
+    val root = tempDir("graft_erase_crash")
     def ev(id: Long, t: String, u: Long, et: String, cents: Long) =
       (id, Timestamp.valueOf(t), u, et, cents / 100.0)
     val rows = Seq(
@@ -255,7 +290,7 @@ class ServingSpec extends SparkSuite {
     assert(graft.serving.EraseStage.recover(spark, root))
     // every table equals the rebuild without the user — including the
     // two tables whose partitions the "crash" had already deleted
-    val rb = java.nio.file.Files.createTempDirectory("graft_erase_crash_rb").toString
+    val rb = tempDir("graft_erase_crash_rb")
     Serving.materializeInto(spark, rb, mkDf(rows).filter(col("user_id") =!= 2L))
     for (t <- Serving.allTables if t != "meta") {
       val cols = spark.read.parquet(s"$rb/$t").drop("w_ts").columns.sorted.toSeq
@@ -286,7 +321,7 @@ class ServingSpec extends SparkSuite {
 
   test("user erasure refuses a stale frame that hides the user's stored dates") {
     import java.sql.Timestamp
-    val root = java.nio.file.Files.createTempDirectory("graft_erase_stale").toString
+    val root = tempDir("graft_erase_stale")
     def ev(id: Long, t: String, u: Long, et: String, cents: Long) =
       (id, Timestamp.valueOf(t), u, et, cents / 100.0)
     val rows = Seq(
@@ -316,7 +351,7 @@ class ServingSpec extends SparkSuite {
 
   test("a FOREIGN writer's commit invalidates pinned serving frames within one gen-probe TTL") {
     import java.sql.Timestamp
-    val root = java.nio.file.Files.createTempDirectory("graft_genprobe").toString
+    val root = tempDir("graft_genprobe")
     def ev(id: Long, t: String, u: Long, et: String, cents: Long) =
       (id, Timestamp.valueOf(t), u, et, cents / 100.0)
     val mkDf = (rs: Seq[(Long, Timestamp, Long, String, Double)]) =>
@@ -346,7 +381,7 @@ class ServingSpec extends SparkSuite {
   test("streaming serving-refresh sink keeps the layout equal to batch rebuild") {
     import java.sql.Timestamp
     implicit val sql = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_srs").toString
+    val root = tempDir("graft_srs")
     def ev(id: Long, t: String, u: Long, et: String, cents: Long) =
       (id, Timestamp.valueOf(t), u, et, cents / 100.0)
     val batch1 = Seq(
@@ -372,7 +407,7 @@ class ServingSpec extends SparkSuite {
       .start()
     q.awaitTermination()
 
-    val fullRoot = java.nio.file.Files.createTempDirectory("graft_srs_full").toString
+    val fullRoot = tempDir("graft_srs_full")
     Serving.materializeInto(spark, fullRoot, mkDf(batch1 ++ batch2))
     for (t <- Serving.allTables if t != "meta") {
       val cols = spark.read.parquet(s"$fullRoot/$t").drop("w_ts").columns.sorted.toSeq
@@ -390,7 +425,7 @@ class ServingSpec extends SparkSuite {
       rows.map { case (id, t, u, et, c) => (id, Timestamp.valueOf(t), u, et, c / 100.0) }
         .toDF("event_id", "ts", "user_id", "event_type", "value")
         .withColumn("value_cents", round(col("value") * 100).cast("long"))
-    val root = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    val root = tempDir("graft_replay")
     Serving.materializeInto(spark, root, mk((1, "2024-01-01 10:10:00", 1, "click", 300)))
     val delta = mk((2, "2024-01-01 10:40:00", 1, "click", 200))
     def totalCents() = spark.read.parquet(s"$root/agg_by_window")
@@ -411,7 +446,7 @@ class ServingSpec extends SparkSuite {
     val empty = Seq.empty[(Long, Timestamp, Long, String, Double)]
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("value_cents", round(col("value") * 100).cast("long"))
-    val root = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    val root = tempDir("graft_empty")
     val e = intercept[IllegalArgumentException] {
       Serving.materializeInto(spark, root, empty)
     }
@@ -425,5 +460,83 @@ class ServingSpec extends SparkSuite {
     Serving.materialize(spark, sfDir)
     val m1 = fs.getFileStatus(new Path(s"$root/topk_by_count/_SUCCESS")).getModificationTime
     assert(m0 === m1)
+  }
+
+  test("a refresh leaves no RDD persisted: its local checkpoints are released") {
+    import java.sql.Timestamp
+    def mk(rows: (String, Long, String, Long)*) =
+      rows.map { case (t, u, et, c) => (Timestamp.valueOf(t), u, et, c) }
+        .toDF("ts", "user_id", "event_type", "value_cents")
+    val root = tempDir("graft_ckpt_leak")
+    Serving.materializeInto(spark, root, mk(("2024-01-01 10:10:00", 1L, "click", 300L)))
+    // no RootCache slot of the root is live: materializeInto dropped them
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Serving.refreshWithBatch(spark, root, mk(("2024-01-01 10:40:00", 2L, "view", 200L)))
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"refresh left ${left.size} RDD(s) persisted")
+  }
+
+  // each date-partitioned table's file sort order: what row-group
+  // pruning on every served route relies on
+  private val fileSortOrder = Map(
+    "agg_by_window" -> Seq("window_start_ms", "user_id"),
+    "agg_keyed_by_window" -> Seq("event_type", "window_start_ms", "user_id"),
+    "rollup_1m" -> Seq("event_type", "window_start_ms"),
+    "rollup_1m_users" -> Seq("event_type", "window_start_ms", "user_id"),
+    "rollup_1m_hist" -> Seq("event_type", "window_start_ms", "bin"),
+    "rollup_1m_vals" -> Seq("event_type", "window_start_ms", "value_cents"),
+    "rollup_1m_loghist" -> Seq("event_type", "window_start_ms", "lbucket"),
+    "cm_daily" -> Seq("i", "bucket"),
+    "kmv_daily" -> Seq("event_type", "window_start_ms"),
+    "tuple_daily" -> Seq("event_type", "window_start_ms"),
+    "bitmap_daily" -> Seq("event_type", "window_start_ms"),
+    "topk_by_count" -> Seq("window_start_ms", "rank"),
+    "topk_by_revenue" -> Seq("window_start_ms", "rank"),
+    "topk_keyed_by_count" -> Seq("event_type", "window_start_ms", "rank"),
+    "topk_keyed_by_revenue" -> Seq("event_type", "window_start_ms", "rank"))
+
+  /** Every file of every date-partitioned table of `root` holds its
+    * rows in the table's sort order.
+    */
+  private def assertFilesSorted(root: String, after: String): Unit =
+    for ((t, sortCols) <- fileSortOrder) {
+      // one small file is one split, read in file order
+      val files = spark.read.parquet(s"$root/$t")
+        .select(input_file_name() +: sortCols.map(col): _*).collect()
+        .groupBy(_.getString(0)).values
+      assert(files.exists(_.length > 1), s"$t: no file of two rows to order")
+      // ascending, nulls first: the order of Spark's sortWithinPartitions
+      def cmp(x: Any, y: Any): Int =
+        if (x == null || y == null) (x != null).compare(y != null)
+        else x.asInstanceOf[Comparable[Any]].compareTo(y)
+      for (rows <- files; (a, b) <- rows.zip(rows.tail)) {
+        val c = sortCols.indices.iterator.map(i => cmp(a.get(i + 1), b.get(i + 1)))
+          .find(_ != 0).getOrElse(0)
+        assert(c <= 0, s"$t after $after: ${a.mkString(",")} before ${b.mkString(",")}")
+      }
+    }
+
+  test("every file of every date-partitioned table is in its sort order after build, refresh and erase") {
+    assert(fileSortOrder.keySet === Serving.allTables.toSet -- Set("profile_upsert", "meta"))
+    import java.sql.Timestamp
+    def mk(rows: (String, Long, String, Long)*) =
+      rows.map { case (t, u, et, c) => (Timestamp.valueOf(t), u, et, c) }
+        .toDF("ts", "user_id", "event_type", "value_cents")
+    val seed = mk(
+      ("2024-01-01 10:10:00", 3L, "click", 300L),
+      ("2024-01-01 10:20:00", 1L, "view", 500L),
+      ("2024-01-01 10:40:00", 2L, "click", 200L),
+      ("2024-01-01 11:05:00", 1L, "click", 700L))
+    val batch = mk(
+      ("2024-01-01 10:50:00", 4L, "view", 100L),
+      ("2024-01-01 11:30:00", 2L, "purchase", 900L),
+      ("2024-01-02 09:00:00", 3L, "click", 400L))
+    val root = tempDir("graft_sorted")
+    Serving.materializeInto(spark, root, seed)
+    assertFilesSorted(root, "materializeInto")
+    Serving.refreshWithBatch(spark, root, batch)
+    assertFilesSorted(root, "refreshWithBatch")
+    assert(Serving.eraseUser(spark, root, seed.unionAll(batch), 1L) === Seq("2024-01-01"))
+    assertFilesSorted(root, "eraseUser")
   }
 }
