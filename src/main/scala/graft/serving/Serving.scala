@@ -749,10 +749,12 @@ object Serving {
     val eventDates = dateCover(events.filter(col("user_id") === userId))
     // cross-check against STORED state: a stale or partial events
     // frame must not silently no-op or leave the user's rows behind
-    // in partitions it doesn't know about. The user-keyed hour table
-    // has the same date cover as every other grain, so its p_date set
-    // for the user is exactly the set of serving partitions holding
-    // the user's rows.
+    // in partitions it doesn't know about. Each of the user's
+    // agg_by_window p_dates is the date of one of the user's hour-window
+    // starts, which dateCover of the user's events always includes
+    // (dateCover adds each window's end date too, for the finer grains
+    // that can land on the next local date), so a stored date outside
+    // the cover means the frame lacks some of the user's events.
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val storedDates =
       if (!fs.exists(new Path(s"$root/${userAgg.name}"))) Seq.empty[String]
